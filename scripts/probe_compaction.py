@@ -28,7 +28,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from tabular_cdc_bootstrapper_spark.session import get_spark
-    from tabular_cdc_bootstrapper_spark.streaming.pipeline import (
+    from tabular_cdc_bootstrapper_spark.streaming.bucket_mirror import (
         VersionedBucketMirror,
     )
 

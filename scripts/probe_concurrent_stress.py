@@ -54,8 +54,10 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from tabular_cdc_bootstrapper_spark.config import CdcTarget
-    from tabular_cdc_bootstrapper_spark.streaming.pipeline import (
+    from tabular_cdc_bootstrapper_spark.streaming._protocol import (
         CommitConflict,
+    )
+    from tabular_cdc_bootstrapper_spark.streaming.bucket_mirror import (
         VersionedBucketMirror,
     )
 

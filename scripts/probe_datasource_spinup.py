@@ -59,7 +59,7 @@ def main() -> None:
         prewarm_stream_sources,
         register_stream_sources,
     )
-    from tabular_cdc_bootstrapper_spark.streaming.pipeline import (
+    from tabular_cdc_bootstrapper_spark.streaming.bucket_mirror import (
         VersionedBucketMirror,
     )
 

@@ -20,7 +20,7 @@ def main() -> None:
     from tabular_cdc_bootstrapper_spark.streaming.datasource import (
         register_stream_sources,
     )
-    from tabular_cdc_bootstrapper_spark.streaming.pipeline import (
+    from tabular_cdc_bootstrapper_spark.streaming.bucket_mirror import (
         VersionedBucketMirror,
     )
 

@@ -46,7 +46,7 @@ def main() -> None:
     from pyspark.sql import SparkSession
 
     from tabular_cdc_bootstrapper_spark.config import CdcTarget
-    from tabular_cdc_bootstrapper_spark.streaming.pipeline import (
+    from tabular_cdc_bootstrapper_spark.streaming.bucket_mirror import (
         VersionedBucketMirror,
     )
 

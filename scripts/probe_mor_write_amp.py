@@ -45,7 +45,7 @@ def main() -> None:
     from tabular_cdc_bootstrapper_spark.config import CdcTarget
     from tabular_cdc_bootstrapper_spark.session import get_spark
     from tabular_cdc_bootstrapper_spark.shipping import ensure_self_on_workers
-    from tabular_cdc_bootstrapper_spark.streaming.pipeline import (
+    from tabular_cdc_bootstrapper_spark.streaming.bucket_mirror import (
         VersionedBucketMirror,
     )
 

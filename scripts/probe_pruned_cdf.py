@@ -24,10 +24,10 @@ def main() -> None:
     from tabular_cdc_bootstrapper_spark.operators.diff import table_diff
     from tabular_cdc_bootstrapper_spark.session import get_spark
     from tabular_cdc_bootstrapper_spark.shipping import ensure_self_on_workers
-    from tabular_cdc_bootstrapper_spark.streaming.pipeline import (
+    from tabular_cdc_bootstrapper_spark.streaming.bucket_mirror import (
         VersionedBucketMirror,
-        table_changes,
     )
+    from tabular_cdc_bootstrapper_spark.streaming.feeds import table_changes
 
     spark = get_spark("probe-cdf", shuffle_partitions=32)
     ensure_self_on_workers(spark)

@@ -11,9 +11,10 @@ This engine implements BOTH layers natively on Spark:
 
 - control plane  : catalog.py   (idempotent bootstrap, table properties,
                                  dependency DAG — reference tabular.py:77-143)
-- CDC data plane : operators/cdc.py + streaming/pipeline.py
+- CDC data plane : operators/cdc.py + streaming/runner.py
                    (Structured Streaming file source replaces S3 inventory
                    polling; max_by/window dedup merge replaces managed CDC)
+                   into a ParquetStateTable or VersionedBucketMirror
 - analytics      : queries.py registry (joins/aggs/windows/set-ops over
                    the star schema — DuckDB-oracle checked)
 - LLM-pipeline   : functions/{text,dedup,similarity,multimodal}.py

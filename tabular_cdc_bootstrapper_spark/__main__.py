@@ -28,10 +28,16 @@ Engine extensions:
                         layouts: "months:o_orderdate", "days:ts",
                         "years:d", "truncate:id:1000", "identity:col"
                         (default: hash buckets on the key column)
-  SPARK_CDC_MIRROR_LAYOUT   "snapshot" (default; atomic pointer swap) or
-                        "bucketed" (BucketPartitionedMirror — per-batch
-                        merges rewrite only touched key buckets; the
-                        100 TB shape; registered as a partitioned table)
+  SPARK_CDC_MIRROR_LAYOUT   "snapshot" (default; atomic pointer swap),
+                        "bucketed_versioned" (VersionedBucketMirror —
+                        per-batch merges rewrite only touched key
+                        buckets; the 100 TB shape; registered as a
+                        partitioned table, one partition per bucket of
+                        the head manifest), "bucketed" (alias of
+                        "bucketed_versioned"), or "bucketed_versioned_mor"
+                        (rejected here with exit 2: reading a
+                        merge-on-read mirror folds delta files, which a
+                        catalog table cannot express)
 """
 
 from __future__ import annotations
@@ -59,6 +65,15 @@ def main() -> int:
             "no targets configured: set TABULAR_BUCKET_NAME and "
             "TABULAR_BUCKET_MONITOR_PATH (reference README.md:48-58), "
             "or SPARK_CDC_AUTO_DISCOVER=1 with SPARK_CDC_SOURCE_DIR"
+        )
+        return 2
+    mirror_layout = os.environ.get("SPARK_CDC_MIRROR_LAYOUT", "snapshot")
+    if mirror_layout == "bucketed_versioned_mor":
+        log.error(
+            "SPARK_CDC_MIRROR_LAYOUT=bucketed_versioned_mor is not "
+            "supported by the CLI: reading a merge-on-read mirror folds "
+            "its delta files, which the registered catalog table cannot "
+            "express; use bucketed_versioned"
         )
         return 2
 
@@ -140,8 +155,10 @@ def main() -> int:
         point_table_to,
         point_table_to_partitioned,
     )
+    from tabular_cdc_bootstrapper_spark.streaming.bucket_mirror import (
+        VersionedBucketMirror,
+    )
 
-    mirror_layout = os.environ.get("SPARK_CDC_MIRROR_LAYOUT", "snapshot")
     spec_env = os.environ.get("SPARK_CDC_PARTITION_SPEC", "")
     partition_spec = None
     if spec_env:
@@ -186,12 +203,14 @@ def main() -> int:
         try:
             point_table_to(spark, changelog_fqn, out["changelog_dir"])
             m = out["mirror"]
-            if hasattr(m, "data_dir"):
-                # bucket-partitioned mirror: its layout is bucket=N
-                # subdirectories, which an unpartitioned table registration
-                # would silently see as zero files — register partitioned
-                # (+ MSCK partition discovery) instead
-                point_table_to_partitioned(spark, mirror_fqn, m.data_dir)
+            if isinstance(m, VersionedBucketMirror):
+                # bucketed mirror: its head manifest names one version dir
+                # per bucket, which an unpartitioned table registration
+                # would silently see as zero files — register partitioned,
+                # one partition per manifest entry
+                point_table_to_partitioned(
+                    spark, mirror_fqn, m.data_dir, m.current()
+                )
             else:
                 mirror_loc = (m.current() or {}).get("dir")
                 if mirror_loc:

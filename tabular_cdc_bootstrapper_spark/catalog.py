@@ -177,27 +177,41 @@ def point_table_to(spark: SparkSession, fqn: str, location: str) -> None:
 
 
 def point_table_to_partitioned(
-    spark: SparkSession, fqn: str, location: str, partition_col: str = "bucket"
+    spark: SparkSession,
+    fqn: str,
+    location: str,
+    manifest: dict,
+    partition_col: str = "bucket",
 ) -> None:
-    """Re-point a table at a PARTITIONED layout (``<location>/bucket=N/``).
+    """Re-point a table at a bucketed mirror's head ``manifest``.
 
-    ``ALTER TABLE SET LOCATION`` on an unpartitioned USING PARQUET table
-    does no partition discovery, so pointing it at a bucket-partitioned
-    mirror makes ``SELECT *`` see zero files. A partitioned external
-    table needs (a) the partition column declared in its DDL and (b) its
-    partitions registered in the metastore — so this re-creates the
-    registration (catalog metadata only; zero data movement) and runs
-    ``MSCK REPAIR`` to discover the ``bucket=N`` directories. User-set
+    The mirror keeps each bucket's rows in an immutable version dir
+    (``<location>/bucket=N/v-<n>-<id>/``) that only the manifest's
+    ``{bucket: dir}`` map names; older versions sit beside it. So neither
+    ``ALTER TABLE SET LOCATION`` (no partition discovery: zero files) nor
+    ``MSCK REPAIR`` (cannot see the version dirs) registers it. This
+    re-creates a PARTITIONED registration with the manifest's schema
+    (catalog metadata only; zero data movement) and adds exactly one
+    partition per manifest entry, located at that entry's dir. User-set
     TBLPROPERTIES survive: they're read first and re-applied after the
-    re-create.
+    re-create. A merge-on-read manifest (``deltas``) and one with
+    metadata-only renames or column-generation masks are refused: their
+    reads fold what a catalog table cannot express.
     """
-    df = spark.read.option("basePath", location).parquet(location)
-    fields = {f.name: f for f in df.schema.fields}
-    if partition_col not in fields:
+    folded = [k for k in ("deltas", "renames", "shadowed") if manifest.get(k)]
+    if folded:
         raise ValueError(
-            f"{location!r} has no {partition_col!r} partition column "
-            f"(columns: {sorted(fields)}); use point_table_to for flat layouts"
+            f"the head manifest of {location!r} carries {folded}; a "
+            "catalog table cannot express the read-time fold they need"
         )
+    buckets = manifest["buckets"]
+    schema = (
+        T.StructType.fromJson(manifest["schema"])
+        if manifest.get("schema")
+        else spark.read.option("mergeSchema", "true")
+        .parquet(*buckets.values())
+        .schema
+    )
     db, _, tbl = fqn.rpartition(".")
     existed = bool(db) and table_exists(spark, db, tbl)
     keep_props = {
@@ -208,17 +222,21 @@ def point_table_to_partitioned(
     }
     data_cols = ", ".join(
         f"`{f.name}` {f.dataType.simpleString()}"
-        for f in df.schema.fields
+        for f in schema.fields
         if f.name != partition_col
     )
-    pcol = fields[partition_col]
     spark.sql(f"DROP TABLE IF EXISTS {_q(fqn)}")
     spark.sql(
-        f"CREATE TABLE {_q(fqn)} ({data_cols}, "
-        f"`{pcol.name}` {pcol.dataType.simpleString()}) USING PARQUET "
-        f"PARTITIONED BY (`{pcol.name}`) LOCATION '{location}'"
+        f"CREATE TABLE {_q(fqn)} ({data_cols}, `{partition_col}` int) "
+        f"USING PARQUET PARTITIONED BY (`{partition_col}`) "
+        f"LOCATION '{location}'"
     )
-    spark.sql(f"MSCK REPAIR TABLE {_q(fqn)}")
+    if buckets:
+        parts = " ".join(
+            f"PARTITION (`{partition_col}`={int(b)}) LOCATION '{d}'"
+            for b, d in buckets.items()
+        )
+        spark.sql(f"ALTER TABLE {_q(fqn)} ADD {parts}")
     if keep_props:
         set_table_properties(spark, fqn, keep_props)
     spark.sql(f"REFRESH TABLE {_q(fqn)}")

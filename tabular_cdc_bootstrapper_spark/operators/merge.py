@@ -303,18 +303,16 @@ def merge_into_table(
     meta: dict | None = None,
 ) -> dict:
     """MERGE INTO a COMMITTED state table (VERDICT r8 task 4): one merge
-    = one commit — time-travelable where the table keeps a snapshot log
-    (``ParquetStateTable`` / ``VersionedBucketMirror``: the merge shows
-    up in ``history()``, old state stays readable via ``read_version``,
-    and ``table_changes(pre, post)`` yields exactly the merge's effect
-    as a CDF), crash-safe rename-swap on the plain
-    ``BucketPartitionedMirror``.
+    = one commit on ``ParquetStateTable`` or ``VersionedBucketMirror`` —
+    the merge shows up in ``history()``, old state stays readable via
+    ``read_version``, and ``table_changes(pre, post)`` yields exactly the
+    merge's effect as a CDF.
 
     Storage dispatch mirrors the Delta/Iceberg cost model:
 
     - snapshot table (``commit``): whole-state rewrite, atomic pointer
       swap — the test-scale layout;
-    - bucketed mirrors (``read_buckets``/``commit_merged``): a MERGE
+    - bucketed mirror (``read_buckets``/``commit_merged``): a MERGE
       only modifies rows whose keys appear in the SOURCE (unmatched
       target rows are untouched by definition), so the touched buckets
       are the source keys' buckets — the merge reads, rewrites, and
@@ -326,9 +324,9 @@ def merge_into_table(
     unless the caller overrides, an evolved column updates/inserts from
     the source column of the same name. Pass a LIST of column names to
     evolve only those (keeping control columns like an op selector out
-    of the table). On the bucketed layouts only touched buckets are
-    rewritten with the new column — readers mergeSchema across bucket
-    versions by design.
+    of the table). On the bucketed mirror only touched buckets are
+    rewritten with the new column — readers bind to the manifest schema
+    across bucket versions by design.
 
     ``widen_types=True`` additionally cast-widens existing target
     columns whose SOURCE type is a safe widening of the target's
@@ -337,32 +335,32 @@ def merge_into_table(
     whose upstream grew to bigint merges without a manual rewrite.
     Only lossless widenings apply; a narrowing or unrelated type
     mismatch is left to the engine's normal coercion rules. Pre-merge
-    snapshots keep the narrow type; readers mergeSchema across the
-    boundary and ``table_changes`` compares through it.
+    snapshots keep the narrow type; readers read through the boundary
+    and ``table_changes`` compares through it.
 
     Returns the commit record (plus ``touched_buckets`` where bucketed).
     """
+    from tabular_cdc_bootstrapper_spark.streaming.bucket_mirror import (
+        VersionedBucketMirror,
+    )
+
     update_set = dict(update_set or {})
-    bucketed = hasattr(table, "read_buckets")
+    bucketed = isinstance(table, VersionedBucketMirror)
     touched: list[int] | None = None
     # CAS basis (r11): the head version the merge inputs are read from —
     # threaded into the commit so a concurrent commit in between raises
     # CommitConflict (or rebases, when provably disjoint on the bucketed
     # layout) instead of silently losing one side's update
-    basis_version: int | None = None
-    if hasattr(table, "_log"):
-        cur = table.current()
-        basis_version = cur["version"] if cur else -1
+    cur = table.current()
+    basis_version = cur["version"] if cur else -1
     if bucketed:
-        if hasattr(table, "_sync_spec"):
-            table._sync_spec()  # bind to the current bucket spec (r11)
+        table._sync_spec()  # bind to the current bucket spec (r11)
         key = table.key_col
         if key not in on:
             raise ValueError(
                 f"bucketed merge requires the bucket key {key!r} in on={on}"
             )
-        spec = tuple(getattr(table, "partition_spec", ("bucket",)))
-        if spec[0] == "bucket":
+        if table.partition_spec[0] == "bucket":
             # hash spec: a key's bucket is derivable from the key, so the
             # source's key hashes ARE the touched set (one bounded agg)
             touched = sorted(
@@ -385,8 +383,6 @@ def merge_into_table(
                 insert_cond,
             )
         target = table.read_buckets(spark, touched) if table.exists() else None
-        if target is not None and "bucket" in target.columns:
-            target = target.drop("bucket")
     else:
         target = table.read(spark)
     if target is None:
@@ -419,43 +415,20 @@ def merge_into_table(
             ):
                 target = target.withColumn(f.name, F.col(f.name).cast(s_type))
                 widened.append(f.name)
-        # a widening rewrite must go FULL-table when the layout cannot
-        # describe mixed narrow/wide bucket dirs to its readers: the
-        # plain bucketed mirror has no manifest at all, and a versioned
-        # mirror whose current manifest predates manifest-recorded
-        # schemas (ADVICE r10: its touched-buckets-only widen would
-        # strand a schema-free commit over mixed int/bigint dirs that
-        # the mergeSchema fallback read cannot reconcile). The schema'd
-        # versioned mirror widens for touched buckets only: readers
-        # bind to the manifest schema and parquet widening promotions
-        # upcast the old narrow dirs. A full rewrite is the
-        # pre-type-widening ALTER COLUMN cost, paid once — and on the
-        # versioned mirror it replaces every carried dir, so the commit
-        # records a schema and later widenings are touched-only.
-        has_log = hasattr(table, "_log")
-        legacy_manifest = (
-            has_log
-            and table.current() is not None
-            and "schema" not in table.current()
-        )
-        if widened and bucketed and (not has_log or legacy_manifest):
-            if has_log:
-                all_buckets = {
-                    int(b) for b in (table.current() or {}).get("buckets", {})
-                }
-            else:
-                import os as _os
-
-                all_buckets = {
-                    int(d.split("=", 1)[1])
-                    for d in _os.listdir(table.data_dir)
-                    if d.startswith("bucket=")
-                }
-            touched = sorted(all_buckets | set(touched))
+        # a widening rewrite must go FULL-table when the bucketed
+        # mirror's current manifest predates manifest-recorded schemas
+        # (ADVICE r10: its touched-buckets-only widen would strand a
+        # schema-free commit over mixed int/bigint dirs that the
+        # mergeSchema fallback read cannot reconcile). The schema'd
+        # mirror widens for touched buckets only: readers bind to the
+        # manifest schema and parquet widening promotions upcast the
+        # old narrow dirs. A full rewrite is the pre-type-widening ALTER
+        # COLUMN cost, paid once — it replaces every carried dir, so the
+        # commit records a schema and later widenings are touched-only.
+        if widened and bucketed and cur is not None and "schema" not in cur:
+            touched = sorted({int(b) for b in cur["buckets"]} | set(touched))
             full = table.read(spark)
             if full is not None:
-                if "bucket" in full.columns:
-                    full = full.drop("bucket")
                 target = full
                 # the full-state read replaces the evolve_schema'd
                 # target (ADVICE r10: without re-adding them, the
@@ -483,23 +456,9 @@ def merge_into_table(
     )
     full_meta = {**(meta or {}), "operation": "merge"}
     if bucketed:
-        # provenance must be layout-consistent (ADVICE r9): the versioned
-        # mirror records meta in its manifest like the snapshot table's
-        # pointer; the plain bucketed mirror keeps NO log, so caller meta
-        # there is silently-lost provenance — refuse instead
-        if hasattr(table, "_log"):
-            rec = table.commit_merged(
-                merged, touched, meta=full_meta,
-                expected_version=basis_version,
-            )
-        else:
-            if meta:
-                raise ValueError(
-                    "meta cannot be recorded on a BucketPartitionedMirror "
-                    "(no snapshot log); use VersionedBucketMirror for "
-                    "merge commit provenance"
-                )
-            rec = table.commit_merged(merged, touched)
+        rec = table.commit_merged(
+            merged, touched, meta=full_meta, expected_version=basis_version
+        )
     else:
         rec = table.commit(
             merged, meta=full_meta, expected_version=basis_version

@@ -20,9 +20,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from pyspark.sql import functions as F
 
-from tabular_cdc_bootstrapper_spark.functions import profiling
-
-from tabular_cdc_bootstrapper_spark.operators.cdc import apply_changelog
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 

@@ -210,7 +210,7 @@ def cdc_mirror_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     laws are pinned in tests/test_time_travel.py."""
     import tempfile
 
-    from tabular_cdc_bootstrapper_spark.streaming.pipeline import (
+    from tabular_cdc_bootstrapper_spark.streaming.state_table import (
         ParquetStateTable,
     )
 
@@ -312,10 +312,10 @@ def cdc_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_time_travel.py."""
     import tempfile
 
-    from tabular_cdc_bootstrapper_spark.streaming.pipeline import (
+    from tabular_cdc_bootstrapper_spark.streaming.state_table import (
         ParquetStateTable,
-        table_changes,
     )
+    from tabular_cdc_bootstrapper_spark.streaming.feeds import table_changes
 
     ch = derived_orders_changelog(spark, sf_dir).select(
         "o_orderkey", "o_orderstatus", "op", "ts"
@@ -372,7 +372,7 @@ def cdc_purge_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshot states minus the purged keys."""
     import tempfile
 
-    from tabular_cdc_bootstrapper_spark.streaming.pipeline import (
+    from tabular_cdc_bootstrapper_spark.streaming.state_table import (
         ParquetStateTable,
     )
 
@@ -768,7 +768,7 @@ def wap_anomaly_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         row_count_within,
         sum_within,
     )
-    from tabular_cdc_bootstrapper_spark.streaming.pipeline import (
+    from tabular_cdc_bootstrapper_spark.streaming.bucket_mirror import (
         VersionedBucketMirror,
     )
 
@@ -898,7 +898,7 @@ def snapshot_refs_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     tag/expire_snapshots/clone_to/purge_keys/read_pruned."""
     import tempfile
 
-    from tabular_cdc_bootstrapper_spark.streaming.pipeline import (
+    from tabular_cdc_bootstrapper_spark.streaming.state_table import (
         ParquetStateTable,
     )
 
@@ -936,7 +936,7 @@ def snapshot_refs_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # second chain's jobs back-fill the first's scheduling gaps
     from concurrent.futures import ThreadPoolExecutor
 
-    from tabular_cdc_bootstrapper_spark.streaming.pipeline import (
+    from tabular_cdc_bootstrapper_spark.streaming.bucket_mirror import (
         VersionedBucketMirror,
     )
 
@@ -1090,7 +1090,7 @@ def snapshot_branch_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
         not_null,
         row_count_within,
     )
-    from tabular_cdc_bootstrapper_spark.streaming.pipeline import (
+    from tabular_cdc_bootstrapper_spark.streaming.state_table import (
         ParquetStateTable,
     )
 
@@ -1153,7 +1153,7 @@ def snapshot_branch_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the update+delete batch stages as a branch CDC MERGE — touched
     # buckets only, carried from the BRANCH head — then fast-forwards
     from tabular_cdc_bootstrapper_spark.config import CdcTarget
-    from tabular_cdc_bootstrapper_spark.streaming.pipeline import (
+    from tabular_cdc_bootstrapper_spark.streaming.bucket_mirror import (
         VersionedBucketMirror,
     )
 
@@ -1222,7 +1222,7 @@ def bucket_compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fragmented dirs; compaction must never rewrite history)."""
     import tempfile
 
-    from tabular_cdc_bootstrapper_spark.streaming.pipeline import (
+    from tabular_cdc_bootstrapper_spark.streaming.bucket_mirror import (
         VersionedBucketMirror,
     )
 
@@ -1313,8 +1313,10 @@ def concurrent_merge_serialization(spark: SparkSession, sf_dir: str) -> DataFram
     totals over ALL keys, never per-writer counts."""
     import tempfile
 
-    from tabular_cdc_bootstrapper_spark.streaming.pipeline import (
+    from tabular_cdc_bootstrapper_spark.streaming._protocol import (
         CommitConflict,
+    )
+    from tabular_cdc_bootstrapper_spark.streaming.bucket_mirror import (
         VersionedBucketMirror,
     )
 
@@ -1447,7 +1449,7 @@ def mor_merge_fold_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from tabular_cdc_bootstrapper_spark.config import CdcTarget
-    from tabular_cdc_bootstrapper_spark.streaming.pipeline import (
+    from tabular_cdc_bootstrapper_spark.streaming.bucket_mirror import (
         VersionedBucketMirror,
     )
 
@@ -1561,8 +1563,8 @@ def change_feed_stream_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from tabular_cdc_bootstrapper_spark.operators.cdc import apply_changelog
-    from tabular_cdc_bootstrapper_spark.streaming.pipeline import (
-        ChangeFeedStream,
+    from tabular_cdc_bootstrapper_spark.streaming.feeds import ChangeFeedStream
+    from tabular_cdc_bootstrapper_spark.streaming.state_table import (
         ParquetStateTable,
     )
 
@@ -1676,7 +1678,7 @@ def mirror_rebucket_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from tabular_cdc_bootstrapper_spark.config import CdcTarget
-    from tabular_cdc_bootstrapper_spark.streaming.pipeline import (
+    from tabular_cdc_bootstrapper_spark.streaming.bucket_mirror import (
         VersionedBucketMirror,
     )
 
@@ -1839,7 +1841,7 @@ def mirror_regrain_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from tabular_cdc_bootstrapper_spark.config import CdcTarget
-    from tabular_cdc_bootstrapper_spark.streaming.pipeline import (
+    from tabular_cdc_bootstrapper_spark.streaming.bucket_mirror import (
         VersionedBucketMirror,
     )
 
@@ -2012,7 +2014,7 @@ def mirror_alter_schema_ddl(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from tabular_cdc_bootstrapper_spark.config import CdcTarget
-    from tabular_cdc_bootstrapper_spark.streaming.pipeline import (
+    from tabular_cdc_bootstrapper_spark.streaming.bucket_mirror import (
         VersionedBucketMirror,
     )
 
@@ -2164,7 +2166,7 @@ def column_generation_masking(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from tabular_cdc_bootstrapper_spark.config import CdcTarget
-    from tabular_cdc_bootstrapper_spark.streaming.pipeline import (
+    from tabular_cdc_bootstrapper_spark.streaming.bucket_mirror import (
         VersionedBucketMirror,
     )
 
@@ -2306,7 +2308,7 @@ def snapshot_table_ddl(spark: SparkSession, sf_dir: str) -> DataFrame:
     time-travel to v0 under its own pre-DDL schema."""
     import tempfile
 
-    from tabular_cdc_bootstrapper_spark.streaming.pipeline import (
+    from tabular_cdc_bootstrapper_spark.streaming.state_table import (
         ParquetStateTable,
     )
 
@@ -2429,10 +2431,12 @@ def join_feed_availablenow(spark: SparkSession, sf_dir: str) -> DataFrame:
     no hand-rolled poll loop in consumer code."""
     import tempfile
 
-    from tabular_cdc_bootstrapper_spark.streaming.pipeline import (
+    from tabular_cdc_bootstrapper_spark.streaming.feeds import (
         ChangeFeedStream,
         MaintainedJoinFeedDriver,
         MaintainedJoinView,
+    )
+    from tabular_cdc_bootstrapper_spark.streaming.state_table import (
         ParquetStateTable,
     )
 
@@ -2572,7 +2576,7 @@ def change_feed_datasource_stream(
     from tabular_cdc_bootstrapper_spark.streaming.datasource import (
         register_stream_sources,
     )
-    from tabular_cdc_bootstrapper_spark.streaming.pipeline import (
+    from tabular_cdc_bootstrapper_spark.streaming.bucket_mirror import (
         VersionedBucketMirror,
     )
 
@@ -2666,7 +2670,7 @@ def mirror_dml_delete_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-status aggregate proves the head state row-for-row."""
     import tempfile
 
-    from tabular_cdc_bootstrapper_spark.streaming.pipeline import (
+    from tabular_cdc_bootstrapper_spark.streaming.bucket_mirror import (
         VersionedBucketMirror,
     )
 
@@ -2749,7 +2753,7 @@ def sink_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tabular_cdc_bootstrapper_spark.streaming.datasource import (
         register_stream_sources,
     )
-    from tabular_cdc_bootstrapper_spark.streaming.pipeline import (
+    from tabular_cdc_bootstrapper_spark.streaming.bucket_mirror import (
         VersionedBucketMirror,
     )
 
@@ -2858,7 +2862,7 @@ def table_sql_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from tabular_cdc_bootstrapper_spark.sql import TableSql
-    from tabular_cdc_bootstrapper_spark.streaming.pipeline import (
+    from tabular_cdc_bootstrapper_spark.streaming.bucket_mirror import (
         VersionedBucketMirror,
     )
 
@@ -2948,8 +2952,10 @@ def table_constraints_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from tabular_cdc_bootstrapper_spark.sql import TableSql
-    from tabular_cdc_bootstrapper_spark.streaming.pipeline import (
+    from tabular_cdc_bootstrapper_spark.streaming._protocol import (
         ConstraintViolation,
+    )
+    from tabular_cdc_bootstrapper_spark.streaming.bucket_mirror import (
         VersionedBucketMirror,
     )
 
@@ -3252,7 +3258,7 @@ def partition_transform_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     import datetime
     import tempfile
 
-    from tabular_cdc_bootstrapper_spark.streaming.pipeline import (
+    from tabular_cdc_bootstrapper_spark.streaming.bucket_mirror import (
         VersionedBucketMirror,
     )
     from tabular_cdc_bootstrapper_spark.config import CdcTarget
@@ -3335,7 +3341,7 @@ def declarative_agg_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tabular_cdc_bootstrapper_spark.streaming.datasource import (
         register_stream_sources,
     )
-    from tabular_cdc_bootstrapper_spark.streaming.pipeline import (
+    from tabular_cdc_bootstrapper_spark.streaming.bucket_mirror import (
         VersionedBucketMirror,
     )
 

@@ -912,7 +912,7 @@ def cdc_anomaly_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         row_count_within,
         sum_within,
     )
-    from tabular_cdc_bootstrapper_spark.streaming.pipeline import (
+    from tabular_cdc_bootstrapper_spark.streaming.state_table import (
         ParquetStateTable,
     )
 
@@ -1022,10 +1022,10 @@ def merge_table_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         merge_into_table,
         src,
     )
-    from tabular_cdc_bootstrapper_spark.streaming.pipeline import (
+    from tabular_cdc_bootstrapper_spark.streaming.state_table import (
         ParquetStateTable,
-        table_changes,
     )
+    from tabular_cdc_bootstrapper_spark.streaming.feeds import table_changes
 
     base = (
         _t(spark, sf_dir, "orders")

@@ -79,8 +79,7 @@ def compact_small_files(
     brand-new paths and re-deliver the whole directory. Compact a
     SNAPSHOT of a streaming changelog, not the live sink dir.
 
-    Crash safety (rename-aside, same protocol as the pipeline's mirror
-    swap): recover any previous interrupted run first — a leftover
+    Crash safety (rename-aside): recover any previous interrupted run first — a leftover
     ``.compact.old`` with no live dir is restored, with a live dir it is
     dropped — then write tmp → rename live aside → install tmp → drop the
     aside. A crash at any point leaves either the old or the new

@@ -210,8 +210,10 @@ class TableSql:
                 f"CREATE TABLE location {loc!r} exists and is not empty"
             )
         df = self._select(query_sql)
-        from tabular_cdc_bootstrapper_spark.streaming.pipeline import (
+        from tabular_cdc_bootstrapper_spark.streaming.state_table import (
             ParquetStateTable,
+        )
+        from tabular_cdc_bootstrapper_spark.streaming.bucket_mirror import (
             VersionedBucketMirror,
         )
 

@@ -1,6 +1,4 @@
-from tabular_cdc_bootstrapper_spark.streaming.pipeline import (  # noqa: F401
-    CommitConflict,
-    ParquetStateTable,
-    run_cdc_pipeline_available_now,
-    start_changelog_ingest,
-)
+"""Streaming CDC data plane: changelog ingest, mirror storage (snapshot
+and bucketed layouts under one snapshot-log commit protocol), change
+feeds and maintained views. Import each name from its defining module;
+``pipeline.py`` lists them."""

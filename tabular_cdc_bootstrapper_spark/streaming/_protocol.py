@@ -6,8 +6,7 @@ this module holds everything BOTH layouts build on — the error types,
 CHECK-constraint evaluation, the purge lock, ``SnapshotLog`` (manifest
 log + pointer CAS + checkpoints), tag/branch sets, the shared
 ``BranchOps`` mixin, and the schema-evolution helpers (union-widening,
-per-version logical reads, ALTER planning). ``streaming/pipeline.py``
-re-exports every name, so import paths are unchanged.
+per-version logical reads, ALTER planning).
 """
 
 from __future__ import annotations
@@ -15,7 +14,6 @@ from __future__ import annotations
 import json
 import os
 import re
-import shutil
 import time
 import uuid
 from collections.abc import Sequence
@@ -24,15 +22,6 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming import StreamingQuery
-
-from tabular_cdc_bootstrapper_spark.config import CdcTarget
-from tabular_cdc_bootstrapper_spark.operators.cdc import (
-    apply_changelog,
-    latest_by_key,
-)
-from tabular_cdc_bootstrapper_spark.operators.diff import table_diff
-from tabular_cdc_bootstrapper_spark.sources.files import exclude_glob_filter
 
 
 class CommitConflict(RuntimeError):

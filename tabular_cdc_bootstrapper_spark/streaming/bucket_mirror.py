@@ -1,56 +1,36 @@
 """VersionedBucketMirror core: bucket-version manifests, snapshot
 commits (copy-on-write and merge-on-read delta chains), and the pruned
 read paths. The DML/maintenance half lives in ``bucket_ops.py``
-(composed here); ``streaming/pipeline.py`` re-exports the class.
-Split from ``streaming/pipeline.py`` (VERDICT r12 #3).
+(composed here). Split from ``streaming/pipeline.py`` (VERDICT r12 #3).
 """
 
 from __future__ import annotations
 
-import json
 import os
 import re
 import shutil
 import time
 import uuid
 from collections.abc import Sequence
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming import StreamingQuery
 
-from tabular_cdc_bootstrapper_spark.config import CdcTarget
 from tabular_cdc_bootstrapper_spark.streaming._stats import footer_bucket_stats
-from tabular_cdc_bootstrapper_spark.operators.cdc import (
-    apply_changelog,
-    latest_by_key,
-)
-from tabular_cdc_bootstrapper_spark.operators.diff import table_diff
-from tabular_cdc_bootstrapper_spark.sources.files import exclude_glob_filter
-
-from tabular_cdc_bootstrapper_spark.streaming._protocol import (  # noqa: F401
+from tabular_cdc_bootstrapper_spark.operators.cdc import apply_changelog
+from tabular_cdc_bootstrapper_spark.streaming._protocol import (
     CommitConflict,
     ConstraintViolation,
     SnapshotLog,
     TagSet,
-    BranchSet,
     BranchOps,
-    _DIR_VERSION_RE,
-    _PURGE_CATCHUP_ROUNDS,
-    _PURGE_LOCK_STALE_S,
-    _RESERVED_META_KEYS,
     _RETRY_BACKOFF,
     _UNSET,
-    _alter_schema_meta,
     _check_meta,
     _check_table_constraints,
-    _dir_version,
-    _purge_lock,
     _read_logical,
     _validate_partition_spec,
-    _vanished_path,
     _widen_struct,
 )
 from tabular_cdc_bootstrapper_spark.streaming.bucket_ops import (
@@ -82,8 +62,9 @@ def _stat_lt(a, b) -> bool:
 
 
 class VersionedBucketMirror(VersionedBucketMirrorOps, BranchOps):
-    """Key-bucketed mirror with Iceberg-manifest commit semantics: the
-    delta-proportional merge of ``BucketPartitionedMirror`` PLUS the
+    """Key-bucketed mirror with Iceberg-manifest commit semantics: a
+    merge rewrites only the key buckets its batch touches (cost ∝
+    |touched buckets| / n_buckets of the mirror, not the mirror), with the
     snapshot history of ``ParquetStateTable`` — time travel at the 100 TB
     design point.
 
@@ -101,17 +82,16 @@ class VersionedBucketMirror(VersionedBucketMirrorOps, BranchOps):
 
     Reads resolve the manifest and list only the referenced dirs — the
     manifest IS the partition pruning (``read_buckets`` lists
-    |touched|/n_buckets of the mirror, same contract as the parent class,
-    now version-safe). ``read_version``/``read_as_of``/``rollback`` give
+    |touched|/n_buckets of the mirror, version-safe). ``read_version``/``read_as_of``/``rollback`` give
     VERSION AS OF / TIMESTAMP AS OF / restore over the full mirror;
     retention expires bucket-version dirs no retained manifest references
     (a dir shared with a retained manifest survives — the rollback-target
     rule falls out for free).
 
-    Crash safety is SIMPLER than the parent's rename-aside dance: staged
-    dirs for a never-published version are referenced by no manifest, so
-    ``_expire`` garbage-collects them on the next successful publish and
-    readers never saw them. No ``_recover()`` pass is needed.
+    Crash safety needs no rename-aside or recovery pass: staged dirs for a
+    never-published version are referenced by no manifest, so ``_expire``
+    garbage-collects them on the next successful publish and readers
+    never saw them.
     """
 
     def __init__(
@@ -186,6 +166,8 @@ class VersionedBucketMirror(VersionedBucketMirrorOps, BranchOps):
         self.sort_cols = list(sort_cols)
         self._log = SnapshotLog(root)
         os.makedirs(self.data_dir, exist_ok=True)
+        if not os.path.exists(self._log.pointer_path):
+            self._reject_logless_layout()
         # an existing table's CURRENT manifest owns the bucket spec (r11
         # partition-spec evolution); the ctor arg is the creation
         # default and the pre-spec-manifest fallback
@@ -193,6 +175,26 @@ class VersionedBucketMirror(VersionedBucketMirrorOps, BranchOps):
 
     def _bucket(self, col):
         return F.pmod(F.xxhash64(col), F.lit(self.n_buckets)).cast("int")
+
+    def _reject_logless_layout(self) -> None:
+        """Refuse a root that has no snapshot log but holds the retired
+        logless ``bucketed`` layout (an ``_INITIALIZED`` marker, or
+        parquet files directly under ``data/bucket=N/``). Opened as a
+        fresh mirror it would look uninitialized: the runner would
+        re-run the initial load, and the changes its checkpoint already
+        consumed would be lost."""
+        if os.path.exists(os.path.join(self.root, "_INITIALIZED")) or any(
+            f.endswith(".parquet")
+            for d in os.listdir(self.data_dir)
+            if d.startswith("bucket=")
+            for f in os.listdir(os.path.join(self.data_dir, d))
+        ):
+            raise ValueError(
+                f"{self.root} holds a mirror in the retired logless "
+                "'bucketed' layout (no snapshot log); rebuild the work "
+                "dir: delete it and re-run the pipeline over the source "
+                "files"
+            )
 
     #: one UTC day in microseconds — the temporal transforms' unit
     _DAY_US = 86_400_000_000

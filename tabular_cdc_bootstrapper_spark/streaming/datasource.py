@@ -192,7 +192,7 @@ def _opt(options: dict, name: str, default=None):
 
 def _load_log(root: str):
     _ensure_importable()
-    from tabular_cdc_bootstrapper_spark.streaming.pipeline import SnapshotLog
+    from tabular_cdc_bootstrapper_spark.streaming._protocol import SnapshotLog
 
     return SnapshotLog(root)
 
@@ -955,7 +955,7 @@ class StateTableStreamWriter(DataSourceStreamArrowWriter):
 
     def commit(self, messages, batchId: int) -> None:
         _ensure_importable()
-        from tabular_cdc_bootstrapper_spark.streaming.pipeline import (
+        from tabular_cdc_bootstrapper_spark.streaming.bucket_mirror import (
             VersionedBucketMirror,
         )
 

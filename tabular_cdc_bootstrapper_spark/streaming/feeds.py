@@ -1,55 +1,21 @@
 """Change feeds and maintained (incrementally folded) views over the
-versioned tables. Split from ``streaming/pipeline.py`` (VERDICT r12 #3);
-``streaming/pipeline.py`` re-exports every name.
+versioned tables. Split from ``streaming/pipeline.py`` (VERDICT r12 #3).
 """
 
 from __future__ import annotations
 
 import json
 import os
-import re
-import shutil
 import time
 import uuid
 from collections.abc import Sequence
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming import StreamingQuery
 
-from tabular_cdc_bootstrapper_spark.config import CdcTarget
-from tabular_cdc_bootstrapper_spark.operators.cdc import (
-    apply_changelog,
-    latest_by_key,
-)
 from tabular_cdc_bootstrapper_spark.operators.diff import table_diff
-from tabular_cdc_bootstrapper_spark.sources.files import exclude_glob_filter
-
-from tabular_cdc_bootstrapper_spark.streaming._protocol import (  # noqa: F401
-    CommitConflict,
-    ConstraintViolation,
-    SnapshotLog,
-    TagSet,
-    BranchSet,
-    BranchOps,
-    _DIR_VERSION_RE,
-    _PURGE_CATCHUP_ROUNDS,
-    _PURGE_LOCK_STALE_S,
-    _RESERVED_META_KEYS,
-    _RETRY_BACKOFF,
-    _UNSET,
-    _alter_schema_meta,
-    _check_meta,
-    _check_table_constraints,
-    _dir_version,
-    _purge_lock,
-    _read_logical,
-    _vanished_path,
-    _widen_struct,
-)
-from tabular_cdc_bootstrapper_spark.streaming.state_table import (  # noqa: F401
+from tabular_cdc_bootstrapper_spark.streaming.state_table import (
     ParquetStateTable,
 )
 

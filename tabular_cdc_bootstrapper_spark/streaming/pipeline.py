@@ -11,70 +11,20 @@ tabular.py:58-62). Here:
 - (c): ``foreachBatch`` merge — each micro-batch reduces to latest-per-key
   (map-side partial agg, one shuffle) and upserts into the mirror.
 
-Mirror storage: ``ParquetStateTable`` — a minimal snapshot-pointer table
-(versioned parquet dirs + atomic CURRENT pointer, the same
-commit-by-pointer-swap idea as an Iceberg snapshot). Plain parquet can't be
-overwritten while being read; versioning gives atomic replace, readers
-never see partial state, and failed batches leave the pointer untouched.
-At cluster scale the same merge lands on Iceberg/Delta ``MERGE INTO`` with
-key-partitioned dynamic overwrite — the operator code is storage-agnostic.
+The runner lives in ``runner.py``; this module is the entry point's one
+stable import path for it (``__main__`` resolves the name here at call
+time). Every other streaming name is imported from its defining module:
+
+- ``_protocol.py``     errors, locks, SnapshotLog, tags/branches, schema evo
+- ``state_table.py``   ParquetStateTable + cdc_merge_batch
+- ``bucket_mirror.py`` VersionedBucketMirror core (manifests, commits, reads)
+- ``bucket_ops.py``    VersionedBucketMirror DML/maintenance mixin
+- ``feeds.py``         change feeds + maintained views
+- ``runner.py``        start_changelog_ingest + run_cdc_pipeline_available_now
 """
 
-# ---------------------------------------------------------------------------
-# This module is now a FACADE (VERDICT r12 next-round #3): the former
-# 5.9k-line single file is split into focused modules, with every public
-# and test-visible name re-exported here so existing import paths —
-# ``from ...streaming.pipeline import X`` — keep working unchanged.
-#   _protocol.py     errors, locks, SnapshotLog, tags/branches, schema evo
-#   state_table.py   ParquetStateTable + cdc_merge_batch
-#   bucket_mirror.py VersionedBucketMirror core (manifests, commits, reads)
-#   bucket_ops.py    VersionedBucketMirror DML/maintenance mixin
-#   feeds.py         change feeds + maintained views
-#   runner.py        run_cdc_pipeline_available_now + BucketPartitionedMirror
-# ---------------------------------------------------------------------------
-
-from tabular_cdc_bootstrapper_spark.streaming._protocol import (  # noqa: F401
-    BranchOps,
-    BranchSet,
-    CommitConflict,
-    ConstraintViolation,
-    SnapshotLog,
-    TagSet,
-    _DIR_VERSION_RE,
-    _PURGE_CATCHUP_ROUNDS,
-    _PURGE_LOCK_STALE_S,
-    _RESERVED_META_KEYS,
-    _RETRY_BACKOFF,
-    _UNSET,
-    _alter_schema_meta,
-    _check_meta,
-    _check_table_constraints,
-    _dir_version,
-    _purge_lock,
-    _read_logical,
-    _vanished_path,
-    _widen_struct,
-)
-from tabular_cdc_bootstrapper_spark.streaming.state_table import (  # noqa: F401
-    ParquetStateTable,
-    cdc_merge_batch,
-)
-from tabular_cdc_bootstrapper_spark.streaming.bucket_ops import (  # noqa: F401
-    VersionedBucketMirrorOps,
-)
-from tabular_cdc_bootstrapper_spark.streaming.bucket_mirror import (  # noqa: F401
-    VersionedBucketMirror,
-)
-from tabular_cdc_bootstrapper_spark.streaming.feeds import (  # noqa: F401
-    ChangeFeedStream,
-    MaintainedAggView,
-    MaintainedClusterView,
-    MaintainedJoinFeedDriver,
-    MaintainedJoinView,
-    table_changes,
-)
-from tabular_cdc_bootstrapper_spark.streaming.runner import (  # noqa: F401
-    BucketPartitionedMirror,
+from tabular_cdc_bootstrapper_spark.streaming.runner import (
     run_cdc_pipeline_available_now,
-    start_changelog_ingest,
 )
+
+__all__ = ["run_cdc_pipeline_available_now"]

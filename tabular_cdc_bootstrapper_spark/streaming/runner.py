@@ -1,19 +1,12 @@
-"""The end-to-end CDC pipeline runner (changelog ingest + one-shot
-AvailableNow merge run) and the checkpoint-era ``BucketPartitionedMirror``
-layout. Split from ``streaming/pipeline.py`` (VERDICT r12 #3);
-``streaming/pipeline.py`` re-exports every name.
+"""The end-to-end CDC pipeline runner: changelog ingest plus a one-shot
+AvailableNow merge run into the mirror. ``streaming/pipeline.py`` is the
+entry point's import path for ``run_cdc_pipeline_available_now``.
 """
 
 from __future__ import annotations
 
-import json
 import os
-import re
-import shutil
-import time
-import uuid
 from collections.abc import Sequence
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -21,42 +14,23 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from tabular_cdc_bootstrapper_spark.config import CdcTarget
-from tabular_cdc_bootstrapper_spark.operators.cdc import (
-    apply_changelog,
-    latest_by_key,
-)
-from tabular_cdc_bootstrapper_spark.operators.diff import table_diff
 from tabular_cdc_bootstrapper_spark.sources.files import exclude_glob_filter
-
-from tabular_cdc_bootstrapper_spark.streaming._protocol import (  # noqa: F401
-    CommitConflict,
-    ConstraintViolation,
-    SnapshotLog,
-    TagSet,
-    BranchSet,
-    BranchOps,
-    _DIR_VERSION_RE,
-    _PURGE_CATCHUP_ROUNDS,
-    _PURGE_LOCK_STALE_S,
-    _RESERVED_META_KEYS,
-    _RETRY_BACKOFF,
-    _UNSET,
-    _alter_schema_meta,
-    _check_meta,
-    _check_table_constraints,
-    _dir_version,
-    _purge_lock,
-    _read_logical,
-    _vanished_path,
-    _widen_struct,
+from tabular_cdc_bootstrapper_spark.streaming.bucket_mirror import (
+    VersionedBucketMirror,
 )
-from tabular_cdc_bootstrapper_spark.streaming.state_table import (  # noqa: F401
+from tabular_cdc_bootstrapper_spark.streaming.state_table import (
     ParquetStateTable,
     cdc_merge_batch,
 )
-from tabular_cdc_bootstrapper_spark.streaming.bucket_mirror import (  # noqa: F401
-    VersionedBucketMirror,
-)
+
+#: ``mirror_layout`` values served by ``VersionedBucketMirror`` → their
+#: constructor options. ``"bucketed"`` is an alias of the copy-on-write
+#: layout.
+_VERSIONED_LAYOUTS = {
+    "bucketed": {},
+    "bucketed_versioned": {},
+    "bucketed_versioned_mor": {"merge_on_read": True},
+}
 
 
 def start_changelog_ingest(
@@ -117,13 +91,15 @@ def run_cdc_pipeline_available_now(
     3. foreachBatch merge into the mirror.
 
     ``mirror_layout``: ``"snapshot"`` (ParquetStateTable — atomic pointer
-    swap, full-state rewrite per batch, simple and crash-safe) or
-    ``"bucketed_versioned"`` (VersionedBucketMirror — the bucketed merge
-    under Iceberg-manifest commits: immutable bucket-version dirs + a
-    snapshot manifest per batch, giving delta-proportional merges AND
-    mirror-wide time travel), or
-    ``"bucketed"`` (BucketPartitionedMirror — merges rewrite only the key
-    buckets the batch touches; the 100 TB shape).
+    swap, full-state rewrite per batch, simple and crash-safe),
+    ``"bucketed_versioned"`` (VersionedBucketMirror — merges rewrite only
+    the key buckets the batch touches, under Iceberg-manifest commits:
+    immutable bucket-version dirs + a snapshot manifest per batch, giving
+    delta-proportional merges AND mirror-wide time travel; the 100 TB
+    shape), ``"bucketed"`` (alias of ``"bucketed_versioned"``), or
+    ``"bucketed_versioned_mor"`` (the same mirror in merge-on-read mode:
+    merges append delta files, reads fold them, ``rewrite_data_files``
+    folds them back — the write-amplification-minimal CDC shape).
 
     ``partition_spec`` (r13, versioned layouts only): an Iceberg
     transform — ``("months", col)`` etc. — instead of the key hash; the
@@ -136,42 +112,26 @@ def run_cdc_pipeline_available_now(
     """
     changelog_dir = os.path.join(work_dir, "changelog")
     checkpoint = os.path.join(work_dir, "_checkpoint")
-    if partition_spec and mirror_layout not in (
-        "bucketed_versioned", "bucketed_versioned_mor",
-    ):
-        raise ValueError(
-            f"partition_spec applies to the versioned layouts, not "
-            f"{mirror_layout!r} — silently ignoring a configured "
-            "transform would be a misconfiguration trap"
-        )
-    if mirror_layout == "bucketed":
-        mirror = BucketPartitionedMirror(
-            os.path.join(work_dir, "mirror"),
-            n_buckets=n_buckets,
-            key_col=target.key_column,
-        )
-    elif mirror_layout == "bucketed_versioned":
+    root = os.path.join(work_dir, "mirror")
+    if mirror_layout in _VERSIONED_LAYOUTS:
         mirror = VersionedBucketMirror(
-            os.path.join(work_dir, "mirror"),
+            root,
             n_buckets=n_buckets,
             key_col=target.key_column,
             partition_spec=partition_spec,
-        )
-    elif mirror_layout == "bucketed_versioned_mor":
-        # merge-on-read (r11): merges append delta files, reads fold,
-        # rewrite_data_files folds back — the write-amplification-
-        # minimal CDC shape at 100 TB
-        mirror = VersionedBucketMirror(
-            os.path.join(work_dir, "mirror"),
-            n_buckets=n_buckets,
-            key_col=target.key_column,
-            merge_on_read=True,
-            partition_spec=partition_spec,
+            **_VERSIONED_LAYOUTS[mirror_layout],
         )
     elif mirror_layout == "snapshot":
-        mirror = ParquetStateTable(os.path.join(work_dir, "mirror"))
+        if partition_spec:
+            raise ValueError(
+                "partition_spec applies to the versioned layouts, not "
+                "'snapshot' — silently ignoring a configured transform "
+                "would be a misconfiguration trap"
+            )
+        mirror = ParquetStateTable(root)
     else:
         raise ValueError(f"unknown mirror_layout {mirror_layout!r}")
+    versioned = isinstance(mirror, VersionedBucketMirror)
 
     if not mirror.exists():
         initial = (
@@ -181,13 +141,13 @@ def run_cdc_pipeline_available_now(
             .filter(exclude_glob_filter(target.initial_load_exclude_glob))
             .withColumn("_src_file", F.input_file_name())
         )
-        if mirror_layout in ("bucketed", "bucketed_versioned", "bucketed_versioned_mor"):
+        if versioned:
             mirror.initialize(initial)
         else:
             mirror.commit(initial)
 
     def _merge(batch_df: DataFrame, _epoch: int) -> None:
-        if mirror_layout in ("bucketed", "bucketed_versioned", "bucketed_versioned_mor"):
+        if versioned:
             mirror.merge_batch(batch_df, target, tiebreak_cols=("_src_file",))
         else:
             cdc_merge_batch(
@@ -217,197 +177,3 @@ def run_cdc_pipeline_available_now(
     q.awaitTermination()
     return {"mirror": mirror, "changelog_dir": changelog_dir}
 
-
-class BucketPartitionedMirror:
-    """Key-bucketed mirror: merges rewrite ONLY the buckets a batch touches.
-
-    This is the 100 TB shape of the CDC merge (the snapshot-swapping
-    ParquetStateTable rewrites the whole state every batch — fine for
-    tests, catastrophic at scale): rows live under
-    ``root/data/bucket=<pmod(xxhash64(key), n)>/``, so
-
-    1. a micro-batch's touched buckets = distinct bucket ids of its keys
-       (bounded by ``n_buckets``, collected driver-side as a tiny int set);
-    2. the read side prunes to those buckets (partition pruning on the
-       ``bucket`` column — verified via PartitionFilters in the plan);
-    3. the write replaces only those partition directories
-       (``partitionOverwriteMode=dynamic``, set in session.py).
-
-    Cost per batch ≈ |touched buckets| / n_buckets of the mirror, not the
-    mirror. The same layout is what Iceberg/Delta ``MERGE INTO`` with a
-    bucket partition spec does; this is the storage-agnostic form.
-    """
-
-    def __init__(self, root: str, n_buckets: int = 64, key_col: str = "id") -> None:
-        self.root = root
-        self.data_dir = os.path.join(root, "data")
-        self.n_buckets = n_buckets
-        self.key_col = key_col
-        os.makedirs(self.data_dir, exist_ok=True)
-        self._recover()
-
-    def _recover(self) -> None:
-        """Crash recovery for the rename-aside swap in ``merge_batch``.
-
-        A ``.old-*`` dir with its live twin present means the swap completed
-        but cleanup didn't → drop it. Without the twin, the crash hit between
-        rename-aside and install → restore it (the batch will be re-applied
-        by checkpoint replay, which is idempotent)."""
-        for d in os.listdir(self.data_dir):
-            if ".old-" not in d:
-                continue
-            old = os.path.join(self.data_dir, d)
-            live = os.path.join(self.data_dir, d.split(".old-")[0])
-            if os.path.isdir(live):
-                shutil.rmtree(old, ignore_errors=True)
-            else:
-                os.replace(old, live)
-
-    def _bucket(self, col):
-        return F.pmod(F.xxhash64(col), F.lit(self.n_buckets)).cast("int")
-
-    @property
-    def _init_marker(self) -> str:
-        return os.path.join(self.root, "_INITIALIZED")
-
-    def exists(self) -> bool:
-        """Initialized ≠ non-empty: a changelog that deletes EVERY key
-        leaves zero bucket dirs (merge_batch removes fully-deleted
-        buckets, and an empty partitioned write creates none), and
-        conflating the two would re-run the initial load on the next
-        incremental pass — resurrecting deleted rows whose delete events
-        the checkpoint has already consumed. The marker file records
-        initialization independently of bucket count; pre-marker mirrors
-        (bucket dirs, no marker) still count as initialized."""
-        return os.path.exists(self._init_marker) or self._has_buckets()
-
-    def _has_buckets(self) -> bool:
-        return any(d.startswith("bucket=") for d in os.listdir(self.data_dir))
-
-    def initialize(self, df: DataFrame) -> None:
-        (
-            df.withColumn("bucket", self._bucket(F.col(self.key_col)))
-            .repartition("bucket")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(self.data_dir)
-        )
-        with open(self._init_marker, "w") as fh:
-            fh.write("1")
-
-    def read(self, spark: SparkSession) -> DataFrame | None:
-        # mergeSchema: a column-adding batch rewrites only touched buckets,
-        # so bucket dirs can disagree on schema — schema inference from one
-        # file would silently drop the evolved column
-        if not self._has_buckets():
-            return None  # initialized-but-empty (every key deleted)
-        return (
-            spark.read.option("mergeSchema", "true")
-            .parquet(self.data_dir)
-            .drop("bucket")
-        )
-
-    def read_buckets(
-        self, spark: SparkSession, buckets: Sequence[int]
-    ) -> DataFrame | None:
-        # Listing is scoped to the touched bucket DIRECTORIES (basePath
-        # keeps the partition column), so both the file listing and the
-        # mergeSchema footer reads cost |touched|/n_buckets of the mirror
-        # — reading the table root would run schema-merging over EVERY
-        # file before the partition filter pruned anything, breaking the
-        # class's per-batch cost contract at the 100 TB design point.
-        dirs = [
-            os.path.join(self.data_dir, f"bucket={int(b)}")
-            for b in buckets
-            if os.path.isdir(os.path.join(self.data_dir, f"bucket={int(b)}"))
-        ]
-        if not dirs:
-            return None  # none of the touched buckets exist yet
-        return (
-            spark.read.option("mergeSchema", "true")
-            .option("basePath", self.data_dir)
-            .parquet(*dirs)
-            # belt-and-braces partition predicate: listing is already
-            # scoped, but the filter keeps the pruning contract visible in
-            # the plan (PartitionFilters) and inert against stray dirs
-            .filter(F.col("bucket").isin(*[int(b) for b in buckets]))
-        )
-
-    def merge_batch(
-        self,
-        batch_df: DataFrame,
-        target: CdcTarget,
-        tiebreak_cols: Sequence[str] = (),
-    ) -> dict:
-        """Apply one changelog micro-batch; rewrite only touched buckets."""
-        spark = batch_df.sparkSession
-        key = target.key_column
-        touched = [
-            r["b"]
-            for r in batch_df.select(self._bucket(F.col(key)).alias("b"))
-            .distinct()
-            .collect()
-        ]
-        if not touched:
-            return {"touched_buckets": []}
-        current = self.read_buckets(spark, touched) if self.exists() else None
-        if current is not None:
-            current = current.drop("bucket")
-        new_state = apply_changelog(
-            batch_df,
-            key_cols=key,
-            ts_cols=target.ts_column,
-            op_col=target.op_column,
-            delete_op=target.delete_op,
-            mirror=current,
-            tiebreak_cols=tiebreak_cols,
-            drop_envelope=(),
-        )
-        return self._swap_staged(new_state, touched, key)
-
-    def _swap_staged(
-        self, new_state: DataFrame, touched: Sequence[int], key: str
-    ) -> dict:
-        # stage-then-swap: the new bucket contents are written to a staging
-        # dir FIRST (the merge plan reads the live bucket files — writing
-        # over them in the same job would have the write re-read its own
-        # replaced inputs), then each touched bucket directory is swapped
-        # in as a metadata operation. This is the poor-man's table-format
-        # commit: at cluster scale the same merge lands as Iceberg/Delta
-        # MERGE INTO where the snapshot commit plays this role.
-        staging = os.path.join(self.root, f"staging-{uuid.uuid4().hex[:8]}")
-        (
-            new_state.withColumn("bucket", self._bucket(F.col(key)))
-            .repartition("bucket")
-            .write.mode("errorifexists")
-            .partitionBy("bucket")
-            .parquet(staging)
-        )
-        try:
-            for b in touched:
-                dst = os.path.join(self.data_dir, f"bucket={b}")
-                src = os.path.join(staging, f"bucket={b}")
-                # crash-safe swap: rename the live dir ASIDE (never delete
-                # data before its replacement is installed), install the new
-                # dir, then drop the old one. _recover() handles a crash at
-                # any point between these renames.
-                trash = f"{dst}.old-{uuid.uuid4().hex[:8]}"
-                if os.path.isdir(dst):
-                    os.replace(dst, trash)
-                if os.path.isdir(src):
-                    os.replace(src, dst)
-                # else: every key of this bucket was deleted → dir stays gone
-                shutil.rmtree(trash, ignore_errors=True)
-        finally:
-            shutil.rmtree(staging, ignore_errors=True)
-        return {"touched_buckets": sorted(touched)}
-
-    def commit_merged(
-        self, df: DataFrame, touched: Sequence[int], key_col: str | None = None
-    ) -> dict:
-        """Swap in an externally-merged state slice for ``touched``
-        buckets (the ``merge_into_table`` hook — same crash-safe
-        rename-aside discipline as the CDC merge)."""
-        return self._swap_staged(
-            df, [int(b) for b in touched], key_col or self.key_col
-        )

@@ -67,7 +67,7 @@ def funnel_dir(spark, sf_dir, tmp_path_factory):
     Shared by the stateful-streaming twin tests (funnel, cohort)."""
     from pyspark.sql import functions as F
 
-    from tabular_cdc_bootstrapper_spark.queries import _load_events
+    from tabular_cdc_bootstrapper_spark.queries._registry import _load_events
 
     out = tmp_path_factory.mktemp("funnel_stream")
     e = _load_events(spark, f"{SF_SMOKE}/events.parquet").withColumn(

@@ -27,7 +27,9 @@ import os
 
 import pytest
 
-from tabular_cdc_bootstrapper_spark.streaming.pipeline import ParquetStateTable
+from tabular_cdc_bootstrapper_spark.streaming.state_table import (
+    ParquetStateTable,
+)
 
 
 def _df(spark, tag: str, n: int = 3):

@@ -225,7 +225,9 @@ def test_main_entry_end_to_end(scenario, tmp_path, monkeypatch):
     monkeypatch.setenv("SPARK_CDC_WORK_DIR", str(tmp_path / "work"))
 
     from tabular_cdc_bootstrapper_spark.__main__ import main
-    from tabular_cdc_bootstrapper_spark.streaming.pipeline import ParquetStateTable
+    from tabular_cdc_bootstrapper_spark.streaming.state_table import (
+        ParquetStateTable,
+    )
 
     assert main() == 0
 
@@ -245,22 +247,33 @@ def test_main_entry_end_to_end(scenario, tmp_path, monkeypatch):
     assert _mirror_dict(mirror.read(spark)) == expected
 
 
+@pytest.mark.parametrize("layout", ["bucketed", "bucketed_versioned"])
 def test_main_entry_bucketed_mirror_registered_partitioned(
-    scenario, tmp_path, monkeypatch
+    tmp_path, monkeypatch, layout
 ):
-    """SPARK_CDC_MIRROR_LAYOUT=bucketed: the mirror lives under bucket=N
-    partition directories, so the catalog registration must be a
-    PARTITIONED table (plus MSCK partition discovery) — an unpartitioned
-    table pointed at that layout does no partition discovery and SELECTs
-    zero rows (ADVICE r5 #4)."""
-    src, expected = scenario
+    """SPARK_CDC_MIRROR_LAYOUT=bucketed (an alias) or bucketed_versioned:
+    the mirror lives under bucket=N/v-*/ version dirs named by the head
+    manifest, so the catalog registration must be a PARTITIONED table
+    with one partition per manifest entry — an unpartitioned table
+    pointed at that layout SELECTs zero rows (ADVICE r5 #4). A later poll
+    that lands a change file must re-register the NEW head."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tabular_cdc_bootstrapper_spark.streaming.bucket_mirror import (
+        VersionedBucketMirror,
+    )
+
+    src = str(tmp_path / "src")
+    expected = generate(src, seed=42)
+    fqn = f"cdc_bootstrap.{layout}_table"
     monkeypatch.setenv("TABULAR_BUCKET_NAME", "local-bucket")
-    monkeypatch.setenv("TABULAR_BUCKET_MONITOR_PATH", "cdc/bucketed_table")
+    monkeypatch.setenv("TABULAR_BUCKET_MONITOR_PATH", f"cdc/{layout}_table")
     monkeypatch.setenv("TABULAR_CDC_ID_FIELD", "id")
     monkeypatch.setenv("TABULAR_CDC_TIMESTAMP_FIELD", "ts")
     monkeypatch.setenv("SPARK_CDC_SOURCE_DIR", src)
     monkeypatch.setenv("SPARK_CDC_WORK_DIR", str(tmp_path / "work"))
-    monkeypatch.setenv("SPARK_CDC_MIRROR_LAYOUT", "bucketed")
+    monkeypatch.setenv("SPARK_CDC_MIRROR_LAYOUT", layout)
 
     from tabular_cdc_bootstrapper_spark.__main__ import main
 
@@ -270,72 +283,120 @@ def test_main_entry_bucketed_mirror_registered_partitioned(
         "tabular_cdc_bootstrapper_spark.session", fromlist=["get_spark"]
     ).get_spark()
     # the registered table SELECTs the pipeline's output through the
-    # partitioned layout (zero rows would mean discovery never happened)
-    got = _mirror_dict(spark.table("cdc_bootstrap.bucketed_table"))
-    assert got == expected
-    # and it actually is a partitioned registration, not a flat re-point
-    ddl = spark.sql(
-        "SHOW CREATE TABLE cdc_bootstrap.bucketed_table"
-    ).collect()[0][0]
-    assert "PARTITIONED BY" in ddl and "bucket" in ddl
-    # re-run: checkpoint consumes nothing new; registration stays correct
+    # partitioned layout (zero rows would mean no partition registered)
+    assert _mirror_dict(spark.table(fqn)) == expected
+
+    # a second poll lands one more change file: update, delete, insert
+    upd, gone = sorted(expected)[:2]
+    rows = [
+        (upd, "polled_again", "2024-01-02T00:00:01", "U"),
+        (gone, expected[gone]["name"], "2024-01-02T00:00:02", "D"),
+        (10_001, "new_key", "2024-01-02T00:00:03", "I"),
+    ]
+    pq.write_table(
+        pa.table({
+            "id": [r[0] for r in rows],
+            "name": [r[1] for r in rows],
+            "modification_date": [r[2] for r in rows],
+            "table": ["test_table"] * len(rows),
+            "op": [r[3] for r in rows],
+            "ts": [r[2] for r in rows],
+        }),
+        f"{src}/2024-01-02T00-00-01.parquet",
+    )
+    expected[upd] = {
+        "id": upd, "name": "polled_again",
+        "modification_date": "2024-01-02T00:00:01",
+    }
+    del expected[gone]
+    expected[10_001] = {
+        "id": 10_001, "name": "new_key",
+        "modification_date": "2024-01-02T00:00:03",
+    }
     assert main() == 0
-    assert _mirror_dict(spark.table("cdc_bootstrap.bucketed_table")) == expected
+    head = VersionedBucketMirror(
+        str(tmp_path / "work" / f"{layout}_table" / "mirror")
+    )
+    assert _mirror_dict(head.read(spark)) == expected
+    assert _mirror_dict(spark.table(fqn)) == expected
+    # and it actually is a partitioned registration, not a flat re-point
+    ddl = spark.sql(f"SHOW CREATE TABLE {fqn}").collect()[0][0]
+    assert "PARTITIONED BY" in ddl and "bucket" in ddl
+
+
+def test_main_entry_rejects_merge_on_read_layout(tmp_path, monkeypatch):
+    """A merge-on-read mirror is read by folding its delta files, which a
+    catalog table cannot express: the CLI refuses the layout at start-up
+    (exit 2) instead of registering a table that SELECTs stale rows."""
+    monkeypatch.setenv("TABULAR_BUCKET_NAME", "local-bucket")
+    monkeypatch.setenv("TABULAR_BUCKET_MONITOR_PATH", "cdc/mor_table")
+    monkeypatch.setenv("SPARK_CDC_SOURCE_DIR", str(tmp_path / "src"))
+    monkeypatch.setenv("SPARK_CDC_WORK_DIR", str(tmp_path / "work"))
+    monkeypatch.setenv("SPARK_CDC_MIRROR_LAYOUT", "bucketed_versioned_mor")
+
+    from tabular_cdc_bootstrapper_spark.__main__ import main
+
+    assert main() == 2
+    assert not (tmp_path / "work").exists()
+
+
+@pytest.mark.parametrize("fold", ["deltas", "renames", "shadowed"])
+def test_partitioned_registration_refuses_read_time_folds(spark, fold):
+    """A head manifest whose read folds delta files (merge-on-read),
+    renamed columns or masked column generations cannot be expressed as
+    a partitioned catalog table: registration refuses it rather than
+    publishing a table that SELECTs stale or mis-named rows."""
+    from tabular_cdc_bootstrapper_spark.catalog import (
+        point_table_to_partitioned,
+    )
+
+    manifest = {"version": 1, "buckets": {"0": "/nowhere/v-1"}, fold: {"x": 1}}
+    with pytest.raises(ValueError, match=fold):
+        point_table_to_partitioned(spark, "db.t", "/nowhere", manifest)
 
 
 def test_bucket_partitioned_mirror_merges_incrementally(spark, tmp_path):
     """The 100 TB merge shape: a micro-batch rewrites ONLY the key-buckets
-    it touches; untouched bucket files stay byte-identical on disk; a
-    bucket fully emptied by deletes disappears; final state == full
-    recompute."""
-    import os
-
-    from tabular_cdc_bootstrapper_spark.config import CdcTarget
-    from tabular_cdc_bootstrapper_spark.streaming.pipeline import (
-        BucketPartitionedMirror,
+    it touches; untouched buckets keep their manifest dir unchanged; a
+    bucket fully emptied by deletes drops out of the manifest; final
+    state == full recompute."""
+    from tabular_cdc_bootstrapper_spark.streaming.bucket_mirror import (
+        VersionedBucketMirror,
     )
 
     target = CdcTarget(source_uri="s3://b/t", key_column="id", ts_column="ts")
-    m = BucketPartitionedMirror(str(tmp_path / "mirror"), n_buckets=8, key_col="id")
+    m = VersionedBucketMirror(
+        str(tmp_path / "mirror"), n_buckets=8, key_col="id"
+    )
     base = spark.createDataFrame(
         [(i, f"n{i}", "I", 0) for i in range(100)],
         "id long, name string, op string, ts long",
     )
     m.initialize(base.drop("op", "ts"))
 
-    def files_snapshot():
-        out = {}
-        for d in os.listdir(m.data_dir):
-            if d.startswith("bucket="):
-                p = os.path.join(m.data_dir, d)
-                out[d] = sorted(
-                    (f, os.path.getsize(os.path.join(p, f)))
-                    for f in os.listdir(p)
-                    if f.endswith(".parquet")
-                )
-        return out
-
-    before = files_snapshot()
+    before = dict(m.current()["buckets"])
     # batch touches keys 3 and 7 (update + delete)
     batch = spark.createDataFrame(
         [(3, "n3v2", "U", 1), (7, None, "D", 1)],
         "id long, name string, op string, ts long",
     )
     res = m.merge_batch(batch, target)
-    after = files_snapshot()
+    after = m.current()["buckets"]
 
-    touched_dirs = {f"bucket={b}" for b in res["touched_buckets"]}
-    assert touched_dirs, "batch must touch at least one bucket"
-    for d, files in before.items():
-        if d not in touched_dirs:
-            assert after[d] == files, f"untouched {d} was rewritten"
+    touched = {str(b) for b in res["touched_buckets"]}
+    assert touched, "batch must touch at least one bucket"
+    for b, d in before.items():
+        if b in touched:
+            assert after[b] != d, f"touched bucket {b} was not rewritten"
+        else:
+            assert after[b] == d, f"untouched bucket {b} was rewritten"
 
     state = {r["id"]: r["name"] for r in m.read(spark).collect()}
     assert state[3] == "n3v2"
     assert 7 not in state
     assert len(state) == 99
 
-    # empty out every key of one bucket → its directory must vanish
+    # empty out every key of one bucket → it must leave the manifest
     victims = [
         r["id"]
         for r in m.read(spark)
@@ -348,26 +409,33 @@ def test_bucket_partitioned_mirror_merges_incrementally(spark, tmp_path):
         "id long, name string, op string, ts long",
     )
     m.merge_batch(wipe, target)
-    assert f"bucket={res['touched_buckets'][0]}" not in files_snapshot()
+    assert str(res["touched_buckets"][0]) not in m.current()["buckets"]
     assert len({r["id"] for r in m.read(spark).collect()}) == 99 - len(victims)
 
 
-def test_bucket_mirror_read_prunes_partitions(spark, tmp_path):
-    """read_buckets must prune at the partition level (PartitionFilters on
-    the bucket column) — at 100 TB this is the difference between reading
-    |touched|/n_buckets of the mirror and reading all of it."""
-    from tabular_cdc_bootstrapper_spark.streaming.pipeline import (
-        BucketPartitionedMirror,
+@pytest.mark.parametrize("layout", ["bucketed", "bucketed_versioned"])
+def test_logless_bucketed_work_dir_is_refused(spark, tmp_path, layout):
+    """A work dir whose mirror was written by the retired logless
+    ``bucketed`` layout has no snapshot log. Opened as a versioned mirror
+    it would look uninitialized, re-run the initial load, and lose the
+    changes the checkpoint already consumed — so opening it must raise
+    and say to rebuild the work dir, for either layout value."""
+    src = str(tmp_path / "src")
+    generate(src, seed=42)
+    target = CdcTarget(source_uri=f"file://{src}", key_column="id", ts_column="ts")
+    marker_wk, files_wk = tmp_path / "wk-marker", tmp_path / "wk-files"
+    (marker_wk / "mirror" / "data").mkdir(parents=True)
+    (marker_wk / "mirror" / "_INITIALIZED").write_text("1")
+    spark.createDataFrame([(1, "a")], "id long, name string").write.parquet(
+        str(files_wk / "mirror" / "data" / "bucket=3")
     )
-
-    m = BucketPartitionedMirror(str(tmp_path / "m2"), n_buckets=8, key_col="id")
-    m.initialize(
-        spark.createDataFrame([(i, f"n{i}") for i in range(64)], "id long, name string")
-    )
-    df = m.read_buckets(spark, [1, 3])
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan
-    assert "bucket" in plan.split("PartitionFilters", 1)[1][:200]
+    for wk in (marker_wk, files_wk):
+        with pytest.raises(ValueError, match="logless 'bucketed' layout.*rebuild"):
+            run_cdc_pipeline_available_now(
+                spark, src, DMS_SCHEMA, str(wk), target,
+                mirror_layout=layout, n_buckets=8,
+            )
+        assert not (wk / "_checkpoint-ingest").exists()
 
 
 def test_null_op_rows_are_not_deleted(spark):
@@ -410,13 +478,12 @@ def test_bare_glob_exclusion(spark, tmp_path):
 
 def test_bucket_mirror_mixed_schema_read(spark, tmp_path):
     """A column-adding batch rewrites only touched buckets; read() must
-    still surface the evolved column (mergeSchema), null for untouched
-    buckets."""
-    from tabular_cdc_bootstrapper_spark.streaming.pipeline import (
-        BucketPartitionedMirror,
+    still surface the evolved column, null for untouched buckets."""
+    from tabular_cdc_bootstrapper_spark.streaming.bucket_mirror import (
+        VersionedBucketMirror,
     )
 
-    m = BucketPartitionedMirror(str(tmp_path / "m"), n_buckets=4, key_col="id")
+    m = VersionedBucketMirror(str(tmp_path / "m"), n_buckets=4, key_col="id")
     m.initialize(
         spark.createDataFrame(
             [(i, f"n{i}") for i in range(16)], "id long, name string"
@@ -434,37 +501,6 @@ def test_bucket_mirror_mixed_schema_read(spark, tmp_path):
     assert rows[0] == "555"
     assert rows[1] is None  # untouched bucket, evolved column visible as null
     assert out.count() == 16
-
-
-def test_bucket_mirror_crash_recovery(spark, tmp_path):
-    """Simulated crash mid-swap: a bucket renamed aside but not reinstalled
-    must be restored on the next open; a leftover trash dir beside a live
-    bucket must be dropped."""
-    import os
-    import shutil
-
-    from tabular_cdc_bootstrapper_spark.streaming.pipeline import (
-        BucketPartitionedMirror,
-    )
-
-    root = str(tmp_path / "m")
-    m = BucketPartitionedMirror(root, n_buckets=4, key_col="id")
-    m.initialize(
-        spark.createDataFrame([(i, f"n{i}") for i in range(16)], "id long, name string")
-    )
-    buckets = sorted(
-        d for d in os.listdir(m.data_dir) if d.startswith("bucket=") and ".old-" not in d
-    )
-    # crash case 1: renamed aside, new dir never installed
-    b0 = os.path.join(m.data_dir, buckets[0])
-    os.replace(b0, b0 + ".old-deadbeef")
-    # crash case 2: swap completed, old dir not cleaned up
-    b1 = os.path.join(m.data_dir, buckets[1])
-    shutil.copytree(b1, b1 + ".old-cafebabe")
-
-    m2 = BucketPartitionedMirror(root, n_buckets=4, key_col="id")
-    assert not any(".old-" in d for d in os.listdir(m2.data_dir))
-    assert m2.read(spark).count() == 16  # nothing lost, nothing doubled
 
 
 def test_scd2_history_semantics(spark):
@@ -719,7 +755,9 @@ def test_maintain_join_rejects_overlapping_columns(spark):
 
 
 def _mk_view(tmp_path, name="v"):
-    from tabular_cdc_bootstrapper_spark.streaming.pipeline import MaintainedAggView
+    from tabular_cdc_bootstrapper_spark.streaming.feeds import (
+        MaintainedAggView,
+    )
 
     return MaintainedAggView(
         str(tmp_path / name),
@@ -735,7 +773,9 @@ def test_maintained_agg_view_tracks_mirror(spark, tmp_path):
     equal a recompute over the mirror — including a group-moving update and
     a group emptied by deletes."""
     from tabular_cdc_bootstrapper_spark.operators.cdc import apply_changelog
-    from tabular_cdc_bootstrapper_spark.streaming.pipeline import ParquetStateTable
+    from tabular_cdc_bootstrapper_spark.streaming.state_table import (
+        ParquetStateTable,
+    )
 
     view = _mk_view(tmp_path)
     mirror = ParquetStateTable(str(tmp_path / "m"))
@@ -775,8 +815,10 @@ def test_maintained_join_view_tracks_mirrors(spark, tmp_path):
     bootstrap from empty mirrors, a two-sided batch, and a dim-only
     batch (fact_batch=None) all exercised."""
     from tabular_cdc_bootstrapper_spark.operators.cdc import apply_changelog
-    from tabular_cdc_bootstrapper_spark.streaming.pipeline import (
+    from tabular_cdc_bootstrapper_spark.streaming.feeds import (
         MaintainedJoinView,
+    )
+    from tabular_cdc_bootstrapper_spark.streaming.state_table import (
         ParquetStateTable,
     )
 
@@ -823,7 +865,7 @@ def test_maintained_join_view_tracks_mirrors(spark, tmp_path):
 def test_maintained_join_view_replay_is_noop(spark, tmp_path):
     """Checkpoint replay delivers the same batch id twice; the second
     apply must skip (the delta update is not idempotent)."""
-    from tabular_cdc_bootstrapper_spark.streaming.pipeline import (
+    from tabular_cdc_bootstrapper_spark.streaming.feeds import (
         MaintainedJoinView,
     )
 
@@ -861,7 +903,9 @@ def test_maintained_agg_view_crash_between_commits(spark, tmp_path):
     foreachBatch replay re-applies the batch — view skips by id, mirror
     merges idempotently, and the two agree afterwards."""
     from tabular_cdc_bootstrapper_spark.operators.cdc import apply_changelog
-    from tabular_cdc_bootstrapper_spark.streaming.pipeline import ParquetStateTable
+    from tabular_cdc_bootstrapper_spark.streaming.state_table import (
+        ParquetStateTable,
+    )
 
     view = _mk_view(tmp_path)
     mirror = ParquetStateTable(str(tmp_path / "m"))

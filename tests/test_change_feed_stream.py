@@ -12,12 +12,16 @@ import os
 import pytest
 
 from tabular_cdc_bootstrapper_spark.operators.cdc import apply_changelog
-from tabular_cdc_bootstrapper_spark.streaming.pipeline import (
+from tabular_cdc_bootstrapper_spark.streaming.feeds import (
     ChangeFeedStream,
     MaintainedAggView,
-    ParquetStateTable,
-    VersionedBucketMirror,
     table_changes,
+)
+from tabular_cdc_bootstrapper_spark.streaming.state_table import (
+    ParquetStateTable,
+)
+from tabular_cdc_bootstrapper_spark.streaming.bucket_mirror import (
+    VersionedBucketMirror,
 )
 
 
@@ -275,7 +279,7 @@ def test_join_feed_driver_end_to_end(spark, tmp_path):
     driver (r12, VERDICT task 1): rate-limited triggers, exactly-once
     across a crash-before-ack restart, and the fold law — after draining,
     the view equals a from-scratch join of both table heads."""
-    from tabular_cdc_bootstrapper_spark.streaming.pipeline import (
+    from tabular_cdc_bootstrapper_spark.streaming.feeds import (
         MaintainedJoinFeedDriver,
         MaintainedJoinView,
     )

@@ -34,9 +34,11 @@ import threading
 import pytest
 from pyspark.sql import functions as F
 
-from tabular_cdc_bootstrapper_spark.streaming.pipeline import (
-    CommitConflict,
+from tabular_cdc_bootstrapper_spark.streaming._protocol import CommitConflict
+from tabular_cdc_bootstrapper_spark.streaming.state_table import (
     ParquetStateTable,
+)
+from tabular_cdc_bootstrapper_spark.streaming.bucket_mirror import (
     VersionedBucketMirror,
 )
 
@@ -310,8 +312,6 @@ def test_purge_converges_past_mid_purge_commit(spark, tmp_path):
     commit's rows survive (never clobbered), rows it carried for purged
     keys are purged too, and a head that outruns every round is still a
     caller-visible CommitConflict (bounded give-up)."""
-    from tabular_cdc_bootstrapper_spark.streaming import pipeline as P
-
     m = _mirror(spark, tmp_path, n=16)
     real_current = m.current
     stale = real_current()
@@ -711,7 +711,7 @@ def test_purge_lock_serializes_concurrent_purges(spark, tmp_path):
     taken over."""
     import time as _time
 
-    from tabular_cdc_bootstrapper_spark.streaming import pipeline as P
+    from tabular_cdc_bootstrapper_spark.streaming._protocol import _purge_lock
 
     t = ParquetStateTable(str(tmp_path / "t"), keep_versions=10)
     t.commit(
@@ -721,7 +721,7 @@ def test_purge_lock_serializes_concurrent_purges(spark, tmp_path):
     )
     keys = spark.createDataFrame([(1,)], "k long")
     # a live lock (another purge in flight) → CommitConflict, not a wait
-    with P._purge_lock(t.root):
+    with _purge_lock(t.root):
         with pytest.raises(CommitConflict, match="purge lock"):
             t.purge_keys(spark, keys, "k")
     # lock released → the purge lands

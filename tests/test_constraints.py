@@ -203,7 +203,7 @@ def test_anomaly_vs_previous_resolves_history(spark, tmp_path):
         check_anomalies_vs_previous,
         row_count_within,
     )
-    from tabular_cdc_bootstrapper_spark.streaming.pipeline import (
+    from tabular_cdc_bootstrapper_spark.streaming.state_table import (
         ParquetStateTable,
     )
 
@@ -241,7 +241,7 @@ def test_anomaly_vs_previous_skips_expired_history(spark, tmp_path):
         check_anomalies_vs_previous,
         row_count_within,
     )
-    from tabular_cdc_bootstrapper_spark.streaming.pipeline import (
+    from tabular_cdc_bootstrapper_spark.streaming.state_table import (
         ParquetStateTable,
     )
 

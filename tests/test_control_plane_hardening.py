@@ -11,8 +11,8 @@ from pyspark.sql import functions as F
 
 from tabular_cdc_bootstrapper_spark.config import CdcTarget
 from tabular_cdc_bootstrapper_spark.sources.files import _glob_match
-from tabular_cdc_bootstrapper_spark.streaming.pipeline import (
-    BucketPartitionedMirror,
+from tabular_cdc_bootstrapper_spark.streaming.bucket_mirror import (
+    VersionedBucketMirror,
 )
 
 TARGET = CdcTarget(source_uri="s3://b/t", key_column="id", ts_column="ts")
@@ -23,7 +23,7 @@ def test_fully_emptied_mirror_stays_initialized(spark, tmp_path):
     read as 'initialized and empty', NOT 'never initialized' — the latter
     re-runs the initial load and resurrects rows whose delete events the
     checkpoint already consumed."""
-    m = BucketPartitionedMirror(str(tmp_path / "m"), n_buckets=4, key_col="id")
+    m = VersionedBucketMirror(str(tmp_path / "m"), n_buckets=4, key_col="id")
     m.initialize(
         spark.createDataFrame([(1, "a"), (2, "b")], "id long, name string")
     )
@@ -205,7 +205,7 @@ def test_load_events_nested_and_empty_dirs(spark, tmp_path):
     (partitioned/recursive layouts) deterministically, and raise a clear
     error — not a read_schema crash on a directory path — when a dir has
     no parquet at all (ADVICE r5 #3)."""
-    from tabular_cdc_bootstrapper_spark.queries import _load_events
+    from tabular_cdc_bootstrapper_spark.queries._registry import _load_events
 
     src = spark.range(5).select(
         F.col("id").alias("event_id"),

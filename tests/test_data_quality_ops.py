@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import hashlib
 
-from tabular_cdc_bootstrapper_spark.queries import QUERIES
+from tabular_cdc_bootstrapper_spark.queries._registry import QUERIES
 
 
 def _write_documents(spark, out_dir, rows):
@@ -341,7 +341,7 @@ def test_hybrid_retrieval_laws(spark, sf_dir):
     dense rerank actually CHANGES the order relative to pure BM25 (the
     reason the second stage exists)."""
     from tabular_cdc_bootstrapper_spark.functions.retrieval import bm25_topk
-    from tabular_cdc_bootstrapper_spark.queries import _t
+    from tabular_cdc_bootstrapper_spark.queries._registry import _t
 
     out = QUERIES["hybrid_retrieval_topk"](spark, sf_dir).collect()
     assert 1 <= len(out) <= 10

@@ -24,11 +24,13 @@ from tabular_cdc_bootstrapper_spark.config import CdcTarget
 from tabular_cdc_bootstrapper_spark.streaming.datasource import (
     ChangeFeedDataSource,
 )
-from tabular_cdc_bootstrapper_spark.streaming.pipeline import (
+from tabular_cdc_bootstrapper_spark.streaming.state_table import (
     ParquetStateTable,
-    VersionedBucketMirror,
-    table_changes,
 )
+from tabular_cdc_bootstrapper_spark.streaming.bucket_mirror import (
+    VersionedBucketMirror,
+)
+from tabular_cdc_bootstrapper_spark.streaming.feeds import table_changes
 
 TARGET = CdcTarget(source_uri="file:///x", key_column="id", ts_column="ts")
 
@@ -203,7 +205,7 @@ def test_readstream_drives_maintained_agg_view(spark, tmp_path):
     MaintainedAggView through foreachBatch — Spark's checkpoint carries
     the offsets, the view's batch-id fence carries the effects, and
     after draining the view equals the direct aggregate of the head."""
-    from tabular_cdc_bootstrapper_spark.streaming.pipeline import (
+    from tabular_cdc_bootstrapper_spark.streaming.feeds import (
         MaintainedAggView,
     )
 

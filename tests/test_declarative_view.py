@@ -19,8 +19,8 @@ from pyspark.sql import functions as F
 from tabular_cdc_bootstrapper_spark.streaming.datasource import (
     register_stream_sources,
 )
-from tabular_cdc_bootstrapper_spark.streaming.pipeline import (
-    MaintainedAggView,
+from tabular_cdc_bootstrapper_spark.streaming.feeds import MaintainedAggView
+from tabular_cdc_bootstrapper_spark.streaming.bucket_mirror import (
     VersionedBucketMirror,
 )
 

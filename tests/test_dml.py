@@ -13,9 +13,11 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from tabular_cdc_bootstrapper_spark.streaming.pipeline import (
-    CommitConflict,
+from tabular_cdc_bootstrapper_spark.streaming._protocol import CommitConflict
+from tabular_cdc_bootstrapper_spark.streaming.state_table import (
     ParquetStateTable,
+)
+from tabular_cdc_bootstrapper_spark.streaming.bucket_mirror import (
     VersionedBucketMirror,
 )
 

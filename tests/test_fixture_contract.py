@@ -131,7 +131,7 @@ _US = [1_700_000_000_000_000, 1_700_000_123_456_789]  # µs since epoch
 
 def test_events_loader_handles_us_timestamp(spark, tmp_path):
     """Current contract: ts stored as parquet timestamp[us]."""
-    from tabular_cdc_bootstrapper_spark.queries import _load_events
+    from tabular_cdc_bootstrapper_spark.queries._registry import _load_events
 
     path = _write_events(
         tmp_path, "us.parquet", pa.array(_US, pa.timestamp("us"))
@@ -145,7 +145,7 @@ def test_events_loader_handles_us_timestamp(spark, tmp_path):
 def test_events_loader_handles_ns_int64(spark, tmp_path):
     """Legacy variant: ts stored as raw int64 nanoseconds-since-epoch.
     Loader must truncate to µs — identical values to the µs contract."""
-    from tabular_cdc_bootstrapper_spark.queries import _load_events
+    from tabular_cdc_bootstrapper_spark.queries._registry import _load_events
 
     ns = [v * 1000 + 999 for v in _US]  # sub-µs residue must truncate away
     path = _write_events(tmp_path, "ns.parquet", pa.array(ns, pa.int64()))
@@ -159,7 +159,7 @@ def test_events_loader_handles_ns_timestamp(spark, tmp_path):
     Spark 4 refuses to read as a timestamp — the loader must take the
     nanosAsLong legacy path (footer says 'timestamp[ns]', NOT int64) and
     still produce the same µs-truncated TIMESTAMP_NTZ values."""
-    from tabular_cdc_bootstrapper_spark.queries import _load_events
+    from tabular_cdc_bootstrapper_spark.queries._registry import _load_events
 
     ns = [v * 1000 + 999 for v in _US]
     path = _write_events(tmp_path, "tns.parquet", pa.array(ns, pa.timestamp("ns")))
@@ -173,7 +173,7 @@ def test_events_loader_handles_ns_timestamp(spark, tmp_path):
 def test_events_loader_contracts_agree(spark, tmp_path):
     """The two storage contracts for identical instants load identically —
     dtype is a generator detail, never a semantic one."""
-    from tabular_cdc_bootstrapper_spark.queries import _load_events
+    from tabular_cdc_bootstrapper_spark.queries._registry import _load_events
 
     p_us = _write_events(tmp_path, "a.parquet", pa.array(_US, pa.timestamp("us")))
     p_ns = _write_events(
@@ -199,7 +199,7 @@ def _to_us(dt) -> int:
 def test_events_loader_handles_directory_input(spark, tmp_path):
     """Multi-file events datasets (a directory of parts) probe ONE part's
     footer for the dtype branch and load all parts."""
-    from tabular_cdc_bootstrapper_spark.queries import _load_events
+    from tabular_cdc_bootstrapper_spark.queries._registry import _load_events
 
     d = tmp_path / "events_dir"
     d.mkdir()
@@ -222,7 +222,7 @@ def test_events_loader_handles_int96_timestamp(spark, tmp_path):
     DATATYPE_MISMATCH on `ts div 1000`."""
     from pyspark.sql import functions as F
 
-    from tabular_cdc_bootstrapper_spark.queries import _load_events
+    from tabular_cdc_bootstrapper_spark.queries._registry import _load_events
 
     df = spark.createDataFrame(
         [(1, "2024-01-01 10:00:00"), (2, "2024-01-08 11:30:00")],
@@ -250,7 +250,7 @@ def test_events_loader_probes_schema_and_physical_from_same_file(spark, tmp_path
     probes must skip to the first part that has row groups — a split
     probe (schema from parts[0], physical from parts[1]) would here read
     a µs schema but an INT96 physical type and could mis-branch."""
-    from tabular_cdc_bootstrapper_spark.queries import _load_events
+    from tabular_cdc_bootstrapper_spark.queries._registry import _load_events
 
     d = tmp_path / "events_dir"
     d.mkdir()
@@ -280,7 +280,7 @@ def test_events_loader_rejects_mixed_dtype_directory(spark, tmp_path):
     not silently pick whichever contract the probe file happens to use."""
     import pytest as _pytest
 
-    from tabular_cdc_bootstrapper_spark.queries import _load_events
+    from tabular_cdc_bootstrapper_spark.queries._registry import _load_events
 
     d = tmp_path / "events_dir"
     d.mkdir()
@@ -306,7 +306,7 @@ def test_events_loader_empty_dataset_defaults_native(spark, tmp_path):
     """An all-empty ns-typed dataset takes the native branch (INT96 is
     what Spark itself writes; a 0-row TIMESTAMP(NANOS) dataset has no
     values for the branches to disagree on) and loads 0 rows."""
-    from tabular_cdc_bootstrapper_spark.queries import _load_events
+    from tabular_cdc_bootstrapper_spark.queries._registry import _load_events
 
     d = tmp_path / "events_dir"
     d.mkdir()

@@ -19,8 +19,10 @@ import os
 import pytest
 
 from tabular_cdc_bootstrapper_spark.config import CdcTarget
-from tabular_cdc_bootstrapper_spark.streaming.pipeline import (
+from tabular_cdc_bootstrapper_spark.streaming.state_table import (
     ParquetStateTable,
+)
+from tabular_cdc_bootstrapper_spark.streaming.bucket_mirror import (
     VersionedBucketMirror,
 )
 

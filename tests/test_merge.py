@@ -154,16 +154,16 @@ def test_merge_rejects_multiple_source_rows_per_key(spark):
 
 
 def _make_table(kind, root, key="k"):
-    from tabular_cdc_bootstrapper_spark.streaming.pipeline import (
-        BucketPartitionedMirror,
-        ParquetStateTable,
+    from tabular_cdc_bootstrapper_spark.streaming.bucket_mirror import (
         VersionedBucketMirror,
+    )
+    from tabular_cdc_bootstrapper_spark.streaming.state_table import (
+        ParquetStateTable,
     )
 
     if kind == "snapshot":
         return ParquetStateTable(str(root), keep_versions=10)
-    if kind == "bucketed":
-        return BucketPartitionedMirror(str(root), n_buckets=8, key_col=key)
+    # "bucketed" is an alias of the "bucketed_versioned" layout
     return VersionedBucketMirror(
         str(root), n_buckets=8, key_col=key, keep_versions=10
     )
@@ -262,9 +262,7 @@ def test_merge_into_table_is_time_travelable(spark, tmp_path, layout):
         merge_into_table,
         src,
     )
-    from tabular_cdc_bootstrapper_spark.streaming.pipeline import (
-        table_changes,
-    )
+    from tabular_cdc_bootstrapper_spark.streaming.feeds import table_changes
 
     t = _make_table(layout, tmp_path / layout)
     base = spark.createDataFrame(
@@ -310,7 +308,7 @@ def test_merge_into_table_is_time_travelable(spark, tmp_path, layout):
 
 def test_merge_into_table_first_merge_bootstraps_empty_table(spark, tmp_path):
     from tabular_cdc_bootstrapper_spark.operators.merge import merge_into_table
-    from tabular_cdc_bootstrapper_spark.streaming.pipeline import (
+    from tabular_cdc_bootstrapper_spark.streaming.state_table import (
         ParquetStateTable,
     )
 
@@ -325,7 +323,7 @@ def test_merge_meta_recorded_on_versioned_bucket_mirror(spark, tmp_path):
     versioned mirror's manifest records the same 'operation: merge'
     marker (plus caller meta) the snapshot table's pointer does."""
     from tabular_cdc_bootstrapper_spark.operators.merge import merge_into_table
-    from tabular_cdc_bootstrapper_spark.streaming.pipeline import (
+    from tabular_cdc_bootstrapper_spark.streaming.bucket_mirror import (
         VersionedBucketMirror,
     )
 
@@ -345,30 +343,6 @@ def test_merge_meta_recorded_on_versioned_bucket_mirror(spark, tmp_path):
     assert "operation" not in t.history()[0]  # CDC/init commits unmarked
 
 
-def test_merge_meta_rejected_on_plain_bucketed_mirror(spark, tmp_path):
-    """The plain bucketed mirror keeps no snapshot log: caller meta
-    would be silently-lost provenance, so it must raise instead."""
-    import pytest
-
-    from tabular_cdc_bootstrapper_spark.operators.merge import merge_into_table
-    from tabular_cdc_bootstrapper_spark.streaming.pipeline import (
-        BucketPartitionedMirror,
-    )
-
-    from tabular_cdc_bootstrapper_spark.operators.merge import src as s
-
-    t = BucketPartitionedMirror(str(tmp_path / "t"), n_buckets=8, key_col="k")
-    t.initialize(spark.createDataFrame([(1, 10)], "k long, v long"))
-    src = spark.createDataFrame([(1, 11)], "k long, v long")
-    with pytest.raises(ValueError, match="no snapshot log"):
-        merge_into_table(
-            spark, t, src, on=["k"], update_set={"v": s("v")}, meta={"job": "x"}
-        )
-    # meta-free merges still work on the logless layout
-    merge_into_table(spark, t, src, on=["k"], update_set={"v": s("v")})
-    assert {(r.k, r.v) for r in t.read(spark).collect()} == {(1, 11)}
-
-
 @_pytest.mark.parametrize(
     "layout", ["snapshot", "bucketed", "bucketed_versioned"]
 )
@@ -383,7 +357,7 @@ def test_merge_into_table_type_widening(spark, tmp_path, layout):
         merge_into_table,
         src,
     )
-    from tabular_cdc_bootstrapper_spark.streaming.pipeline import table_changes
+    from tabular_cdc_bootstrapper_spark.streaming.feeds import table_changes
 
     t = _make_table(layout, tmp_path / layout)
     init = spark.createDataFrame([(1, 10), (2, 20)], "k long, v long").select(
@@ -415,18 +389,18 @@ def test_merge_into_table_type_widening(spark, tmp_path, layout):
         (2, big),
         (9, big + 1),
     }
-    if layout != "bucketed":  # versioned layouts: history + CDF through it
-        pre = t.read_version(spark, 0)
-        if "bucket" in pre.columns:
-            pre = pre.drop("bucket")
-        assert dict(pre.dtypes)["v"] == "int"  # old snapshot keeps narrow type
-        feed = {
-            (r.k, r.op, r.v)
-            for r in table_changes(
-                spark, t, 0, 1, key_cols="k", drop_cols=("bucket",)
-            ).collect()
-        }
-        assert feed == {(2, "U", big), (9, "I", big + 1)}
+    # every layout keeps history: the CDF reads through the boundary
+    pre = t.read_version(spark, 0)
+    if "bucket" in pre.columns:
+        pre = pre.drop("bucket")
+    assert dict(pre.dtypes)["v"] == "int"  # old snapshot keeps narrow type
+    feed = {
+        (r.k, r.op, r.v)
+        for r in table_changes(
+            spark, t, 0, 1, key_cols="k", drop_cols=("bucket",)
+        ).collect()
+    }
+    assert feed == {(2, "U", big), (9, "I", big + 1)}
 
 
 def test_merge_widening_rejects_lossy_and_leaves_unrelated(spark, tmp_path):
@@ -438,7 +412,7 @@ def test_merge_widening_rejects_lossy_and_leaves_unrelated(spark, tmp_path):
         merge_into_table,
         src,
     )
-    from tabular_cdc_bootstrapper_spark.streaming.pipeline import (
+    from tabular_cdc_bootstrapper_spark.streaming.state_table import (
         ParquetStateTable,
     )
 
@@ -461,19 +435,16 @@ def test_merge_widening_rejects_lossy_and_leaves_unrelated(spark, tmp_path):
 
 
 def test_merge_evolve_plus_widen_on_plain_bucketed_mirror(spark, tmp_path):
-    """evolve_schema=True + widen_types=True on the plain (logless)
-    BucketPartitionedMirror (ADVICE r10): the widening full-rewrite path
-    replaces the evolved target with a fresh full-state read — the
-    evolved column and its source values must still land."""
+    """evolve_schema=True + widen_types=True on the copy-on-write bucketed
+    mirror (ADVICE r10): widening touches the source's buckets only, yet
+    the evolved column and its source values must land and every
+    untouched row must read through the manifest schema."""
     from tabular_cdc_bootstrapper_spark.operators.merge import (
         merge_into_table,
         src,
     )
-    from tabular_cdc_bootstrapper_spark.streaming.pipeline import (
-        BucketPartitionedMirror,
-    )
 
-    t = BucketPartitionedMirror(str(tmp_path / "t"), n_buckets=8, key_col="k")
+    t = _make_table("bucketed", tmp_path / "t")
     t.initialize(
         spark.createDataFrame([(1, 10), (2, 20)], "k long, v long").select(
             "k", F.col("v").cast("int").alias("v")
@@ -516,7 +487,7 @@ def test_merge_widen_on_legacy_schemaless_versioned_mirror(spark, tmp_path):
         merge_into_table,
         src,
     )
-    from tabular_cdc_bootstrapper_spark.streaming.pipeline import (
+    from tabular_cdc_bootstrapper_spark.streaming.bucket_mirror import (
         VersionedBucketMirror,
     )
 

@@ -455,7 +455,9 @@ def test_hll_sketch_within_5pct_of_exact(spark, sf_dir):
     countDistinct within the sketch's error envelope. The query now emits
     (exact_parts, within_5pct verdict) — assert the verdicts hold and the
     exact side matches an independent computation."""
-    from tabular_cdc_bootstrapper_spark.queries import hll_distinct_counts
+    from tabular_cdc_bootstrapper_spark.queries.text_quality import (
+        hll_distinct_counts,
+    )
 
     l = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     exact = {
@@ -564,7 +566,7 @@ def test_winnowing_recall_is_alignment_free(spark, tmp_path):
     offsets that differ mod s (17 vs 23) — a strided sampler would select
     differently-aligned windows on the two copies and miss it; winnowing's
     content-defined minima must not."""
-    from tabular_cdc_bootstrapper_spark.queries import QUERIES
+    from tabular_cdc_bootstrapper_spark.queries._registry import QUERIES
 
     shared = "The licensed boilerplate paragraph recurs verbatim!"  # 51 chars
     assert len(shared) >= 49
@@ -580,7 +582,7 @@ def test_winnowing_no_false_cross_doc_matches(spark, tmp_path):
     """Documents with no common 40-char substring share no fingerprint —
     and intra-document repetition ('c'*200 collapses to identical windows
     WITHIN one doc) must not count as cross-document duplication."""
-    from tabular_cdc_bootstrapper_spark.queries import QUERIES
+    from tabular_cdc_bootstrapper_spark.queries._registry import QUERIES
 
     sf = _write_documents(spark, tmp_path, [(1, "c" * 200), (2, "d" * 200)])
     assert QUERIES["duplicated_span_hashes"](spark, sf).count() == 0
@@ -590,7 +592,7 @@ def test_span_retention_counts_planted_dup(spark, tmp_path):
     """span_dedup_retention: with one duplicated run between docs 1 and 2
     and an unrelated doc 3, exactly two documents carry duplicated spans,
     and every doc contributes at least one fingerprint."""
-    from tabular_cdc_bootstrapper_spark.queries import QUERIES
+    from tabular_cdc_bootstrapper_spark.queries._registry import QUERIES
 
     shared = "0123456789" * 6  # 60-char run, > w+s-1
     sf = _write_documents(
@@ -682,7 +684,9 @@ def test_winnowing_guarantee_property(spark, tmp_path_factory, case):
     sharing a run of >= w+s-1 = 49 chars share at least one span
     fingerprint. The run alphabet is disjoint from the padding alphabets
     so the planted run is the only guaranteed overlap."""
-    from tabular_cdc_bootstrapper_spark.queries import _span_fingerprints
+    from tabular_cdc_bootstrapper_spark.queries.text_quality import (
+        _span_fingerprints,
+    )
 
     pa, pb, run, sa, sb = case
     sf = _write_documents(

@@ -1,0 +1,121 @@
+"""Import hygiene, checked by an AST scan (no Spark): every package name
+has exactly one import path, the module that defines it, so re-export
+blocks cannot grow back.
+
+- No non-``__init__`` package module imports an intra-package name it
+  never uses.
+- Every ``from tabular_cdc_bootstrapper_spark… import X`` in the package,
+  ``tests/`` and ``scripts/`` names the module that defines ``X`` (or
+  the subpackage whose submodule ``X`` is).
+
+The one exception is ``streaming.pipeline.run_cdc_pipeline_available_now``:
+the CLI resolves the runner through ``pipeline`` at call time.
+"""
+
+from __future__ import annotations
+
+import ast
+from pathlib import Path
+
+REPO = Path(__file__).resolve().parent.parent
+PKG = "tabular_cdc_bootstrapper_spark"
+REEXPORTS = {(f"{PKG}.streaming.pipeline", "run_cdc_pipeline_available_now")}
+
+
+def _module_file(module: str) -> Path | None:
+    p = REPO.joinpath(*module.split("."))
+    if (p / "__init__.py").is_file():
+        return p / "__init__.py"
+    if p.with_suffix(".py").is_file():
+        return p.with_suffix(".py")
+    return None
+
+
+def _bound_names(body: list[ast.stmt]) -> set[str]:
+    """Names a module body binds by definition (not by import)."""
+    out: set[str] = set()
+    for node in body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            out.add(node.name)
+        elif isinstance(node, (ast.Assign, ast.AnnAssign, ast.AugAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            for t in targets:
+                out |= {n.id for n in ast.walk(t) if isinstance(n, ast.Name)}
+        elif isinstance(node, (ast.If, ast.Try)):
+            for block in (node.body, node.orelse, getattr(node, "finalbody", [])):
+                out |= _bound_names(block)
+            for h in getattr(node, "handlers", []):
+                out |= _bound_names(h.body)
+    return out
+
+
+def _used_names(tree: ast.AST) -> set[str]:
+    """Every name a module reads, including quoted annotations."""
+    used = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name):
+            used.add(node.id)
+        ann = getattr(node, "annotation", None) or getattr(node, "returns", None)
+        if isinstance(ann, ast.Constant) and isinstance(ann.value, str):
+            used |= {
+                n.id
+                for n in ast.walk(ast.parse(ann.value, mode="eval"))
+                if isinstance(n, ast.Name)
+            }
+    return used
+
+
+def _package_imports(path: Path):
+    """(module, alias) for each absolute intra-package ``from`` import."""
+    for node in ast.walk(ast.parse(path.read_text())):
+        if isinstance(node, ast.ImportFrom) and (node.module or "").startswith(PKG):
+            for alias in node.names:
+                yield node.module, alias
+
+
+def _py_files(*dirs: str) -> list[Path]:
+    return sorted(p for d in dirs for p in (REPO / d).rglob("*.py"))
+
+
+def test_package_modules_import_only_what_they_use():
+    unused = []
+    for path in _py_files(PKG):
+        if path.name == "__init__.py":
+            continue
+        module = ".".join(path.relative_to(REPO).with_suffix("").parts)
+        tree = ast.parse(path.read_text())
+        used = _used_names(tree)
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom) and (
+                node.level or (node.module or "").startswith(PKG)
+            ):
+                for alias in node.names:
+                    name = alias.asname or alias.name
+                    if name not in used and (module, name) not in REEXPORTS:
+                        unused.append(f"{path.relative_to(REPO)}:{node.lineno} {name}")
+    assert unused == []
+
+
+def test_package_names_are_imported_from_their_defining_module():
+    defined: dict[str, set[str]] = {}
+    wrong = []
+    for path in _py_files(PKG, "tests", "scripts"):
+        for module, alias in _package_imports(path):
+            if (module, alias.name) in REEXPORTS:
+                continue
+            if _module_file(f"{module}.{alias.name}") is not None:
+                continue  # a submodule
+            if module not in defined:
+                src = _module_file(module)
+                assert src is not None, f"{path}: no module {module}"
+                defined[module] = _bound_names(ast.parse(src.read_text()).body)
+            if alias.name not in defined[module]:
+                wrong.append(f"{path.relative_to(REPO)}: {module} {alias.name}")
+    assert wrong == []
+
+
+def test_the_one_reexport_resolves_to_the_runner():
+    runner = _module_file(f"{PKG}.streaming.runner")
+    assert "run_cdc_pipeline_available_now" in _bound_names(
+        ast.parse(runner.read_text()).body
+    )

@@ -16,7 +16,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from tabular_cdc_bootstrapper_spark.config import CdcTarget
-from tabular_cdc_bootstrapper_spark.streaming.pipeline import (
+from tabular_cdc_bootstrapper_spark.streaming.bucket_mirror import (
     VersionedBucketMirror,
 )
 

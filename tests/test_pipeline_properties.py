@@ -118,7 +118,7 @@ def test_event_funnel_monotone(spark, sf_dir):
 def test_cohort_retention_bounded_by_cohort_size(spark, sf_dir):
     """Retention in any week never exceeds the cohort's signup count, and
     week offsets are non-negative."""
-    from tabular_cdc_bootstrapper_spark.queries import _t
+    from tabular_cdc_bootstrapper_spark.queries._registry import _t
 
     ret = q.cohort_retention(spark, sf_dir).collect()
     assert all(r["week_offset"] >= 0 for r in ret)

@@ -693,7 +693,7 @@ def test_dml_planning_scan_is_column_pruned(spark, tmp_path):
     """delete_where/update_where phase 1 (the planning scan) must read
     ONLY the key + predicate columns — at 100 TB the match-finding pass
     over a wide table must not pay for the payload it won't rewrite."""
-    from tabular_cdc_bootstrapper_spark.streaming.pipeline import (
+    from tabular_cdc_bootstrapper_spark.streaming.bucket_mirror import (
         VersionedBucketMirror,
     )
 

@@ -13,7 +13,9 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from tabular_cdc_bootstrapper_spark.operators import banded_range_join
+from tabular_cdc_bootstrapper_spark.operators.rangejoin import (
+    banded_range_join,
+)
 
 range_strategy = st.tuples(
     st.lists(  # left: (key, ts_seconds)

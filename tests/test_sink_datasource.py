@@ -24,7 +24,7 @@ from tabular_cdc_bootstrapper_spark.functions.xxhash import (
 from tabular_cdc_bootstrapper_spark.streaming.datasource import (
     register_stream_sources,
 )
-from tabular_cdc_bootstrapper_spark.streaming.pipeline import (
+from tabular_cdc_bootstrapper_spark.streaming.bucket_mirror import (
     VersionedBucketMirror,
 )
 

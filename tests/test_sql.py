@@ -15,8 +15,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from tabular_cdc_bootstrapper_spark.sql import TableSql, _split_top_level
-from tabular_cdc_bootstrapper_spark.streaming.pipeline import (
+from tabular_cdc_bootstrapper_spark.streaming.state_table import (
     ParquetStateTable,
+)
+from tabular_cdc_bootstrapper_spark.streaming.bucket_mirror import (
     VersionedBucketMirror,
 )
 
@@ -403,7 +405,7 @@ def test_insert_duplicate_key_refused_on_bucketed(tsql, spark):
 
 
 def test_insert_respects_check_constraints(tsql, spark):
-    from tabular_cdc_bootstrapper_spark.streaming.pipeline import (
+    from tabular_cdc_bootstrapper_spark.streaming._protocol import (
         ConstraintViolation,
     )
 

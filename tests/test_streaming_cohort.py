@@ -19,7 +19,7 @@ SENTINEL_USER = -1  # matches conftest.SENTINEL_USER
 
 
 def test_streaming_cohort_matches_batch_query(spark, sf_dir, funnel_dir):  # noqa: F811
-    from tabular_cdc_bootstrapper_spark.queries import QUERIES
+    from tabular_cdc_bootstrapper_spark.queries._registry import QUERIES
 
     stream = (
         spark.readStream.schema(EVENTS_STREAM_SCHEMA)

@@ -78,7 +78,7 @@ def test_streaming_funnel_matches_batch(spark, funnel_dir):
 def test_streaming_funnel_totals_match_batch_query(spark, sf_dir, funnel_dir):
     """Funnel totals from the streaming operator == the batch event_funnel
     registry query over the same fixture."""
-    from tabular_cdc_bootstrapper_spark.queries import QUERIES
+    from tabular_cdc_bootstrapper_spark.queries._registry import QUERIES
 
     stream = (
         spark.readStream.schema(EVENTS_STREAM_SCHEMA)
@@ -114,7 +114,7 @@ def test_streaming_funnel_recovers_from_restart(spark, sf_dir, tmp_path):
     so the second tranche holds the time-later half. Out-of-order arrival
     within a single run is covered by the interleaved-file tests above;
     this test is about state surviving the restart."""
-    from tabular_cdc_bootstrapper_spark.queries import _load_events
+    from tabular_cdc_bootstrapper_spark.queries._registry import _load_events
 
     e = _load_events(spark, f"{sf_dir}/events.parquet").withColumn(
         "ts", F.col("ts").cast("timestamp")

@@ -23,7 +23,7 @@ def events_dir(spark, sf_dir, tmp_path_factory):
     (µs) so the streaming file source can read it, deliberately NOT ordered
     by time (files are split by event_id ranges interleaved)."""
     out = tmp_path_factory.mktemp("events_stream")
-    from tabular_cdc_bootstrapper_spark.queries import _load_events
+    from tabular_cdc_bootstrapper_spark.queries._registry import _load_events
 
     e = _load_events(spark, f"{sf_dir}/events.parquet").withColumn(
         "ts", F.col("ts").cast("timestamp")
@@ -497,7 +497,10 @@ def test_streaming_event_mix_drift_twin_matches_batch(spark, sf_dir, tmp_path):
     holds exact (week, event_type) counts, so the law is bit-identity,
     not approximation. Mid-stream emissions exist too (the always-on
     alerting surface) and carry strictly increasing versions."""
-    from tabular_cdc_bootstrapper_spark.queries import QUERIES, _load_events
+    from tabular_cdc_bootstrapper_spark.queries._registry import (
+        QUERIES,
+        _load_events,
+    )
     from tabular_cdc_bootstrapper_spark.streaming.stateful import (
         streaming_event_mix_drift,
     )
@@ -551,7 +554,7 @@ def test_maintained_cluster_view_tracks_batch(spark, sf_dir, tmp_path):
     replayed batch id must be a no-op."""
     from tabular_cdc_bootstrapper_spark.functions.dedup import minhash_candidates
     from tabular_cdc_bootstrapper_spark.functions.graph import connected_components
-    from tabular_cdc_bootstrapper_spark.streaming.pipeline import (
+    from tabular_cdc_bootstrapper_spark.streaming.feeds import (
         MaintainedClusterView,
     )
     from tabular_cdc_bootstrapper_spark.streaming.stateful import (

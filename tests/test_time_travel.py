@@ -16,7 +16,9 @@ import os
 
 import pytest
 
-from tabular_cdc_bootstrapper_spark.streaming.pipeline import ParquetStateTable
+from tabular_cdc_bootstrapper_spark.streaming.state_table import (
+    ParquetStateTable,
+)
 
 
 def _df(spark, tag: str, n: int = 3):
@@ -185,10 +187,10 @@ def test_table_changes_between_snapshots(spark, tmp_path):
     """Change data feed (Delta CDF / Iceberg CHANGES parity): the minimal
     I/U/D changelog between two snapshots, resolved through the log."""
     from tabular_cdc_bootstrapper_spark.operators.cdc import apply_changelog
-    from tabular_cdc_bootstrapper_spark.streaming.pipeline import (
+    from tabular_cdc_bootstrapper_spark.streaming.state_table import (
         ParquetStateTable,
-        table_changes,
     )
+    from tabular_cdc_bootstrapper_spark.streaming.feeds import table_changes
 
     t = ParquetStateTable(str(tmp_path / "t"), keep_versions=10)
     t.commit(_named(spark, [(0, "a"), (1, "b"), (4, "e")]))
@@ -220,11 +222,13 @@ def test_table_changes_cross_layout_agreement(spark, tmp_path):
     """The feed computed on the versioned BUCKETED mirror equals the one
     computed on the snapshot layout for the same logical history."""
     from tabular_cdc_bootstrapper_spark.config import CdcTarget
-    from tabular_cdc_bootstrapper_spark.streaming.pipeline import (
+    from tabular_cdc_bootstrapper_spark.streaming.state_table import (
         ParquetStateTable,
-        VersionedBucketMirror,
-        table_changes,
     )
+    from tabular_cdc_bootstrapper_spark.streaming.bucket_mirror import (
+        VersionedBucketMirror,
+    )
+    from tabular_cdc_bootstrapper_spark.streaming.feeds import table_changes
 
     target = CdcTarget(source_uri="file:///x", key_column="id", ts_column="ts")
     b0 = spark.createDataFrame(
@@ -313,7 +317,7 @@ def test_purge_keys_handles_rollback_shared_dirs(spark, tmp_path):
 def test_purge_keys_is_idempotent_and_feed_safe(spark, tmp_path):
     """Re-running the same purge converges (no-op rewrite), and the
     change feed between snapshots never resurrects a purged key."""
-    from tabular_cdc_bootstrapper_spark.streaming.pipeline import table_changes
+    from tabular_cdc_bootstrapper_spark.streaming.feeds import table_changes
 
     t = ParquetStateTable(str(tmp_path / "t"), keep_versions=10)
     t.commit(_df(spark, "v0", n=5))
@@ -621,10 +625,10 @@ def test_table_changes_is_bucket_pruned_on_manifests(spark, tmp_path):
     alter_schema yields an empty (no data moved) feed."""
     from tabular_cdc_bootstrapper_spark.config import CdcTarget
     from tabular_cdc_bootstrapper_spark.operators.diff import table_diff
-    from tabular_cdc_bootstrapper_spark.streaming.pipeline import (
+    from tabular_cdc_bootstrapper_spark.streaming.bucket_mirror import (
         VersionedBucketMirror,
-        table_changes,
     )
+    from tabular_cdc_bootstrapper_spark.streaming.feeds import table_changes
 
     target = CdcTarget(source_uri="file:///x", key_column="id", ts_column="ts")
 
@@ -721,7 +725,7 @@ def test_commit_many_falls_back_on_mixed_schemas_and_constraints(
     t2 = ParquetStateTable(str(tmp_path / "t2"), keep_versions=10)
     t2.commit(_df(spark, "v0"))
     t2.add_constraint(spark, "ids_small", "id < 100")
-    from tabular_cdc_bootstrapper_spark.streaming.pipeline import (
+    from tabular_cdc_bootstrapper_spark.streaming._protocol import (
         ConstraintViolation,
     )
 
