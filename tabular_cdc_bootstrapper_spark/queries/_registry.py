@@ -49,13 +49,19 @@ def _parquet_rows(sf_dir: str, name: str) -> int:
     """Exact row count of a fixture table from its parquet FOOTERS —
     driver-side metadata, not a scan job (r16, guide §6: metadata, not
     data). Equals ``_t(spark, sf_dir, name).count()`` by the parquet
-    contract (``metadata.num_rows`` is exact, never an estimate)."""
+    contract (``metadata.num_rows`` is exact, never an estimate). Like
+    Spark's reader, it skips files and dirs whose names start with ``_``
+    or ``.`` (sidecars, checksums, commit markers)."""
     from pathlib import Path as _P
 
     import pyarrow.parquet as _pq
 
     p = _P(f"{sf_dir}/{name}.parquet")
-    parts = [p] if p.is_file() else sorted(p.rglob("*.parquet"))
+    parts = [p] if p.is_file() else sorted(
+        f
+        for f in p.rglob("*.parquet")
+        if not any(n.startswith(("_", ".")) for n in f.relative_to(p).parts)
+    )
     return sum(_pq.ParquetFile(str(f)).metadata.num_rows for f in parts)
 
 

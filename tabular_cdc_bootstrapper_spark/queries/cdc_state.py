@@ -1076,7 +1076,7 @@ def snapshot_branch_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     fast-forward and verify main serves the branch head.
 
     The aggregate rows pin the branch laws in one hash, on BOTH layouts
-    (shared BranchOps, r10 — the bucket: rows stage the same batch as a
+    (shared TableOps, r10 — the bucket: rows stage the same batch as a
     branch CDC MERGE on a VersionedBucketMirror, touched buckets only,
     carried from the branch head): staged commits invisible to main
     readers (main_before_ff == the fork state even though the branch
@@ -1149,7 +1149,7 @@ def snapshot_branch_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
         table.fast_forward("etl")
         return [before, branch_head, agg_row(table.read(spark), "main_after_ff")]
 
-    # same laws on the bucketed 100 TB layout (shared BranchOps, r10):
+    # same laws on the bucketed 100 TB layout (shared TableOps, r10):
     # the update+delete batch stages as a branch CDC MERGE — touched
     # buckets only, carried from the BRANCH head — then fast-forwards
     from tabular_cdc_bootstrapper_spark.config import CdcTarget
@@ -1641,6 +1641,29 @@ def change_feed_stream_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _history_probe(mirror, spark: SparkSession, version: int, o) -> DataFrame:
+    """Rows ``hist`` and ``want`` (columns ``t``, ``n``, ``s``, ``x``) of
+    the spec-evolution harnesses' history check: snapshot ``version``
+    (every order, after the update batch set status 'X' on the
+    ``o_orderkey % 7 = 0`` keys) re-read across the spec boundary, next
+    to the same aggregates derived from the fixture ``o`` — row count,
+    key sum, and 'X' rows against the number of %7 keys. Both sides
+    come from different inputs, so damage to the old snapshot's dirs
+    shows as a mismatch."""
+
+    def _agg(df, tag, x):
+        return df.agg(
+            F.count("*").cast("long").alias("n"),
+            F.sum("o_orderkey").cast("long").alias("s"),
+            F.count(F.when(x, 1)).cast("long").alias("x"),
+        ).select(F.lit(tag).alias("t"), "n", "s", "x")
+
+    return _agg(
+        mirror.read_version(spark, version), "hist",
+        F.col("o_orderstatus") == "X",
+    ).unionByName(_agg(o, "want", F.col("o_orderkey") % 7 == 0))
+
+
 @query(
     "mirror_rebucket_roundtrip",
     oracle="""
@@ -1673,8 +1696,8 @@ def mirror_rebucket_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     then takes the delete batch under the NEW spec. One hash pins: the
     final CDC state (equal to the oracle), the recorded spec, history
     intactness across the boundary (the pre-rebucket snapshot re-read
-    equals its original aggregates), and a point lookup of the minimum
-    order key pruned under the new spec."""
+    equals the aggregates the fixture implies), and a point lookup of
+    the minimum order key pruned under the new spec."""
     import tempfile
 
     from tabular_cdc_bootstrapper_spark.config import CdcTarget
@@ -1704,14 +1727,6 @@ def mirror_rebucket_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         target,
     )
     pre_version = mirror.current()["version"]
-    # frames bind to their snapshot dirs at call time, so the pre/hist
-    # intactness pair and the lookup key+bucket all evaluate in ONE
-    # action after the chain instead of four mid-chain collect() round
-    # trips (r16, guide §2.4 — the mirror_regrain_roundtrip treatment)
-    pre_agg_f = mirror.read(spark).agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum("o_orderkey").cast("long").alias("s"),
-    )
     mirror.rebucket(spark, 32)
     mirror.merge_batch(
         o.filter(F.col("o_orderkey") % 13 == 0).withColumns(
@@ -1719,27 +1734,28 @@ def mirror_rebucket_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         target,
     )
-    hist_agg_f = mirror.read_version(spark, pre_version).agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum("o_orderkey").cast("long").alias("s"),
-    )
     # minimum SURVIVING key (%13 keys were deleted) and its bucket under
-    # the NEW spec (_bucket reads n_buckets=32 now, post-rebucket)
+    # the NEW spec (_bucket reads n_buckets=32 now, post-rebucket);
+    # the history probe and the lookup key+bucket evaluate in ONE
+    # action after the chain (r16, guide §2.4)
     kb_f = (
         o.filter(F.col("o_orderkey") % 13 != 0)
         .agg(F.min("o_orderkey").cast("long").alias("n"))
-        .select("n", mirror._bucket(F.col("n")).cast("long").alias("s"))
+        .select(
+            "n",
+            mirror._bucket(F.col("n")).cast("long").alias("s"),
+            F.lit(0).cast("long").alias("x"),
+        )
     )
     probe_rows = {
         r["t"]: r
-        for r in pre_agg_f.select(F.lit("pre").alias("t"), "n", "s")
-        .unionByName(hist_agg_f.select(F.lit("hist").alias("t"), "n", "s"))
-        .unionByName(kb_f.select(F.lit("kb").alias("t"), "n", "s"))
+        for r in _history_probe(mirror, spark, pre_version, o)
+        .unionByName(kb_f.select(F.lit("kb").alias("t"), "n", "s", "x"))
         .collect()
     }
     history_intact = int(
-        (probe_rows["hist"]["n"], probe_rows["hist"]["s"])
-        == (probe_rows["pre"]["n"], probe_rows["pre"]["s"])
+        [probe_rows["hist"][c] for c in "nsx"]
+        == [probe_rows["want"][c] for c in "nsx"]
     )
     k = probe_rows["kb"]["n"]
     b = int(probe_rows["kb"]["s"])
@@ -1871,24 +1887,12 @@ def mirror_regrain_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         target,
     )
     pre_version = mirror.current()["version"]
-    # frames bind to their snapshot dirs at call time, so ALL the probe
-    # aggregates (pre/hist intactness pair + both pruned-window counts)
-    # evaluate in ONE action at the end instead of four mid-chain
-    # collect()/count() round-trips (r16, guide §2.4)
-    pre_agg_f = mirror.read(spark).agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum("o_orderkey").cast("long").alias("s"),
-    )
     mirror.regrain(spark, ("years", "o_orderdate"))
     mirror.merge_batch(
         o.filter(F.col("o_orderkey") % 13 == 0).withColumns(
             {"op": F.lit("D"), "ts": F.lit(2).cast("int")}
         ),
         target,
-    )
-    hist_agg_f = mirror.read_version(spark, pre_version).agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum("o_orderkey").cast("long").alias("s"),
     )
 
     def _parts(df) -> set[str]:
@@ -1917,19 +1921,21 @@ def mirror_regrain_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         return df.agg(
             F.count("*").cast("long").alias("n"),
             F.lit(-1).cast("long").alias("s"),
-        ).select(F.lit(tag).alias("t"), "n", "s")
+            F.lit(-1).cast("long").alias("x"),
+        ).select(F.lit(tag).alias("t"), "n", "s", "x")
 
+    # the history probe and both pruned-window counts evaluate in ONE
+    # action at the end (r16, guide §2.4)
     probe_rows = {
         r["t"]: r
-        for r in pre_agg_f.select(F.lit("pre").alias("t"), "n", "s")
-        .unionByName(hist_agg_f.select(F.lit("hist").alias("t"), "n", "s"))
+        for r in _history_probe(mirror, spark, pre_version, o)
         .unionByName(_cnt(old_win, "old"))
         .unionByName(_cnt(new_win, "new"))
         .collect()
     }
     history_intact = int(
-        (probe_rows["hist"]["n"], probe_rows["hist"]["s"])
-        == (probe_rows["pre"]["n"], probe_rows["pre"]["s"])
+        [probe_rows["hist"][c] for c in "nsx"]
+        == [probe_rows["want"][c] for c in "nsx"]
     )
     old_rows = probe_rows["old"]["n"]
     new_rows = probe_rows["new"]["n"]
@@ -3531,6 +3537,8 @@ def sql_pruned_dml(spark: SparkSession, sf_dir: str) -> DataFrame:
         "SELECT o_orderkey, o_orderdate FROM ords WHERE o_orderdate IN "
         "(DATE '1996-01-15', DATE '1997-07-15')"
     )
+    ords = t._table("ords")
+    insel_version = ords.current()["version"]
     inlist_parts = {
         m2.group(1)
         for f in insel.inputFiles()
@@ -3551,9 +3559,16 @@ def sql_pruned_dml(spark: SparkSession, sf_dir: str) -> DataFrame:
         if (m := _re.search(r"/bucket=(\d+)/", f))
     }
     # all four tail probes in ONE action (r16, guide §2.4): each frame
-    # binds to its snapshot's dirs at call time — insel's pre-DELETE
-    # version stays within keep_versions=2 retention across the one
-    # commit (del2) that follows it, so deferring its count is safe
+    # binds to its snapshot's dirs at call time, so deferring insel's
+    # count is safe only while its pre-DELETE version is still within
+    # retention — checked here, so a later extra commit fails loudly
+    lag = ords.current()["version"] - insel_version
+    if lag >= ords.keep_versions:
+        raise RuntimeError(
+            f"insel's snapshot v{insel_version} is {lag} commits behind "
+            f"the head, outside keep_versions={ords.keep_versions}; "
+            "count it before the later commits"
+        )
     probe = {
         r["t"]: r
         for r in insel.agg(F.count("*").cast("double").alias("n"))

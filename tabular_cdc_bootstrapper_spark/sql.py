@@ -71,6 +71,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tabular_cdc_bootstrapper_spark.localdf import local_df
+from tabular_cdc_bootstrapper_spark.streaming.bucket_mirror import (
+    VersionedBucketMirror,
+)
 
 
 def _split_top_level(s: str, sep: str = ",") -> list[str]:
@@ -212,9 +215,6 @@ class TableSql:
         df = self._select(query_sql)
         from tabular_cdc_bootstrapper_spark.streaming.state_table import (
             ParquetStateTable,
-        )
-        from tabular_cdc_bootstrapper_spark.streaming.bucket_mirror import (
-            VersionedBucketMirror,
         )
 
         if kind is not None:
@@ -534,10 +534,10 @@ class TableSql:
         disables derivation. Picks the column whose bounds prune the most
         buckets: a key equality (point hash), the partition transform's
         source column, or any stats column."""
-        if not hasattr(t, "_pruned_buckets"):
+        if not isinstance(t, VersionedBucketMirror):
             return None
         if version is None:
-            cur = t.current() if hasattr(t, "current") else None
+            cur = t.current()
         else:
             try:
                 cur = t._resolve(version)
@@ -883,7 +883,7 @@ class TableSql:
         under the spec each snapshot recorded. ``BUCKET(n)`` targets
         the hash layout (a rebucket when already hashed)."""
         t = self._table(name)
-        if not hasattr(t, "regrain"):
+        if not isinstance(t, VersionedBucketMirror):
             raise ValueError(
                 f"{name!r} is not a partitioned mirror — only tables "
                 "created PARTITIONED BY evolve their spec"
@@ -938,7 +938,7 @@ class TableSql:
             if m.group(2)
             else ()
         )
-        if hasattr(t, "rewrite_data_files"):
+        if isinstance(t, VersionedBucketMirror):
             return t.rewrite_data_files(
                 self.spark, min_files=1, materialize=True, zorder_cols=z
             )
@@ -1158,7 +1158,7 @@ class TableSql:
             return None
         name = refs[0].group(2).lower()
         t = self._tables.get(name)
-        if t is None or not hasattr(t, "read_pruned"):
+        if not isinstance(t, VersionedBucketMirror):
             return None
         # time travel composes: VERSION AS OF directly (read_pruned
         # takes version=); TIMESTAMP AS OF resolves to the manifest

@@ -5,7 +5,7 @@ next-round #3 — every r11/r12 defect lived in that 5.9k-line monolith):
 this module holds everything BOTH layouts build on — the error types,
 CHECK-constraint evaluation, the purge lock, ``SnapshotLog`` (manifest
 log + pointer CAS + checkpoints), tag/branch sets, the shared
-``BranchOps`` mixin, and the schema-evolution helpers (union-widening,
+``TableOps`` base (snapshot, ref, property and maintenance surface), and the schema-evolution helpers (union-widening,
 per-version logical reads, ALTER planning).
 """
 
@@ -14,6 +14,7 @@ from __future__ import annotations
 import json
 import os
 import re
+import shutil
 import time
 import uuid
 from collections.abc import Sequence
@@ -214,6 +215,14 @@ def _check_meta(meta: dict | None) -> None:
         )
 
 
+def _replace_json(path: str, obj) -> None:
+    """Write ``obj`` as JSON to ``path`` atomically (temp file + rename)."""
+    tmp = path + f".tmp.{uuid.uuid4().hex[:8]}"
+    with open(tmp, "w") as fh:
+        json.dump(obj, fh)
+    os.replace(tmp, path)
+
+
 def _validate_partition_spec(spec: tuple) -> None:
     """Shared partition-spec shape check (ctor + ``regrain``, r15):
     ``("bucket",)``, ``(days|months|years, col)``, ``(truncate, col,
@@ -369,10 +378,7 @@ class SnapshotLog:
         cpath = os.path.join(
             self.log_dir, f"ckpt-{cur['version']:08d}.checkpoint"
         )
-        tmp = cpath + f".tmp.{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as fh:
-            json.dump({"version": cur["version"], "entries": committed}, fh)
-        os.replace(tmp, cpath)
+        _replace_json(cpath, {"version": cur["version"], "entries": committed})
         covered = {e["version"] for e in committed}
         for n in vfiles:
             try:
@@ -411,10 +417,7 @@ class SnapshotLog:
         if not changed:
             return 0
         payload["entries"] = out
-        tmp = cpath + f".tmp.{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as fh:
-            json.dump(payload, fh)
-        os.replace(tmp, cpath)
+        _replace_json(cpath, payload)
         return changed
 
     def committed(self) -> list[dict]:
@@ -604,11 +607,7 @@ class TagSet:
             raise ValueError(f"invalid tag name {name!r}")
         os.makedirs(self.dir, exist_ok=True)
         rec = {"name": name, "version": version, "ts": time.time()}
-        path = os.path.join(self.dir, f"{name}.json")
-        tmp = path + f".tmp.{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as fh:
-            json.dump(rec, fh)
-        os.replace(tmp, path)
+        _replace_json(os.path.join(self.dir, f"{name}.json"), rec)
         return rec
 
     def tags(self) -> list[dict]:
@@ -666,11 +665,7 @@ class BranchSet:
 
     def _write(self, rec: dict) -> dict:
         os.makedirs(self.dir, exist_ok=True)
-        path = self._path(rec["name"])
-        tmp = path + f".tmp.{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as fh:
-            json.dump(rec, fh)
-        os.replace(tmp, path)
+        _replace_json(self._path(rec["name"]), rec)
         return rec
 
     def create(self, name: str, base_version: int, log: SnapshotLog) -> dict:
@@ -734,16 +729,526 @@ class BranchSet:
         return any(lo < version <= hi for lo, hi in self.windows())
 
 
-class BranchOps:
-    """Writable-branch operations shared by every SnapshotLog-backed
-    table (VERDICT r10 task 3; generalized to the bucketed mirror the
-    same way TagSet generalized tags in r9). Hosts must provide:
-    ``self.root``, ``self._log`` (SnapshotLog), ``current()``,
-    ``history()``, ``_entry_readable(e)`` (layout-specific data-dir
-    check), and ``_after_fast_forward(head_rec)`` (layout-specific
-    retention pass). Layouts own their ``read_branch`` (data access
-    differs) and thread ``branch=`` through their commit entry points
-    to ``_publish_to_branch``."""
+class TableOps:
+    """The snapshot, ref, property and maintenance surface shared by
+    every SnapshotLog-backed table layout — history, time travel, tags,
+    CHECK constraints, rollback, clone, explicit expiry, write-audit-
+    publish and writable branches — written once over the per-layout
+    hooks below. Commit, merge, DML, ``alter_schema``, reads, purge and
+    per-commit retention stay with each layout.
+
+    A layout provides:
+
+    - ``root``, ``keep_versions`` and ``_log`` (its ``SnapshotLog``);
+    - ``_STATE_KEYS``: the record keys describing a snapshot's data,
+      carried verbatim by properties commits and rollback;
+    - ``_entry_dirs(e)``: every data dir record ``e`` references;
+    - ``_read_entry(spark, e)``: record ``e``'s state as a DataFrame
+      (None when it holds no data);
+    - ``_publish_commit(record, expected_head=None)``: publish a main
+      commit (CAS on ``expected_head`` when given) and run the layout's
+      retention pass;
+    - ``_after_fast_forward(head_rec)``: the retention pass after a
+      branch fast-forward;
+    - ``_new_like(dst_root)``: an empty table of the same layout and
+      settings at ``dst_root`` (clone target);
+    - ``_map_dirs(e, fn)``: a copy of record ``e`` with every data dir
+      ``d`` replaced by ``fn(d, rel)``, ``rel`` being the path a copy of
+      ``d`` takes under another root of this layout (deep clone);
+    - ``_stage(spark, df, wdir)``: write ``df`` under the staging dir
+      ``wdir``; returns the staged frame read back and the schema keys
+      of its record (write-audit-publish);
+    - ``_install_staged(wdir, version)``: move the staged bytes into
+      immutable version dirs; returns the record keys naming them.
+
+    Commit entry points thread ``branch=`` to ``_publish_to_branch``."""
+
+    # -- snapshot state ----------------------------------------------
+
+    def current(self) -> dict | None:
+        return self._log.current()
+
+    def exists(self) -> bool:
+        return self.current() is not None
+
+    def history(self) -> list[dict]:
+        """Committed snapshots, oldest first — the records plus
+        ``readable`` (every data dir still within retention) and
+        ``is_current``. Log entries above the CURRENT pointer are crash
+        orphans (the commit never published) and are excluded."""
+        cur = self.current()
+        cur_version = cur["version"] if cur else -1
+        out = []
+        for e in self._log.committed():
+            e = dict(e)
+            e["readable"] = self._entry_readable(e)
+            e["is_current"] = e["version"] == cur_version
+            out.append(e)
+        return out
+
+    def _owns(self, d: str) -> bool:
+        """True iff ``d`` lives under this table's root. A SHALLOW clone's
+        log references the SOURCE table's data dirs; every destructive
+        path (orphan GC, purge, expiry) must refuse to delete storage it
+        does not own — the clone may drop its reference, never the
+        source's bytes."""
+        root = os.path.realpath(self.root)
+        return os.path.realpath(d).startswith(root + os.sep)
+
+    def _entry_readable(self, e: dict) -> bool:
+        return all(os.path.isdir(d) for d in self._entry_dirs(e))
+
+    def _resolve(self, version: int | None) -> dict:
+        """The committed record of ``version`` (None: the head); raises
+        on an unknown or expired snapshot."""
+        if version is None:
+            cur = self.current()
+            if cur is None:
+                raise ValueError(f"{self.root} has no snapshot yet")
+            return cur
+        for e in self.history():
+            if e["version"] == version:
+                if not e["readable"]:
+                    raise ValueError(
+                        f"snapshot {version} of {self.root} has expired "
+                        f"(retention keep_versions={self.keep_versions})"
+                    )
+                return e
+        raise ValueError(f"no snapshot {version} in {self.root}")
+
+    # -- time travel -------------------------------------------------
+
+    def read_version(self, spark: SparkSession, version: int) -> DataFrame | None:
+        """VERSION AS OF: read snapshot ``version`` from the log."""
+        return self._read_entry(spark, self._resolve(version))
+
+    def read_as_of(self, spark: SparkSession, ts: float) -> DataFrame | None:
+        """TIMESTAMP AS OF: the latest snapshot committed at or before
+        ``ts`` (unix seconds, the clock commits stamp)."""
+        candidates = [e for e in self.history() if e["ts"] <= ts]
+        if not candidates:
+            raise ValueError(
+                f"no snapshot of {self.root} exists at or before ts={ts}"
+            )
+        return self.read_version(spark, candidates[-1]["version"])
+
+    # -- tags --------------------------------------------------------
+
+    @property
+    def _tagset(self) -> "TagSet":
+        return TagSet(self.root)
+
+    def tag(self, name: str, version: int | None = None) -> dict:
+        """Create (or move) a named immutable ref to a snapshot — the
+        Iceberg tag. Tags are KB metadata (``_tags/<name>.json``, atomic
+        rename); a tagged snapshot's data survives retention and
+        ``expire_snapshots`` for as long as the tag exists (the ref-keeps-
+        snapshot rule), so a `prod`/`training-run-42` tag is a durable,
+        reproducible read point."""
+        if version is None:
+            cur = self.current()
+            if cur is None:
+                raise ValueError(f"{self.root} has no snapshot to tag")
+            version = cur["version"]
+        return self._tagset.tag(name, version, self._log)
+
+    def tags(self) -> list[dict]:
+        return self._tagset.tags()
+
+    def read_tag(self, spark: SparkSession, name: str) -> DataFrame | None:
+        return self.read_version(spark, self._tagset.resolve(name))
+
+    def delete_tag(self, name: str) -> None:
+        self._tagset.delete(name)
+
+    def _tagged_versions(self) -> set[int]:
+        return self._tagset.versions()
+
+    # -- table properties --------------------------------------------
+
+    def constraints(self) -> dict:
+        """The table's CHECK constraints (name → SQL expression)."""
+        cur = self.current()
+        return dict((cur or {}).get("constraints") or {})
+
+    def add_constraint(self, spark: SparkSession, name: str, expr: str) -> dict:
+        """``ALTER TABLE ADD CONSTRAINT name CHECK (expr)`` (r12 — the
+        Delta model): existing data must already satisfy the expression
+        (ONE validating scan, exactly Delta's add-time check), then the
+        constraint rides the record as a table property and every commit
+        path validates what it writes before the publish. Pure-metadata
+        publish sharing the current dirs (token CAS, like
+        ``alter_schema``). SQL CHECK semantics: NULL passes, only FALSE
+        violates."""
+        if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", name):
+            raise ValueError(f"invalid constraint name {name!r}")
+        cur = self.current()
+        if cur is None:
+            raise ValueError(f"{self.root} has no snapshot yet")
+        cons = dict(cur.get("constraints") or {})
+        if name in cons:
+            raise ValueError(
+                f"constraint {name!r} already exists ({cons[name]}) — "
+                "DROP it first"
+            )
+        df = self._read_entry(spark, cur)
+        if df is not None:
+            _check_table_constraints(df, {name: expr}, self.root)
+        cons[name] = expr
+        return self._publish_properties(cur, constraints=cons)
+
+    def drop_constraint(self, name: str) -> dict:
+        cur = self.current()
+        if cur is None:
+            raise ValueError(f"{self.root} has no snapshot yet")
+        cons = dict(cur.get("constraints") or {})
+        if name not in cons:
+            raise ValueError(
+                f"no constraint {name!r} on {self.root} "
+                f"(have: {sorted(cons)})"
+            )
+        cons.pop(name)
+        return self._publish_properties(cur, constraints=cons)
+
+    def _publish_properties(self, cur: dict, **props) -> dict:
+        """Metadata-only commit updating table properties: the record
+        SHARES every data dir of ``cur`` (zero movement), carries all
+        other metadata forward, and publishes under the purge-aware
+        token CAS."""
+        record = {
+            "version": self._log.next_version(),
+            "ts": time.time(),
+            "operation": "set_properties",
+        }
+        for k in (*self._STATE_KEYS, "constraints"):
+            if k in cur:
+                record[k] = cur[k]
+        for k, v in props.items():
+            if v:
+                record[k] = v
+            else:
+                record.pop(k, None)
+        return self._publish_commit(
+            record, expected_head=(cur["version"], cur.get("purged_ts") or 0)
+        )
+
+    # -- maintenance -------------------------------------------------
+
+    def rollback(
+        self, to_version: int, spark: SparkSession | None = None
+    ) -> dict:
+        """Re-point CURRENT at snapshot ``to_version`` as a NEW commit
+        sharing its data dirs — history stays append-only (an
+        Iceberg-style rollback records the restore; it never erases the
+        snapshots it skips past) and no data moves. The restored
+        snapshot's data keys (schema, rename folds, generation masks,
+        bucket spec…) ride along; CHECK constraints are table properties
+        and carry from the current head instead. On a CONSTRAINED table
+        ``spark=`` is required: the constraint may postdate the target
+        snapshot, so the restored data is validated against it first."""
+        target = self._resolve(to_version)
+        head_cons = (self.current() or {}).get("constraints") or {}
+        if head_cons:
+            if spark is None:
+                raise ValueError(
+                    f"{self.root} carries CHECK constraints "
+                    f"({sorted(head_cons)}): pass spark= so the restored "
+                    "snapshot can be validated, or DROP them first"
+                )
+            df = self._read_entry(spark, target)
+            if df is not None:
+                _check_table_constraints(df, head_cons, self.root)
+        record = {
+            "version": self._log.next_version(),
+            "ts": time.time(),
+            "rollback_of": to_version,
+        }
+        for k in self._STATE_KEYS:
+            if k in target:
+                record[k] = target[k]
+        if head_cons:
+            record["constraints"] = head_cons
+        for delay in (*_RETRY_BACKOFF, None):
+            try:
+                return self._publish_commit(record)
+            except CommitConflict:
+                if delay is None:
+                    raise
+                time.sleep(delay)
+                record["version"] = self._log.next_version()
+                record["ts"] = time.time()
+
+    def clone_to(
+        self,
+        dst_root: str,
+        mode: str = "shallow",
+        version: int | None = None,
+    ) -> "TableOps":
+        """Delta-style CLONE: create an independent table of the same
+        layout at ``dst_root`` whose history is this table's committed
+        history up to ``version`` (default: current head). ``shallow``
+        copies only metadata — the clone's log references the source's
+        data dirs (zero-copy dev/test branch; O(KB) regardless of table
+        size); ``deep`` copies every referenced dir. Either way the clone
+        evolves independently: its commits write under its own root, and
+        its destructive operations (purge/expiry/orphan GC) are
+        ``_owns``-guarded, so they can drop the clone's REFERENCES to
+        source data but never the source's bytes. Expired source
+        snapshots are skipped (their data is gone)."""
+        if mode not in ("shallow", "deep"):
+            raise ValueError(f"unknown clone mode {mode!r}")
+        cur = self.current()
+        if cur is None:
+            raise ValueError(f"{self.root} has no snapshot to clone")
+        head = cur["version"] if version is None else version
+        entries = [
+            e
+            for e in self._log.committed()
+            if e["version"] <= head and self._entry_readable(e)
+        ]
+        if not any(e["version"] == head for e in entries):
+            raise ValueError(f"no readable snapshot {head} in {self.root}")
+        dst = self._new_like(dst_root)
+        os.makedirs(dst._log.log_dir, exist_ok=True)
+        dir_copy: dict[str, str] = {}
+
+        def _copy(d: str, rel: str) -> str:
+            if d not in dir_copy:
+                dir_copy[d] = os.path.join(dst_root, rel)
+                shutil.copytree(d, dir_copy[d])
+            return dir_copy[d]
+
+        head_rec: dict | None = None
+        for e in entries:
+            rec = self._map_dirs(e, _copy) if mode == "deep" else dict(e)
+            rec["cloned_from"] = self.root
+            _replace_json(dst._log._entry_path(rec["version"]), rec)
+            if rec["version"] == head:
+                head_rec = rec
+        _replace_json(dst._log.pointer_path, head_rec)
+        return dst
+
+    def expire_snapshots(
+        self,
+        older_than_ts: float | None = None,
+        keep_last: int | None = None,
+    ) -> dict:
+        """Explicit snapshot expiry — the Iceberg ``expire_snapshots``
+        maintenance action, completing the triad beside compaction and
+        GDPR purge. Retention via ``keep_versions`` expires per-commit as
+        a side effect; this is the storage-reclaim op a warehouse runs on
+        a schedule: drop the data dirs referenced ONLY by committed
+        snapshots strictly older than ``older_than_ts`` (commit clock)
+        and/or beyond the newest ``keep_last``. Dir sharing means a dir
+        survives for as long as ANY retained snapshot points at it (so
+        expiring old history reclaims exactly the data since rewritten —
+        the Iceberg expire_snapshots accounting). The CURRENT snapshot,
+        tagged snapshots and live branches are always kept; log entries
+        stay (``history()`` marks them ``readable: false``). Returns the
+        expired versions and reclaimed dir count."""
+        cur = self.current()
+        if cur is None:
+            return {"expired_versions": [], "dirs_removed": 0}
+        committed = self._log.committed()
+        keep_versions = {cur["version"]} | self._tagged_versions()
+        # a live branch pins its fork point (read_branch of an
+        # empty-staged branch resolves there) and every staged version
+        windows = self._branchset.windows()
+        keep_versions.update(b["base"] for b in self._branchset.branches())
+        if keep_last is not None:
+            keep_versions.update(
+                e["version"] for e in committed[-max(keep_last, 1):]
+            )
+        expired = []
+        for e in committed:
+            if e["version"] in keep_versions:
+                continue
+            if older_than_ts is not None and e["ts"] >= older_than_ts:
+                continue
+            if older_than_ts is None and keep_last is None:
+                continue  # no criterion given: expire nothing
+            expired.append(e)
+        expired_versions = {e["version"] for e in expired}
+        kept_dirs: set[str] = set()
+        for e in committed:
+            if e["version"] not in expired_versions:
+                kept_dirs.update(self._entry_dirs(e))
+        for e in self._log.entries():
+            if any(lo <= e["version"] <= hi for lo, hi in windows):
+                kept_dirs.update(self._entry_dirs(e))
+        doomed = {
+            d
+            for e in expired
+            for d in self._entry_dirs(e)
+            if d not in kept_dirs and self._owns(d)
+        }
+        removed = 0
+        for d in doomed:
+            if os.path.isdir(d):
+                shutil.rmtree(d, ignore_errors=True)
+                removed += 1
+        return {
+            "expired_versions": sorted(expired_versions),
+            "dirs_removed": removed,
+        }
+
+    def write_audit_publish(
+        self,
+        spark: SparkSession,
+        df: DataFrame,
+        rules: Sequence,
+        meta: dict | None = None,
+        stale_staging_grace_s: float = 3600.0,
+        branch: str | None = None,
+    ) -> dict:
+        """Iceberg's write-audit-publish (WAP) pattern: stage ``df`` as an
+        UNPUBLISHED snapshot, audit the staged files with a Deequ-style
+        rule suite (`functions/constraints.py`), and publish only if every
+        rule passes — a failing batch never becomes a readable version and
+        the table is untouched. The audit reads the staged parquet BACK
+        from disk, so it validates exactly the bytes readers would see
+        (the point of WAP over pre-write validation: encoding/casting
+        surprises are caught too). The published commit is full-state:
+        its record names exactly the staged data.
+
+        ``rules`` may mix constraint ``Rule``s (absolute, Deequ-style)
+        with ``AnomalyRule``s (relative to the PREVIOUS committed
+        snapshot — "row count within x%", "null rate didn't jump"): the
+        real warehouse publish gate is both. Anomaly rules need a
+        baseline: on a table with no committed snapshot they raise.
+
+        Staging uses a ``wap-*`` dir invisible to readers and retention;
+        publish moves the staged bytes under immutable version names
+        (renames only — no data rewrite) and runs the normal log/pointer
+        protocol. A crash mid-audit leaves an unreferenced ``wap-*`` dir
+        that a LATER call garbage-collects — only once it is
+        ``stale_staging_grace_s`` old, so a concurrent writer's
+        audit-in-flight staging is never deleted out from under it
+        (concurrent WAPs then serialize on the pointer swap instead of
+        corrupting each other). Returns ``{"published": bool, "report":
+        [...], ...}``; on success the commit record rides along
+        (``audited: true`` in its metadata)."""
+        from tabular_cdc_bootstrapper_spark.functions.constraints import (
+            AnomalyRule,
+            check_anomalies,
+            check_constraints,
+        )
+
+        now = time.time()
+        for d in os.listdir(self.root):  # GC STALE crashed-audit leftovers
+            if not d.startswith("wap-"):
+                continue
+            p = os.path.join(self.root, d)
+            try:
+                age = now - os.path.getmtime(p)
+            except OSError:
+                continue
+            if age >= stale_staging_grace_s:
+                shutil.rmtree(p, ignore_errors=True)
+        row_rules = [r for r in rules if not isinstance(r, AnomalyRule)]
+        anomaly_rules = [r for r in rules if isinstance(r, AnomalyRule)]
+        if branch is not None:
+            self._branchset.get(branch)  # raises on unknown branch
+        if anomaly_rules and branch is None and self.current() is None:
+            raise ValueError(
+                f"{self.root} has no committed snapshot to serve as the "
+                "anomaly-rule baseline; commit one first or gate with "
+                "constraint Rules only"
+            )
+        _check_meta(meta)
+        wdir = os.path.join(self.root, f"wap-{uuid.uuid4().hex[:8]}")
+        staged, schema_keys = self._stage(spark, df, wdir)
+        static_report = []
+        if row_rules:
+            static_report.extend(
+                {
+                    "rule": r["rule"],
+                    "n_violations": r["n_violations"],
+                    "passed": r["passed"],
+                }
+                for r in check_constraints(staged, row_rules).collect()
+            )
+        # conflict loop (r11): a concurrent commit landing between this
+        # WAP's baseline read and its publish surfaces as a
+        # CommitConflict — the ANOMALY audit then re-runs with the new
+        # head as its baseline (the two-writer WAP contract: audits are
+        # always relative to the state they actually publish onto);
+        # row-rule verdicts are head-independent and computed once.
+        installed: dict | None = None  # record keys of the moved dirs
+        attempt = 0
+        while True:
+            basis = None if branch is not None else self.current()
+            basis_v = basis["version"] if basis else -1
+            report = list(static_report)
+            if anomaly_rules:
+                # baseline = the previous state of wherever this
+                # publishes: the branch head for a branch-staged WAP
+                # (multi-batch WAP audits each batch against the batch
+                # before it), else the main CURRENT snapshot
+                baseline = self._read_entry(
+                    spark,
+                    self._branch_head_entry(branch)
+                    if branch is not None
+                    else basis,
+                )
+                report.extend(
+                    {
+                        "rule": r["rule"],
+                        "baseline": r["baseline"],
+                        "observed": r["observed"],
+                        "passed": r["passed"],
+                    }
+                    for r in check_anomalies(
+                        baseline, staged, anomaly_rules
+                    ).collect()
+                )
+            if not all(r["passed"] for r in report):
+                doomed = (
+                    [wdir] if installed is None
+                    else self._entry_dirs(installed)
+                )
+                for d in doomed:
+                    shutil.rmtree(d, ignore_errors=True)
+                return {"published": False, "version": None, "report": report}
+            version = self._log.next_version()
+            if installed is None:
+                installed = self._install_staged(wdir, version)
+                # rebind to the installed bytes so re-audits keep reading
+                moved = self._read_entry(spark, {**installed, **schema_keys})
+                staged = (
+                    moved
+                    if moved is not None
+                    else spark.createDataFrame([], staged.schema)
+                )
+            record = {
+                "version": version,
+                "ts": time.time(),
+                **installed,
+                **schema_keys,
+                "audited": True,
+            }
+            if meta:
+                record.update(meta)
+            if branch is not None:
+                rec = self._publish_to_branch(record, branch)
+                return {"published": True, **rec, "report": report}
+            try:
+                self._publish_commit(
+                    record, expected_head=basis_v if anomaly_rules else None
+                )
+                return {"published": True, **record, "report": report}
+            except CommitConflict:
+                attempt += 1
+                if attempt > len(_RETRY_BACKOFF):
+                    raise
+                if not self._entry_readable(installed):
+                    raise CommitConflict(
+                        f"WAP staging of {self.root} was reclaimed by a "
+                        "concurrent retention pass; re-run the WAP"
+                    ) from None
+                time.sleep(_RETRY_BACKOFF[attempt - 1])
+
+    # -- writable branches -------------------------------------------
 
     @property
     def _branchset(self) -> "BranchSet":
@@ -811,6 +1316,25 @@ class BranchOps:
                 e["is_current"] = e["version"] == b["head"]
                 out.append(e)
         return out
+
+    def _branch_head_entry(self, name: str) -> dict:
+        """The record the branch currently points at (the fork-point
+        record when nothing is staged yet)."""
+        b = self._branchset.get(name)
+        if b["head"] == b["base"]:
+            return self._resolve(b["base"])
+        for e in self._log.entries():
+            if e["version"] == b["head"]:
+                return e
+        raise ValueError(
+            f"branch {name!r} head {b['head']} missing from the log of "
+            f"{self.root}"
+        )
+
+    def read_branch(self, spark: SparkSession, name: str) -> DataFrame | None:
+        """Read the branch head (its latest staged commit, or the fork
+        point when nothing is staged yet)."""
+        return self._read_entry(spark, self._branch_head_entry(name))
 
     def delete_branch(self, name: str) -> None:
         """Drop the branch pointer; its staged commits lose protection
@@ -917,24 +1441,16 @@ class BranchOps:
         # marker BEFORE the first strip: the only witness that ref-less
         # window entries on a re-run are ours
         os.makedirs(os.path.join(self.root, "_ff"), exist_ok=True)
-        mpath = self._ff_marker_path(name)
-        tmp = mpath + f".tmp.{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as fh:
-            json.dump(
-                {"name": name, "base": b["base"], "head": b["head"],
-                 "ts": time.time()},
-                fh,
-            )
-        os.replace(tmp, mpath)
+        _replace_json(
+            self._ff_marker_path(name),
+            {"name": name, "base": b["base"], "head": b["head"],
+             "ts": time.time()},
+        )
         head_rec = None
         for e in chain:
             rec = {k: v for k, v in e.items() if k != "ref"}
             if "ref" in e:
-                lpath = self._log._entry_path(rec["version"])
-                tmp = lpath + f".tmp.{uuid.uuid4().hex[:8]}"
-                with open(tmp, "w") as fh:
-                    json.dump(rec, fh)
-                os.replace(tmp, lpath)
+                _replace_json(self._log._entry_path(rec["version"]), rec)
             head_rec = rec
         # main must not have advanced while we stripped (CAS re-check)
         cur2 = self.current()
@@ -943,10 +1459,7 @@ class BranchOps:
                 f"cannot fast-forward {name!r}: main advanced during the "
                 "publish — histories diverged"
             )
-        tmp = self._log.pointer_path + f".tmp.{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as fh:
-            json.dump(head_rec, fh)
-        os.replace(tmp, self._log.pointer_path)
+        _replace_json(self._log.pointer_path, head_rec)
         self._clear_ff_marker(name)
         self._after_fast_forward(head_rec)
         return head_rec

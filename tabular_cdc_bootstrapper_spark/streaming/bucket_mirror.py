@@ -23,8 +23,7 @@ from tabular_cdc_bootstrapper_spark.streaming._protocol import (
     CommitConflict,
     ConstraintViolation,
     SnapshotLog,
-    TagSet,
-    BranchOps,
+    TableOps,
     _RETRY_BACKOFF,
     _UNSET,
     _check_meta,
@@ -61,7 +60,7 @@ def _stat_lt(a, b) -> bool:
     return a < b
 
 
-class VersionedBucketMirror(VersionedBucketMirrorOps, BranchOps):
+class VersionedBucketMirror(VersionedBucketMirrorOps, TableOps):
     """Key-bucketed mirror with Iceberg-manifest commit semantics: a
     merge rewrites only the key buckets its batch touches (cost ∝
     |touched buckets| / n_buckets of the mirror, not the mirror), with the
@@ -93,6 +92,13 @@ class VersionedBucketMirror(VersionedBucketMirrorOps, BranchOps):
     garbage-collects them on the next successful publish and readers
     never saw them.
     """
+
+    #: manifest keys describing a snapshot's data (``TableOps``)
+    _STATE_KEYS = (
+        "buckets", "schema", "next_fid", "deltas", "n_buckets",
+        "partition_spec", "stats", "stats_cols", "renames", "dropped",
+        "shadowed",
+    )
 
     def __init__(
         self,
@@ -412,47 +418,6 @@ class VersionedBucketMirror(VersionedBucketMirrorOps, BranchOps):
             if recorded:
                 self.stats_cols = list(recorded)
 
-    def _owns(self, d: str) -> bool:
-        """Same ownership guard as ``ParquetStateTable._owns`` (ADVICE
-        r9): destructive paths may only delete storage under this
-        mirror's own root — symmetry now, data-loss insurance if clone
-        support ever extends to the bucketed layout."""
-        root = os.path.realpath(self.root)
-        return os.path.realpath(d).startswith(root + os.sep)
-
-    def current(self) -> dict | None:
-        return self._log.current()
-
-    def exists(self) -> bool:
-        return self.current() is not None
-
-    def history(self) -> list[dict]:
-        cur = self.current()
-        cur_version = cur["version"] if cur else -1
-        out = []
-        for e in self._log.committed():
-            e = dict(e)
-            e["readable"] = self._entry_readable(e)
-            e["is_current"] = e["version"] == cur_version
-            out.append(e)
-        return out
-
-    def _resolve(self, version: int | None) -> dict:
-        if version is None:
-            cur = self.current()
-            if cur is None:
-                raise ValueError(f"mirror {self.root} has no snapshot yet")
-            return cur
-        for e in self.history():
-            if e["version"] == version:
-                if not e["readable"]:
-                    raise ValueError(
-                        f"snapshot {version} of {self.root} has expired "
-                        f"(retention keep_versions={self.keep_versions})"
-                    )
-                return e
-        raise ValueError(f"no snapshot {version} in {self.root}")
-
     def _read_dirs(
         self,
         spark: SparkSession,
@@ -568,19 +533,6 @@ class VersionedBucketMirror(VersionedBucketMirrorOps, BranchOps):
     def read(self, spark: SparkSession, version: int | None = None) -> DataFrame | None:
         e = self._resolve(version)
         return self._read_entry(spark, e)
-
-    def read_version(self, spark: SparkSession, version: int) -> DataFrame | None:
-        """VERSION AS OF over the whole mirror."""
-        return self.read(spark, version)
-
-    def read_as_of(self, spark: SparkSession, ts: float) -> DataFrame | None:
-        """TIMESTAMP AS OF: latest manifest committed at or before ``ts``."""
-        candidates = [e for e in self.history() if e["ts"] <= ts]
-        if not candidates:
-            raise ValueError(
-                f"no snapshot of {self.root} exists at or before ts={ts}"
-            )
-        return self.read(spark, candidates[-1]["version"])
 
     def read_buckets(
         self, spark: SparkSession, buckets: Sequence[int]
@@ -729,55 +681,88 @@ class VersionedBucketMirror(VersionedBucketMirrorOps, BranchOps):
             df = df.filter(F.col(col) <= F.lit(upper))
         return df
 
-    def tag(self, name: str, version: int | None = None) -> dict:
-        """Named immutable ref on the bucketed mirror — same contract as
-        ParquetStateTable.tag (shared TagSet): a tagged manifest's bucket
-        dirs survive retention and expire_snapshots until the tag is
-        deleted."""
-        if version is None:
-            cur = self.current()
-            if cur is None:
-                raise ValueError(f"{self.root} has no snapshot to tag")
-            version = cur["version"]
-        return TagSet(self.root).tag(name, version, self._log)
-
-    def tags(self) -> list[dict]:
-        return TagSet(self.root).tags()
-
-    def read_tag(self, spark: SparkSession, name: str) -> DataFrame | None:
-        return self.read_version(spark, TagSet(self.root).resolve(name))
-
-    def delete_tag(self, name: str) -> None:
-        TagSet(self.root).delete(name)
-
-    def _tagged_versions(self) -> set[int]:
-        return TagSet(self.root).versions()
-
-    def _entry_readable(self, e: dict) -> bool:
-        return all(os.path.isdir(d) for d in self._entry_dirs(e))
-
     def _after_fast_forward(self, head_rec: dict) -> None:
         self._expire(head_rec)
 
-    def _branch_head_entry(self, name: str) -> dict:
-        """The manifest the branch currently points at (the fork-point
-        manifest when nothing is staged yet)."""
-        b = self._branchset.get(name)
-        if b["head"] == b["base"]:
-            return self._resolve(b["base"])
-        for e in self._log.entries():
-            if e["version"] == b["head"]:
-                return e
-        raise ValueError(
-            f"branch {name!r} head {b['head']} missing from the log of "
-            f"{self.root}"
+    def _publish_commit(
+        self, record: dict, expected_head: "int | tuple | None" = None
+    ) -> dict:
+        self._log.publish(
+            record,
+            protected=self._branch_covers,
+            expected_head=expected_head,
+        )
+        self._expire(record)
+        return record
+
+    def _new_like(self, dst_root: str) -> "VersionedBucketMirror":
+        return VersionedBucketMirror(
+            dst_root,
+            n_buckets=self.n_buckets,
+            key_col=self.key_col,
+            keep_versions=self.keep_versions,
+            merge_on_read=self.merge_on_read,
+            partition_spec=(
+                self.partition_spec
+                if self.partition_spec[0] != "bucket"
+                else None
+            ),
         )
 
-    def read_branch(self, spark: SparkSession, name: str) -> DataFrame | None:
-        """Read the branch head (latest staged manifest, or the fork
-        point when nothing is staged yet)."""
-        e = self._branch_head_entry(name)
-        return self._read_entry(spark, e)
+    @staticmethod
+    def _map_dirs(e: dict, fn) -> dict:
+        def _m(b: str, d: str) -> str:
+            rel = os.path.join("data", f"bucket={int(b)}", os.path.basename(d))
+            return fn(d, rel)
+
+        rec = {**e, "buckets": {b: _m(b, d) for b, d in e["buckets"].items()}}
+        if e.get("deltas"):  # merge-on-read delta dirs ride along
+            rec["deltas"] = {
+                b: [{**s, "dir": _m(b, s["dir"])} for s in specs]
+                for b, specs in e["deltas"].items()
+            }
+        return rec
+
+    def _stage(
+        self, spark: SparkSession, df: DataFrame, wdir: str
+    ) -> tuple[DataFrame, dict]:
+        self._sync_spec()
+        (
+            df.withColumn("bucket", self._row_partition(df))
+            # explicit N (r15): see _write_parallelism
+            .repartition(self._write_parallelism(df), F.col("bucket"))
+            .write.mode("errorifexists")
+            .partitionBy("bucket")
+            .parquet(wdir)
+        )
+        staged = spark.read.option("basePath", wdir).parquet(wdir).drop(
+            "bucket"
+        )
+        keys = {
+            "n_buckets": self.n_buckets,
+            "schema": _widen_struct(None, staged.schema).jsonValue(),
+        }
+        if self.partition_spec[0] != "bucket":
+            keys["partition_spec"] = list(self.partition_spec)
+        return staged, keys
+
+    def _install_staged(self, wdir: str, version: int) -> dict:
+        mapping: dict[str, str] = {}
+        try:
+            for d in os.listdir(wdir):
+                if not d.startswith("bucket="):
+                    continue
+                b = int(d.split("=", 1)[1])
+                bdir = os.path.join(self.data_dir, f"bucket={b}")
+                os.makedirs(bdir, exist_ok=True)
+                dst = os.path.join(
+                    bdir, f"v-{version:08d}-{uuid.uuid4().hex[:8]}"
+                )
+                os.replace(os.path.join(wdir, d), dst)
+                mapping[str(b)] = dst
+        finally:
+            shutil.rmtree(wdir, ignore_errors=True)
+        return {"buckets": mapping}
 
     def initialize(
         self,

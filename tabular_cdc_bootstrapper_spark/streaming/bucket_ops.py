@@ -1,10 +1,10 @@
-"""DML, maintenance, and lifecycle methods of ``VersionedBucketMirror``,
-as a mixin (``bucket_mirror.py`` composes it). Split from
-``streaming/pipeline.py`` (VERDICT r12 #3): the core file keeps the
-manifest/commit machinery, this one the operations that ride on it —
-clone, rollback,
-write-audit-publish, compaction, rebucket, ALTER, constraints,
-DELETE/UPDATE/INSERT/MERGE, purge, and snapshot expiry.
+"""Layout-specific DML and maintenance methods of
+``VersionedBucketMirror``, as a mixin (``bucket_mirror.py`` composes
+it): compaction, rebucket/regrain, ALTER, DELETE/UPDATE/INSERT/MERGE,
+purge, and per-commit retention (``_expire``). The core file keeps the
+manifest/commit machinery. History, time travel, tags, constraints,
+rollback, clone, explicit expiry and write-audit-publish are written
+once for both layouts in ``_protocol.TableOps``.
 """
 
 from __future__ import annotations
@@ -30,15 +30,11 @@ from tabular_cdc_bootstrapper_spark.streaming._protocol import (
     CommitConflict,
     _PURGE_CATCHUP_ROUNDS,
     _PURGE_LOCK_STALE_S,
-    _RETRY_BACKOFF,
     _UNSET,
     _alter_schema_meta,
-    _check_meta,
-    _check_table_constraints,
     _purge_lock,
     _validate_partition_spec,
     _vanished_path,
-    _widen_struct,
 )
 
 
@@ -68,338 +64,6 @@ class VersionedBucketMirrorOps:
         else:
             dirs = 0  # transform-spec full load: dir count is data-driven
         return max(sc.defaultParallelism, int(dirs))
-
-    def clone_to(
-        self,
-        dst_root: str,
-        mode: str = "shallow",
-        version: int | None = None,
-    ) -> "VersionedBucketMirror":
-        """Delta-style CLONE of the bucketed mirror — same contract as
-        ``ParquetStateTable.clone_to`` (r10; closes the r9 latent-hazard
-        note that motivated the purge ownership guard): ``shallow``
-        copies only manifests (the clone's log references the SOURCE's
-        bucket dirs — zero-copy, O(KB)); ``deep`` copies every
-        referenced bucket dir. Clones evolve independently; their
-        destructive ops (purge/expiry/orphan GC) are ``_owns``-guarded,
-        so a shallow clone can drop its REFERENCES to source buckets
-        but never delete the source's bytes."""
-        if mode not in ("shallow", "deep"):
-            raise ValueError(f"unknown clone mode {mode!r}")
-        cur = self.current()
-        if cur is None:
-            raise ValueError(f"{self.root} has no snapshot to clone")
-        head = cur["version"] if version is None else version
-        entries = [
-            e
-            for e in self._log.committed()
-            if e["version"] <= head and self._entry_readable(e)
-        ]
-        if not any(e["version"] == head for e in entries):
-            raise ValueError(f"no readable snapshot {head} in {self.root}")
-        # type(self): the composed class (bucket_mirror.py) — a module
-        # import here would be circular, and the clone should be the same
-        # concrete layout as its source in any case
-        dst = type(self)(
-            dst_root,
-            n_buckets=self.n_buckets,
-            key_col=self.key_col,
-            keep_versions=self.keep_versions,
-            merge_on_read=self.merge_on_read,
-            partition_spec=(
-                self.partition_spec
-                if self.partition_spec[0] != "bucket"
-                else None
-            ),
-        )
-        os.makedirs(dst._log.log_dir, exist_ok=True)
-        dir_copy: dict[str, str] = {}
-        head_rec: dict | None = None
-        for e in entries:
-            rec = dict(e)
-            if mode == "deep":
-
-                def _copy(b: str, d: str) -> str:
-                    if d not in dir_copy:
-                        nd = os.path.join(
-                            dst.data_dir,
-                            f"bucket={int(b)}",
-                            os.path.basename(d),
-                        )
-                        shutil.copytree(d, nd)
-                        dir_copy[d] = nd
-                    return dir_copy[d]
-
-                rec["buckets"] = {
-                    b: _copy(b, d) for b, d in e["buckets"].items()
-                }
-                if e.get("deltas"):  # merge-on-read delta dirs ride along
-                    rec["deltas"] = {
-                        b: [{**s, "dir": _copy(b, s["dir"])} for s in specs]
-                        for b, specs in e["deltas"].items()
-                    }
-            rec["cloned_from"] = self.root
-            lpath = os.path.join(
-                dst._log.log_dir, f"v-{rec['version']:08d}.json"
-            )
-            tmp = lpath + f".tmp.{uuid.uuid4().hex[:8]}"
-            with open(tmp, "w") as fh:
-                json.dump(rec, fh)
-            os.replace(tmp, lpath)
-            if rec["version"] == head:
-                head_rec = rec
-        tmp = dst._log.pointer_path + f".tmp.{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as fh:
-            json.dump(head_rec, fh)
-        os.replace(tmp, dst._log.pointer_path)
-        return dst
-
-    def rollback(
-        self, to_version: int, spark: SparkSession | None = None
-    ) -> dict:
-        """Restore snapshot ``to_version`` as a NEW manifest sharing its
-        bucket dirs — append-only history, zero data movement.
-
-        On a CONSTRAINED table the restored data must be validated
-        (``spark=`` required): the constraint may postdate the target
-        snapshot, and publishing unvalidated old rows under it would
-        break the no-violating-row-visible invariant AND wedge later
-        DML (every rewrite re-validates carried rows). This is the one
-        other whole-table scan besides ``add_constraint`` — both are
-        user-initiated restores of trust."""
-        target = self._resolve(to_version)
-        head = self.current()
-        head_cons = (head or {}).get("constraints") or {}
-        if head_cons:
-            if spark is None:
-                raise ValueError(
-                    f"{self.root} carries CHECK constraints "
-                    f"({sorted(head_cons)}): pass spark= so the restored "
-                    "snapshot can be validated, or DROP them first"
-                )
-            df = self._read_entry(spark, target)
-            if df is not None:
-                _check_table_constraints(df, head_cons, self.root)
-        record = {
-            "version": self._log.next_version(),
-            "ts": time.time(),
-            "buckets": dict(target["buckets"]),
-            "rollback_of": to_version,
-        }
-        if "schema" in target:
-            record["schema"] = target["schema"]
-        if "stats" in target:
-            record["stats"] = target["stats"]
-        if "deltas" in target:  # merge-on-read chains restore too
-            record["deltas"] = target["deltas"]
-        if "n_buckets" in target:  # the restored snapshot's bucket spec
-            record["n_buckets"] = target["n_buckets"]
-        if "partition_spec" in target:  # and its transform spec (r13)
-            record["partition_spec"] = target["partition_spec"]
-        if "renames" in target:  # and its rename mapping
-            record["renames"] = target["renames"]
-        if "dropped" in target:
-            record["dropped"] = target["dropped"]
-        if "shadowed" in target:  # generation masks restore too
-            record["shadowed"] = target["shadowed"]
-        if "next_fid" in target:
-            record["next_fid"] = target["next_fid"]
-        if "stats_cols" in target:
-            record["stats_cols"] = target["stats_cols"]
-        # CHECK constraints are table PROPERTIES, not snapshot data
-        # (Iceberg rollback = pointer move, properties retained): they
-        # carry from the current head (validated above), not the target
-        if head_cons:
-            record["constraints"] = head_cons
-        for delay in (*_RETRY_BACKOFF, None):
-            try:
-                self._log.publish(record, protected=self._branch_covers)
-                break
-            except CommitConflict:
-                if delay is None:
-                    raise
-                time.sleep(delay)
-                record["version"] = self._log.next_version()
-                record["ts"] = time.time()
-        self._expire(record)
-        return record
-
-    def write_audit_publish(
-        self,
-        spark: SparkSession,
-        df: DataFrame,
-        rules: Sequence,
-        meta: dict | None = None,
-        key_col: str | None = None,
-        stale_staging_grace_s: float = 3600.0,
-        branch: str | None = None,
-    ) -> dict:
-        """Write-audit-publish on the bucketed 100 TB layout (VERDICT r10
-        task 1 — r9 gave this only to ``ParquetStateTable``): stage
-        ``df`` bucket-partitioned under an unpublished ``wap-*`` dir,
-        audit the staged BYTES read back from disk, and publish only if
-        every rule passes. A failing batch never becomes a manifest and
-        the mirror is untouched.
-
-        ``rules`` may mix constraint ``Rule``s with ``AnomalyRule``s
-        (baseline = the current committed snapshot — "row count within
-        x% of what's live"); anomaly rules on an empty mirror raise.
-        Publish installs each staged bucket dir under an immutable new
-        version name (one os.replace per touched bucket — metadata
-        moves, no data rewrite) and commits ONE manifest mapping exactly
-        the staged buckets: full-state semantics, the audited twin of
-        ``initialize``. Crash mid-install leaves dirs referenced by no
-        manifest — the next publish's ``_expire`` reclaims them, same
-        rule as every staged commit on this layout. Stale ``wap-*``
-        staging (older than ``stale_staging_grace_s``) is GC'd on entry;
-        fresh dirs survive so a concurrent writer's audit-in-flight is
-        never deleted (same contract as the snapshot-table WAP).
-        """
-        from tabular_cdc_bootstrapper_spark.functions.constraints import (
-            AnomalyRule,
-            check_anomalies,
-            check_constraints,
-        )
-
-        now = time.time()
-        for d in os.listdir(self.root):  # GC STALE crashed-audit leftovers
-            if not d.startswith("wap-"):
-                continue
-            p = os.path.join(self.root, d)
-            try:
-                age = now - os.path.getmtime(p)
-            except OSError:
-                continue
-            if age >= stale_staging_grace_s:
-                shutil.rmtree(p, ignore_errors=True)
-        row_rules = [r for r in rules if not isinstance(r, AnomalyRule)]
-        anomaly_rules = [r for r in rules if isinstance(r, AnomalyRule)]
-        if branch is not None:
-            self._branchset.get(branch)  # raises on unknown branch
-        if anomaly_rules and branch is None and self.current() is None:
-            raise ValueError(
-                f"{self.root} has no committed snapshot to serve as the "
-                "anomaly-rule baseline; initialize first or gate with "
-                "constraint Rules only"
-            )
-        _check_meta(meta)
-        key = key_col or self.key_col
-        self._sync_spec()
-        wdir = os.path.join(self.root, f"wap-{uuid.uuid4().hex[:8]}")
-        (
-            df.withColumn("bucket", self._partition_for(key, df))
-            # explicit N (r15): see _write_parallelism
-            .repartition(self._write_parallelism(df), F.col("bucket"))
-            .write.mode("errorifexists")
-            .partitionBy("bucket")
-            .parquet(wdir)
-        )
-        staged = spark.read.option("basePath", wdir).parquet(wdir).drop(
-            "bucket"
-        )
-        schema_json = _widen_struct(None, staged.schema).jsonValue()
-        static_report = []
-        if row_rules:
-            static_report.extend(
-                {
-                    "rule": r["rule"],
-                    "n_violations": r["n_violations"],
-                    "passed": r["passed"],
-                }
-                for r in check_constraints(staged, row_rules).collect()
-            )
-        # conflict loop (r11, VERDICT task 8) — same contract as the
-        # snapshot-table WAP: a concurrent commit between baseline read
-        # and publish re-runs the ANOMALY audit against the new head;
-        # row-rule verdicts are head-independent and computed once.
-        mapping: dict[str, str] | None = None
-        attempt = 0
-        while True:
-            basis = None if branch is not None else self.current()
-            basis_v = basis["version"] if basis else -1
-            report = list(static_report)
-            if anomaly_rules:
-                report.extend(
-                    {
-                        "rule": r["rule"],
-                        "baseline": r["baseline"],
-                        "observed": r["observed"],
-                        "passed": r["passed"],
-                    }
-                    for r in check_anomalies(
-                        self.read_branch(spark, branch)
-                        if branch is not None
-                        else self.read(spark),
-                        staged,
-                        anomaly_rules,
-                    ).collect()
-                )
-            if not all(r["passed"] for r in report):
-                if mapping is None:
-                    shutil.rmtree(wdir, ignore_errors=True)
-                else:  # re-audit failed: drop the already-installed dirs
-                    for d in mapping.values():
-                        shutil.rmtree(d, ignore_errors=True)
-                return {"published": False, "version": None, "report": report}
-            version = self._log.next_version()
-            if mapping is None:
-                mapping = {}
-                try:
-                    for d in os.listdir(wdir):
-                        if not d.startswith("bucket="):
-                            continue
-                        b = int(d.split("=", 1)[1])
-                        bdir = os.path.join(self.data_dir, f"bucket={b}")
-                        os.makedirs(bdir, exist_ok=True)
-                        dst = os.path.join(
-                            bdir, f"v-{version:08d}-{uuid.uuid4().hex[:8]}"
-                        )
-                        os.replace(os.path.join(wdir, d), dst)
-                        mapping[str(b)] = dst
-                finally:
-                    shutil.rmtree(wdir, ignore_errors=True)
-                # rebind to the installed bytes so re-audits keep reading
-                staged = (
-                    spark.read.parquet(*mapping.values())
-                    if mapping
-                    else spark.createDataFrame([], staged.schema)
-                )
-            record = {
-                "version": version,
-                "ts": time.time(),
-                "buckets": mapping,
-                "n_buckets": self.n_buckets,
-                **(
-                    {"partition_spec": list(self.partition_spec)}
-                    if self.partition_spec[0] != "bucket"
-                    else {}
-                ),
-                "audited": True,
-                "schema": schema_json,
-            }
-            if meta:
-                record.update(meta)
-            if branch is not None:
-                rec = self._publish_to_branch(record, branch)
-                return {"published": True, **rec, "report": report}
-            try:
-                self._log.publish(
-                    record,
-                    protected=self._branch_covers,
-                    expected_head=basis_v if anomaly_rules else None,
-                )
-                self._expire(record)
-                return {"published": True, **record, "report": report}
-            except CommitConflict:
-                attempt += 1
-                if attempt > len(_RETRY_BACKOFF):
-                    raise
-                if any(not os.path.isdir(d) for d in mapping.values()):
-                    raise CommitConflict(
-                        f"WAP staging of {self.root} was reclaimed by a "
-                        "concurrent retention pass; re-run the WAP"
-                    ) from None
-                time.sleep(_RETRY_BACKOFF[attempt - 1])
 
     def rewrite_data_files(
         self,
@@ -816,99 +480,12 @@ class VersionedBucketMirrorOps:
             # table properties carry (constrained columns can't be
             # dropped/renamed — guarded above)
             record["constraints"] = cur["constraints"]
-        self._log.publish(
+        return self._publish_commit(
             record,
-            protected=self._branch_covers,
             # token CAS (r12): the record SHARES cur's bucket dirs — an
             # in-place purge landing in between would delete them
             expected_head=(cur["version"], cur.get("purged_ts") or 0),
         )
-        self._expire(record)
-        return record
-
-    def constraints(self) -> dict:
-        """The table's CHECK constraints (name → SQL expression)."""
-        cur = self.current()
-        return dict((cur or {}).get("constraints") or {})
-
-    def add_constraint(self, spark: SparkSession, name: str, expr: str) -> dict:
-        """``ALTER TABLE ADD CONSTRAINT name CHECK (expr)`` (r12 — the
-        Delta model): existing data must already satisfy the expression
-        (ONE validating scan, exactly Delta's add-time check), then the
-        constraint rides the manifest as a table property and EVERY
-        Spark-side write path validates its staged slice before the
-        publish — cost ∝ the commit's own bytes, never the table.
-        Pure-metadata publish sharing the current dirs (token CAS,
-        like ``alter_schema``). SQL CHECK semantics: NULL passes."""
-        if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", name):
-            raise ValueError(f"invalid constraint name {name!r}")
-        self._sync_spec()
-        cur = self.current()
-        if cur is None:
-            raise ValueError(f"mirror {self.root} has no snapshot yet")
-        cons = dict(cur.get("constraints") or {})
-        if name in cons:
-            raise ValueError(
-                f"constraint {name!r} already exists ({cons[name]}) — "
-                "DROP it first"
-            )
-        df = self._read_entry(spark, cur)
-        if df is not None:
-            _check_table_constraints(df, {name: expr}, self.root)
-        cons[name] = expr
-        return self._publish_properties(cur, constraints=cons)
-
-    def drop_constraint(self, name: str) -> dict:
-        cur = self.current()
-        if cur is None:
-            raise ValueError(f"mirror {self.root} has no snapshot yet")
-        cons = dict(cur.get("constraints") or {})
-        if name not in cons:
-            raise ValueError(
-                f"no constraint {name!r} on {self.root} "
-                f"(have: {sorted(cons)})"
-            )
-        cons.pop(name)
-        return self._publish_properties(cur, constraints=cons)
-
-    def _publish_properties(self, cur: dict, **props) -> dict:
-        """Metadata-only commit updating table properties: the record
-        SHARES every data dir of ``cur`` (zero movement), carries all
-        other metadata forward, and publishes under the purge-aware
-        token CAS."""
-        record = {
-            "version": self._log.next_version(),
-            "ts": time.time(),
-            "buckets": dict(cur["buckets"]),
-            "operation": "set_properties",
-        }
-        for k in (
-            "schema",
-            "next_fid",
-            "deltas",
-            "n_buckets",
-            "partition_spec",
-            "stats",
-            "stats_cols",
-            "renames",
-            "dropped",
-            "shadowed",
-            "constraints",
-        ):
-            if k in cur:
-                record[k] = cur[k]
-        for k, v in props.items():
-            if v:
-                record[k] = v
-            else:
-                record.pop(k, None)
-        self._log.publish(
-            record,
-            protected=self._branch_covers,
-            expected_head=(cur["version"], cur.get("purged_ts") or 0),
-        )
-        self._expire(record)
-        return record
 
     def _constraints_for(self, basis=_UNSET, branch: str | None = None) -> dict:
         e = (
@@ -1691,65 +1268,6 @@ class VersionedBucketMirrorOps:
             "bucket_dirs_rewritten": len(dir_map),
             "catchup_rounds": catchup_rounds,
             "touched_buckets": sorted(int(b) for b in touched),
-        }
-
-    def expire_snapshots(
-        self,
-        older_than_ts: float | None = None,
-        keep_last: int | None = None,
-    ) -> dict:
-        """Explicit snapshot expiry on the bucketed layout — same contract
-        as ``ParquetStateTable.expire_snapshots``: drop the bucket-version
-        dirs referenced ONLY by manifests older than ``older_than_ts``
-        and/or beyond the newest ``keep_last``; dir sharing means an
-        untouched bucket's dir survives for as long as ANY retained
-        manifest points at it (so expiring old history reclaims exactly
-        the bucket versions that were since rewritten — the Iceberg
-        expire_snapshots accounting). Manifest log entries stay
-        (``history()`` marks them unreadable)."""
-        cur = self.current()
-        if cur is None:
-            return {"expired_versions": [], "dirs_removed": 0}
-        committed = self._log.committed()
-        keep_versions = {cur["version"]} | self._tagged_versions()
-        windows = self._branchset.windows()
-        keep_versions.update(b["base"] for b in self._branchset.branches())
-        if keep_last is not None:
-            keep_versions.update(
-                e["version"] for e in committed[-max(keep_last, 1):]
-            )
-        expired = []
-        for e in committed:
-            if e["version"] in keep_versions:
-                continue
-            if older_than_ts is not None and e["ts"] >= older_than_ts:
-                continue
-            if older_than_ts is None and keep_last is None:
-                continue
-            expired.append(e)
-        expired_versions = {e["version"] for e in expired}
-        kept_dirs: set[str] = set()
-        for e in committed:
-            if e["version"] not in expired_versions:
-                kept_dirs.update(self._entry_dirs(e))
-        for e in self._log.entries():
-            if any(lo <= e["version"] <= hi for lo, hi in windows):
-                kept_dirs.update(self._entry_dirs(e))
-        doomed: set[str] = set()
-        for e in expired:
-            doomed.update(
-                d
-                for d in self._entry_dirs(e)
-                if d not in kept_dirs and self._owns(d)
-            )
-        removed = 0
-        for d in doomed:
-            if os.path.isdir(d):
-                shutil.rmtree(d, ignore_errors=True)
-                removed += 1
-        return {
-            "expired_versions": sorted(expired_versions),
-            "dirs_removed": removed,
         }
 
     def _expire(self, just_published: dict) -> None:

@@ -15,6 +15,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from tabular_cdc_bootstrapper_spark.operators.diff import table_diff
+from tabular_cdc_bootstrapper_spark.streaming.bucket_mirror import (
+    VersionedBucketMirror,
+)
 from tabular_cdc_bootstrapper_spark.streaming.state_table import (
     ParquetStateTable,
 )
@@ -60,7 +63,7 @@ def table_changes(
     empty, the correct CDF for a commit that moved no data (consumers
     pick up the new schema from the table, not the feed).
     """
-    if hasattr(table, "_read_entry"):  # manifest-backed: prune the diff
+    if isinstance(table, VersionedBucketMirror):  # prune the diff
         e_old = table._resolve(from_version)
         e_new = table._resolve(to_version)
         buckets = set(e_old["buckets"]) | set(e_old.get("deltas") or {})

@@ -24,8 +24,7 @@ from tabular_cdc_bootstrapper_spark.streaming._protocol import (
     CommitConflict,
     ConstraintViolation,
     SnapshotLog,
-    TagSet,
-    BranchOps,
+    TableOps,
     _PURGE_CATCHUP_ROUNDS,
     _PURGE_LOCK_STALE_S,
     _RETRY_BACKOFF,
@@ -38,7 +37,7 @@ from tabular_cdc_bootstrapper_spark.streaming._protocol import (
 )
 
 
-class ParquetStateTable(BranchOps):
+class ParquetStateTable(TableOps):
     """Versioned parquet table with an atomic CURRENT pointer.
 
     Layout: ``root/v-<n>-<uuid>/*.parquet`` + ``root/_CURRENT`` (JSON:
@@ -81,99 +80,28 @@ class ParquetStateTable(BranchOps):
     def _log_dir(self) -> str:
         return self._log.log_dir
 
-    def current(self) -> dict | None:
-        return self._log.current()
-
     def _log_entries(self) -> list[dict]:
         return self._log.entries()
-
-    def history(self) -> list[dict]:
-        """Committed snapshots, oldest first — version/dir/ts/meta plus
-        ``readable`` (data dir still within retention) and ``is_current``.
-        Log entries above the CURRENT pointer are crash orphans (the commit
-        never published) and are excluded."""
-        cur = self.current()
-        cur_version = cur["version"] if cur else -1
-        out = []
-        for e in self._log.committed():
-            e = dict(e)
-            e["readable"] = os.path.isdir(e["dir"])
-            e["is_current"] = e["version"] == cur_version
-            out.append(e)
-        return out
 
     def _next_version(self) -> int:
         return self._log.next_version()
 
-    def _owns(self, d: str) -> bool:
-        """True iff ``d`` lives under this table's root. A SHALLOW clone's
-        log references the SOURCE table's data dirs; every destructive
-        path (orphan GC, purge, expiry) must refuse to delete storage it
-        does not own — the clone may drop its reference, never the
-        source's bytes."""
-        root = os.path.realpath(self.root)
-        return os.path.realpath(d).startswith(root + os.sep)
+    #: record keys describing a snapshot's data (``TableOps``)
+    _STATE_KEYS = (
+        "dir", "schema", "next_fid", "renames", "dropped", "shadowed",
+        "data_schema",
+    )
 
-    def clone_to(
-        self,
-        dst_root: str,
-        mode: str = "shallow",
-        version: int | None = None,
-    ) -> "ParquetStateTable":
-        """Delta-style CLONE: create an independent table at ``dst_root``
-        whose history is this table's committed history up to ``version``
-        (default: current head). ``shallow`` copies only metadata — the
-        clone's log references the source's data dirs (zero-copy dev/test
-        branch; O(KB) regardless of table size); ``deep`` copies every
-        referenced dir. Either way the clone evolves independently: its
-        commits write under its own root, and its destructive operations
-        (purge/expiry/orphan GC) are ownership-guarded so they can drop
-        the clone's REFERENCES to source data but never the source's
-        bytes — a purge on a shallow clone rewrites into the clone's root
-        and leaves the source intact (purging the source itself is the
-        source's ``purge_keys``). Expired source snapshots are skipped
-        (their data is gone); expiry on a shallow clone reclaims only
-        clone-owned dirs."""
-        if mode not in ("shallow", "deep"):
-            raise ValueError(f"unknown clone mode {mode!r}")
-        cur = self.current()
-        if cur is None:
-            raise ValueError(f"{self.root} has no snapshot to clone")
-        head = cur["version"] if version is None else version
-        entries = [
-            e
-            for e in self._log.committed()
-            if e["version"] <= head and os.path.isdir(e["dir"])
-        ]
-        if not any(e["version"] == head for e in entries):
-            raise ValueError(f"no readable snapshot {head} in {self.root}")
-        dst = ParquetStateTable(dst_root, keep_versions=self.keep_versions)
-        os.makedirs(dst._log_dir, exist_ok=True)
-        dir_copy: dict[str, str] = {}
-        head_rec: dict | None = None
-        for e in entries:
-            rec = dict(e)
-            if mode == "deep":
-                if e["dir"] not in dir_copy:
-                    nd = os.path.join(dst_root, os.path.basename(e["dir"]))
-                    shutil.copytree(e["dir"], nd)
-                    dir_copy[e["dir"]] = nd
-                rec["dir"] = dir_copy[e["dir"]]
-            rec["cloned_from"] = self.root
-            lpath = os.path.join(
-                dst._log_dir, f"v-{rec['version']:08d}.json"
-            )
-            tmp = lpath + f".tmp.{uuid.uuid4().hex[:8]}"
-            with open(tmp, "w") as fh:
-                json.dump(rec, fh)
-            os.replace(tmp, lpath)
-            if rec["version"] == head:
-                head_rec = rec
-        tmp = dst._pointer + f".tmp.{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as fh:
-            json.dump(head_rec, fh)
-        os.replace(tmp, dst._pointer)
-        return dst
+    @staticmethod
+    def _entry_dirs(e: dict) -> list[str]:
+        return [e["dir"]]
+
+    def _publish_commit(
+        self, record: dict, expected_head: "int | tuple | None" = None
+    ) -> dict:
+        return self._publish(
+            record, keep=record["dir"], expected_head=expected_head
+        )
 
     def _publish(
         self, record: dict, keep: str, expected_head: int | None = None
@@ -221,8 +149,6 @@ class ParquetStateTable(BranchOps):
         head, so a property changing concurrently (e.g. a constraint
         added mid-commit) can never be silently dropped: the CAS fails,
         the next attempt reconciles against the newer head."""
-        rename_dir = "rollback_of" not in record  # rollback shares an
-        # older committed snapshot's dir — never rename that
 
         def _attempt():
             head = self.current()
@@ -245,21 +171,17 @@ class ParquetStateTable(BranchOps):
                 time.sleep(delay)
                 new_version = self._next_version()
                 if new_version != record["version"]:
-                    if rename_dir:
-                        new_dir = os.path.join(
-                            self.root,
-                            f"v-{new_version:08d}-{uuid.uuid4().hex[:8]}",
-                        )
-                        os.replace(record["dir"], new_dir)
-                        record["dir"] = new_dir
+                    new_dir = os.path.join(
+                        self.root,
+                        f"v-{new_version:08d}-{uuid.uuid4().hex[:8]}",
+                    )
+                    os.replace(record["dir"], new_dir)
+                    record["dir"] = new_dir
                     record["version"] = new_version
                 record["ts"] = time.time()
         return _attempt()  # last try raises
 
-    def exists(self) -> bool:
-        return self.current() is not None
-
-    def _read_rec(self, spark: SparkSession, e: dict) -> DataFrame:
+    def _read_entry(self, spark: SparkSession, e: dict) -> DataFrame:
         """Read one snapshot record's dir under ITS schema metadata:
         records written by ``alter_schema`` carry a logical schema plus
         rename folds / generation masks (shared ``_read_logical`` path,
@@ -299,7 +221,7 @@ class ParquetStateTable(BranchOps):
             if schema is not None:
                 return spark.createDataFrame([], schema)
             return None
-        return self._read_rec(spark, cur)
+        return self._read_entry(spark, cur)
 
     def alter_schema(
         self,
@@ -379,84 +301,10 @@ class ParquetStateTable(BranchOps):
             # table properties carry (constrained columns can't be
             # dropped/renamed — guarded above)
             record["constraints"] = cur["constraints"]
-        return self._publish(
+        return self._publish_commit(
             record,
-            keep=record["dir"],
             # token CAS (r12): the record SHARES cur's data dir — an
             # in-place purge landing in between would delete it
-            expected_head=(cur["version"], cur.get("purged_ts") or 0),
-        )
-
-    def constraints(self) -> dict:
-        """The table's CHECK constraints (name → SQL expression)."""
-        cur = self.current()
-        return dict((cur or {}).get("constraints") or {})
-
-    def add_constraint(self, spark: SparkSession, name: str, expr: str) -> dict:
-        """``ALTER TABLE ADD CONSTRAINT name CHECK (expr)`` on the plain
-        layout — semantics identical to the bucketed mirror's: existing
-        data validates once at add time, then every ``commit`` validates
-        its written state before the pointer swap. SQL CHECK: NULL
-        passes, only FALSE violates."""
-        if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", name):
-            raise ValueError(f"invalid constraint name {name!r}")
-        cur = self.current()
-        if cur is None:
-            raise ValueError(f"{self.root} has no snapshot yet")
-        cons = dict(cur.get("constraints") or {})
-        if name in cons:
-            raise ValueError(
-                f"constraint {name!r} already exists ({cons[name]}) — "
-                "DROP it first"
-            )
-        df = self.read(spark)
-        if df is not None:
-            _check_table_constraints(df, {name: expr}, self.root)
-        cons[name] = expr
-        return self._publish_properties(cur, constraints=cons)
-
-    def drop_constraint(self, name: str) -> dict:
-        cur = self.current()
-        if cur is None:
-            raise ValueError(f"{self.root} has no snapshot yet")
-        cons = dict(cur.get("constraints") or {})
-        if name not in cons:
-            raise ValueError(
-                f"no constraint {name!r} on {self.root} "
-                f"(have: {sorted(cons)})"
-            )
-        cons.pop(name)
-        return self._publish_properties(cur, constraints=cons)
-
-    def _publish_properties(self, cur: dict, **props) -> dict:
-        """Metadata-only properties commit sharing ``cur``'s data dir
-        (zero movement, purge-aware token CAS) — the plain-layout twin
-        of the mirror's ``_publish_properties``."""
-        record = {
-            "version": self._next_version(),
-            "dir": cur["dir"],
-            "ts": time.time(),
-            "operation": "set_properties",
-        }
-        for k in (
-            "schema",
-            "next_fid",
-            "renames",
-            "dropped",
-            "shadowed",
-            "constraints",
-            "data_schema",
-        ):
-            if k in cur:
-                record[k] = cur[k]
-        for k, v in props.items():
-            if v:
-                record[k] = v
-            else:
-                record.pop(k, None)
-        return self._publish(
-            record,
-            keep=record["dir"],
             expected_head=(cur["version"], cur.get("purged_ts") or 0),
         )
 
@@ -786,104 +634,29 @@ class ParquetStateTable(BranchOps):
             raise
         return out
 
-    def read_branch(self, spark: SparkSession, name: str) -> DataFrame:
-        """Read the branch head (its latest staged commit, or the fork
-        point if nothing is staged yet)."""
-        b = self._branchset.get(name)
-        if b["head"] == b["base"]:
-            return self.read_version(spark, b["base"])
-        for e in self._log.entries():
-            if e["version"] == b["head"]:
-                return self._read_rec(spark, e)
-        raise ValueError(
-            f"branch {name!r} head {b['head']} missing from the log of "
-            f"{self.root}"
-        )
-
-    def _entry_readable(self, e: dict) -> bool:
-        return os.path.isdir(e["dir"])
-
     def _after_fast_forward(self, head_rec: dict) -> None:
         self._expire(keep=head_rec["dir"])
 
-    def read_version(self, spark: SparkSession, version: int) -> DataFrame:
-        """VERSION AS OF: read snapshot ``version`` from the log."""
-        for e in self.history():
-            if e["version"] == version:
-                if not e["readable"]:
-                    raise ValueError(
-                        f"snapshot {version} of {self.root} has expired "
-                        f"(retention keep_versions={self.keep_versions})"
-                    )
-                return self._read_rec(spark, e)
-        raise ValueError(f"no snapshot {version} in {self.root}")
+    def _new_like(self, dst_root: str) -> "ParquetStateTable":
+        return ParquetStateTable(dst_root, keep_versions=self.keep_versions)
 
-    def read_as_of(self, spark: SparkSession, ts: float) -> DataFrame:
-        """TIMESTAMP AS OF: the latest snapshot committed at or before
-        ``ts`` (unix seconds, the clock ``commit`` stamps)."""
-        candidates = [e for e in self.history() if e["ts"] <= ts]
-        if not candidates:
-            raise ValueError(
-                f"no snapshot of {self.root} exists at or before ts={ts}"
-            )
-        return self.read_version(spark, candidates[-1]["version"])
+    @staticmethod
+    def _map_dirs(e: dict, fn) -> dict:
+        return {**e, "dir": fn(e["dir"], os.path.basename(e["dir"]))}
 
-    def rollback(
-        self, to_version: int, spark: SparkSession | None = None
-    ) -> dict:
-        """Re-point CURRENT at snapshot ``to_version`` as a NEW commit —
-        history stays append-only (an Iceberg-style rollback records the
-        restore; it never erases the snapshots it skips past). The data dir
-        is shared, not copied; retention keeps it readable because the new
-        head log entry references it. On a CONSTRAINED table ``spark=``
-        is required: the restored data validates against the carried
-        constraints (they may postdate the target snapshot)."""
-        target = None
-        for e in self.history():
-            if e["version"] == to_version:
-                target = e
-        if target is None:
-            raise ValueError(f"no snapshot {to_version} in {self.root}")
-        if not target["readable"]:
-            raise ValueError(
-                f"snapshot {to_version} of {self.root} has expired "
-                f"(retention keep_versions={self.keep_versions})"
-            )
-        record = {
-            "version": self._next_version(),
-            "dir": target["dir"],
-            "ts": time.time(),
-            "rollback_of": to_version,
-        }
-        # the restored snapshot's DDL metadata rides along (r12): a
-        # rollback to a post-alter version must read under that
-        # version's logical schema, folds and generation masks
-        for k in (
-            "schema", "renames", "dropped", "shadowed", "next_fid",
-            "data_schema",
-        ):
-            if k in target:
-                record[k] = target[k]
-        # constraints are table properties — they survive the restore
-        # (Iceberg pointer-move semantics), riding from the current head;
-        # the restored data must validate against them (review r12: the
-        # constraint may postdate the target snapshot)
-        head = self.current()
-        head_cons = (head or {}).get("constraints") or {}
-        if head_cons:
-            if spark is None:
-                raise ValueError(
-                    f"{self.root} carries CHECK constraints "
-                    f"({sorted(head_cons)}): pass spark= so the restored "
-                    "snapshot can be validated, or DROP them first"
-                )
-            # read through the version's own logical schema (rename
-            # folds, typed NULL for later-added columns — NULL passes)
-            _check_table_constraints(
-                self.read_version(spark, to_version), head_cons, self.root
-            )
-            record["constraints"] = head_cons
-        return self._publish_retry(record)
+    def _stage(
+        self, spark: SparkSession, df: DataFrame, wdir: str
+    ) -> tuple[DataFrame, dict]:
+        df.write.mode("errorifexists").parquet(wdir)
+        keys = {"data_schema": _nullable_json(df.schema)}
+        return self._read_entry(spark, {"dir": wdir, **keys}), keys
+
+    def _install_staged(self, wdir: str, version: int) -> dict:
+        vdir = os.path.join(
+            self.root, f"v-{version:08d}-{uuid.uuid4().hex[:8]}"
+        )
+        os.replace(wdir, vdir)
+        return {"dir": vdir}
 
     def purge_keys(
         self,
@@ -1132,252 +905,6 @@ class ParquetStateTable(BranchOps):
         return {
             "versions_rewritten": versions_rewritten,
             "dirs_rewritten": len(dir_map),
-        }
-
-    def tag(self, name: str, version: int | None = None) -> dict:
-        """Create (or move) a named immutable ref to a snapshot — the
-        Iceberg tag. Tags are KB metadata (``_tags/<name>.json``, atomic
-        rename); a tagged snapshot's data survives retention and
-        ``expire_snapshots`` for as long as the tag exists (the ref-keeps-
-        snapshot rule), so a `prod`/`training-run-42` tag is a durable,
-        reproducible read point."""
-        if version is None:
-            cur = self.current()
-            if cur is None:
-                raise ValueError(f"{self.root} has no snapshot to tag")
-            version = cur["version"]
-        return self._tagset.tag(name, version, self._log)
-
-    def tags(self) -> list[dict]:
-        return self._tagset.tags()
-
-    def read_tag(self, spark: SparkSession, name: str) -> DataFrame:
-        return self.read_version(spark, self._tagset.resolve(name))
-
-    def delete_tag(self, name: str) -> None:
-        self._tagset.delete(name)
-
-    @property
-    def _tagset(self) -> "TagSet":
-        return TagSet(self.root)
-
-    def _tagged_versions(self) -> set[int]:
-        return self._tagset.versions()
-
-    def write_audit_publish(
-        self,
-        spark: SparkSession,
-        df: DataFrame,
-        rules: Sequence,
-        meta: dict | None = None,
-        stale_staging_grace_s: float = 3600.0,
-        branch: str | None = None,
-    ) -> dict:
-        """Iceberg's write-audit-publish (WAP) pattern: stage ``df`` as an
-        UNPUBLISHED snapshot, audit the staged files with a Deequ-style
-        rule suite (`functions/constraints.py`), and publish only if every
-        rule passes — a failing batch never becomes a readable version and
-        the table is untouched. The audit reads the staged parquet BACK
-        from disk, so it validates exactly the bytes readers would see
-        (the point of WAP over pre-write validation: encoding/casting
-        surprises are caught too).
-
-        ``rules`` may mix constraint ``Rule``s (absolute, Deequ-style)
-        with ``AnomalyRule``s (relative to the PREVIOUS committed
-        snapshot — "row count within x%", "null rate didn't jump"): the
-        real warehouse publish gate is both, and r9 left the anomaly
-        half post-hoc-only (VERDICT r10 task 1). Anomaly rules need a
-        baseline: on a table with no committed snapshot they raise.
-
-        Staging uses a ``wap-*`` dir invisible to readers and retention;
-        publish is one atomic rename into a version name + the normal
-        log/pointer protocol. A crash mid-audit leaves an unreferenced
-        ``wap-*`` dir that a LATER call garbage-collects — only once it
-        is ``stale_staging_grace_s`` old, so a concurrent writer's
-        audit-in-flight staging is never deleted out from under it
-        (ADVICE r9; concurrent WAPs then serialize on the pointer swap
-        instead of corrupting each other). Returns ``{"published":
-        bool, "report": [...], ...}``; on success the commit record
-        rides along (``audited: true`` in its metadata)."""
-        from tabular_cdc_bootstrapper_spark.functions.constraints import (
-            AnomalyRule,
-            check_anomalies,
-            check_constraints,
-        )
-
-        now = time.time()
-        for d in os.listdir(self.root):  # GC STALE crashed-audit leftovers
-            if not d.startswith("wap-"):
-                continue
-            p = os.path.join(self.root, d)
-            try:
-                age = now - os.path.getmtime(p)
-            except OSError:
-                continue
-            if age >= stale_staging_grace_s:
-                shutil.rmtree(p, ignore_errors=True)
-        row_rules = [r for r in rules if not isinstance(r, AnomalyRule)]
-        anomaly_rules = [r for r in rules if isinstance(r, AnomalyRule)]
-        if branch is not None:
-            self._branchset.get(branch)  # raises on unknown branch
-        if anomaly_rules and branch is None and self.current() is None:
-            raise ValueError(
-                f"{self.root} has no committed snapshot to serve as the "
-                "anomaly-rule baseline; commit one first or gate with "
-                "constraint Rules only"
-            )
-        _check_meta(meta)
-        wdir = os.path.join(self.root, f"wap-{uuid.uuid4().hex[:8]}")
-        df.write.mode("errorifexists").parquet(wdir)
-        written = _nullable_json(df.schema)
-        _wschema = T.StructType.fromJson(written)
-        staged = spark.read.schema(_wschema).parquet(wdir)
-        static_report = []
-        if row_rules:
-            static_report.extend(
-                {
-                    "rule": r["rule"],
-                    "n_violations": r["n_violations"],
-                    "passed": r["passed"],
-                }
-                for r in check_constraints(staged, row_rules).collect()
-            )
-        # conflict loop (r11, VERDICT task 8): a concurrent commit landing
-        # between this WAP's baseline read and its publish surfaces as a
-        # CommitConflict — the ANOMALY audit then re-runs with the new
-        # head as its baseline (the two-writer WAP contract: audits are
-        # always relative to the state they actually publish onto);
-        # row-rule verdicts are head-independent and computed once.
-        sdir = wdir  # current home of the staged bytes (wap-* then v-*)
-        attempt = 0
-        while True:
-            basis = None if branch is not None else self.current()
-            basis_v = basis["version"] if basis else -1
-            report = list(static_report)
-            if anomaly_rules:
-                # baseline = the previous state of wherever this
-                # publishes: the branch head for a branch-staged WAP
-                # (multi-batch WAP audits each batch against the batch
-                # before it), else the main CURRENT snapshot
-                baseline = (
-                    self.read_branch(spark, branch)
-                    if branch is not None
-                    else self.read(spark)
-                )
-                report.extend(
-                    {
-                        "rule": r["rule"],
-                        "baseline": r["baseline"],
-                        "observed": r["observed"],
-                        "passed": r["passed"],
-                    }
-                    for r in check_anomalies(
-                        baseline, staged, anomaly_rules
-                    ).collect()
-                )
-            if not all(r["passed"] for r in report):
-                shutil.rmtree(sdir, ignore_errors=True)
-                return {"published": False, "version": None, "report": report}
-            version = self._next_version()
-            if sdir == wdir:
-                vdir = os.path.join(
-                    self.root, f"v-{version:08d}-{uuid.uuid4().hex[:8]}"
-                )
-                os.replace(wdir, vdir)
-                sdir = vdir
-                # rebind for re-audits
-                staged = spark.read.schema(_wschema).parquet(vdir)
-            record = {
-                "version": version,
-                "dir": sdir,
-                "ts": time.time(),
-                "audited": True,
-                "data_schema": written,
-            }
-            if meta:
-                record.update(meta)
-            if branch is not None:
-                rec = self._publish_to_branch(record, branch)
-                return {"published": True, **rec, "report": report}
-            try:
-                self._publish(
-                    record,
-                    keep=sdir,
-                    expected_head=basis_v if anomaly_rules else None,
-                )
-                return {"published": True, **record, "report": report}
-            except CommitConflict:
-                attempt += 1
-                if attempt > len(_RETRY_BACKOFF):
-                    raise
-                if not os.path.isdir(sdir):
-                    raise CommitConflict(
-                        f"WAP staging of {self.root} was reclaimed by a "
-                        "concurrent retention pass; re-run the WAP"
-                    ) from None
-                time.sleep(_RETRY_BACKOFF[attempt - 1])
-
-    def expire_snapshots(
-        self,
-        older_than_ts: float | None = None,
-        keep_last: int | None = None,
-    ) -> dict:
-        """Explicit snapshot expiry — the Iceberg ``expire_snapshots``
-        maintenance action, completing the triad beside compaction
-        (sources/sinks.py) and GDPR purge. Retention via ``keep_versions``
-        expires per-commit as a side effect; this is the storage-reclaim
-        op a warehouse runs on a schedule: drop the DATA of committed
-        snapshots strictly older than ``older_than_ts`` (commit clock)
-        and/or beyond the newest ``keep_last``, while the log entries stay
-        (metadata is tiny; ``history()`` marks them ``readable: false``).
-        The CURRENT snapshot and every dir it shares (rollback heads) are
-        always kept. Returns the expired versions and reclaimed dirs."""
-        cur = self.current()
-        if cur is None:
-            return {"expired_versions": [], "dirs_removed": 0}
-        committed = self._log.committed()
-        keep_versions = {cur["version"]} | self._tagged_versions()
-        # a live branch pins its fork point (read_branch of an
-        # empty-staged branch resolves there) and every staged version
-        windows = self._branchset.windows()
-        keep_versions.update(b["base"] for b in self._branchset.branches())
-        if keep_last is not None:
-            keep_versions.update(
-                e["version"] for e in committed[-max(keep_last, 1):]
-            )
-        expired = []
-        for e in committed:
-            if e["version"] in keep_versions:
-                continue
-            if older_than_ts is not None and e["ts"] >= older_than_ts:
-                continue
-            if older_than_ts is None and keep_last is None:
-                continue  # no criterion given: expire nothing
-            expired.append(e)
-        expired_versions = {e["version"] for e in expired}
-        kept_dirs = {
-            e["dir"]
-            for e in committed
-            if e["version"] not in expired_versions
-        }
-        kept_dirs.update(
-            e["dir"]
-            for e in self._log.entries()
-            if any(lo <= e["version"] <= hi for lo, hi in windows)
-        )
-        doomed = {
-            e["dir"]
-            for e in expired
-            if e["dir"] not in kept_dirs and self._owns(e["dir"])
-        }
-        removed = 0
-        for d in doomed:
-            if os.path.isdir(d):
-                shutil.rmtree(d, ignore_errors=True)
-                removed += 1
-        return {
-            "expired_versions": sorted(expired_versions),
-            "dirs_removed": removed,
         }
 
     def _expire(self, keep: str) -> None:

@@ -348,3 +348,23 @@ def test_parquet_rows_matches_scan_count(spark, sf_dir, tmp_path):
     pq.write_table(empty, str(d / "part-1.parquet"))
     assert _parquet_rows(str(tmp_path), "multi") == 5
     assert spark.read.parquet(str(d)).count() == 5
+
+
+def test_parquet_rows_skips_hidden_files_like_spark(spark, tmp_path):
+    """_parquet_rows ignores the files Spark's reader ignores: a
+    ``_``- or ``.``-prefixed file (or dir) in a dataset dir is a sidecar,
+    not data, so the footer count must equal the scan count."""
+    from tabular_cdc_bootstrapper_spark.queries._registry import _parquet_rows
+
+    d = tmp_path / "ds.parquet"
+    (d / ".hidden").mkdir(parents=True)
+    pq.write_table(
+        pa.table({"id": pa.array([1, 2, 3], pa.int64())}),
+        str(d / "part-0.parquet"),
+    )
+    side = pa.table({"id": pa.array([7, 8], pa.int64())})
+    pq.write_table(side, str(d / "_sidecar.parquet"))
+    pq.write_table(side, str(d / ".part-1.parquet"))
+    pq.write_table(side, str(d / ".hidden" / "part-2.parquet"))
+    assert spark.read.parquet(str(d)).count() == 3
+    assert _parquet_rows(str(tmp_path), "ds") == 3

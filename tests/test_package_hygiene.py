@@ -10,6 +10,10 @@ blocks cannot grow back.
 
 The one exception is ``streaming.pipeline.run_cdc_pipeline_available_now``:
 the CLI resolves the runner through ``pipeline`` at call time.
+
+The same scan pins the shared table surface: the snapshot, ref, property
+and maintenance methods are defined once, in ``_protocol.py``, and in
+neither table layout's module.
 """
 
 from __future__ import annotations
@@ -119,3 +123,35 @@ def test_the_one_reexport_resolves_to_the_runner():
     assert "run_cdc_pipeline_available_now" in _bound_names(
         ast.parse(runner.read_text()).body
     )
+
+
+#: the surface both table layouts share through ``_protocol.TableOps``
+TABLE_OPS_METHODS = {
+    "current", "exists", "history", "_owns", "_entry_readable", "_resolve",
+    "read_version", "read_as_of",
+    "tag", "tags", "read_tag", "delete_tag", "_tagset", "_tagged_versions",
+    "constraints", "add_constraint", "drop_constraint", "_publish_properties",
+    "rollback", "expire_snapshots", "clone_to", "write_audit_publish",
+}
+
+
+def _method_defs(path: Path, cls: str | None = None) -> list[str]:
+    """Names of the methods defined by the classes of one module (only
+    by class ``cls`` when given)."""
+    return [
+        f.name
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.ClassDef) and cls in (None, node.name)
+        for f in node.body
+        if isinstance(f, (ast.FunctionDef, ast.AsyncFunctionDef))
+    ]
+
+
+def test_table_surface_is_defined_once_in_protocol():
+    streaming = REPO / PKG / "streaming"
+    for layout in ("state_table.py", "bucket_mirror.py", "bucket_ops.py"):
+        again = TABLE_OPS_METHODS & set(_method_defs(streaming / layout))
+        assert again == set(), f"{layout} redefines {sorted(again)}"
+    defs = _method_defs(streaming / "_protocol.py", "TableOps")
+    counts = {name: defs.count(name) for name in TABLE_OPS_METHODS}
+    assert counts == {name: 1 for name in TABLE_OPS_METHODS}

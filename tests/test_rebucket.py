@@ -92,3 +92,47 @@ def test_rebucket_requires_snapshot_and_noops_on_same_spec(spark, tmp_path):
     rec = m.rebucket(spark, 4)  # same spec: no-op, no new commit
     assert rec["version"] == v
     assert m.current()["version"] == v
+
+
+@pytest.mark.parametrize(
+    "evolve, harness",
+    [
+        ("rebucket", "mirror_rebucket_roundtrip"),
+        ("regrain", "mirror_regrain_roundtrip"),
+    ],
+)
+def test_history_probe_fails_on_damaged_history(
+    spark, sf_dir, monkeypatch, evolve, harness
+):
+    """The spec-evolution harnesses' ``history_intact`` probe must be able
+    to fail: drop one row from a pre-evolution data file right after the
+    spec change, and the probe reports 0, not 1."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from tabular_cdc_bootstrapper_spark.queries import cdc_state
+
+    orig = getattr(VersionedBucketMirror, evolve)
+
+    def evolve_then_damage(self, *args, **kwargs):
+        pre = self.current()
+        out = orig(self, *args, **kwargs)
+        path = next(
+            os.path.join(d, f)
+            for d in sorted(self._entry_dirs(pre))
+            for f in sorted(os.listdir(d))
+            if f.endswith(".parquet")
+            and pq.ParquetFile(os.path.join(d, f)).metadata.num_rows
+        )
+        damaged = pq.read_table(path).slice(1)
+        pq.write_table(damaged, os.path.join(os.path.dirname(path), "x.parquet"))
+        os.remove(path)
+        return out
+
+    monkeypatch.setattr(VersionedBucketMirror, evolve, evolve_then_damage)
+    got = {
+        r["item"]: r["value"]
+        for r in getattr(cdc_state, harness)(spark, sf_dir).collect()
+    }
+    assert got["history_intact"] == 0

@@ -414,7 +414,7 @@ def test_rewrite_data_files_skips_tight_dirs(spark, mirror):
     assert out["version"] is None
 
 
-# --- writable branches on the bucketed layout (r10, shared BranchOps) ---------
+# --- writable branches on the bucketed layout (r10, shared TableOps) ---------
 
 
 def test_mirror_branch_merge_invisible_until_fast_forward(spark, mirror):
