@@ -54,6 +54,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from tabular_cdc_bootstrapper_spark.localdf import local_df
+from tabular_cdc_bootstrapper_spark.streaming._protocol import _replace_json
 
 from tabular_cdc_bootstrapper_spark.functions.similarity import (
     _adc_over_codes,
@@ -117,10 +118,7 @@ class SegmentedTable:
             "meta": meta,
             "ts": time.time(),
         }
-        tmp = self._manifest + f".tmp.{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as fh:
-            json.dump(record, fh)
-        os.replace(tmp, self._manifest)  # atomic on posix
+        _replace_json(self._manifest, record)
         # prune segments no longer referenced (best-effort snapshot expiry)
         live = {os.path.basename(s) for s in segments}
         for d in os.listdir(self.root):
@@ -482,7 +480,7 @@ def delete_from_index(
     id_col: str = "vec_id",
 ) -> dict:
     """GDPR purge for the persisted ANN index — the companion of
-    ``ParquetStateTable.purge_keys`` (streaming/pipeline.py) on the
+    ``ParquetStateTable.purge_keys`` (streaming/state_table.py) on the
     retrieval side: hard-delete the given vec_ids from the codes table so
     no ``ann_query`` can ever return (or even score) them. The standing
     models are untouched — centroids/codebooks are aggregates that do not

@@ -360,7 +360,7 @@ def cdc_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def cdc_purge_history(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GDPR right-to-be-forgotten purge (streaming/pipeline.py
+    """GDPR right-to-be-forgotten purge (streaming/state_table.py
     ParquetStateTable.purge_keys): commit two mirror snapshots (base, then
     update%7 + delete%13 — the cdc_change_feed batches), hard-delete keys
     %97 from ALL retained history, then read BOTH snapshots back through

@@ -5,12 +5,14 @@ next-round #3 — every r11/r12 defect lived in that 5.9k-line monolith):
 this module holds everything BOTH layouts build on — the error types,
 CHECK-constraint evaluation, the purge lock, ``SnapshotLog`` (manifest
 log + pointer CAS + checkpoints), tag/branch sets, the shared
-``TableOps`` base (snapshot, ref, property and maintenance surface), and the schema-evolution helpers (union-widening,
-per-version logical reads, ALTER planning).
+``TableOps`` base (snapshot, ref, property and maintenance surface, GDPR
+purge and per-commit retention), and the schema-evolution helpers
+(union-widening, per-version logical reads, ALTER planning).
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import re
@@ -19,10 +21,13 @@ import time
 import uuid
 from collections.abc import Sequence
 from contextlib import contextmanager
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from tabular_cdc_bootstrapper_spark.streaming._purge import purge_dirs_fused
 
 
 class CommitConflict(RuntimeError):
@@ -151,13 +156,16 @@ def _purge_lock(root: str):
     over."""
     path = os.path.join(root, "_purge.lock")
     os.makedirs(root, exist_ok=True)
-
-    def _acquire() -> int:
-        return os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-
-    try:
-        fd = _acquire()
-    except FileExistsError:
+    for takeover in (False, True):
+        try:
+            with open(path, "x") as fh:
+                json.dump({"pid": os.getpid(), "ts": time.time()}, fh)
+            break
+        except FileExistsError:
+            if takeover:
+                raise CommitConflict(
+                    f"lost the purge-lock takeover race on {root}; retry"
+                ) from None
         try:
             age = time.time() - os.path.getmtime(path)
         except OSError:
@@ -166,19 +174,11 @@ def _purge_lock(root: str):
             raise CommitConflict(
                 f"another purge_keys holds the purge lock on {root} "
                 f"(age {age:.0f}s); retry after it finishes"
-            ) from None
+            )
         try:  # stale: crashed holder — take over
             os.remove(path)
         except OSError:
             pass
-        try:
-            fd = _acquire()
-        except FileExistsError:
-            raise CommitConflict(
-                f"lost the purge-lock takeover race on {root}; retry"
-            ) from None
-    with os.fdopen(fd, "w") as fh:
-        json.dump({"pid": os.getpid(), "ts": time.time()}, fh)
     try:
         yield
     finally:
@@ -420,18 +420,19 @@ class SnapshotLog:
         _replace_json(cpath, payload)
         return changed
 
-    def committed(self) -> list[dict]:
+    def committed(self, entries: list[dict] | None = None) -> list[dict]:
         """Entries at or below the CURRENT pointer — the published
         history. Entries above it are crash orphans and are excluded, as
         are ``ref``-marked entries at ANY position: those are branch
         staging, and once main advances past a diverged branch's version
         numbers they sit below the pointer WITHOUT ever having been
-        published to main (fast-forward strips the marker on publish)."""
+        published to main (fast-forward strips the marker on publish).
+        ``entries``: an ``entries()`` list the caller already read."""
         cur = self.current()
         cur_version = cur["version"] if cur else -1
         return [
             e
-            for e in self.entries()
+            for e in (self.entries() if entries is None else entries)
             if e["version"] <= cur_version and "ref" not in e
         ]
 
@@ -571,10 +572,7 @@ class SnapshotLog:
             raise CommitConflict(
                 f"{self.root} advanced during publish of v{n}"
             )
-        tmp = self.pointer_path + f".tmp.{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as fh:
-            json.dump(record, fh)
-        os.replace(tmp, self.pointer_path)  # atomic on posix
+        _replace_json(self.pointer_path, record)
         self._maybe_checkpoint()
         return record
 
@@ -733,9 +731,9 @@ class TableOps:
     """The snapshot, ref, property and maintenance surface shared by
     every SnapshotLog-backed table layout — history, time travel, tags,
     CHECK constraints, rollback, clone, explicit expiry, write-audit-
-    publish and writable branches — written once over the per-layout
-    hooks below. Commit, merge, DML, ``alter_schema``, reads, purge and
-    per-commit retention stay with each layout.
+    publish, writable branches, GDPR purge and per-commit retention —
+    written once over the per-layout hooks below. Commit, merge, DML,
+    ``alter_schema`` and reads stay with each layout.
 
     A layout provides:
 
@@ -746,22 +744,34 @@ class TableOps:
     - ``_read_entry(spark, e)``: record ``e``'s state as a DataFrame
       (None when it holds no data);
     - ``_publish_commit(record, expected_head=None)``: publish a main
-      commit (CAS on ``expected_head`` when given) and run the layout's
-      retention pass;
-    - ``_after_fast_forward(head_rec)``: the retention pass after a
-      branch fast-forward;
+      commit (CAS on ``expected_head`` when given) and run ``_expire``;
     - ``_new_like(dst_root)``: an empty table of the same layout and
       settings at ``dst_root`` (clone target);
     - ``_map_dirs(e, fn)``: a copy of record ``e`` with every data dir
       ``d`` replaced by ``fn(d, rel)``, ``rel`` being the path a copy of
-      ``d`` takes under another root of this layout (deep clone);
+      ``d`` takes under another root of this layout (deep clone); a dir
+      for which ``fn`` returns None is dropped (purge);
     - ``_stage(spark, df, wdir)``: write ``df`` under the staging dir
       ``wdir``; returns the staged frame read back and the schema keys
       of its record (write-audit-publish);
     - ``_install_staged(wdir, version)``: move the staged bytes into
-      immutable version dirs; returns the record keys naming them.
+      immutable version dirs; returns the record keys naming them;
+    - ``_purge_candidates(e, scope)``: the ``(dir, rewrite target)``
+      pairs of record ``e`` a purge may rewrite;
+    - ``_VERSION_DIRS``: the glob, under ``root``, of every on-disk
+      version dir (the retention listing).
+
+    Optional: ``_purge_scope(keys_df, keys, cur)`` narrows the purge to
+    part of the table (default: all of it); ``_PURGE_KEEP_EMPTY`` keeps
+    a dir the purge empties as a readable 0-row dir instead of dropping
+    it from its records; ``_KEEP_NEWEST_DIRS`` makes retention also keep
+    the newest ``keep_versions`` dirs by name (tables older than the
+    snapshot log).
 
     Commit entry points thread ``branch=`` to ``_publish_to_branch``."""
+
+    _PURGE_KEEP_EMPTY = False
+    _KEEP_NEWEST_DIRS = False
 
     # -- snapshot state ----------------------------------------------
 
@@ -1248,6 +1258,240 @@ class TableOps:
                     ) from None
                 time.sleep(_RETRY_BACKOFF[attempt - 1])
 
+    # -- GDPR purge and per-commit retention --------------------------
+
+    def _purge_scope(
+        self, keys_df: DataFrame, keys: list[str], cur: dict
+    ) -> set[str] | None:
+        return None
+
+    def _purge_keys_locked(
+        self,
+        spark: SparkSession,
+        keys_df: DataFrame,
+        key_cols: str | Sequence[str],
+    ) -> dict | None:
+        """GDPR-style hard delete (caller holds ``_purge_lock``):
+        physically remove every row matching ``keys_df`` on ``key_cols``
+        from the CURRENT snapshot AND every retained one, staged branch
+        snapshots included — the right-to-be-forgotten operation
+        (Delta's delete + REORG PURGE / Iceberg's rewrite-data-files
+        shape) and the ONE deliberate exception to append-only history:
+        versions, timestamps and metadata are preserved, but each
+        retained data dir holding a purged key is rewritten without it,
+        so no VERSION AS OF / TIMESTAMP AS OF / rollback / change-feed
+        read can resurrect them.
+
+        Protocol (crash-safe, idempotent): (1) one ``purge_dirs_fused``
+        call per round over the unseen candidate dirs of every record
+        and of the pointer (``_purge_candidates``), so a re-run after a
+        crash between the log and the pointer rewrite reaches the dirs
+        the stale pointer still names; a broadcast semi-join skips clean
+        dirs, so re-runs are true no-ops, and a dir shared by several
+        records (rollback targets, untouched buckets) is rewritten once;
+        (2)
+        rewrite each log entry, the checkpoint and then the CURRENT
+        pointer in place (atomic renames, versions/ts/meta preserved,
+        ``purged_ts`` stamped — the stamp rides in every CAS publish's
+        head token, so a commit based on the pre-purge head conflicts
+        and re-reads instead of resurrecting the purged dirs); (3)
+        delete the old dirs the table owns after the pointer moves. A
+        head that moves mid-purge is CHASED with delta-sized catch-up
+        rounds, bounded by ``_PURGE_CATCHUP_ROUNDS`` (then
+        CommitConflict). A dir retention reclaims between listing and
+        scan fails the scan; the round drops every vanished dir and
+        rescans the rest. A crash mid-way leaves every snapshot readable (old or new
+        dir) and a re-run converges.
+
+        Cost: one pruned scan + write per retained dir in scope. Returns
+        None on an empty table, else ``{"rewritten": records rewritten,
+        "dirs": dirs rewritten, "rounds": rounds run, "scope": the
+        layout's purge scope}``."""
+        keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)
+        cur = self.current()
+        if cur is None:
+            return None
+        scope = self._purge_scope(keys_df, keys, cur)
+        probe = keys_df.select(
+            *[F.col(k).alias(f"__p_{i}") for i, k in enumerate(keys)]
+        ).distinct()
+
+        def _cond(df: DataFrame):
+            return reduce(
+                lambda a, b: a & b,
+                [
+                    df[k].eqNullSafe(probe[f"__p_{i}"])
+                    for i, k in enumerate(keys)
+                ],
+            )
+
+        dir_map: dict[str, str | None] = {}  # purged dir -> rewrite
+        done: set[str] = set()  # dirs holding no purge key
+        now = time.time()
+
+        def _purged(e: dict) -> dict | None:
+            if not any(d in dir_map for d in self._entry_dirs(e)):
+                return None
+            rec = self._map_dirs(e, lambda d, _rel: dir_map.get(d, d))
+            rec["purged_ts"] = now
+            return rec
+
+        rewritten = 0
+        for rounds in range(1, _PURGE_CATCHUP_ROUNDS + 1):
+            log = self._log.entries()
+            windows = self._branchset.windows()
+            entries = self._log.committed(log) or [cur]
+            seen = {e["version"] for e in entries}
+            entries += [
+                e
+                for e in log
+                if e["version"] not in seen
+                and any(lo < e["version"] <= hi for lo, hi in windows)
+            ]
+            pending: dict[str, str] = {}
+            schemas: dict[str, dict] = {}
+            # the pointer too: a purge that crashed between the log and
+            # the pointer rewrite left it on dirs no log entry names
+            for e in entries + [cur]:
+                for d, dst in self._purge_candidates(e, scope):
+                    if (
+                        d in dir_map
+                        or d in done
+                        or d in pending
+                        or not os.path.isdir(d)
+                    ):
+                        continue
+                    pending[d] = dst
+                    if e.get("data_schema"):
+                        schemas[d] = e["data_schema"]
+            while pending:
+                try:
+                    clean, dm = purge_dirs_fused(
+                        spark, list(pending.items()), probe, _cond,
+                        self.root, keep_empty=self._PURGE_KEEP_EMPTY,
+                        schemas=schemas,
+                    )
+                except Exception:
+                    # a concurrent commit's retention pass may delete a
+                    # dir between listing and scan once no retained
+                    # record references it: drop it and rescan the rest,
+                    # so the round keeps its progress
+                    gone = [d for d in pending if not os.path.isdir(d)]
+                    if not gone:
+                        raise
+                    for d in gone:
+                        del pending[d]
+                    continue
+                dir_map.update(dm)
+                done |= clean | {d for d in dm.values() if d is not None}
+                break
+            for e in entries:
+                rec = _purged(e)
+                if rec is None:
+                    continue
+                rewritten += 1
+                # checkpointed entries and a pre-log table's pointer
+                # have no per-version file
+                lpath = self._log._entry_path(e["version"])
+                if os.path.exists(lpath):
+                    _replace_json(lpath, rec)
+            self._log.rewrite_checkpoint(_purged)
+            live = self.current()
+            if (live["version"] if live else -1) != cur["version"]:
+                cur = live  # the head moved: chase it
+                continue
+            rec = _purged(cur)
+            if rec is not None:
+                _replace_json(self._log.pointer_path, rec)
+            break
+        else:
+            raise CommitConflict(
+                f"{self.root} kept advancing through "
+                f"{_PURGE_CATCHUP_ROUNDS} purge catch-up rounds — "
+                "re-run the purge"
+            )
+        # ownership guard: a shallow clone drops only its REFERENCE to a
+        # source-owned dir; the source's own purge deletes those bytes
+        for old in dir_map:
+            if self._owns(old):
+                shutil.rmtree(old, ignore_errors=True)
+        return {
+            "rewritten": rewritten,
+            "dirs": len(dir_map),
+            "rounds": rounds,
+            "scope": scope,
+        }
+
+    def _expire(self, published: dict) -> None:
+        """Per-commit retention: delete the on-disk version dirs no
+        retained record references. Kept: the dirs of ``published`` (the
+        record just published) and of the newest ``keep_versions``
+        COMMITTED records — dir sharing keeps a rollback target or an
+        untouched bucket alive while any retained record points at it —
+        plus every dir of a tagged record, of a live branch window
+        (fork point included), and of an entry above the pointer: an
+        in-flight or crashed commit, whose data is reclaimed by orphan
+        GC when the ENTRY dies, never by retention racing its publish.
+
+        A dir no log entry references is crash staging when aged, or a
+        concurrent writer's installed-but-unpublished commit when fresh:
+        it is reclaimed only past the conflict grace; purge rewrites
+        (``-purge-`` names) stay unreferenced for a whole purge scan and
+        get the purge lock's staleness as their grace. Dirs match by
+        their path below the root (``_VERSION_DIRS``' depth: the
+        uuid-suffixed name plus, on the mirror, its bucket), so a root
+        spelled unlike the one that wrote the records still matches.
+        Reads the log once."""
+        keep = max(self.keep_versions, 1)
+        on_disk = glob.glob(
+            os.path.join(glob.escape(self.root), self._VERSION_DIRS)
+        )
+        kept = set(self._entry_dirs(published))
+        if self._KEEP_NEWEST_DIRS:
+            kept.update(sorted(on_disk)[-keep:])
+        log = self._log.entries()
+        for e in self._log.committed(log)[-keep:]:
+            kept.update(self._entry_dirs(e))
+        tagged = self._tagged_versions()
+        windows = self._branchset.windows()
+        cur = self.current()
+        cur_version = cur["version"] if cur else -1
+        logged: set[str] = set()
+        for e in log:
+            dirs = self._entry_dirs(e)
+            logged.update(dirs)
+            if (
+                e["version"] > cur_version
+                or e["version"] in tagged
+                or any(lo <= e["version"] <= hi for lo, hi in windows)
+            ):
+                kept.update(dirs)
+        depth = len(self._VERSION_DIRS.split(os.sep))
+
+        def tail(d: str) -> tuple[str, ...]:
+            return tuple(os.path.normpath(d).split(os.sep)[-depth:])
+
+        kept = {tail(d) for d in kept}
+        logged = {tail(d) for d in logged}
+        now = time.time()
+        for full in on_disk:
+            name = os.path.basename(full)
+            if tail(full) in kept:
+                continue
+            if tail(full) not in logged:
+                try:
+                    age = now - os.path.getmtime(full)
+                except OSError:
+                    continue
+                grace = (
+                    _PURGE_LOCK_STALE_S
+                    if "-purge-" in name
+                    else self._log.conflict_grace_s
+                )
+                if age < grace:
+                    continue
+            shutil.rmtree(full, ignore_errors=True)
+
     # -- writable branches -------------------------------------------
 
     @property
@@ -1461,7 +1705,7 @@ class TableOps:
             )
         _replace_json(self._log.pointer_path, head_rec)
         self._clear_ff_marker(name)
-        self._after_fast_forward(head_rec)
+        self._expire(head_rec)
         return head_rec
 
 

@@ -1,13 +1,13 @@
 """Fused per-directory purge scan/rewrite (r15 optimization round).
 
-Both purge implementations (``ParquetStateTable.purge_keys`` and the
-bucketed ``_purge_keys_locked``) used to run, PER touched directory, up
-to three sequential Spark actions: a broadcast semi-join ``isEmpty``
-(does this dir hold any purge key?), a broadcast anti-join ``isEmpty``
-(would the purge empty it?), and a ``coalesce(1)`` rewrite. At toy scale
-that is ~3 × n_dirs tiny jobs of pure scheduling overhead (measured
-~5-6 s of the snapshot_refs_report harness); at warehouse scale it
-serializes n_dirs independent scans behind one driver loop (guide §2.6).
+The GDPR purge (``TableOps._purge_keys_locked``, its one caller, for
+both table layouts) used to run, PER touched directory, up to three
+sequential Spark actions: a broadcast semi-join ``isEmpty`` (does this
+dir hold any purge key?), a broadcast anti-join ``isEmpty`` (would the
+purge empty it?), and a ``coalesce(1)`` rewrite. At toy scale that is
+~3 × n_dirs tiny jobs of pure scheduling overhead (measured ~5-6 s of
+the snapshot_refs_report harness); at warehouse scale it serializes
+n_dirs independent scans behind one driver loop (guide §2.6).
 
 ``purge_dirs_fused`` does the same work in TWO jobs per schema group:
 
@@ -17,11 +17,10 @@ serializes n_dirs independent scans behind one driver loop (guide §2.6).
    rewritten, never deleted, and never chained through purge outputs);
 2. one broadcast anti-join over the hit dirs written ``partitionBy``
    the per-dir id into a staging dir (``repartition`` by the id keeps
-   one file per dir, matching the old per-dir ``coalesce(1)`` output
-   shape), then a driver-side rename installs each partition under its
-   target immutable name. A dir whose partition is absent was emptied
-   by the purge — the caller drops it from the manifests, exactly as
-   before.
+   one file per dir), then a driver-side rename installs each partition
+   under its target immutable name. A dir whose partition is absent was
+   emptied by the purge — the caller drops it from its records, or,
+   with ``keep_empty``, it is written as an empty typed dir.
 
 Dirs are grouped by exact schema before the union (merge-on-read
 keys-only delta slices and post-ALTER snapshots must keep their own
@@ -33,10 +32,11 @@ multi-path Spark relation with the per-dir id derived from the file
 path, so the per-dir schema-inference jobs (~0.03 s + ~0.06 s driver
 gap EACH) and the n_dirs-branch union plan are gone.
 
-Any failure (e.g. the r12 TOCTOU: a concurrently-expired dir vanishing
-mid-scan) raises to the caller, which falls back to the original
-per-dir loop for that catch-up round — the fused path is a fast path,
-not a semantics change.
+Any failure raises to the caller, after removing what this call
+installed. There is no per-dir fallback: the one expected failure — a
+dir that retention deleted mid-scan (the r12 TOCTOU) — makes the caller
+drop the vanished dirs and call again with the rest, in the same
+catch-up round; any other failure propagates.
 """
 
 from __future__ import annotations
@@ -89,7 +89,7 @@ def purge_dirs_fused(
     readable 0-row version). ``schemas`` (r16) maps a source dir to the
     PHYSICAL schema json its snapshot record captured at write time —
     those dirs' group reads bind to it (no inference job at all).
-    Raises on any error — caller falls back to the per-dir path."""
+    Raises on any error, after removing every dst it installed."""
     schemas = schemas or {}
     groups: dict[tuple, list[str]] = {}
     for d, _dst in items:
@@ -112,8 +112,8 @@ def purge_dirs_fused(
     except Exception:
         # a later schema group failing after an earlier group's renames
         # landed would orphan those dsts (ADVICE r15): the caller
-        # discards partial state and re-purges per-dir into FRESH dsts,
-        # so best-effort remove everything this call installed
+        # discards partial state and re-purges into FRESH dsts, so
+        # best-effort remove everything this call installed
         for dst in dir_map.values():
             if dst is not None:
                 shutil.rmtree(dst, ignore_errors=True)
@@ -126,7 +126,7 @@ def _pdir_col(dirs: "list[str]"):
     hidden column — contract-bound to be scan-time exact) — dir
     basenames carry a uuid suffix, so the substring match is
     unambiguous. A null id means a file matched no dir (impossible by
-    construction); callers treat it as an error and fall back."""
+    construction) and fails the purge."""
     path = F.col("_metadata.file_path")
     expr = None
     for i, d in enumerate(dirs):
@@ -163,8 +163,7 @@ def _purge_group(
     )
     if any(r["__pdir"] is None for r in hit_rows):
         raise RuntimeError(
-            "purge_dirs_fused: a scanned file matched no source dir — "
-            "falling back to the per-dir purge path"
+            "purge_dirs_fused: a scanned file matched no source dir"
         )
     hits = {int(r["__pdir"]) for r in hit_rows}
     hit_dirs = [d for i, d in enumerate(dirs) if i in hits]

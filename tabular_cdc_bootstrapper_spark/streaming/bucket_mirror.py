@@ -93,6 +93,8 @@ class VersionedBucketMirror(VersionedBucketMirrorOps, TableOps):
     never saw them.
     """
 
+    _VERSION_DIRS = os.path.join("data", "bucket=*", "v-*")
+
     #: manifest keys describing a snapshot's data (``TableOps``)
     _STATE_KEYS = (
         "buckets", "schema", "next_fid", "deltas", "n_buckets",
@@ -681,9 +683,6 @@ class VersionedBucketMirror(VersionedBucketMirrorOps, TableOps):
             df = df.filter(F.col(col) <= F.lit(upper))
         return df
 
-    def _after_fast_forward(self, head_rec: dict) -> None:
-        self._expire(head_rec)
-
     def _publish_commit(
         self, record: dict, expected_head: "int | tuple | None" = None
     ) -> dict:
@@ -711,16 +710,24 @@ class VersionedBucketMirror(VersionedBucketMirrorOps, TableOps):
 
     @staticmethod
     def _map_dirs(e: dict, fn) -> dict:
-        def _m(b: str, d: str) -> str:
+        def _m(b: str, d: str) -> str | None:
             rel = os.path.join("data", f"bucket={int(b)}", os.path.basename(d))
             return fn(d, rel)
 
-        rec = {**e, "buckets": {b: _m(b, d) for b, d in e["buckets"].items()}}
-        if e.get("deltas"):  # merge-on-read delta dirs ride along
-            rec["deltas"] = {
-                b: [{**s, "dir": _m(b, s["dir"])} for s in specs]
-                for b, specs in e["deltas"].items()
-            }
+        rec = {**e, "buckets": {}}
+        rec.pop("deltas", None)
+        for b, d in e["buckets"].items():
+            if (nd := _m(b, d)) is not None:
+                rec["buckets"][b] = nd
+        for b, specs in (e.get("deltas") or {}).items():
+            # merge-on-read delta dirs ride along
+            ns = [
+                {**sp, "dir": nd}
+                for sp in specs
+                if (nd := _m(b, sp["dir"])) is not None
+            ]
+            if ns:
+                rec.setdefault("deltas", {})[b] = ns
         return rec
 
     def _stage(

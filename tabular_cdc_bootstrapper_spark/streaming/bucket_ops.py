@@ -1,18 +1,17 @@
 """Layout-specific DML and maintenance methods of
 ``VersionedBucketMirror``, as a mixin (``bucket_mirror.py`` composes
 it): compaction, rebucket/regrain, ALTER, DELETE/UPDATE/INSERT/MERGE,
-purge, and per-commit retention (``_expire``). The core file keeps the
-manifest/commit machinery. History, time travel, tags, constraints,
-rollback, clone, explicit expiry and write-audit-publish are written
-once for both layouts in ``_protocol.TableOps``.
+and the purge's bucket scope. The core file keeps the manifest/commit
+machinery. History, time travel, tags, constraints, rollback, clone,
+explicit expiry, write-audit-publish, the GDPR purge protocol and
+per-commit retention (``_expire``) are written once for both layouts in
+``_protocol.TableOps``.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import re
-import shutil
 import time
 import uuid
 from collections.abc import Sequence
@@ -21,15 +20,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tabular_cdc_bootstrapper_spark.config import CdcTarget
-from tabular_cdc_bootstrapper_spark.streaming._purge import purge_dirs_fused
 from tabular_cdc_bootstrapper_spark.operators.cdc import (
     apply_changelog,
     latest_by_key,
 )
 from tabular_cdc_bootstrapper_spark.streaming._protocol import (
     CommitConflict,
-    _PURGE_CATCHUP_ROUNDS,
-    _PURGE_LOCK_STALE_S,
     _UNSET,
     _alter_schema_meta,
     _purge_lock,
@@ -987,343 +983,68 @@ class VersionedBucketMirrorOps:
         self,
         spark: SparkSession,
         keys_df: DataFrame,
-        key_col: str | None = None,
+        key_col: str | Sequence[str] | None = None,
     ) -> dict:
-        """See ``_purge_keys_locked``; the purge lock serializes runs —
-        two unsynchronized purges rewrite manifests in place and
-        last-write-win each other's deletions (r12)."""
+        """GDPR hard delete across the mirror's retained history (see
+        ``TableOps._purge_keys_locked``) — the 100 TB shape: the purge
+        keys hash to a bucket set, so only TOUCHED bucket dirs (bases
+        and merge-on-read deltas) are ever read or rewritten (cost ∝
+        touched buckets × retained manifests, deduped — dirs shared
+        across manifests are rewritten once); the untouched majority of
+        the mirror is never scanned. A bucket emptied by the purge drops
+        out of its manifests, the merge path's fully-deleted-bucket
+        rule. The purge lock serializes runs — two unsynchronized purges
+        rewrite manifests in place and last-write-win each other's
+        deletions (r12)."""
         with _purge_lock(self.root):
-            return self._purge_keys_locked(spark, keys_df, key_col)
-
-    def _purge_keys_locked(
-        self,
-        spark: SparkSession,
-        keys_df: DataFrame,
-        key_col: str | None = None,
-    ) -> dict:
-        """GDPR-style hard delete across the mirror's retained history —
-        the bucketed composition of ``ParquetStateTable.purge_keys``, and
-        the 100 TB shape: the purge keys hash to a bucket set, so only
-        TOUCHED bucket dirs are ever read or rewritten (cost ∝ touched
-        buckets × retained manifests, deduped — dirs shared across
-        manifests are rewritten once); the untouched majority of the
-        mirror is never scanned.
-
-        Protocol mirrors the state-table purge: per distinct touched dir
-        holding any purge key, one broadcast anti-join rewrite installed
-        under a new immutable version name (a bucket emptied by the
-        purge drops out of its manifests, matching the merge path's
-        fully-deleted-bucket rule); HISTORY manifests AND the
-        CURRENT pointer re-pointed in place (versions/ts/meta preserved,
-        ``purged_ts`` stamped — the stamp rides in every CAS publish's
-        head token, r12, so concurrent merges basing on the pre-purge
-        head conflict-and-rebase instead of resurrecting the PII dirs);
-        old dirs deleted last, after the pointer rewrite. A head that
-        moves mid-purge is CHASED with delta-sized catch-up rounds
-        (bounded; gives up caller-visibly). Crash mid-way leaves every
-        snapshot readable and a re-run converges (dirs already purged
-        are skipped by the semi-join probe).
-        """
-        key = key_col or self.key_col
-        self._sync_spec()
-        cur = self.current()
-        if cur is None:
+            out = self._purge_keys_locked(
+                spark, keys_df, key_col or self.key_col
+            )
+        if out is None:
             return {"manifests_rewritten": 0, "bucket_dirs_rewritten": 0}
-        probe = keys_df.select(F.col(key).alias("__p_0")).distinct()
-        if self.partition_spec[0] == "bucket":
-            touched = {
+        return {
+            "manifests_rewritten": out["rewritten"],
+            "bucket_dirs_rewritten": out["dirs"],
+            "catchup_rounds": out["rounds"],
+            "touched_buckets": sorted(int(b) for b in out["scope"]),
+        }
+
+    def _purge_scope(
+        self, keys_df: DataFrame, keys: list[str], cur: dict
+    ) -> set[str]:
+        """The bucket ids a purge may touch: the hash buckets of the
+        keys when the hash key is among them. Otherwise every partition
+        is a candidate — under a transform spec the partition id is a
+        function of the SOURCE column, which a keys-only purge frame
+        does not carry (the semi-join probe still skips clean dirs
+        cheaply)."""
+        self._sync_spec()
+        hkey = keys[0] if len(keys) == 1 else self.key_col
+        if self.partition_spec[0] == "bucket" and hkey in keys:
+            return {
                 str(r["b"])
-                for r in keys_df.select(self._partition_for(key, keys_df).alias("b"))
+                for r in keys_df.select(
+                    self._partition_for(hkey, keys_df).alias("b")
+                )
                 .distinct()
                 .collect()
             }
-        else:
-            # transform spec: the partition id is a function of the
-            # SOURCE column, which a keys-only purge frame does not
-            # carry — every partition is a candidate (the per-dir
-            # semi-join probe below still skips untouched dirs cheaply)
-            cur0 = self.current() or {}
-            touched = set(cur0.get("buckets") or {}) | set(
-                cur0.get("deltas") or {}
-            )
-        def _entries() -> list[dict]:
-            es = self._log.committed()
-            # staged branch manifests hold the same PII above the main
-            # pointer
-            windows = self._branchset.windows()
-            seen_v = {e["version"] for e in es}
-            return es + [
-                e
-                for e in self._log.entries()
-                if e["version"] not in seen_v
-                and any(lo < e["version"] <= hi for lo, hi in windows)
-            ]
+        return set(cur.get("buckets") or {}) | set(cur.get("deltas") or {})
 
-        dir_map: dict[str, str | None] = {}
-
-        clean_dirs: set[str] = set()
-
-        def _purge_dir(b: str, d: str, version: int, kind: str) -> None:
-            if d in dir_map or d in clean_dirs or not os.path.isdir(d):
-                return
-            dst = os.path.join(
+    def _purge_candidates(
+        self, e: dict, scope: set[str]
+    ) -> list[tuple[str, str]]:
+        def _dst(b: str, kind: str) -> str:
+            return os.path.join(
                 self.data_dir,
                 f"bucket={int(b)}",
-                f"v-{version:08d}-{kind}purge-{uuid.uuid4().hex[:8]}",
+                f"v-{e['version']:08d}-{kind}purge-{uuid.uuid4().hex[:8]}",
             )
-            try:
-                df = spark.read.parquet(d)
-                match = df[key].eqNullSafe(probe["__p_0"])
-                # a dir holding NO purge keys stays untouched (r12): a
-                # re-run is a true no-op, and this purge's own outputs
-                # are never re-purged into dst chains whose tails the
-                # final cleanup would have to chase
-                if df.join(
-                    F.broadcast(probe), match, "left_semi"
-                ).isEmpty():
-                    clean_dirs.add(d)
-                    return
-                clean = df.join(F.broadcast(probe), match, "left_anti")
-                if clean.isEmpty():  # dir emptied by the purge
-                    dir_map[d] = None
-                    return
-                clean.coalesce(1).write.mode("errorifexists").parquet(dst)
-            except Exception:
-                # the isdir check above is TOCTOU: a concurrent commit's
-                # retention pass may delete ``d`` mid-scan once no
-                # retained manifest references it (r12, found by
-                # probe_concurrent_stress.py) — then there is nothing
-                # left to purge in it and skipping is correct. Any other
-                # failure propagates.
-                if os.path.isdir(d):
-                    raise
-                shutil.rmtree(dst, ignore_errors=True)
-                return
-            dir_map[d] = dst
 
-        now = time.time()
-
-        def _rewrite(e: dict):
-            buckets = e["buckets"]
-            out_b = {
-                b: (dir_map[d] if d in dir_map else d)
-                for b, d in buckets.items()
-            }
-            out_b = {b: d for b, d in out_b.items() if d is not None}
-            old_d = e.get("deltas") or {}
-            out_d: dict[str, list] = {}
-            for b, specs in old_d.items():
-                ns = []
-                for s in specs:
-                    nd = dir_map.get(s["dir"], s["dir"])
-                    if nd is None:
-                        continue  # delta emptied by the purge
-                    ns.append({**s, "dir": nd} if nd != s["dir"] else s)
-                if ns:
-                    out_d[b] = ns
-            if out_b == buckets and out_d == old_d:
-                return None
-            return out_b, out_d
-
-        def _ckpt_purge(e: dict) -> dict | None:
-            # checkpointed manifests rewrite inside the checkpoint (r11)
-            new_bd2 = _rewrite(e)
-            if new_bd2 is None:
-                return None
-            rec2 = dict(e)
-            rec2["buckets"], d2 = new_bd2
-            rec2.pop("deltas", None)
-            if d2:
-                rec2["deltas"] = d2
-            rec2["purged_ts"] = now
-            return rec2
-
-        # convergent catch-up (r12, found by probe_concurrent_stress.py):
-        # under sustained writer traffic a purge whose scan takes longer
-        # than the inter-commit gap ALWAYS sees the head move, so the
-        # r11 raise-on-any-movement CAS starved it. Instead, CHASE the
-        # head: each round scans only the dirs new commits added (the
-        # dir_map dedupes everything already purged — delta-sized work),
-        # rewrites the manifests that still reference un-purged dirs,
-        # and re-checks the pointer; the work per round shrinks toward
-        # the pointer swap. Gives up (CommitConflict) only if the head
-        # outruns it for every round — the caller re-runs.
-        manifests_rewritten = 0
-        catchup_rounds = 0
-        for _round in range(_PURGE_CATCHUP_ROUNDS):
-            catchup_rounds += 1
-            entries = _entries()
-            worklist: list[tuple[str, str, int, str]] = []
-            for e in entries:
-                for b, d in e["buckets"].items():
-                    if b in touched:
-                        worklist.append((b, d, e["version"], ""))
-                # merge-on-read delta dirs hold the same PII (upserts
-                # AND key-bearing tombstones) — purge them identically
-                for b, specs in (e.get("deltas") or {}).items():
-                    if b not in touched:
-                        continue
-                    for s in specs:
-                        worklist.append((b, s["dir"], e["version"], "delta-"))
-            # fused fast path (r15, streaming/_purge.py): ONE semi-join
-            # pass finds every clean dir and ONE partitioned anti-join
-            # write rewrites every hit dir, instead of up to 3 actions
-            # per dir; per-dir fallback keeps the r12 TOCTOU tolerance
-            items: list[tuple[str, str]] = []
-            pending: set[str] = set()
-            for b, d, version, kind in worklist:
-                if (
-                    d in dir_map
-                    or d in clean_dirs
-                    or d in pending
-                    or not os.path.isdir(d)
-                ):
-                    continue
-                pending.add(d)
-                items.append(
-                    (
-                        d,
-                        os.path.join(
-                            self.data_dir,
-                            f"bucket={int(b)}",
-                            f"v-{version:08d}-{kind}purge-"
-                            f"{uuid.uuid4().hex[:8]}",
-                        ),
-                    )
-                )
-            if items:
-                try:
-                    cln, dm = purge_dirs_fused(
-                        spark,
-                        items,
-                        probe,
-                        lambda df: df[key].eqNullSafe(probe["__p_0"]),
-                        self.root,
-                    )
-                    clean_dirs |= cln
-                    dir_map.update(dm)
-                except Exception:
-                    for b, d, version, kind in worklist:
-                        _purge_dir(b, d, version, kind)
-            for e in entries:
-                new_bd = _rewrite(e)
-                if new_bd is None:
-                    continue
-                rec = dict(e)
-                rec["buckets"], deltas = new_bd
-                rec.pop("deltas", None)
-                if deltas:
-                    rec["deltas"] = deltas
-                rec["purged_ts"] = now
-                lpath = os.path.join(
-                    self._log.log_dir, f"v-{e['version']:08d}.json"
-                )
-                if os.path.exists(lpath):
-                    tmp = lpath + f".tmp.{uuid.uuid4().hex[:8]}"
-                    with open(tmp, "w") as fh:
-                        json.dump(rec, fh)
-                    os.replace(tmp, lpath)
-                manifests_rewritten += 1
-            self._log.rewrite_checkpoint(_ckpt_purge)
-            # head update: the pointer record is rewritten IN PLACE at
-            # the same version — versions/branches/tags/FF all survive a
-            # purge — but with ``purged_ts`` stamped, which every CAS
-            # publish now carries in its head token (r12, found by the
-            # threaded race test): a concurrent merge basing on the
-            # pre-purge head conflicts on the token and rebases onto the
-            # purged manifest instead of carrying (resurrecting) the PII
-            # dirs this purge is about to delete.
-            live = self.current()
-            if (live["version"] if live else -1) != cur["version"]:
-                cur = live  # the head moved: chase it
-                continue
-            new_bd = _rewrite(cur)
-            if new_bd is not None:
-                rec = dict(cur)
-                rec["buckets"], deltas = new_bd
-                rec.pop("deltas", None)
-                if deltas:
-                    rec["deltas"] = deltas
-                rec["purged_ts"] = now
-                tmp = self._log.pointer_path + f".tmp.{uuid.uuid4().hex[:8]}"
-                with open(tmp, "w") as fh:
-                    json.dump(rec, fh)
-                os.replace(tmp, self._log.pointer_path)
-            break
-        else:
-            raise CommitConflict(
-                f"{self.root} kept advancing through "
-                f"{_PURGE_CATCHUP_ROUNDS} purge catch-up rounds — "
-                "re-run the purge"
-            )
-        # old dirs hold the PII: delete AFTER the pointer rewrite — any
-        # commit still based on the pre-purge head now conflicts on the
-        # purged_ts token and rebases onto the purged manifest, so
-        # nothing can re-reference them
-        for old in dir_map:
-            if self._owns(old):
-                shutil.rmtree(old, ignore_errors=True)
-        return {
-            "manifests_rewritten": manifests_rewritten,
-            "bucket_dirs_rewritten": len(dir_map),
-            "catchup_rounds": catchup_rounds,
-            "touched_buckets": sorted(int(b) for b in touched),
-        }
-
-    def _expire(self, just_published: dict) -> None:
-        """GC bucket-version dirs no retained manifest references. Kept:
-        everything referenced by the newest ``keep_versions`` committed
-        manifests (dir sharing means a rollback target or an untouched
-        bucket stays alive as long as any retained manifest points at it)
-        plus the record just published. Staged dirs of crashed commits are
-        referenced by nothing and die here."""
-        keep = max(self.keep_versions, 1)
-        referenced = set(self._entry_dirs(just_published))
-        for e in self._log.committed()[-keep:]:
-            referenced.update(self._entry_dirs(e))
-        tagged = self._tagged_versions()
-        windows = self._branchset.windows()  # [base, head] incl. fork point
-        cur = self.current()
-        cur_version = cur["version"] if cur else -1
-        logged: set[str] = set()
-        for e in self._log.entries():
-            logged.update(self._entry_dirs(e))
-            # above-pointer manifests are in-flight or crashed commits:
-            # their dirs are reclaimed only after the ENTRY dies (orphan
-            # GC), never by retention racing an in-flight publish (r11)
-            if (
-                e["version"] > cur_version
-                or e["version"] in tagged
-                or any(lo <= e["version"] <= hi for lo, hi in windows)
-            ):
-                referenced.update(self._entry_dirs(e))
-        now = time.time()
-        for bdir in os.listdir(self.data_dir):
-            if not bdir.startswith("bucket="):
-                continue
-            bpath = os.path.join(self.data_dir, bdir)
-            for vdir in os.listdir(bpath):
-                full = os.path.join(bpath, vdir)
-                if not vdir.startswith("v-") or full in referenced:
-                    continue
-                if full not in logged:
-                    # referenced by NO manifest: aged = crash staging
-                    # (reclaim), fresh = a concurrent writer's installed
-                    # dirs between install and publish (spare — r11).
-                    # An in-flight PURGE's rewritten dirs stay
-                    # unreferenced for its whole scan phase (r12, found
-                    # by the threaded race test): they get the purge
-                    # lock's staleness as their grace — a crashed
-                    # purge's leftovers still GC, just on that clock.
-                    try:
-                        age = now - os.path.getmtime(full)
-                    except OSError:
-                        continue
-                    grace = (
-                        _PURGE_LOCK_STALE_S
-                        if "-purge-" in vdir
-                        else self._log.conflict_grace_s
-                    )
-                    if age < grace:
-                        continue
-                shutil.rmtree(full, ignore_errors=True)
+        out = [(d, _dst(b, "")) for b, d in e["buckets"].items() if b in scope]
+        # merge-on-read delta dirs hold the same PII (upserts AND
+        # key-bearing tombstones)
+        for b, specs in (e.get("deltas") or {}).items():
+            if b in scope:
+                out.extend((s["dir"], _dst(b, "delta-")) for s in specs)
+        return out

@@ -955,6 +955,9 @@ class StateTableStreamWriter(DataSourceStreamArrowWriter):
 
     def commit(self, messages, batchId: int) -> None:
         _ensure_importable()
+        from tabular_cdc_bootstrapper_spark.streaming._protocol import (
+            _replace_json,
+        )
         from tabular_cdc_bootstrapper_spark.streaming.bucket_mirror import (
             VersionedBucketMirror,
         )
@@ -1066,12 +1069,7 @@ class StateTableStreamWriter(DataSourceStreamArrowWriter):
         # collapses — state-level idempotence, fence is the fast path
         fp = self._fence_path()
         os.makedirs(os.path.dirname(fp), exist_ok=True)
-        tmp = f"{fp}.tmp-{os.getpid()}"
-        with open(tmp, "w") as fh:
-            json.dump(
-                {"nonce": self._nonce, "batch_id": int(batchId)}, fh
-            )
-        os.replace(tmp, fp)
+        _replace_json(fp, {"nonce": self._nonce, "batch_id": int(batchId)})
         # age out staging files from crashed tasks (no message ever
         # referenced them; 1 h is far past any task retry window)
         staging = os.path.join(self._root, "_sink", "staging")

@@ -7,7 +7,6 @@ from __future__ import annotations
 import json
 import os
 import time
-import uuid
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -15,6 +14,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from tabular_cdc_bootstrapper_spark.operators.diff import table_diff
+from tabular_cdc_bootstrapper_spark.streaming._protocol import _replace_json
 from tabular_cdc_bootstrapper_spark.streaming.bucket_mirror import (
     VersionedBucketMirror,
 )
@@ -197,10 +197,9 @@ class ChangeFeedStream:
         os.makedirs(
             os.path.dirname(self.checkpoint_path) or ".", exist_ok=True
         )
-        tmp = self.checkpoint_path + f".tmp.{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as fh:
-            json.dump({"position": version, "ts": time.time()}, fh)
-        os.replace(tmp, self.checkpoint_path)
+        _replace_json(
+            self.checkpoint_path, {"position": version, "ts": time.time()}
+        )
 
     def pending(
         self,

@@ -5,13 +5,13 @@ helper that targets it. Split from ``streaming/pipeline.py`` (VERDICT r12
 
 from __future__ import annotations
 
-import json
 import os
 import re
 import shutil
 import time
 import uuid
 from collections.abc import Sequence
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -19,14 +19,11 @@ from pyspark.sql import types as T
 
 from tabular_cdc_bootstrapper_spark.config import CdcTarget
 from tabular_cdc_bootstrapper_spark.operators.cdc import apply_changelog
-from tabular_cdc_bootstrapper_spark.streaming._purge import purge_dirs_fused
 from tabular_cdc_bootstrapper_spark.streaming._protocol import (
     CommitConflict,
     ConstraintViolation,
     SnapshotLog,
     TableOps,
-    _PURGE_CATCHUP_ROUNDS,
-    _PURGE_LOCK_STALE_S,
     _RETRY_BACKOFF,
     _alter_schema_meta,
     _check_meta,
@@ -92,6 +89,10 @@ class ParquetStateTable(TableOps):
         "data_schema",
     )
 
+    _VERSION_DIRS = "v-*"
+    _PURGE_KEEP_EMPTY = True
+    _KEEP_NEWEST_DIRS = True
+
     @staticmethod
     def _entry_dirs(e: dict) -> list[str]:
         return [e["dir"]]
@@ -131,7 +132,7 @@ class ParquetStateTable(TableOps):
             protected=self._branch_covers,
             expected_head=expected_head,
         )
-        self._expire(keep=keep)
+        self._expire({"dir": keep})
         return record
 
     def _publish_retry(self, record: dict, on_retry=None) -> dict:
@@ -180,6 +181,31 @@ class ParquetStateTable(TableOps):
                     record["version"] = new_version
                 record["ts"] = time.time()
         return _attempt()  # last try raises
+
+    def _reconcile_constraints(
+        self, spark: SparkSession, rec: dict, head: dict | None
+    ) -> None:
+        """The ``on_retry`` hook of a blind commit: a CHECK constraint
+        added or changed CONCURRENTLY (review r12) is validated against
+        the record's already-written bytes, then carried — the
+        per-attempt CAS of ``_publish_retry`` makes a drop impossible.
+        The record's own ``constraints`` are the set its bytes were
+        validated against."""
+        cons = rec.get("constraints") or {}
+        new_cons = (head or {}).get("constraints") or {}
+        extra = {k: v for k, v in new_cons.items() if cons.get(k) != v}
+        if extra:
+            _check_table_constraints(
+                spark.read.schema(
+                    T.StructType.fromJson(rec["data_schema"])
+                ).parquet(rec["dir"]),
+                extra,
+                self.root,
+            )
+        if new_cons:
+            rec["constraints"] = new_cons
+        else:
+            rec.pop("constraints", None)
 
     def _read_entry(self, spark: SparkSession, e: dict) -> DataFrame:
         """Read one snapshot record's dir under ITS schema metadata:
@@ -494,33 +520,11 @@ class ParquetStateTable(TableOps):
                 shutil.rmtree(vdir, ignore_errors=True)  # stale basis:
                 raise  # the caller must re-read and re-derive df
 
-        def _reconcile(rec: dict, head: dict | None) -> None:
-            # a constraint added/changed CONCURRENTLY with this blind
-            # commit (review r12): validate the already-written bytes
-            # against the newer set and carry it — the per-attempt CAS
-            # in _publish_retry makes a drop impossible
-            nonlocal cons
-            new_cons = (head or {}).get("constraints") or {}
-            if new_cons != cons:
-                extra = {
-                    k: v for k, v in new_cons.items() if cons.get(k) != v
-                }
-                if extra:
-                    _check_table_constraints(
-                        df.sparkSession.read.schema(
-                            T.StructType.fromJson(written)
-                        ).parquet(rec["dir"]),
-                        extra,
-                        self.root,
-                    )
-                cons = new_cons
-            if cons:
-                rec["constraints"] = cons
-            else:
-                rec.pop("constraints", None)
-
         try:
-            return self._publish_retry(record, on_retry=_reconcile)
+            return self._publish_retry(
+                record,
+                on_retry=partial(self._reconcile_constraints, df.sparkSession),
+            )
         except ConstraintViolation:
             shutil.rmtree(vdir, ignore_errors=True)
             raise
@@ -597,45 +601,16 @@ class ParquetStateTable(TableOps):
         finally:
             shutil.rmtree(stg, ignore_errors=True)
 
-        def _reconcile(rec: dict, head: dict | None) -> None:
-            # same concurrent-constraint guarantee as commit(): validate
-            # the already-written bytes against a newer set and carry it
-            nonlocal cons
-            new_cons = (head or {}).get("constraints") or {}
-            if new_cons != cons:
-                extra = {
-                    k: v for k, v in new_cons.items() if cons.get(k) != v
-                }
-                if extra:
-                    _check_table_constraints(
-                        dfs[0]
-                        .sparkSession.read.schema(
-                            T.StructType.fromJson(written)
-                        )
-                        .parquet(rec["dir"]),
-                        extra,
-                        self.root,
-                    )
-                cons = new_cons
-            if cons:
-                rec["constraints"] = cons
-            else:
-                rec.pop("constraints", None)
-
+        reconcile = partial(self._reconcile_constraints, dfs[0].sparkSession)
         out: list[dict] = []
         try:
             for rec in records:
-                out.append(
-                    self._publish_retry(rec, on_retry=_reconcile)
-                )
+                out.append(self._publish_retry(rec, on_retry=reconcile))
         except ConstraintViolation:
             for rec in records[len(out):]:
                 shutil.rmtree(rec["dir"], ignore_errors=True)
             raise
         return out
-
-    def _after_fast_forward(self, head_rec: dict) -> None:
-        self._expire(keep=head_rec["dir"])
 
     def _new_like(self, dst_root: str) -> "ParquetStateTable":
         return ParquetStateTable(dst_root, keep_versions=self.keep_versions)
@@ -664,304 +639,31 @@ class ParquetStateTable(TableOps):
         keys_df: DataFrame,
         key_cols: str | Sequence[str],
     ) -> dict:
-        """See ``_purge_keys_locked``; the purge lock serializes runs —
-        two unsynchronized purges rewrite manifests in place and
+        """GDPR hard delete of every row matching ``keys_df`` on
+        ``key_cols`` from the current and every retained snapshot (see
+        ``TableOps._purge_keys_locked``); a fully purged snapshot stays a
+        readable 0-row dir. The purge lock serializes runs — two
+        unsynchronized purges rewrite records in place and
         last-write-win each other's deletions (r12)."""
         with _purge_lock(self.root):
-            return self._purge_keys_locked(spark, keys_df, key_cols)
-
-    def _purge_keys_locked(
-        self,
-        spark: SparkSession,
-        keys_df: DataFrame,
-        key_cols: str | Sequence[str],
-    ) -> dict:
-        """GDPR-style hard delete: physically remove every row matching
-        ``keys_df`` from the CURRENT snapshot AND every retained historical
-        snapshot — the right-to-be-forgotten operation (Delta's
-        delete + REORG PURGE / Iceberg's rewrite-data-files shape). This is
-        the ONE deliberate exception to append-only history: versions,
-        timestamps, and metadata are preserved, but each retained data dir
-        is rewritten without the purged keys, so no VERSION AS OF /
-        TIMESTAMP AS OF / rollback / change-feed read can resurrect them.
-
-        Protocol (crash-safe, idempotent): (1) for each distinct retained
-        data dir HOLDING ANY PURGE KEY (a broadcast semi-join probe skips
-        clean dirs, so re-runs are true no-ops), write a purged copy
-        (keys broadcast into one anti-join — the table side never
-        shuffles, and dirs shared by several log entries, e.g. rollback
-        targets, are rewritten once); (2) rewrite each log entry and
-        the CURRENT pointer in place (atomic renames, versions/ts/meta
-        preserved, ``purged_ts`` stamped — the stamp rides in every CAS
-        publish's head token, r12, so concurrent commits basing on the
-        pre-purge head conflict and re-read instead of resurrecting the
-        PII dir); (3) delete the old dirs after the pointer rewrite. A head that
-        moves mid-purge is CHASED with delta-sized catch-up rounds
-        (bounded; gives up caller-visibly). A crash mid-way leaves every
-        snapshot readable (old or new dir) and a re-run converges.
-
-        Scale: cost = one pruned scan + write per RETAINED snapshot
-        (retention bounds the work, the reason purge pairs with
-        ``keep_versions``); the purge-key probe broadcasts.
-        """
-        keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)
-        from functools import reduce as _reduce
-
-        probe = keys_df.select(
-            *[F.col(k).alias(f"__p_{i}") for i, k in enumerate(keys)]
-        ).distinct()
-        cur = self.current()
-        if cur is None:
-            return {"versions_rewritten": 0, "dirs_rewritten": 0}
-        def _entries() -> list[dict]:
-            es = self._log.committed() or [self.current()]
-            # staged branch commits hold the same PII above the main
-            # pointer — a right-to-be-forgotten purge must reach them too
-            windows = self._branchset.windows()
-            seen = {e["version"] for e in es}
-            return es + [
-                e
-                for e in self._log.entries()
-                if e["version"] not in seen
-                and any(lo < e["version"] <= hi for lo, hi in windows)
-            ]
-
-        dir_map: dict[str, str] = {}
-        clean_dirs: set[str] = set()
-        now = time.time()
-
-        def _schema_read(d: str, e: dict) -> DataFrame:
-            # bind to the recorded physical schema when the record has
-            # one (r16) — skips the per-dir footer-inference job
-            ds = e.get("data_schema")
-            if ds:
-                try:
-                    return spark.read.schema(
-                        T.StructType.fromJson(ds)
-                    ).parquet(d)
-                except Exception:
-                    pass
-            return spark.read.parquet(d)
-
-        def _purge_dir(e: dict) -> None:
-            d = e["dir"]
-            if d in dir_map or d in clean_dirs or not os.path.isdir(d):
-                return
-            nd = os.path.join(
-                self.root,
-                f"v-{e['version']:08d}-purge-{uuid.uuid4().hex[:8]}",
-            )
-            try:
-                df = _schema_read(d, e)
-                cond = _reduce(
-                    lambda a, b: a & b,
-                    [
-                        df[k].eqNullSafe(probe[f"__p_{i}"])
-                        for i, k in enumerate(keys)
-                    ],
-                )
-                # a dir holding NO purge keys stays untouched (r12): a
-                # re-run is a true no-op and this purge's own outputs
-                # are never re-purged into dst chains
-                if df.join(F.broadcast(probe), cond, "left_semi").isEmpty():
-                    clean_dirs.add(d)
-                    return
-                clean = df.join(F.broadcast(probe), cond, "left_anti")
-                clean.write.mode("errorifexists").parquet(nd)
-            except Exception:
-                # TOCTOU on the isdir check: a concurrent commit's
-                # retention pass may delete ``d`` mid-scan once no
-                # retained manifest references it (r12) — nothing left
-                # to purge there; any other failure propagates
-                if os.path.isdir(d):
-                    raise
-                shutil.rmtree(nd, ignore_errors=True)
-                return
-            dir_map[d] = nd
-
-        # checkpointed (log-compacted) entries have no per-version file —
-        # rewrite them inside the checkpoint so compacted metadata cannot
-        # resurrect purged data paths (r11)
-        def _ckpt_purge(e: dict) -> dict | None:
-            if e.get("dir") not in dir_map:
-                return None
-            rec = dict(e)
-            rec["dir"] = dir_map[e["dir"]]
-            rec["purged_ts"] = now
-            return rec
-
-        # convergent catch-up (r12, found by probe_concurrent_stress.py —
-        # same loop as the mirror purge): chase a head that moves during
-        # the scan instead of starving; each round's work is only the
-        # dirs new commits added (dir_map dedupes the rest)
-        versions_rewritten = 0
-        for _round in range(_PURGE_CATCHUP_ROUNDS):
-            entries = _entries()
-            # fused fast path (r15, streaming/_purge.py): one semi-join
-            # pass + one partitioned anti-join write over every unseen
-            # dir, instead of up to 3 actions per dir; per-dir fallback
-            # keeps the r12 TOCTOU tolerance. keep_empty preserves the
-            # state-table contract that a fully-purged snapshot remains
-            # a readable 0-row version dir.
-            items: list[tuple[str, str]] = []
-            pending: set[str] = set()
-            schemas: dict[str, dict] = {}
-            for e in entries:
-                d = e["dir"]
-                if (
-                    d in dir_map
-                    or d in clean_dirs
-                    or d in pending
-                    or not os.path.isdir(d)
-                ):
-                    continue
-                pending.add(d)
-                if e.get("data_schema"):
-                    schemas[d] = e["data_schema"]
-                items.append(
-                    (
-                        d,
-                        os.path.join(
-                            self.root,
-                            f"v-{e['version']:08d}-purge-"
-                            f"{uuid.uuid4().hex[:8]}",
-                        ),
-                    )
-                )
-            if items:
-
-                def _cond(df):
-                    return _reduce(
-                        lambda a, b: a & b,
-                        [
-                            df[k].eqNullSafe(probe[f"__p_{i}"])
-                            for i, k in enumerate(keys)
-                        ],
-                    )
-
-                try:
-                    cln, dm = purge_dirs_fused(
-                        spark, items, probe, _cond, self.root,
-                        keep_empty=True, schemas=schemas,
-                    )
-                    clean_dirs |= cln
-                    dir_map.update(dm)
-                except Exception:
-                    for e in entries:
-                        _purge_dir(e)
-            for e in entries:
-                if e["dir"] not in dir_map:
-                    continue
-                rec = dict(e)
-                rec["dir"] = dir_map[e["dir"]]
-                rec["purged_ts"] = now
-                lpath = os.path.join(
-                    self._log_dir, f"v-{e['version']:08d}.json"
-                )
-                if not os.path.exists(lpath):
-                    # pre-snapshot-log table: only the pointer exists
-                    versions_rewritten += 1
-                    continue
-                tmp = lpath + f".tmp.{uuid.uuid4().hex[:8]}"
-                with open(tmp, "w") as fh:
-                    json.dump(rec, fh)
-                os.replace(tmp, lpath)
-                versions_rewritten += 1
-            self._log.rewrite_checkpoint(_ckpt_purge)
-            # head update: the pointer record is rewritten IN PLACE at
-            # the same version (versions/branches/tags/FF all survive a
-            # purge) with ``purged_ts`` stamped, which every CAS publish
-            # carries in its head token (r12): an alter_schema or merge
-            # basing on the pre-purge head conflicts on the token and
-            # re-reads instead of referencing the PII dir this purge
-            # deletes.
-            live = self.current()
-            if (live["version"] if live else -1) != cur["version"]:
-                cur = live  # the head moved: chase it
-                continue
-            if cur["dir"] in dir_map:
-                rec = dict(cur)
-                rec["dir"] = dir_map[cur["dir"]]
-                rec["purged_ts"] = now
-                tmp = self._pointer + f".tmp.{uuid.uuid4().hex[:8]}"
-                with open(tmp, "w") as fh:
-                    json.dump(rec, fh)
-                os.replace(tmp, self._pointer)
-            break
-        else:
-            raise CommitConflict(
-                f"{self.root} kept advancing through "
-                f"{_PURGE_CATCHUP_ROUNDS} purge catch-up rounds — "
-                "re-run the purge"
-            )
-        # old dirs hold the PII: delete AFTER the pointer rewrite — any
-        # commit still based on the pre-purge head conflicts on the
-        # purged_ts token and re-reads. Ownership guard: a shallow clone
-        # drops only its REFERENCE to a source-owned dir; deleting the
-        # source's bytes is the source table's own purge_keys to perform
-        for old in dir_map:
-            if self._owns(old):
-                shutil.rmtree(old, ignore_errors=True)
+            out = self._purge_keys_locked(spark, keys_df, key_cols)
+        out = out or {"rewritten": 0, "dirs": 0}
         return {
-            "versions_rewritten": versions_rewritten,
-            "dirs_rewritten": len(dir_map),
+            "versions_rewritten": out["rewritten"],
+            "dirs_rewritten": out["dirs"],
         }
 
-    def _expire(self, keep: str) -> None:
-        """Drop data dirs outside retention. Kept: ``keep`` (the dir just
-        published), the newest ``keep_versions`` dirs by version order
-        (pre-log behavior, still what governs tables with no snapshot log),
-        and every dir referenced by the newest ``keep_versions`` log
-        entries (so a rollback that re-points at an old dir keeps that dir
-        alive for as long as the rollback snapshot is retained) — plus
-        every dir a TAG references (the Iceberg ref-keeps-snapshot rule)."""
-        all_dirs = sorted(d for d in os.listdir(self.root) if d.startswith("v-"))
-        kept = {os.path.basename(keep)}
-        kept.update(all_dirs[-max(self.keep_versions, 1):])
-        entries = self._log_entries()
-        for e in entries[-max(self.keep_versions, 1):]:
-            kept.add(os.path.basename(e["dir"]))
-        tagged = self._tagged_versions()
-        windows = self._branchset.windows()  # [base, head] incl. fork point
-        cur = self.current()
-        cur_version = cur["version"] if cur else -1
-        logged = set()
-        for e in entries:
-            logged.add(os.path.basename(e["dir"]))
-            # an above-pointer entry is an in-flight or crashed commit:
-            # its data is reclaimed via the orphan-GC path when the
-            # ENTRY dies, never by retention racing an in-flight publish
-            if (
-                e["version"] > cur_version
-                or e["version"] in tagged
-                or any(lo <= e["version"] <= hi for lo, hi in windows)
-            ):
-                kept.add(os.path.basename(e["dir"]))
-        now = time.time()
-        for d in all_dirs:
-            if d in kept:
-                continue
-            full = os.path.join(self.root, d)
-            if d not in logged:
-                # referenced by no log entry: crash staging if aged, a
-                # concurrent writer's installed-but-unpublished commit
-                # (e.g. a WAP between conflict and re-audit) if fresh —
-                # only reclaim past the conflict grace (r11). In-flight
-                # purge rewrites stay unreferenced for the whole purge
-                # scan (r12): purge-named dirs get the purge lock's
-                # staleness as their grace instead.
-                try:
-                    age = now - os.path.getmtime(full)
-                except OSError:
-                    continue
-                grace = (
-                    _PURGE_LOCK_STALE_S
-                    if "-purge-" in d
-                    else self._log.conflict_grace_s
-                )
-                if age < grace:
-                    continue
-            shutil.rmtree(full, ignore_errors=True)
+    def _purge_candidates(self, e: dict, scope) -> list[tuple[str, str]]:
+        return [
+            (
+                e["dir"],
+                os.path.join(
+                    self.root,
+                    f"v-{e['version']:08d}-purge-{uuid.uuid4().hex[:8]}",
+                ),
+            )
+        ]
+
 
 
 def cdc_merge_batch(

@@ -742,43 +742,48 @@ def test_purge_lock_serializes_concurrent_purges(spark, tmp_path):
     _ = _time  # (kept for symmetry with other timing-sensitive tests)
 
 
-def test_purge_skips_dir_expired_mid_scan(spark, tmp_path):
+def _purge_table(spark, tmp_path, layout):
+    """A table of ``layout`` with two committed versions, key 1 in
+    both, and its ``purge_keys`` bound to key column ``k``."""
+    from tabular_cdc_bootstrapper_spark.config import CdcTarget
+
+    schema = "k long, v long, ts long, op string"
+    base = spark.createDataFrame([(i, 0, 0, "I") for i in range(16)], schema)
+    change = spark.createDataFrame([(1, 7, 1, "U")], schema)
+    if layout == "snapshot":
+        t = ParquetStateTable(str(tmp_path / "t"), keep_versions=10)
+        t.commit(base)
+        t.commit(base.unionByName(change).filter("v = 7 OR k <> 1"))
+        return t, lambda keys: t.purge_keys(spark, keys, "k")
+    t = VersionedBucketMirror(
+        str(tmp_path / "m"), n_buckets=4, key_col="k", keep_versions=10
+    )
+    t.initialize(base)
+    target = CdcTarget(source_uri="file:///x", key_column="k", ts_column="ts")
+    t.merge_batch(change, target)
+    return t, lambda keys: t.purge_keys(spark, keys)
+
+
+@pytest.mark.parametrize("layout", ["bucketed_versioned", "snapshot"])
+def test_purge_skips_dir_expired_mid_scan(spark, tmp_path, layout):
     """Reader-vs-retention TOCTOU (r12, found by
     probe_concurrent_stress.py): a concurrent commit's retention pass
     may delete a historical dir between purge's isdir check and its
     scan. The purge must skip it (nothing left to purge there), not
     crash mid-run with a FileNotFound from the scan."""
-    from tabular_cdc_bootstrapper_spark.config import CdcTarget
-
-    target = CdcTarget(
-        source_uri="file:///x", key_column="k", ts_column="ts"
-    )
-    m = VersionedBucketMirror(
-        str(tmp_path / "m"), n_buckets=4, key_col="k", keep_versions=10
-    )
-    m.initialize(
-        spark.createDataFrame(
-            [(i, 0, 0, "I") for i in range(16)],
-            "k long, v long, ts long, op string",
-        )
-    )
-    m.merge_batch(
-        spark.createDataFrame(
-            [(1, 7, 1, "U")], "k long, v long, ts long, op string"
-        ),
-        target,
-    )
-    # simulate retention racing the purge: the v0 dir of key 1's bucket
+    t, purge = _purge_table(spark, tmp_path, layout)
+    # simulate retention racing the purge: the v0 dir holding key 1
     # vanishes after the purge listed its entries but before the scan
-    hot = str(
-        [
-            r.b
-            for r in spark.createDataFrame([(1,)], "k long")
-            .select(m._bucket(F.col("k")).alias("b"))
-            .collect()
-        ][0]
-    )
-    v0_dir = m._log.committed()[0]["buckets"][hot]
+    hot = None  # key 1's bucket on the mirror
+    if layout != "snapshot":
+        hot = str(
+            spark.createDataFrame([(1,)], "k long")
+            .select(t._bucket(F.col("k")).alias("b"))
+            .first()
+            .b
+        )
+    v0 = t._log.committed()[0]
+    v0_dir = v0["dir"] if hot is None else v0["buckets"][hot]
     real_read = type(spark.read).parquet
     state = {"armed": True}
 
@@ -792,9 +797,113 @@ def test_purge_skips_dir_expired_mid_scan(spark, tmp_path):
 
     type(spark.read).parquet = racy
     try:
-        rec = m.purge_keys(spark, spark.createDataFrame([(1,)], "k long"))
+        rec = purge(spark.createDataFrame([(1,)], "k long"))
     finally:
         type(spark.read).parquet = real_read
+    assert not state["armed"]  # the race fired
     # the purge completed and the HEAD no longer holds key 1
-    assert 1 not in {r.k for r in m.read(spark).collect()}
-    assert rec["touched_buckets"] == [int(hot)]
+    assert 1 not in {r.k for r in t.read(spark).collect()}
+    if hot is None:
+        assert rec == {"versions_rewritten": 1, "dirs_rewritten": 1}
+    else:
+        assert rec["touched_buckets"] == [int(hot)]
+
+
+@pytest.mark.parametrize("layout", ["bucketed_versioned", "snapshot"])
+def test_purge_keeps_its_progress_when_dirs_vanish_at_every_scan(
+    spark, tmp_path, layout, monkeypatch
+):
+    """Retention that deletes a pending dir during every fused scan
+    (commits landing faster than the scan) must not cost a catch-up
+    round per vanished dir: the round drops what vanished and rescans
+    the rest, so the purge converges within the round budget."""
+    import shutil as _sh
+
+    from tabular_cdc_bootstrapper_spark.config import CdcTarget
+    from tabular_cdc_bootstrapper_spark.streaming import _protocol
+
+    monkeypatch.setattr(_protocol, "_PURGE_CATCHUP_ROUNDS", 2)
+    t, purge = _purge_table(spark, tmp_path, layout)
+    schema = "k long, v long, ts long, op string"
+    target = CdcTarget(source_uri="file:///x", key_column="k", ts_column="ts")
+    for i in range(2, 5):  # three more versions, each rewriting key 1
+        change = spark.createDataFrame([(1, 7 + i, i, "U")], schema)
+        if layout == "snapshot":
+            head = t.read(spark).filter("k <> 1")
+            t.commit(head.unionByName(change))
+        else:
+            t.merge_batch(change, target)
+    head_dirs = set(t._entry_dirs(t.current()))
+    real_read = type(spark.read).parquet
+    vanished: list[str] = []
+
+    def racy(self, *paths):
+        old = [p for p in paths if p not in head_dirs and os.path.isdir(p)]
+        if old and len(vanished) < 3:
+            vanished.append(old[0])
+            _sh.rmtree(old[0], ignore_errors=True)
+        return real_read(self, *paths)
+
+    type(spark.read).parquet = racy
+    try:
+        rec = purge(spark.createDataFrame([(1,)], "k long"))
+    finally:
+        type(spark.read).parquet = real_read
+    assert len(vanished) == 3  # more vanished dirs than catch-up rounds
+    assert 1 not in {r.k for r in t.read(spark).collect()}
+    assert len(t.read(spark).collect()) == 15
+    if layout != "snapshot":
+        assert rec["catchup_rounds"] == 1
+
+
+def test_snapshot_purge_gives_up_when_the_head_keeps_advancing(
+    spark, tmp_path
+):
+    """The snapshot table chases a moving head with the same bounded
+    catch-up rounds as the mirror: a head that outruns every round is
+    a caller-visible CommitConflict, not an infinite chase."""
+    t, purge = _purge_table(spark, tmp_path, "snapshot")
+    real = t.current
+    calls = {"n": 0}
+
+    def always_moving():
+        calls["n"] += 1
+        if calls["n"] <= 1:
+            return real()
+        e = dict(real())
+        e["version"] = e["version"] + calls["n"]  # head keeps advancing
+        return e
+
+    t.current = always_moving
+    with pytest.raises(CommitConflict, match="kept advancing"):
+        purge(spark.createDataFrame([(1,)], "k long"))
+
+
+@pytest.mark.parametrize("layout", ["bucketed_versioned", "snapshot"])
+def test_purge_rerun_repairs_a_stale_pointer(spark, tmp_path, layout):
+    """A purge that crashed after rewriting the log but before the
+    pointer leaves CURRENT on the pre-purge dirs. A re-run must scan the
+    pointer's own dirs too — the log alone no longer names them — so
+    the current snapshot loses the key and the old dirs go."""
+    import shutil as _sh
+
+    t, purge = _purge_table(spark, tmp_path, layout)
+    with open(t._log.pointer_path) as fh:
+        stale = fh.read()
+    old_dirs = t._entry_dirs(t.current())
+    backup = tmp_path / "backup"
+    for i, d in enumerate(old_dirs):
+        _sh.copytree(d, backup / str(i))
+    keys = spark.createDataFrame([(1,)], "k long")
+    purge(keys)
+    # the crash state: log entries purged, pointer and old dirs not
+    for i, d in enumerate(old_dirs):
+        if not os.path.isdir(d):
+            _sh.copytree(backup / str(i), d)
+    with open(t._log.pointer_path, "w") as fh:
+        fh.write(stale)
+    assert 1 in {r.k for r in t.read(spark).collect()}
+    purge(keys)
+    assert 1 not in {r.k for r in t.read(spark).collect()}
+    assert len(t.read(spark).collect()) == 15
+    assert any(not os.path.isdir(d) for d in old_dirs)

@@ -12,8 +12,11 @@ The one exception is ``streaming.pipeline.run_cdc_pipeline_available_now``:
 the CLI resolves the runner through ``pipeline`` at call time.
 
 The same scan pins the shared table surface: the snapshot, ref, property
-and maintenance methods are defined once, in ``_protocol.py``, and in
-neither table layout's module.
+and maintenance methods, the GDPR purge protocol and per-commit
+retention are defined once, in ``_protocol.py``, and in neither table
+layout's module. It also pins how JSON metadata reaches disk: every
+``json.dump`` in the package is either the body of ``_replace_json``
+(temp file + atomic rename) or an exclusive create (mode ``"x"``).
 """
 
 from __future__ import annotations
@@ -132,6 +135,7 @@ TABLE_OPS_METHODS = {
     "tag", "tags", "read_tag", "delete_tag", "_tagset", "_tagged_versions",
     "constraints", "add_constraint", "drop_constraint", "_publish_properties",
     "rollback", "expire_snapshots", "clone_to", "write_audit_publish",
+    "_purge_keys_locked", "_expire",
 }
 
 
@@ -155,3 +159,56 @@ def test_table_surface_is_defined_once_in_protocol():
     defs = _method_defs(streaming / "_protocol.py", "TableOps")
     counts = {name: defs.count(name) for name in TABLE_OPS_METHODS}
     assert counts == {name: 1 for name in TABLE_OPS_METHODS}
+
+
+def _opens_exclusive(item: ast.withitem, fh: ast.expr | None) -> bool:
+    """True iff ``item`` is ``open(<path>, "x") as <fh>``."""
+    call = item.context_expr
+    mode = None
+    if isinstance(call, ast.Call) and getattr(call.func, "id", None) == "open":
+        if len(call.args) > 1:
+            mode = call.args[1]
+        mode = next((k.value for k in call.keywords if k.arg == "mode"), mode)
+    return (
+        isinstance(mode, ast.Constant)
+        and mode.value == "x"
+        and isinstance(item.optional_vars, ast.Name)
+        and isinstance(fh, ast.Name)
+        and item.optional_vars.id == fh.id
+    )
+
+
+def test_json_writes_are_atomic_or_exclusive():
+    """A crash must never leave a torn JSON pointer, log entry, tag,
+    branch, checkpoint or manifest: each write either replaces the file
+    atomically through ``_replace_json`` or creates it exclusively (the
+    log-entry, branch-staging and purge-lock creates)."""
+    torn = []
+    for path in _py_files(PKG):
+        tree = ast.parse(path.read_text())
+        parent = {
+            child: node
+            for node in ast.walk(tree)
+            for child in ast.iter_child_nodes(node)
+        }
+        for node in ast.walk(tree):
+            if not (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "dump"
+                and getattr(node.func.value, "id", None) == "json"
+            ):
+                continue
+            fh = node.args[1] if len(node.args) > 1 else None
+            up = node
+            while up in parent:
+                up = parent[up]
+                if getattr(up, "name", None) == "_replace_json":
+                    break
+                if isinstance(up, ast.With) and any(
+                    _opens_exclusive(item, fh) for item in up.items
+                ):
+                    break
+            else:
+                torn.append(f"{path.relative_to(REPO)}:{node.lineno}")
+    assert torn == []

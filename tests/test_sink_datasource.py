@@ -369,6 +369,44 @@ def test_xxhash64_int32_parity_with_spark(spark):
     assert list(xxhash64_ints(ids)) == expected
 
 
+def test_stream_sources_unpickle_without_the_package(tmp_path):
+    """Spark's Python workers unpickle the registered data sources with
+    a sys.path that does not reach this package (a driver started from
+    another cwd). The by-value pickle must then carry no by-reference
+    package global: worker-side package imports run lazily, after
+    ``_ensure_importable``."""
+    import subprocess
+    import sys
+
+    from pyspark import cloudpickle
+
+    import tabular_cdc_bootstrapper_spark.streaming.datasource as ds
+
+    name = ds.__name__
+    was_by_value = name in cloudpickle.list_registry_pickle_by_value()
+    cloudpickle.register_pickle_by_value(ds)
+    try:
+        blob = cloudpickle.dumps(
+            (ds.ChangeFeedDataSource, ds.StateTableSinkDataSource)
+        )
+    finally:
+        if not was_by_value:
+            cloudpickle.unregister_pickle_by_value(ds)
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    probe = (
+        "import pickle, sys; pickle.loads(sys.stdin.buffer.read()); "
+        "assert 'tabular_cdc_bootstrapper_spark' not in sys.modules"
+    )
+    done = subprocess.run(
+        [sys.executable, "-c", probe],
+        input=blob,
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+    )
+    assert done.returncode == 0, done.stderr.decode()[-2000:]
+
+
 def test_spark_buckets_type_guards():
     import pandas as pd
 

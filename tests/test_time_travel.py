@@ -104,6 +104,45 @@ def test_retention_expires_old_data_but_keeps_log(spark, tmp_path):
         t.rollback(0)
 
 
+def test_retention_counts_committed_snapshots_not_log_entries(tmp_path):
+    """Retention keeps the newest ``keep_versions`` COMMITTED snapshots:
+    a concurrent writer's log entry above the pointer (its commit is in
+    flight) must not push a retained snapshot out. No Spark — the
+    table's dirs and log are written by hand."""
+    t = ParquetStateTable(str(tmp_path / "t"), keep_versions=2)
+    os.makedirs(t._log.log_dir)
+
+    def record(v: int) -> dict:
+        d = os.path.join(t.root, f"v-{v:08d}-{v:08x}")
+        os.makedirs(d)
+        return {"version": v, "dir": d, "ts": float(v)}
+
+    for v in range(3):
+        rec = record(v)
+        with open(t._log._entry_path(v), "w") as fh:
+            json.dump(rec, fh)
+    with open(t._log.pointer_path, "w") as fh:
+        json.dump(rec, fh)
+    inflight = {}
+    real_publish = t._log.publish
+
+    def publish_then_inflight(rec, **kw):
+        out = real_publish(rec, **kw)
+        # v4's writer creates its entry before this publish's retention
+        inflight.update(record(4))
+        with open(t._log._entry_path(4), "x") as fh:
+            json.dump(inflight, fh)
+        return out
+
+    t._log.publish = publish_then_inflight
+    v3 = record(3)
+    t._publish(v3, keep=v3["dir"])
+    assert [(e["version"], e["readable"]) for e in t.history()] == [
+        (0, False), (1, False), (2, True), (3, True),
+    ]
+    assert os.path.isdir(inflight["dir"])  # in flight: never reclaimed
+
+
 def test_retention_keeps_rollback_target_dir_alive(spark, tmp_path):
     t = ParquetStateTable(str(tmp_path / "t"), keep_versions=3)
     for i in range(4):

@@ -236,6 +236,57 @@ def test_purge_keys_is_idempotent(spark, mirror):
     assert 2 not in state1
 
 
+def test_retention_tells_buckets_apart(tmp_path):
+    """Dir names repeat across buckets up to their 32-bit uuid suffix,
+    so retention must match a dir by its bucket too: an aged unlogged
+    dir in bucket 1 is reclaimed even when a retained dir in bucket 0
+    carries the same name. No Spark — dirs and log written by hand."""
+    import json
+
+    m = VersionedBucketMirror(str(tmp_path / "m"), n_buckets=2, key_col="k")
+    os.makedirs(m._log.log_dir)
+    name = "v-00000000-0000abcd"
+    rec = {
+        "version": 0,
+        "ts": 0.0,
+        "n_buckets": 2,
+        "buckets": {
+            "0": os.path.join(m.data_dir, "bucket=0", name),
+            "1": os.path.join(m.data_dir, "bucket=1", "v-00000000-0000beef"),
+        },
+    }
+    for d in rec["buckets"].values():
+        os.makedirs(d)
+    with open(m._log._entry_path(0), "w") as fh:
+        json.dump(rec, fh)
+    with open(m._log.pointer_path, "w") as fh:
+        json.dump(rec, fh)
+    orphan = os.path.join(m.data_dir, "bucket=1", name)
+    os.makedirs(orphan)
+    aged = 1.0  # far past the conflict grace
+    os.utime(orphan, (aged, aged))
+    m._expire(rec)
+    assert not os.path.isdir(orphan)
+    assert all(os.path.isdir(d) for d in rec["buckets"].values())
+
+
+def test_purge_keys_on_a_multi_column_key(spark, mirror):
+    """A purge key of several columns removes only rows matching all of
+    them, and still touches only the hash buckets of the bucket key."""
+    keys = spark.createDataFrame(
+        [(3, "v0-3"), (4, "not-a-name")], "id long, name string"
+    )
+    out = mirror.purge_keys(spark, keys, ["id", "name"])
+    state = _state(spark, mirror)
+    assert 3 not in state and state[4] == "v0-4" and len(state) == 15
+    assert out["touched_buckets"] == sorted(
+        r["b"]
+        for r in keys.select(mirror._bucket(F.col("id")).alias("b"))
+        .distinct()
+        .collect()
+    )
+
+
 def test_expire_snapshots_reclaims_only_superseded_bucket_dirs(spark, mirror):
     """Expiring old manifests reclaims exactly the bucket versions that
     later merges rewrote; shared (untouched) bucket dirs survive."""
