@@ -340,6 +340,7 @@ def merge_into_table(
 
     Returns the commit record (plus ``touched_buckets`` where bucketed).
     """
+    from tabular_cdc_bootstrapper_spark.streaming._protocol import _token
     from tabular_cdc_bootstrapper_spark.streaming.bucket_mirror import (
         VersionedBucketMirror,
     )
@@ -347,12 +348,13 @@ def merge_into_table(
     update_set = dict(update_set or {})
     bucketed = isinstance(table, VersionedBucketMirror)
     touched: list[int] | None = None
-    # CAS basis (r11): the head version the merge inputs are read from —
-    # threaded into the commit so a concurrent commit in between raises
-    # CommitConflict (or rebases, when provably disjoint on the bucketed
-    # layout) instead of silently losing one side's update
+    # CAS basis (r11): the token of the head the merge inputs are read
+    # from — threaded into the commit so a concurrent commit or purge in
+    # between raises CommitConflict (or rebases, when provably disjoint
+    # on the bucketed layout) instead of silently losing one side's
+    # update or resurrecting purged keys
     cur = table.current()
-    basis_version = cur["version"] if cur else -1
+    basis = _token(cur)
     if bucketed:
         table._sync_spec()  # bind to the current bucket spec (r11)
         key = table.key_col
@@ -457,10 +459,8 @@ def merge_into_table(
     full_meta = {**(meta or {}), "operation": "merge"}
     if bucketed:
         rec = table.commit_merged(
-            merged, touched, meta=full_meta, expected_version=basis_version
+            merged, touched, meta=full_meta, expected_version=basis
         )
     else:
-        rec = table.commit(
-            merged, meta=full_meta, expected_version=basis_version
-        )
+        rec = table.commit(merged, meta=full_meta, expected_version=basis)
     return dict(rec)

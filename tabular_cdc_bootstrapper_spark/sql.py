@@ -457,10 +457,9 @@ class TableSql:
                 "(an unconditional DELETE is a table drop — not offered)"
             )
         t = self._table(m.group(1))
-        prune = self._derive_prune(t, m.group(2))
-        if prune is not None:
-            return t.delete_where(self.spark, m.group(2), prune=prune)
-        return t.delete_where(self.spark, m.group(2))
+        return t.delete_where(
+            self.spark, m.group(2), prune=self._derive_prune(t, m.group(2))
+        )
 
     def _update(self, s: str) -> dict:
         m = re.match(
@@ -478,12 +477,10 @@ class TableSql:
                 raise ValueError(f"bad SET clause {part!r}")
             assignments[am.group(1)] = am.group(2)
         t = self._table(m.group(1))
-        prune = self._derive_prune(t, m.group(3))
-        if prune is not None:
-            return t.update_where(
-                self.spark, m.group(3), assignments, prune=prune
-            )
-        return t.update_where(self.spark, m.group(3), assignments)
+        return t.update_where(
+            self.spark, m.group(3), assignments,
+            prune=self._derive_prune(t, m.group(3)),
+        )
 
     # -- WHERE-derived partition pruning (r14, VERDICT #1) --------------------
     _CMP_OPS = ("<=", ">=", "=", "<", ">")
@@ -753,7 +750,7 @@ class TableSql:
         for col, vals in points.items():
             # point sets compete with range bounds on equal terms; the
             # winner's hint rides as (col, [v, ...], None) — the shape
-            # _dml_matched_buckets/read_pruned decode as an IN prune
+            # _dml_scope/read_pruned decode as an IN prune
             if not vals or col not in fields:
                 continue
             ftype = fields[col]
@@ -911,16 +908,7 @@ class TableSql:
         )
 
     def _alter_call(self, name: str, **kwargs) -> dict:
-        t = self._table(name)
-        try:
-            return t.alter_schema(**kwargs)
-        except ValueError as e:
-            # ParquetStateTable's FIRST alter needs spark= to bind the
-            # current parquet schema; it raises before publishing, so
-            # the retry cannot double-apply
-            if "needs spark=" in str(e):
-                return t.alter_schema(spark=self.spark, **kwargs)
-            raise
+        return self._table(name).alter_schema(spark=self.spark, **kwargs)
 
     # -- maintenance --------------------------------------------------------
     def _optimize(self, s: str) -> dict:

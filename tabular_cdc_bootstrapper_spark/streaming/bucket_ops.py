@@ -1,18 +1,16 @@
-"""Layout-specific DML and maintenance methods of
-``VersionedBucketMirror``, as a mixin (``bucket_mirror.py`` composes
-it): compaction, rebucket/regrain, ALTER, DELETE/UPDATE/INSERT/MERGE,
-and the purge's bucket scope. The core file keeps the manifest/commit
+"""Layout-specific maintenance methods of ``VersionedBucketMirror``,
+as a mixin (``bucket_mirror.py`` composes it): compaction,
+rebucket/regrain, MERGE, and the bucket-scoped hooks of the shared
+DML, ALTER and purge. The core file keeps the manifest/commit
 machinery. History, time travel, tags, constraints, rollback, clone,
-explicit expiry, write-audit-publish, the GDPR purge protocol and
-per-commit retention (``_expire``) are written once for both layouts in
-``_protocol.TableOps``.
+explicit expiry, write-audit-publish, row-level DELETE/UPDATE/INSERT,
+ALTER, the GDPR purge protocol and per-commit retention (``_expire``)
+are written once for both layouts in ``_protocol.TableOps``.
 """
 
 from __future__ import annotations
 
 import os
-import re
-import time
 import uuid
 from collections.abc import Sequence
 
@@ -27,10 +25,10 @@ from tabular_cdc_bootstrapper_spark.operators.cdc import (
 from tabular_cdc_bootstrapper_spark.streaming._protocol import (
     CommitConflict,
     _UNSET,
-    _alter_schema_meta,
     _purge_lock,
+    _purge_race_as_conflict,
+    _token,
     _validate_partition_spec,
-    _vanished_path,
 )
 
 
@@ -151,7 +149,7 @@ class VersionedBucketMirrorOps:
         ) + sum(
             _nfiles(s["dir"]) for b in todo for s in deltas.get(b, [])
         )
-        try:
+        with _purge_race_as_conflict(self.root, "compaction"):
             frag = self._read_entry(
                 spark, cur, buckets=[int(b) for b in todo]
             )
@@ -163,15 +161,6 @@ class VersionedBucketMirrorOps:
                 zorder_cols=zorder_cols,
                 drop_conflicted=partial_progress,
             )
-        except CommitConflict:
-            raise
-        except Exception as exc:
-            if _vanished_path(exc):  # reader-vs-purge race (r12)
-                raise CommitConflict(
-                    f"{self.root}: this compaction's basis dirs were "
-                    "purged concurrently — re-run against the new head"
-                ) from None
-            raise
         # with partial progress, a conflicted bucket's dir is the
         # concurrent winner's, not our coalesced rewrite — count only
         # buckets this commit actually installed
@@ -213,15 +202,8 @@ class VersionedBucketMirrorOps:
             raise ValueError(f"mirror {self.root} has no snapshot yet")
         if new_n == self.n_buckets:
             return dict(cur)  # already on this spec: no-op
-        try:
+        with _purge_race_as_conflict(self.root, "rebucket"):
             full = self._read_entry(spark, cur)
-        except Exception as exc:
-            if _vanished_path(exc):  # reader-vs-purge race (r12)
-                raise CommitConflict(
-                    f"{self.root}: this rebucket's basis dirs were "
-                    "purged concurrently — re-run against the new head"
-                ) from None
-            raise
         old_n = self.n_buckets
         self.n_buckets = new_n
         try:
@@ -295,15 +277,8 @@ class VersionedBucketMirrorOps:
                     f"regrain source column {new_spec[1]!r} is not a "
                     f"table column (columns: {sorted(known)})"
                 )
-        try:
+        with _purge_race_as_conflict(self.root, "regrain"):
             full = self._read_entry(spark, cur)
-        except Exception as exc:
-            if _vanished_path(exc):  # reader-vs-purge race (r12)
-                raise CommitConflict(
-                    f"{self.root}: this regrain's basis dirs were "
-                    "purged concurrently — re-run against the new head"
-                ) from None
-            raise
         old_spec = self.partition_spec
         old_n = self.n_buckets
         self.partition_spec = new_spec
@@ -326,74 +301,15 @@ class VersionedBucketMirrorOps:
             raise
         return rec
 
-    def alter_schema(
-        self,
-        drop: Sequence[str] = (),
-        rename: dict[str, str] | None = None,
-        add: dict[str, str] | None = None,
-        widen: dict[str, str] | None = None,
-    ) -> dict:
-        """Metadata-only ALTER TABLE (r11 — the Iceberg
-        rename/drop-column semantics without field IDs): ONE manifest
-        commit, zero data movement. ``rename={old: new}`` records the
-        historical physical name in the manifest's ``renames`` mapping;
-        reads fold ``coalesce(new, old…)`` over the widened physical
-        schema, so dirs written before and after the rename read
-        uniformly. ``drop`` removes columns from the logical schema —
-        the bytes remain in old files (unreadable through the table,
-        exactly Iceberg's drop) and are physically reclaimed by the
-        next ``rewrite_data_files``/full rewrite, which materializes
-        the logical schema and retires the rename mapping.
-
-        Constraints: requires a schema'd manifest (legacy tables must
-        full-rewrite first); the bucket key can be neither dropped nor
-        renamed (the hash spec binds to it); columns referenced by live
-        merge-on-read delta specs (ts/op/tiebreak fold params) must be
-        folded (``rewrite_data_files``) before altering; a new name may
-        not collide with any live logical or historical physical name.
-        Publishes with the CAS basis check — a concurrent commit raises
-        ``CommitConflict`` (re-run: the alter is cheap by design).
-
-        ``add={name: spark_type_string}`` appends NULLABLE columns (the
-        Iceberg v1 add-column): old files read NULL through the explicit
-        manifest schema, no data moves. Re-adding a DROPPED name works
-        immediately (r12 field IDs — ``_alter_schema_meta``): the new
-        column is a NEW field (fresh ``fid``) and the record's
-        ``shadowed`` map masks it to NULL for every dir written before
-        the re-add, so the previous generation's bytes (still physically
-        present in un-rewritten files) can never resurrect; the
-        ``dropped`` tombstones remain as the bytes-linger marker until a
-        materializing rewrite reclaims them.
-
-        ``widen={name: wider_type}`` is metadata-only ALTER COLUMN TYPE
-        (the Delta type-widening table feature): the manifest schema
-        records the wider type and old files read through the parquet
-        reader's widening promotions (int32→int64, float→double — the
-        r10 machinery) — no rewrite at all. Only lossless widenings
-        apply; the bucket key cannot widen (its HASH is type-sensitive
-        — ``rebucket`` to a new layout instead)."""
-        rename = dict(rename or {})
-        drop = list(drop)
-        add = dict(add or {})
-        widen = dict(widen or {})
-        if not rename and not drop and not add and not widen:
-            raise ValueError("alter_schema: nothing to do")
-        self._sync_spec()
-        cur = self.current()
-        if cur is None:
-            raise ValueError(f"mirror {self.root} has no snapshot yet")
-        for cname, cexpr in (cur.get("constraints") or {}).items():
-            for col in list(drop) + list(rename):
-                if re.search(rf"\b{re.escape(col)}\b", cexpr, re.I):
-                    # case-insensitive like Spark's column resolution —
-                    # a case-mismatched guard would let the rename
-                    # publish and wedge every later commit on an
-                    # unresolved constraint column (review r12)
-                    raise ValueError(
-                        f"column {col!r} is referenced by CHECK "
-                        f"constraint {cname!r} ({cexpr}) — DROP the "
-                        "constraint before altering the column"
-                    )
+    def _alter_rules(self, cur: dict) -> dict:
+        """ALTER rules of the mirror (``TableOps.alter_schema``): the
+        manifest must record a schema (legacy tables full-rewrite
+        first, e.g. by a widening merge); the bucket key can be neither
+        dropped, renamed nor widened (the hash spec binds to it and its
+        HASH is type-sensitive — rebucket to a new layout instead); and
+        columns referenced by live merge-on-read delta specs (the
+        ts/op/tiebreak fold params) must be folded by
+        ``rewrite_data_files`` first."""
         if "schema" not in cur:
             raise ValueError(
                 f"{self.root} has a pre-schema manifest; run a full "
@@ -416,72 +332,32 @@ class VersionedBucketMirrorOps:
                 fold_cols.add(sp["op"])
                 fold_cols.update(sp["ts"])
                 fold_cols.update(sp.get("tiebreak") or ())
-        new_version = self._log.next_version()
-        meta = _alter_schema_meta(
-            cur,
-            self.root,
-            drop,
-            rename,
-            add,
-            widen,
-            new_version,
-            protected_cols=frozenset({self.key_col}),
-            protected_reason=(
+        return {
+            "protected_cols": frozenset({self.key_col}),
+            "protected_reason": (
                 "it is the bucket key (the hash spec binds to it); "
                 "rebucket to a new layout instead"
             ),
-            fold_cols=fold_cols,
-        )
-        # per-bucket stats follow their columns
-        stats = None
-        if "stats" in cur:
-            stats = {}
-            for b, cols in cur["stats"].items():
-                out = {}
-                for c, bounds in cols.items():
-                    if c in drop:
-                        continue
-                    out[rename.get(c, c)] = bounds
-                stats[b] = out
-        record = {
-            "version": new_version,
-            "ts": time.time(),
-            "buckets": dict(cur["buckets"]),
-            "schema": meta["schema"],
-            "next_fid": meta["next_fid"],
-            "operation": "alter_schema",
-            "altered": meta["altered"],
+            "fold_cols": fold_cols,
         }
-        if meta["dropped"]:
-            record["dropped"] = meta["dropped"]
-        if meta["renames"]:
-            record["renames"] = meta["renames"]
-        if meta["shadowed"]:
-            record["shadowed"] = meta["shadowed"]
-        if "deltas" in cur:
-            record["deltas"] = cur["deltas"]
-        if "n_buckets" in cur:
-            record["n_buckets"] = cur["n_buckets"]
-        if "partition_spec" in cur:  # transform spec survives DDL (r13)
-            record["partition_spec"] = cur["partition_spec"]
-        if stats is not None:
-            record["stats"] = stats
-        # stats_cols follow their columns like the bounds do (r12)
-        recorded_cols = cur.get("stats_cols") or self.stats_cols
+
+    def _remap_stats(self, record: dict, drop: list, rename: dict) -> None:
+        """Per-bucket stats and ``stats_cols`` follow their columns
+        through an ALTER (r12)."""
+        if "stats" in record:
+            record["stats"] = {
+                b: {
+                    rename.get(c, c): bounds
+                    for c, bounds in cols.items()
+                    if c not in drop
+                }
+                for b, cols in record["stats"].items()
+            }
+        recorded_cols = record.get("stats_cols") or self.stats_cols
         if recorded_cols:
             record["stats_cols"] = [
                 rename.get(c, c) for c in recorded_cols if c not in drop
             ]
-        if cur.get("constraints"):
-            # table properties carry (constrained columns can't be
-            # dropped/renamed — guarded above)
-            record["constraints"] = cur["constraints"]
-        return self._publish_commit(
-            record,
-            # token CAS (r12): the record SHARES cur's bucket dirs — an
-            # in-place purge landing in between would delete them
-            expected_head=(cur["version"], cur.get("purged_ts") or 0),
-        )
 
     def _constraints_for(self, basis=_UNSET, branch: str | None = None) -> dict:
         e = (
@@ -495,14 +371,14 @@ class VersionedBucketMirrorOps:
         )
         return dict((e or {}).get("constraints") or {})
 
-    def _dml_matched_buckets(
+    def _dml_scope(
         self,
         spark: SparkSession,
         cur: dict,
         hit,
         prune: tuple | None,
     ) -> tuple[list[int], int]:
-        """Shared DML planning scan: candidate buckets (manifest-stats
+        """DML planning scan (``TableOps``): candidate buckets (manifest-stats
         pruned when a ``(col, lower, upper)`` range hint or a
         ``(col, [v, ...], None)`` point-set hint is given), then ONE
         bounded aggregate (≤ n_buckets rows) over the candidates —
@@ -540,192 +416,39 @@ class VersionedBucketMirrorOps:
         matched = sorted(int(r["b"]) for r in rows)
         return matched, int(sum(r["n"] for r in rows))
 
-    def delete_where(
-        self,
-        spark: SparkSession,
-        condition,
-        prune: tuple | None = None,
-    ) -> dict:
-        """Row-level ``DELETE FROM t WHERE condition`` (the Iceberg
-        copy-on-write DELETE; the reference's tables take DML through
-        the same Iceberg surface, `/root/reference/batch-bootstrapper/tabular.py:8`'s
-        format). ``condition`` is a SQL expression string or a Column;
-        rows where it is NULL are KEPT (SQL DELETE semantics: only
-        TRUE deletes). Two phases: a narrow planning scan finds the
-        buckets that actually hold matches (optionally manifest-stats
-        pruned via ``prune=(col, lower, upper)``), then ONLY those
-        buckets are rewritten copy-on-write — every other bucket's dirs
-        carry forward untouched in the new manifest, and the CAS basis
-        makes a concurrent overlapping commit surface as
-        :class:`CommitConflict`, never a lost update.
-
-        Merge-on-read tables take the same copy-on-write path
-        deliberately: the delta fold orders by the CDC ts columns, and
-        a predicate delete has no ts that deterministically beats the
-        live row's — key-granular MoR deletes are ``merge_batch``
-        tombstones (the keys-only delete tier) or ``purge_keys``.
-        A rewrite folds the matched buckets' delta chains as a side
-        effect (staged full state supersedes them)."""
-        cond = F.expr(condition) if isinstance(condition, str) else condition
-        hit = F.coalesce(cond.cast("boolean"), F.lit(False))
-        self._sync_spec()
-        cur = self.current()
-        if cur is None:
-            raise ValueError(f"mirror {self.root} has no snapshot yet")
-        matched, n_hit = self._dml_matched_buckets(spark, cur, hit, prune)
-        if not matched:
-            rec = dict(cur)
-            rec["matched_buckets"] = []
-            rec["rows_deleted"] = 0
-            return rec
-        try:
-            live = self._read_entry(spark, cur, buckets=matched).filter(~hit)
-            rec = self._commit_staged(
-                live,
-                touched=matched,
-                basis=cur,
-                meta={"operation": "delete_where"},
-            )
-        except CommitConflict:
-            raise
-        except Exception as exc:
-            if _vanished_path(exc):  # reader-vs-purge race (r12)
-                raise CommitConflict(
-                    f"{self.root}: this delete's basis dirs were purged "
-                    "concurrently — re-run against the new head"
-                ) from None
-            raise
-        rec["matched_buckets"] = matched
-        rec["rows_deleted"] = n_hit
-        return rec
-
-    def update_where(
-        self,
-        spark: SparkSession,
-        condition,
-        assignments: dict,
-        prune: tuple | None = None,
-    ) -> dict:
-        """Row-level ``UPDATE t SET col = expr, ... WHERE condition``
-        (the Iceberg copy-on-write UPDATE). ``assignments`` maps column
-        name → SQL expression string or Column; every right-hand side
-        reads PRE-update values (simultaneous-assignment SQL semantics
-        — the rewrite is one ``select`` over the original frame, so
-        ``SET a = b, b = a`` swaps). Each assigned value is cast to the
-        column's existing manifest type (Iceberg's assignable-type
-        rule); the key column cannot be assigned (the bucket hash binds
-        to it — model a key change as DELETE + INSERT). Rows where the
-        condition is NULL are left unchanged. Same two-phase plan and
-        CAS contract as :meth:`delete_where`: only buckets holding
-        matches are rewritten, everything else carries forward."""
-        cond = F.expr(condition) if isinstance(condition, str) else condition
-        hit = F.coalesce(cond.cast("boolean"), F.lit(False))
-        if not assignments:
-            raise ValueError("update_where requires at least one assignment")
-        if self.key_col in assignments:
-            raise ValueError(
-                f"cannot assign key column {self.key_col!r} — the bucket "
-                "hash binds to it; model a key change as DELETE + INSERT"
-            )
-        self._sync_spec()
-        if (
-            self.partition_spec[0] != "bucket"
-            and self.partition_spec[1] in assignments
-        ):
+    def _unassignable(self) -> dict:
+        out = {}
+        if self.partition_spec[0] != "bucket":
             # ADVICE r13 (high): _commit_staged recomputes each staged
             # row's partition from the (new) source-column value, so a
             # row assigned into a partition outside the touched set
             # would be staged, never installed, and silently LOST when
-            # staging is removed — mirror the key-column refusal
-            raise ValueError(
+            # staging is removed — refused like the key column
+            out[self.partition_spec[1]] = (
                 f"cannot assign {self.partition_spec[1]!r} — the table's "
                 f"{self.partition_spec[0]} partition transform derives "
                 "partition ids from it; model a partition move as "
                 "DELETE + INSERT"
             )
-        cur = self.current()
-        if cur is None:
-            raise ValueError(f"mirror {self.root} has no snapshot yet")
-        if "schema" in cur:
-            # validate assignment targets BEFORE any scan (review r12):
-            # a typo'd column with a zero-match predicate must raise,
-            # not silently report rows_updated=0
-            known = {f["name"] for f in cur["schema"]["fields"]}
-            missing = [c for c in assignments if c not in known]
-            if missing:
-                raise ValueError(
-                    f"update_where assigns unknown column(s) {missing} "
-                    f"(table columns: {sorted(known)})"
-                )
-        matched, n_hit = self._dml_matched_buckets(spark, cur, hit, prune)
-        if not matched:
-            rec = dict(cur)
-            rec["matched_buckets"] = []
-            rec["rows_updated"] = 0
-            return rec
-        try:
-            df = self._read_entry(spark, cur, buckets=matched)
-            missing = [c for c in assignments if c not in df.columns]
-            if missing:  # legacy schema-free manifests validate here
-                raise ValueError(
-                    f"update_where assigns unknown column(s) {missing} "
-                    f"(table columns: {df.columns})"
-                )
-            types = {f.name: f.dataType for f in df.schema.fields}
-            projected = []
-            for c in df.columns:
-                if c in assignments:
-                    v = assignments[c]
-                    rhs = F.expr(v) if isinstance(v, str) else v
-                    projected.append(
-                        F.when(hit, rhs.cast(types[c]))
-                        .otherwise(F.col(c))
-                        .alias(c)
-                    )
-                else:
-                    projected.append(F.col(c))
-            rec = self._commit_staged(
-                df.select(*projected),
-                touched=matched,
-                basis=cur,
-                meta={"operation": "update_where"},
-            )
-        except CommitConflict:
-            raise
-        except Exception as exc:
-            if _vanished_path(exc):  # reader-vs-purge race (r12)
-                raise CommitConflict(
-                    f"{self.root}: this update's basis dirs were purged "
-                    "concurrently — re-run against the new head"
-                ) from None
-            raise
-        rec["matched_buckets"] = matched
-        rec["rows_updated"] = n_hit
-        return rec
+        out[self.key_col] = (
+            f"cannot assign key column {self.key_col!r} — the bucket "
+            "hash binds to it; model a key change as DELETE + INSERT"
+        )
+        return out
 
-    def insert_rows(self, spark: SparkSession, rows: DataFrame) -> dict:
-        """``INSERT INTO`` append (r13) — copy-on-write: only the buckets
-        the new keys hash into are rewritten; every other bucket's dirs
-        carry forward untouched in the new manifest. ``rows`` must
-        already be aligned to the table's schema (the SQL front-end does
-        the column-list / NULL-fill / cast work).
-
-        Inserting a key that already EXISTS is refused: the CDC mirror
-        is keyed on ``key_col`` — a duplicate key would make every later
-        merge/fold pick winners arbitrarily. Model an upsert as MERGE
-        (or a changelog event through ``merge_batch``). The existence
-        probe reads ONLY the touched buckets, key column only — at
-        100 TB it is |touched|/n_buckets of the table, column-pruned.
-        Under a TRANSFORM spec a key's partition is not derivable from
-        the key, so the probe scans every partition's key column (still
-        column-pruned; the hash spec keeps the bucket-local probe).
-
-        CHECK constraints and the CAS basis ride ``_commit_staged``'s
-        existing gates; merge-on-read tables take the same copy-on-write
-        path as predicate DML (the rewrite folds the touched buckets'
-        delta chains as a side effect)."""
-        self._sync_spec()
-        cur = self.current()
+    def _insert_scope(
+        self, spark: SparkSession, cur: dict | None, rows: DataFrame
+    ) -> tuple[list[int], int]:
+        """Insert plan (``TableOps``): the buckets the new keys land in
+        and the row count. The CDC mirror is keyed on ``key_col``, so a
+        NULL or repeated key in the batch and a key the table already
+        holds are refused — a duplicate key would make every later
+        merge/fold pick winners arbitrarily; upsert through MERGE or a
+        changelog event. The existence probe reads ONLY the touched
+        buckets' key column (|touched|/n_buckets of the table at
+        100 TB). Under a TRANSFORM spec a key's partition is not
+        derivable from the key, so the probe reads every partition's
+        key column."""
         if cur is None:
             raise ValueError(
                 f"mirror {self.root} has no snapshot yet — "
@@ -765,10 +488,7 @@ class VersionedBucketMirrorOps:
             .collect()
         )
         if not touched:
-            rec = dict(cur)
-            rec["touched_buckets"] = []
-            rec["rows_inserted"] = 0
-            return rec
+            return [], 0
         probe_buckets = touched
         if self.partition_spec[0] != "bucket":
             probe_buckets = sorted(
@@ -791,37 +511,24 @@ class VersionedBucketMirrorOps:
                 f"(first few: {[r[key] for r in dup]}) — the mirror is "
                 f"keyed on {key!r}; use MERGE to upsert"
             )
-        # the staged rewrite carries ONLY the touched partitions' rows
-        # (the probe may have read more under a transform spec)
-        base = (
-            existing
-            if probe_buckets == touched
-            else self._read_entry(spark, cur, buckets=touched)
+        return touched, n_new
+
+    def _rewrite_scope(
+        self, spark: SparkSession, cur: dict, scope: list[int], fn,
+        meta: dict,
+    ) -> dict:
+        """Commit ``fn(rows of the buckets in scope)`` copy-on-write
+        over exactly those buckets against ``cur``'s token
+        (``TableOps``): every other bucket's dirs carry forward, a
+        concurrent commit to other buckets rebases, one to these
+        buckets raises :class:`CommitConflict`. Merge-on-read delta
+        chains of the rewritten buckets fold into the staged state."""
+        return self._commit_staged(
+            fn(self._read_entry(spark, cur, buckets=scope)),
+            touched=scope,
+            basis=cur,
+            meta=meta,
         )
-        staged = (
-            base.unionByName(rows, allowMissingColumns=True)
-            if base is not None
-            else rows
-        )
-        try:
-            rec = self._commit_staged(
-                staged,
-                touched=touched,
-                basis=cur,
-                meta={"operation": "insert_into"},
-            )
-        except CommitConflict:
-            raise
-        except Exception as exc:
-            if _vanished_path(exc):  # reader-vs-purge race (r12)
-                raise CommitConflict(
-                    f"{self.root}: this insert's basis dirs were purged "
-                    "concurrently — re-run against the new head"
-                ) from None
-            raise
-        rec["touched_buckets"] = touched
-        rec["rows_inserted"] = n_new
-        return rec
 
     def merge_batch(
         self,
@@ -906,7 +613,7 @@ class VersionedBucketMirrorOps:
             )
             rec["touched_buckets"] = touched
             return rec
-        try:
+        with _purge_race_as_conflict(self.root, "merge"):
             current = (
                 self._read_entry(spark, base, buckets=touched)
                 if base is not None
@@ -926,15 +633,6 @@ class VersionedBucketMirrorOps:
                 new_state, touched=touched, key_col=key, branch=branch,
                 basis=base,
             )
-        except CommitConflict:
-            raise
-        except Exception as exc:
-            if _vanished_path(exc):  # reader-vs-purge race (r12)
-                raise CommitConflict(
-                    f"{self.root}: this merge's basis dirs were purged "
-                    "concurrently — re-run against the new head"
-                ) from None
-            raise
         rec["touched_buckets"] = touched
         return rec
 
@@ -945,7 +643,7 @@ class VersionedBucketMirrorOps:
         key_col: str | None = None,
         meta: dict | None = None,
         branch: str | None = None,
-        expected_version: int | None = None,
+        expected_version: "int | tuple | None" = None,
     ) -> dict:
         """Commit an externally-merged state slice for ``touched`` buckets
         as one manifest (the hook ``operators/merge.py merge_into_table``
@@ -956,21 +654,30 @@ class VersionedBucketMirrorOps:
         ``history()`` on every layout that has one).
 
         ``expected_version``: the manifest version ``df`` was derived
-        from (r11 optimistic concurrency) — the commit then validates
-        against it: if the table advanced but the concurrent commits
-        left this merge's buckets untouched, the commit rebases and
-        lands; if they touched the same buckets, CommitConflict."""
+        from (r11 optimistic concurrency), or its ``_token`` — the
+        commit then validates against it: if the table advanced but the
+        concurrent commits left this merge's buckets untouched, the
+        commit rebases and lands; if they touched the same buckets, or
+        a token's snapshot was purged since, CommitConflict."""
         basis = _UNSET
         if expected_version is not None:
+            v, purged = (
+                expected_version
+                if isinstance(expected_version, tuple)
+                else (expected_version, None)
+            )
             basis = None
-            if expected_version >= 0:
-                for e in self._log.entries():
-                    if e["version"] == expected_version:
-                        basis = e
-                        break
+            if v >= 0:
+                basis = next(
+                    (e for e in self._log.entries() if e["version"] == v),
+                    None,
+                )
                 if basis is None:
-                    raise ValueError(
-                        f"no snapshot {expected_version} in {self.root}"
+                    raise ValueError(f"no snapshot {v} in {self.root}")
+                if purged is not None and _token(basis) != (v, purged):
+                    raise CommitConflict(
+                        f"{self.root}: snapshot {v} was purged after this "
+                        "merge read it — re-run against the new head"
                     )
         rec = self._commit_staged(
             df, touched=list(touched), key_col=key_col, meta=meta,

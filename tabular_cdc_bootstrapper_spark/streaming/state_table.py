@@ -6,7 +6,6 @@ helper that targets it. Split from ``streaming/pipeline.py`` (VERDICT r12
 from __future__ import annotations
 
 import os
-import re
 import shutil
 import time
 import uuid
@@ -25,12 +24,12 @@ from tabular_cdc_bootstrapper_spark.streaming._protocol import (
     SnapshotLog,
     TableOps,
     _RETRY_BACKOFF,
-    _alter_schema_meta,
     _check_meta,
     _check_table_constraints,
     _nullable_json,
     _purge_lock,
     _read_logical,
+    _token,
 )
 
 
@@ -157,10 +156,7 @@ class ParquetStateTable(TableOps):
             if on_retry is not None:
                 on_retry(record, head)
                 if head is not None:
-                    expected = (
-                        head["version"],
-                        head.get("purged_ts") or 0,
-                    )
+                    expected = _token(head)
             return self._publish(
                 record, keep=record["dir"], expected_head=expected
             )
@@ -249,206 +245,26 @@ class ParquetStateTable(TableOps):
             return None
         return self._read_entry(spark, cur)
 
-    def alter_schema(
-        self,
-        drop: Sequence[str] = (),
-        rename: dict[str, str] | None = None,
-        add: dict[str, str] | None = None,
-        widen: dict[str, str] | None = None,
-        spark: SparkSession | None = None,
+    def _dml_scope(
+        self, spark: SparkSession, cur: dict, hit, prune: tuple | None
+    ) -> tuple[None, int]:
+        """DML plan (``TableOps``): one dir, so the scope is the whole
+        table (``None``) and one ``count()`` of the matches; the mirror's
+        ``prune`` hint has nothing to narrow here."""
+        return None, self._read_entry(spark, cur).filter(hit).count()
+
+    def _insert_scope(
+        self, spark: SparkSession, cur: dict | None, rows: DataFrame
+    ) -> tuple[None, int]:
+        return None, rows.count()
+
+    def _rewrite_scope(
+        self, spark: SparkSession, cur: dict | None, scope, fn, meta: dict
     ) -> dict:
-        """Metadata-only ALTER TABLE on the plain snapshot layout (r12,
-        VERDICT task 2 — DDL symmetry with ``VersionedBucketMirror``):
-        ONE log commit SHARING the current version's data dir, zero data
-        movement. Semantics are ``_alter_schema_meta``'s — field-ID
-        column identity, rename as label change (read-side coalesce
-        fold), drop frees the name immediately, re-add-after-drop masks
-        the previous generation's bytes via the dir-version threshold.
-        The next full-state ``commit`` naturally materializes the
-        logical schema (its dir is written fresh from logical columns)
-        and the DDL metadata retires with it.
-
-        ``spark`` is needed only for the FIRST alter on a table whose
-        records predate schema metadata (to bind the current parquet
-        schema); subsequent alters evolve the recorded schema."""
-        rename = dict(rename or {})
-        drop = list(drop)
-        add = dict(add or {})
-        widen = dict(widen or {})
-        if not rename and not drop and not add and not widen:
-            raise ValueError("alter_schema: nothing to do")
-        cur = self.current()
-        if cur is None:
-            raise ValueError(f"{self.root} has no snapshot yet")
-        for cname, cexpr in (cur.get("constraints") or {}).items():
-            for col in list(drop) + list(rename):
-                if re.search(rf"\b{re.escape(col)}\b", cexpr, re.I):
-                    # case-insensitive like Spark's column resolution —
-                    # a case-mismatched guard would let the rename
-                    # publish and wedge every later commit on an
-                    # unresolved constraint column (review r12)
-                    raise ValueError(
-                        f"column {col!r} is referenced by CHECK "
-                        f"constraint {cname!r} ({cexpr}) — DROP the "
-                        "constraint before altering the column"
-                    )
-        if "schema" not in cur:
-            if spark is None:
-                raise ValueError(
-                    f"first alter_schema on {self.root} needs spark= to "
-                    "bind the current parquet schema into the record"
-                )
-            cur = dict(cur)
-            cur["schema"] = spark.read.parquet(cur["dir"]).schema.jsonValue()
-        new_version = self._next_version()
-        meta = _alter_schema_meta(
-            cur, self.root, drop, rename, add, widen, new_version
-        )
-        record = {
-            "version": new_version,
-            "dir": cur["dir"],  # zero data movement: the dir is shared
-            "ts": time.time(),
-            "schema": meta["schema"],
-            "next_fid": meta["next_fid"],
-            "operation": "alter_schema",
-            "altered": meta["altered"],
-        }
-        if cur.get("data_schema"):
-            # the shared dir's PHYSICAL schema is unchanged by DDL —
-            # carry it for the purge paths' schema-bound raw reads
-            record["data_schema"] = cur["data_schema"]
-        if meta["dropped"]:
-            record["dropped"] = meta["dropped"]
-        if meta["renames"]:
-            record["renames"] = meta["renames"]
-        if meta["shadowed"]:
-            record["shadowed"] = meta["shadowed"]
-        if cur.get("constraints"):
-            # table properties carry (constrained columns can't be
-            # dropped/renamed — guarded above)
-            record["constraints"] = cur["constraints"]
-        return self._publish_commit(
-            record,
-            # token CAS (r12): the record SHARES cur's data dir — an
-            # in-place purge landing in between would delete it
-            expected_head=(cur["version"], cur.get("purged_ts") or 0),
-        )
-
-    def delete_where(self, spark: SparkSession, condition) -> dict:
-        """Row-level ``DELETE WHERE`` on the plain snapshot layout —
-        the one-dir twin of ``VersionedBucketMirror.delete_where``
-        (DML symmetry across both layouts, like ``alter_schema``).
-        The layout has no bucket granularity, so a match anywhere
-        rewrites the whole state dir (exactly what every ``commit``
-        does); the value over hand-rolled read-filter-commit is the
-        counted receipt, SQL NULL semantics (NULL condition keeps the
-        row), the no-op short-circuit (zero matches publishes
-        nothing), and the purge-aware CAS token."""
-        cond = F.expr(condition) if isinstance(condition, str) else condition
-        hit = F.coalesce(cond.cast("boolean"), F.lit(False))
-        cur = self.current()
-        if cur is None:
-            raise ValueError(f"{self.root} has no snapshot yet")
-        df = self.read(spark)
-        n_hit = df.filter(hit).count()
-        if n_hit == 0:
-            rec = dict(cur)
-            rec["rows_deleted"] = 0
-            return rec
-        rec = self.commit(
-            df.filter(~hit),
-            meta={"operation": "delete_where"},
-            expected_version=(cur["version"], cur.get("purged_ts") or 0),
-        )
-        rec["rows_deleted"] = n_hit
-        return rec
-
-    def insert_rows(self, spark: SparkSession, rows: DataFrame) -> dict:
-        """``INSERT INTO`` append on the plain snapshot layout (r13;
-        the most common DML verb — Iceberg INSERT INTO appends, it
-        does not upsert). ``rows`` must already be aligned to the
-        table's schema (the SQL front-end does the column-list /
-        NULL-fill / cast work). New state = current ∪ rows in one
-        commit: CHECK constraints validate the written bytes before
-        the pointer moves (``commit``'s existing gate), and the
-        purge-aware CAS token makes a concurrent commit surface as
-        :class:`CommitConflict`, never a lost append."""
-        cur = self.current()
-        if cur is None:
-            # first insert into a registered-but-empty table: the rows
-            # ARE the initial state
-            n_new = rows.count()
-            rec = self.commit(rows, meta={"operation": "insert_into"})
-            rec["rows_inserted"] = n_new
-            return rec
-        df = self.read(spark)
-        extra = [c for c in rows.columns if c not in df.columns]
-        if extra:
-            raise ValueError(
-                f"insert_rows got unknown column(s) {extra} "
-                f"(table columns: {df.columns})"
-            )
-        n_new = rows.count()
-        if n_new == 0:
-            rec = dict(cur)
-            rec["rows_inserted"] = 0
-            return rec
-        rec = self.commit(
-            df.unionByName(rows, allowMissingColumns=True),
-            meta={"operation": "insert_into"},
-            expected_version=(cur["version"], cur.get("purged_ts") or 0),
-        )
-        rec["rows_inserted"] = n_new
-        return rec
-
-    def update_where(
-        self, spark: SparkSession, condition, assignments: dict
-    ) -> dict:
-        """Row-level ``UPDATE SET ... WHERE`` on the plain snapshot
-        layout — semantics identical to
-        ``VersionedBucketMirror.update_where``: simultaneous
-        assignment (every right-hand side reads pre-update values),
-        values cast to the column's existing type, NULL condition
-        leaves the row unchanged, zero matches publishes nothing."""
-        cond = F.expr(condition) if isinstance(condition, str) else condition
-        hit = F.coalesce(cond.cast("boolean"), F.lit(False))
-        if not assignments:
-            raise ValueError("update_where requires at least one assignment")
-        cur = self.current()
-        if cur is None:
-            raise ValueError(f"{self.root} has no snapshot yet")
-        df = self.read(spark)
-        missing = [c for c in assignments if c not in df.columns]
-        if missing:
-            raise ValueError(
-                f"update_where assigns unknown column(s) {missing} "
-                f"(table columns: {df.columns})"
-            )
-        n_hit = df.filter(hit).count()
-        if n_hit == 0:
-            rec = dict(cur)
-            rec["rows_updated"] = 0
-            return rec
-        types = {f.name: f.dataType for f in df.schema.fields}
-        projected = []
-        for c in df.columns:
-            if c in assignments:
-                v = assignments[c]
-                rhs = F.expr(v) if isinstance(v, str) else v
-                projected.append(
-                    F.when(hit, rhs.cast(types[c]))
-                    .otherwise(F.col(c))
-                    .alias(c)
-                )
-            else:
-                projected.append(F.col(c))
-        rec = self.commit(
-            df.select(*projected),
-            meta={"operation": "update_where"},
-            expected_version=(cur["version"], cur.get("purged_ts") or 0),
-        )
-        rec["rows_updated"] = n_hit
-        return rec
+        """Commit ``fn(state of cur)`` as a full-state replace based on
+        ``cur`` (``TableOps``): a concurrent commit or purge raises."""
+        state = self._read_entry(spark, cur) if cur is not None else None
+        return self.commit(fn(state), meta=meta, expected_version=_token(cur))
 
     def commit(
         self,
@@ -473,8 +289,10 @@ class ParquetStateTable(TableOps):
         FROM (a based commit, e.g. a merge) — the publish then raises
         :class:`CommitConflict` if the table advanced past it, instead of
         silently clobbering the concurrent commit (r11 optimistic
-        concurrency). Without it the commit is blind full-state replace
-        and retries internally on conflicts."""
+        concurrency). Pass the basis record's ``_token`` so a purge of
+        the basis also conflicts; a bare version compares the version
+        alone. Without it the commit is blind full-state replace and
+        retries internally on conflicts."""
         _check_meta(meta)
         cur_head = self.current()
         cons = (cur_head or {}).get("constraints") or {}
@@ -698,6 +516,4 @@ def cdc_merge_batch(
     # based commit (r11): the new state was derived FROM ``basis`` — a
     # concurrent commit in between must surface as CommitConflict, and
     # the streaming caller's checkpoint replay re-derives idempotently
-    return mirror.commit(
-        new_state, expected_version=basis["version"] if basis else -1
-    )
+    return mirror.commit(new_state, expected_version=_token(basis))

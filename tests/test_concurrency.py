@@ -34,7 +34,10 @@ import threading
 import pytest
 from pyspark.sql import functions as F
 
-from tabular_cdc_bootstrapper_spark.streaming._protocol import CommitConflict
+from tabular_cdc_bootstrapper_spark.streaming._protocol import (
+    CommitConflict,
+    SnapshotLog,
+)
 from tabular_cdc_bootstrapper_spark.streaming.state_table import (
     ParquetStateTable,
 )
@@ -907,3 +910,120 @@ def test_purge_rerun_repairs_a_stale_pointer(spark, tmp_path, layout):
     assert 1 not in {r.k for r in t.read(spark).collect()}
     assert len(t.read(spark).collect()) == 15
     assert any(not os.path.isdir(d) for d in old_dirs)
+
+
+# ------------------------------------- purge between basis and publish
+
+
+def _purge_before_publish(monkeypatch, purge):
+    """Run ``purge()`` at the first ``SnapshotLog.publish`` after this
+    call: the purge lands after a based commit read its basis and
+    before that commit's CAS. Returns the list the firing appends to."""
+    real = SnapshotLog.publish
+    fired = []
+
+    def publish(self, *args, **kwargs):
+        if not fired:
+            fired.append(True)
+            purge()
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(SnapshotLog, "publish", publish)
+    return fired
+
+
+_CDC_SCHEMA = "k long, v long, ts long, op string"
+
+
+def _cdc_target():
+    from tabular_cdc_bootstrapper_spark.config import CdcTarget
+
+    return CdcTarget(source_uri="file:///x", key_column="k", ts_column="ts")
+
+
+@pytest.mark.parametrize("writer", ["cdc_merge_batch", "merge_into_table"])
+def test_snapshot_merge_conflicts_with_a_purge_of_its_basis(
+    spark, tmp_path, monkeypatch, writer
+):
+    """A purge rewrites the head without bumping its version: a merge
+    derived from the pre-purge head must not publish over it (that head
+    would serve the purged key again)."""
+    from tabular_cdc_bootstrapper_spark.operators.merge import (
+        merge_into_table,
+    )
+    from tabular_cdc_bootstrapper_spark.streaming.state_table import (
+        cdc_merge_batch,
+    )
+
+    root = str(tmp_path / "t")
+    t = ParquetStateTable(root, keep_versions=10)
+    t.commit(
+        spark.createDataFrame(
+            [(i, 0, 0, "I") for i in range(16)], _CDC_SCHEMA
+        )
+    )
+    other = ParquetStateTable(root, keep_versions=10)
+    keys = spark.createDataFrame([(7,)], "k long")
+    fired = _purge_before_publish(
+        monkeypatch, lambda: other.purge_keys(spark, keys, "k")
+    )
+    batch = spark.createDataFrame([(3, 9, 1, "U")], _CDC_SCHEMA)
+    with pytest.raises(CommitConflict):
+        if writer == "cdc_merge_batch":
+            cdc_merge_batch(spark, batch, t, _cdc_target())
+        else:
+            merge_into_table(spark, t, batch, on=["k"])
+    assert fired
+    assert 7 not in {r.k for r in t.read(spark).collect()}
+
+
+@pytest.mark.parametrize("purged", ["other_bucket", "touched_bucket"])
+def test_mor_merge_rebases_past_a_purge_of_other_buckets(
+    spark, tmp_path, monkeypatch, purged
+):
+    """Merge-on-read ``merge_batch`` appends deltas to the manifest it
+    read. A purge landing before its publish rewrites bucket dirs in
+    place: a purge of other buckets rebases (the manifest must name the
+    purge's dirs, not the removed ones), a purge of a bucket the batch
+    touches raises."""
+    root = str(tmp_path / "m")
+    m = VersionedBucketMirror(
+        root, n_buckets=4, key_col="k", keep_versions=10,
+        merge_on_read=True,
+    )
+    m.initialize(
+        spark.createDataFrame(
+            [(i, 0, 0, "I") for i in range(16)], _CDC_SCHEMA
+        )
+    )
+    other = VersionedBucketMirror(
+        root, n_buckets=4, key_col="k", keep_versions=10,
+        merge_on_read=True,
+    )
+    bucket = {
+        r.k: r.b
+        for r in spark.range(16)
+        .select(F.col("id").alias("k"))
+        .select("k", m._bucket(F.col("k")).alias("b"))
+        .collect()
+    }
+    same = purged == "touched_bucket"
+    key = next(
+        k for k in range(16)
+        if k != 7 and (bucket[k] == bucket[7]) == same
+    )
+    keys = spark.createDataFrame([(7,)], "k long")
+    fired = _purge_before_publish(
+        monkeypatch, lambda: other.purge_keys(spark, keys)
+    )
+    batch = spark.createDataFrame([(key, 9, 1, "U")], _CDC_SCHEMA)
+    if same:
+        with pytest.raises(CommitConflict):
+            m.merge_batch(batch, _cdc_target())
+    else:
+        m.merge_batch(batch, _cdc_target())
+    assert fired
+    got = {r.k: r.v for r in m.read(spark).collect()}
+    assert 7 not in got
+    assert got[key] == (0 if same else 9)
+    assert len(got) == 15

@@ -156,7 +156,7 @@ def test_delete_where_conflict_on_overlapping_commit(spark, tmp_path):
         root, n_buckets=8, key_col="id", keep_versions=10
     )
 
-    planned = VersionedBucketMirror._dml_matched_buckets
+    planned = VersionedBucketMirror._dml_scope
     fired = []
 
     def race(self, spk, cur, hit, prune):
@@ -174,11 +174,11 @@ def test_delete_where_conflict_on_overlapping_commit(spark, tmp_path):
     rows = {r["id"]: r["b"] for r in b17.collect()}
     victim_id = next(i for i in rows if i != 17 and rows[i] == rows[17])
     try:
-        VersionedBucketMirror._dml_matched_buckets = race
+        VersionedBucketMirror._dml_scope = race
         with pytest.raises(CommitConflict):
             m.delete_where(spark, "id = 17")
     finally:
-        VersionedBucketMirror._dml_matched_buckets = planned
+        VersionedBucketMirror._dml_scope = planned
     # re-run against the new head succeeds and both deletes are in effect
     rec = m.delete_where(spark, "id = 17")
     assert rec["rows_deleted"] == 1
@@ -202,7 +202,7 @@ def test_delete_where_disjoint_concurrent_commit_rebases(spark, tmp_path):
     rows = {r["id"]: r["b"] for r in b.collect()}
     disjoint_id = next(i for i in rows if rows[i] != rows[17])
 
-    planned = VersionedBucketMirror._dml_matched_buckets
+    planned = VersionedBucketMirror._dml_scope
     fired = []
 
     def race(self, spk, cur, hit, prune):
@@ -213,10 +213,10 @@ def test_delete_where_disjoint_concurrent_commit_rebases(spark, tmp_path):
         return matched, n
 
     try:
-        VersionedBucketMirror._dml_matched_buckets = race
+        VersionedBucketMirror._dml_scope = race
         rec = m.delete_where(spark, "id = 17")
     finally:
-        VersionedBucketMirror._dml_matched_buckets = planned
+        VersionedBucketMirror._dml_scope = planned
     assert rec["rows_deleted"] == 1
     got = m.read(spark)
     assert got.filter(f"id IN (17, {disjoint_id})").count() == 0
@@ -278,3 +278,49 @@ def test_plain_layout_dml_symmetry(spark, tmp_path):
         t.update_where(spark, "grp = 2", {"nope": "1"})
     # time travel: pre-DML snapshot intact
     assert t.read_version(spark, rd["version"] - 1).count() == 600
+
+
+def test_plain_layout_delete_conflicts_when_a_purge_removes_its_basis(
+    spark, tmp_path, monkeypatch
+):
+    """A purge landing between the DELETE's match count and its write
+    removes the dir the rewrite reads: the statement must surface as
+    CommitConflict (re-run against the purged head), not a raw Spark
+    read error."""
+    root = str(tmp_path / "t")
+    t = ParquetStateTable(root, keep_versions=10)
+    t.commit(_frame(spark))
+    other = ParquetStateTable(root, keep_versions=10)
+    real_commit = ParquetStateTable.commit
+    fired = []
+
+    def commit(self, *args, **kwargs):
+        if not fired:
+            fired.append(True)
+            other.purge_keys(
+                spark, spark.createDataFrame([(7,)], "id long"), "id"
+            )
+        return real_commit(self, *args, **kwargs)
+
+    monkeypatch.setattr(ParquetStateTable, "commit", commit)
+    with pytest.raises(CommitConflict):
+        t.delete_where(spark, "grp = 5")
+    assert fired
+    monkeypatch.setattr(ParquetStateTable, "commit", real_commit)
+    rec = t.delete_where(spark, "grp = 5")
+    assert rec["rows_deleted"] == _frame(spark).filter("grp = 5").count()
+    assert t.read(spark).count() == 600 - rec["rows_deleted"] - 1
+
+
+def test_mirror_insert_refuses_an_unknown_column(spark, mirror):
+    """The mirror refuses a column its schema lacks, like the snapshot
+    table: the insert publishes nothing and the schema is unchanged."""
+    before = mirror.current()
+    rows = spark.createDataFrame(
+        [(10_000, 1, 1.0, True, "x")],
+        "id long, grp long, val double, flag boolean, extra string",
+    )
+    with pytest.raises(ValueError, match="unknown column"):
+        mirror.insert_rows(spark, rows)
+    assert mirror.current() == before
+    assert "extra" not in mirror.read(spark).columns

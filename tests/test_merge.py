@@ -173,7 +173,7 @@ import pytest as _pytest
 
 
 @_pytest.mark.parametrize(
-    "layout", ["snapshot", "bucketed", "bucketed_versioned"]
+    "layout", ["snapshot", "bucketed_versioned"]
 )
 def test_merge_into_table_commits_across_layouts(spark, tmp_path, layout):
     """VERDICT r8 task 4: a general MERGE lands as ONE commit on every
@@ -214,13 +214,13 @@ def test_merge_into_table_commits_across_layouts(spark, tmp_path, layout):
 
 
 @_pytest.mark.parametrize(
-    "layout", ["snapshot", "bucketed", "bucketed_versioned"]
+    "layout", ["snapshot", "bucketed_versioned"]
 )
 def test_merge_into_table_schema_evolution(spark, tmp_path, layout):
     """MERGE with evolve_schema: a source-only column joins the target
     schema; untouched rows read NULL, matched rows update from source,
-    inserted rows carry it — across all three layouts (bucketed layouts
-    rewrite only touched buckets; mergeSchema reads span versions)."""
+    inserted rows carry it — on both layouts (the bucketed mirror
+    rewrites only touched buckets; mergeSchema reads span versions)."""
     from tabular_cdc_bootstrapper_spark.operators.merge import (
         merge_into_table,
         src,
@@ -344,12 +344,12 @@ def test_merge_meta_recorded_on_versioned_bucket_mirror(spark, tmp_path):
 
 
 @_pytest.mark.parametrize(
-    "layout", ["snapshot", "bucketed", "bucketed_versioned"]
+    "layout", ["snapshot", "bucketed_versioned"]
 )
 def test_merge_into_table_type_widening(spark, tmp_path, layout):
     """widen_types=True (VERDICT r10 task 9): an int target column whose
     source grew to bigint (value beyond 2^31 proves the need) widens
-    losslessly on merge, across all three layouts; pre-merge snapshots
+    losslessly on merge, on both layouts; pre-merge snapshots
     keep the narrow type and the CDF reads through the boundary."""
     from pyspark.sql import functions as F
 

@@ -12,9 +12,10 @@ The one exception is ``streaming.pipeline.run_cdc_pipeline_available_now``:
 the CLI resolves the runner through ``pipeline`` at call time.
 
 The same scan pins the shared table surface: the snapshot, ref, property
-and maintenance methods, the GDPR purge protocol and per-commit
-retention are defined once, in ``_protocol.py``, and in neither table
-layout's module. It also pins how JSON metadata reaches disk: every
+and maintenance methods, row-level DML, ALTER, the GDPR purge protocol
+and per-commit retention are defined once, in ``_protocol.py``, and in
+neither table layout's module; and the CAS token of a based commit is
+built there alone. It also pins how JSON metadata reaches disk: every
 ``json.dump`` in the package is either the body of ``_replace_json``
 (temp file + atomic rename) or an exclusive create (mode ``"x"``).
 """
@@ -136,6 +137,7 @@ TABLE_OPS_METHODS = {
     "constraints", "add_constraint", "drop_constraint", "_publish_properties",
     "rollback", "expire_snapshots", "clone_to", "write_audit_publish",
     "_purge_keys_locked", "_expire",
+    "delete_where", "update_where", "insert_rows", "alter_schema",
 }
 
 
@@ -159,6 +161,34 @@ def test_table_surface_is_defined_once_in_protocol():
     defs = _method_defs(streaming / "_protocol.py", "TableOps")
     counts = {name: defs.count(name) for name in TABLE_OPS_METHODS}
     assert counts == {name: 1 for name in TABLE_OPS_METHODS}
+
+
+def test_cas_tokens_are_built_only_in_protocol():
+    """A based commit's CAS token ``(version, purged_ts)`` comes from
+    ``_protocol._token`` alone: a hand-built token that drops the
+    ``purged_ts`` half lets a commit publish over a purge of its basis.
+    So no package module but ``streaming/_protocol.py`` reads
+    ``purged_ts`` off a record."""
+    protocol = REPO / PKG / "streaming" / "_protocol.py"
+    reads = []
+    for path in _py_files(PKG):
+        if path == protocol:
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            key = None
+            if (
+                isinstance(node, ast.Call)
+                and getattr(node.func, "attr", None) == "get"
+                and node.args
+            ):
+                key = node.args[0]
+            elif isinstance(node, ast.Subscript) and isinstance(
+                node.ctx, ast.Load
+            ):
+                key = node.slice
+            if isinstance(key, ast.Constant) and key.value == "purged_ts":
+                reads.append(f"{path.relative_to(REPO)}:{node.lineno}")
+    assert reads == []
 
 
 def _opens_exclusive(item: ast.withitem, fh: ast.expr | None) -> bool:
