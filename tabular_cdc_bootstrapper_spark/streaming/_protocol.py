@@ -1984,29 +1984,42 @@ class TableOps:
             )
         if not chain:
             return dict(cur)  # everything staged was a GC'd orphan
-        # marker BEFORE the first strip: the only witness that ref-less
-        # window entries on a re-run are ours
-        os.makedirs(os.path.join(self.root, "_ff"), exist_ok=True)
-        _replace_json(
-            self._ff_marker_path(name),
-            {"name": name, "base": b["base"], "head": b["head"],
-             "ts": time.time()},
-        )
-        head_rec = None
-        for e in chain:
-            rec = {k: v for k, v in e.items() if k != "ref"}
-            if "ref" in e:
-                _replace_json(self._log._entry_path(rec["version"]), rec)
-            head_rec = rec
-        # main must not have advanced while we stripped (CAS re-check)
-        cur2 = self.current()
-        if (cur2["version"] if cur2 else -1) != cur_v:
-            raise CommitConflict(
-                f"cannot fast-forward {name!r}: main advanced during the "
-                "publish — histories diverged"
+        # a purge rewrites the window's entries and main's head in place
+        # at unchanged versions, then deletes the old dirs: strip from a
+        # re-read taken under the purge lock, so a purge that landed
+        # since the read above is folded in and a later one waits
+        with _purge_lock(self.root):
+            cur = self.current()
+            if (cur["version"] if cur else -1) != cur_v:
+                raise CommitConflict(
+                    f"cannot fast-forward {name!r}: main advanced during "
+                    "the publish — histories diverged"
+                )
+            fresh = {e["version"]: e for e in self._log.entries()}
+            # marker BEFORE the first strip: the only witness that
+            # ref-less window entries on a re-run are ours
+            os.makedirs(os.path.join(self.root, "_ff"), exist_ok=True)
+            _replace_json(
+                self._ff_marker_path(name),
+                {"name": name, "base": b["base"], "head": b["head"],
+                 "ts": time.time()},
             )
-        _replace_json(self._log.pointer_path, head_rec)
-        self._clear_ff_marker(name)
+            head_rec = None
+            for e in chain:
+                e = fresh[e["version"]]
+                rec = {k: v for k, v in e.items() if k != "ref"}
+                if "ref" in e:
+                    _replace_json(self._log._entry_path(rec["version"]), rec)
+                head_rec = rec
+            # main must not have moved while we stripped (CAS re-check
+            # on the purge-aware token, not the version alone)
+            if _token(self.current()) != _token(cur):
+                raise CommitConflict(
+                    f"cannot fast-forward {name!r}: main advanced during "
+                    "the publish — histories diverged"
+                )
+            _replace_json(self._log.pointer_path, head_rec)
+            self._clear_ff_marker(name)
         self._expire(head_rec)
         return head_rec
 

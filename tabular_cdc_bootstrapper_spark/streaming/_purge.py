@@ -16,11 +16,12 @@ n_dirs independent scans behind one driver loop (guide §2.6).
    re-run property is preserved exactly (clean dirs are never
    rewritten, never deleted, and never chained through purge outputs);
 2. one broadcast anti-join over the hit dirs written ``partitionBy``
-   the per-dir id into a staging dir (``repartition`` by the id keeps
-   one file per dir), then a driver-side rename installs each partition
-   under its target immutable name. A dir whose partition is absent was
-   emptied by the purge — the caller drops it from its records, or,
-   with ``keep_empty``, it is written as an empty typed dir.
+   the per-dir id into a staging dir (a ``repartition`` by the id, sized
+   by ``write_tasks``, keeps one file per dir), then a driver-side
+   rename installs each partition under its target immutable name. A
+   dir whose partition is absent was emptied by the purge — the caller
+   drops it from its records, or, with ``keep_empty``, it is written as
+   an empty typed dir.
 
 Dirs are grouped by exact schema before the union (merge-on-read
 keys-only delta slices and post-ALTER snapshots must keep their own
@@ -50,6 +51,8 @@ from typing import Callable, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from tabular_cdc_bootstrapper_spark.streaming._sizing import write_tasks
 
 
 def _footer_schema_key(d: str) -> str | None:
@@ -178,7 +181,9 @@ def _purge_group(
     try:
         (
             u2.join(F.broadcast(probe), cond(u2), "left_anti")
-            .repartition(F.col("__pdir"))
+            .repartition(
+                write_tasks(spark, len(hit_dirs)), F.col("__pdir")
+            )
             .write.partitionBy("__pdir")
             .mode("errorifexists")
             .parquet(stg)

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from tabular_cdc_bootstrapper_spark.streaming._sizing import write_tasks
 from tabular_cdc_bootstrapper_spark.streaming._stats import footer_bucket_stats
 from tabular_cdc_bootstrapper_spark.operators.cdc import apply_changelog
 from tabular_cdc_bootstrapper_spark.streaming._protocol import (
@@ -731,14 +732,23 @@ class VersionedBucketMirror(VersionedBucketMirrorOps, TableOps):
                 rec.setdefault("deltas", {})[b] = ns
         return rec
 
+    def _staged_dirs(self, touched: Sequence[int] | None) -> int | None:
+        """Dir count of a staged write, for ``write_tasks``: the touched
+        buckets; on a full load every bucket, or None (data-driven) under
+        a transform spec."""
+        if touched is not None:
+            return len(touched)
+        return self.n_buckets if self.partition_spec[0] == "bucket" else None
+
     def _stage(
         self, spark: SparkSession, df: DataFrame, wdir: str
     ) -> tuple[DataFrame, dict]:
         self._sync_spec()
         (
             df.withColumn("bucket", self._row_partition(df))
-            # explicit N (r15): see _write_parallelism
-            .repartition(self._write_parallelism(df), F.col("bucket"))
+            .repartition(
+                write_tasks(spark, self._staged_dirs(None)), F.col("bucket")
+            )
             .write.mode("errorifexists")
             .partitionBy("bucket")
             .parquet(wdir)
@@ -775,21 +785,14 @@ class VersionedBucketMirror(VersionedBucketMirrorOps, TableOps):
     def initialize(
         self,
         df: DataFrame,
-        files_per_bucket: int = 1,
         max_records_per_file: int | None = None,
     ) -> dict:
-        """Bulk load. ``files_per_bucket > 1`` splits each bucket's write
-        across that many independently-salted tasks — the knob for big
-        buckets at the 100 TB design point, where one-task-per-bucket
-        serializes the load; ``max_records_per_file`` bounds file size
-        deterministically. The resulting multi-file bucket dirs are what
+        """Bulk load. ``max_records_per_file`` bounds file size
+        deterministically; the resulting multi-file bucket dirs are what
         ``rewrite_data_files`` later compacts once the table turns
         read-heavy."""
         return self._commit_staged(
-            df,
-            touched=None,
-            files_per_bucket=files_per_bucket,
-            max_records_per_file=max_records_per_file,
+            df, touched=None, max_records_per_file=max_records_per_file
         )
 
     def _commit_staged(
@@ -798,7 +801,6 @@ class VersionedBucketMirror(VersionedBucketMirrorOps, TableOps):
         touched: Sequence[int] | None,
         key_col: str | None = None,
         meta: dict | None = None,
-        files_per_bucket: int = 1,
         max_records_per_file: int | None = None,
         branch: str | None = None,
         basis=_UNSET,
@@ -820,15 +822,10 @@ class VersionedBucketMirror(VersionedBucketMirrorOps, TableOps):
         what they replaced), NEVER for a merge (whose staged buckets
         carry new data that must not be silently discarded).
 
-        Write shaping for big buckets: ``files_per_bucket`` splits each
-        bucket's write across that many tasks via an independent key
-        salt (a salt from the SAME hash as the bucket id would correlate
-        whenever gcd(n_buckets, files) > 1 and collapse back to one
-        task; note AQE may still coalesce small salted partitions —
-        parallelism is best-effort, sizing is not); ``max_records_per_
-        file`` is the deterministic file-size bound (Spark's own
-        ``maxRecordsPerFile``), the knob that actually guarantees a
-        fragmented layout for ``rewrite_data_files`` to recover."""
+        ``max_records_per_file`` is the deterministic file-size bound
+        (Spark's own ``maxRecordsPerFile``), the knob that guarantees a
+        fragmented layout for ``rewrite_data_files`` to recover; without
+        it every staged bucket dir is one file (``write_tasks``)."""
         _check_meta(meta)
         key = key_col or self.key_col
         version = self._log.next_version()
@@ -848,22 +845,10 @@ class VersionedBucketMirror(VersionedBucketMirrorOps, TableOps):
             staged_df = with_zorder_key(
                 staged_df, list(zorder_cols), out_col="__zval"
             )
-        n_write = self._write_parallelism(df, touched)
-        if files_per_bucket > 1:
-            salt = F.pmod(
-                F.xxhash64(F.col(key), F.lit("fpb-salt")),
-                F.lit(int(files_per_bucket)),
-            )
-            staged_df = staged_df.repartition(
-                max(n_write, n_write * int(files_per_bucket)),
-                F.col("bucket"),
-                salt,
-            )
-        else:
-            # explicit N (r15): see _write_parallelism — a bare
-            # repartition("bucket") lets AQE coalesce the write exchange
-            # by bytes, serializing every partition dir behind one task
-            staged_df = staged_df.repartition(n_write, F.col("bucket"))
+        staged_df = staged_df.repartition(
+            write_tasks(df.sparkSession, self._staged_dirs(touched)),
+            F.col("bucket"),
+        )
         if zorder_cols:
             staged_df = staged_df.sortWithinPartitions(
                 "bucket", "__zval"
@@ -1262,9 +1247,9 @@ class VersionedBucketMirror(VersionedBucketMirrorOps, TableOps):
             staged_df = slice_df.withColumn(
                 "bucket", self._partition_for(key, slice_df)
             )
-            # explicit N (r15): see _write_parallelism
             staged_df = staged_df.repartition(
-                self._write_parallelism(slice_df, touched), F.col("bucket")
+                write_tasks(slice_df.sparkSession, len(touched)),
+                F.col("bucket"),
             )
             if self.sort_cols and kind == "delta":
                 staged_df = staged_df.sortWithinPartitions(

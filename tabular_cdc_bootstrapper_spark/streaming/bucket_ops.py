@@ -37,28 +37,6 @@ class VersionedBucketMirrorOps:
     docstring); every method binds to the core half's commit and
     read machinery via ``self``."""
 
-    def _write_parallelism(self, df, touched=None) -> int:
-        """Explicit task count for a staged ``partitionBy("bucket")``
-        write (r15 optimization round): the cost driver of a dynamic-
-        partition write is the number of OUTPUT DIRS (each pays a fixed
-        parquet-writer setup + commit), not the shuffle bytes — but a
-        bare ``repartition("bucket")`` lets AQE coalesce the exchange by
-        SIZE, which at small staged volumes collapses every dir behind
-        ONE task writing them sequentially (profiled: 1.75 s of a 3.3 s
-        merge was one task writing ~80 month dirs). Sizing the exchange
-        to max(session parallelism, expected dir count) keeps one-ish
-        task per dir — the Iceberg hash-distribution write shape — at
-        every scale; per-key partition splitting is what
-        ``files_per_bucket`` is for."""
-        sc = df.sparkSession.sparkContext
-        if touched is not None:
-            dirs = len(touched)
-        elif self.partition_spec[0] == "bucket":
-            dirs = self.n_buckets
-        else:
-            dirs = 0  # transform-spec full load: dir count is data-driven
-        return max(sc.defaultParallelism, int(dirs))
-
     def rewrite_data_files(
         self,
         spark: SparkSession,

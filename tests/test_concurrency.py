@@ -1027,3 +1027,66 @@ def test_mor_merge_rebases_past_a_purge_of_other_buckets(
     assert 7 not in got
     assert got[key] == (0 if same else 9)
     assert len(got) == 15
+
+
+@pytest.mark.parametrize("layout", ["bucketed_versioned", "snapshot"])
+def test_fast_forward_folds_in_a_purge_of_its_window(
+    spark, tmp_path, monkeypatch, layout
+):
+    """``fast_forward`` strips the ``ref`` of the branch window's entries
+    and swaps main's pointer to the head. A purge that lands after it
+    read the window rewrites those entries and main's head at unchanged
+    versions and deletes the old dirs: the publish must fold the purge
+    in, not write the pre-purge records back (main would then name
+    removed dirs and every read would fail)."""
+    base = spark.createDataFrame(
+        [(i, 0, 0, "I") for i in range(16)], _CDC_SCHEMA
+    )
+    if layout == "snapshot":
+        root = str(tmp_path / "t")
+        t = ParquetStateTable(root, keep_versions=10)
+        t.commit(base)
+        t.branch("b")
+        t.commit(base.withColumn("v", F.lit(1)), branch="b")
+        other = ParquetStateTable(root, keep_versions=10)
+
+        def purge():
+            other.purge_keys(spark, keys, "k")
+
+    else:
+        root = str(tmp_path / "m")
+        t = VersionedBucketMirror(
+            root, n_buckets=4, key_col="k", keep_versions=10
+        )
+        t.initialize(base)
+        t.branch("b")
+        t.merge_batch(
+            base.withColumn("v", F.lit(1)).withColumn("ts", F.lit(1)),
+            _cdc_target(),
+            branch="b",
+        )
+        other = VersionedBucketMirror(
+            root, n_buckets=4, key_col="k", keep_versions=10
+        )
+
+        def purge():
+            other.purge_keys(spark, keys)
+
+    keys = spark.createDataFrame([(7,)], "k long")
+    real = SnapshotLog.entries
+    fired = []
+
+    def entries(self):
+        out = real(self)
+        if not fired:  # the first log read inside fast_forward
+            fired.append(True)
+            purge()
+        return out
+
+    monkeypatch.setattr(SnapshotLog, "entries", entries)
+    head = t.fast_forward("b")
+    monkeypatch.undo()
+    assert fired and head["version"] == 1 and "ref" not in head
+    got = {r.k: r.v for r in t.read(spark).collect()}
+    assert got == {k: 1 for k in range(16) if k != 7}
+    assert 7 not in {r.k for r in t.read_version(spark, 0).collect()}

@@ -18,6 +18,9 @@ neither table layout's module; and the CAS token of a based commit is
 built there alone. It also pins how JSON metadata reaches disk: every
 ``json.dump`` in the package is either the body of ``_replace_json``
 (temp file + atomic rename) or an exclusive create (mode ``"x"``).
+And it pins the size of every staged bucket write: each ``repartition``
+in the mirror and purge modules takes its count from
+``_sizing.write_tasks``, the one sizing rule.
 """
 
 from __future__ import annotations
@@ -242,3 +245,28 @@ def test_json_writes_are_atomic_or_exclusive():
             else:
                 torn.append(f"{path.relative_to(REPO)}:{node.lineno}")
     assert torn == []
+
+
+def test_staged_writes_are_sized_by_the_one_rule():
+    """Every ``repartition`` of the mirror and purge modules passes
+    ``write_tasks(...)`` as its count: a bare ``repartition(col)`` lets
+    AQE coalesce a staged write into one task, and a count sized to the
+    dir count queues one task per dir behind the slots."""
+    streaming = REPO / PKG / "streaming"
+    calls, unsized = 0, []
+    for name in ("bucket_mirror.py", "bucket_ops.py", "_purge.py"):
+        for node in ast.walk(ast.parse((streaming / name).read_text())):
+            if not (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "repartition"
+            ):
+                continue
+            calls += 1
+            count = node.args[0] if node.args else None
+            if not (
+                isinstance(count, ast.Call)
+                and getattr(count.func, "id", None) == "write_tasks"
+            ):
+                unsized.append(f"{name}:{node.lineno}")
+    assert calls >= 4 and unsized == []

@@ -889,3 +889,77 @@ def test_timestamp_stats_keep_midnight_rows_on_date_grain_bounds(
     # and a point set on the boundary day keeps too (IN-list path)
     kept, _ = m._pruned_buckets("t", points=["2024-01-31"])
     assert kept == ["0"]
+
+
+# --- staged write shape: one sizing rule (streaming/_sizing.py) --------------
+
+
+def _result_stage_tasks(spark, fn) -> list[int]:
+    """Run ``fn`` under a fresh job group and return the task count of
+    the result stage of every job it ran that read a shuffle — the
+    staged bucket write (exchange + ``partitionBy`` write) is one."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"write-shape-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    out = []
+    for jid in tracker.getJobIdsForGroup(group):
+        stages = sorted(tracker.getJobInfo(jid).stageIds)
+        if len(stages) > 1:
+            out.append(tracker.getStageInfo(stages[-1]).numTasks)
+    return out
+
+
+def _one_parquet_file(d: str) -> bool:
+    return sum(n.endswith(".parquet") for n in os.listdir(d)) == 1
+
+
+@pytest.mark.parametrize("op", ["initialize", "cow_merge", "mor_merge"])
+def test_staged_write_runs_at_most_slot_count_tasks(spark, tmp_path, op):
+    """A write into all 64 buckets of a mirror runs at most
+    ``defaultParallelism`` tasks (not one per bucket dir), and every
+    installed bucket dir still holds exactly one file: the exchange
+    hashes on the bucket, so each bucket lands in one task."""
+    m = VersionedBucketMirror(
+        str(tmp_path / "m"),
+        n_buckets=64,
+        key_col="id",
+        keep_versions=10,
+        merge_on_read=op == "mor_merge",
+    )
+    rows = [(i, f"v0-{i}", 0, "I") for i in range(1024)]
+    if op == "initialize":
+        tasks = _result_stage_tasks(
+            spark, lambda: m.initialize(_batch(spark, rows))
+        )
+        rec = m.current()
+    else:
+        m.initialize(_batch(spark, rows))
+        # every bucket touched; the deletes give the merge-on-read
+        # commit its keys-only delete slice as a second staged write
+        batch = _batch(
+            spark,
+            [(i, f"v1-{i}", 1, "D" if i % 2 else "U") for i in range(1024)],
+        )
+        got = {}
+        tasks = _result_stage_tasks(
+            spark, lambda: got.update(m.merge_batch(batch, TARGET))
+        )
+        rec = got
+        assert len(rec["touched_buckets"]) == 64
+    assert tasks, "no shuffle-reading job ran"
+    assert max(tasks) <= spark.sparkContext.defaultParallelism, tasks
+    if op == "mor_merge":
+        assert len(rec["deltas"]) == 64
+        dirs = [s["dir"] for specs in rec["deltas"].values() for s in specs]
+    else:
+        dirs = list(rec["buckets"].values())
+        assert len(dirs) == 64
+    assert all(_one_parquet_file(d) for d in dirs)
