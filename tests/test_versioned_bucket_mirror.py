@@ -897,17 +897,24 @@ def test_timestamp_stats_keep_midnight_rows_on_date_grain_bounds(
 def _result_stage_tasks(spark, fn) -> list[int]:
     """Run ``fn`` under a fresh job group and return the task count of
     the result stage of every job it ran that read a shuffle — the
-    staged bucket write (exchange + ``partitionBy`` write) is one."""
+    staged bucket write (exchange + ``partitionBy`` write) is one.
+    Shuffle partitions are pinned to the slot count for the call, so
+    the other shuffle jobs (the merge's key collect) cannot exceed it
+    whatever the session's ``spark.sql.shuffle.partitions``; the
+    staged write's exchange sets its own count."""
     import uuid
 
     sc = spark.sparkContext
     group = f"write-shape-{uuid.uuid4().hex[:8]}"
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", sc.defaultParallelism)
     sc.setJobGroup(group, group)
     try:
         fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
     tracker = sc.statusTracker()
     out = []
     for jid in tracker.getJobIdsForGroup(group):
