@@ -151,10 +151,13 @@ def _purge_lock(root: str):
     concurrent purges last-write-win each other's manifest edits — the
     loser's keys silently SURVIVE in retained history, a GDPR violation
     the version-based CAS cannot see (neither purge bumps the version).
-    An exclusive lock file turns the race into a caller-visible
-    ``CommitConflict`` (retry after the holder finishes); a crashed
-    holder's lock goes stale after ``_PURGE_LOCK_STALE_S`` and is taken
-    over."""
+    ``TableOps.fast_forward`` takes the same lock for its strip and
+    pointer swap, since it rewrites window entries a purge rewrites too;
+    so a purge and a fast-forward serialize, and each raises
+    ``CommitConflict`` while the other runs. An exclusive lock file
+    turns the race into a caller-visible ``CommitConflict`` (retry after
+    the holder finishes) — it never waits; a crashed holder's lock goes
+    stale after ``_PURGE_LOCK_STALE_S`` and is taken over."""
     path = os.path.join(root, "_purge.lock")
     os.makedirs(root, exist_ok=True)
     for takeover in (False, True):
@@ -173,8 +176,9 @@ def _purge_lock(root: str):
             age = 0.0  # holder just released/created: treat as live
         if age < _PURGE_LOCK_STALE_S:
             raise CommitConflict(
-                f"another purge_keys holds the purge lock on {root} "
-                f"(age {age:.0f}s); retry after it finishes"
+                f"the purge lock on {root} is held by a running "
+                f"purge_keys or fast_forward (age {age:.0f}s); retry "
+                "after it finishes"
             )
         try:  # stale: crashed holder — take over
             os.remove(path)
@@ -1924,6 +1928,11 @@ class TableOps:
         version pulled into the window) — publishing it would leak a
         never-audited commit to main, so it is garbage-collected if
         aged past the conflict grace, and a conflict error if fresh.
+        The strip and the swap run under the purge lock (``_purge_lock``)
+        from a re-read of the window, since a purge rewrites those
+        entries and main's head in place: a fast-forward raises
+        ``CommitConflict`` while a ``purge_keys`` runs on this root, and
+        a ``purge_keys`` raises it while the fast-forward publishes.
         The branch pointer itself is left at the head (now == main),
         for the caller to keep using or delete."""
         b = self._branchset.get(name)

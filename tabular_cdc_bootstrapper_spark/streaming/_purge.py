@@ -17,7 +17,8 @@ n_dirs independent scans behind one driver loop (guide §2.6).
    rewritten, never deleted, and never chained through purge outputs);
 2. one broadcast anti-join over the hit dirs written ``partitionBy``
    the per-dir id into a staging dir (a ``repartition`` by the id, sized
-   by ``write_tasks``, keeps one file per dir), then a driver-side
+   by ``write_tasks`` from the hit dirs' count and bytes, keeps one
+   file per dir), then a driver-side
    rename installs each partition under its target immutable name. A
    dir whose partition is absent was emptied by the purge — the caller
    drops it from its records, or, with ``keep_empty``, it is written as
@@ -182,7 +183,8 @@ def _purge_group(
         (
             u2.join(F.broadcast(probe), cond(u2), "left_anti")
             .repartition(
-                write_tasks(spark, len(hit_dirs)), F.col("__pdir")
+                write_tasks(spark, len(hit_dirs), source=base2),
+                F.col("__pdir"),
             )
             .write.partitionBy("__pdir")
             .mode("errorifexists")

@@ -747,7 +747,8 @@ class VersionedBucketMirror(VersionedBucketMirrorOps, TableOps):
         (
             df.withColumn("bucket", self._row_partition(df))
             .repartition(
-                write_tasks(spark, self._staged_dirs(None)), F.col("bucket")
+                write_tasks(spark, self._staged_dirs(None), source=df),
+                F.col("bucket"),
             )
             .write.mode("errorifexists")
             .partitionBy("bucket")
@@ -846,7 +847,9 @@ class VersionedBucketMirror(VersionedBucketMirrorOps, TableOps):
                 staged_df, list(zorder_cols), out_col="__zval"
             )
         staged_df = staged_df.repartition(
-            write_tasks(df.sparkSession, self._staged_dirs(touched)),
+            write_tasks(
+                df.sparkSession, self._staged_dirs(touched), source=df
+            ),
             F.col("bucket"),
         )
         if zorder_cols:

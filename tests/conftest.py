@@ -33,49 +33,17 @@ def spark():
     # SPARK_GRAFT_TEST_CPUS; an explicit SPARK_MASTER always wins.
     # bench.py is untouched: it keeps master=local[$SPARK_GRAFT_CPUS]
     # per the driver contract.
-    #
-    # spark.default.parallelism 2, not the master's 8: the suite builds
-    # most inputs with createDataFrame(<python list>), which PySpark runs
-    # as a parallelize of defaultParallelism slices, each a Python-worker
-    # task, before any Spark operator sees a row. Eight slices of a
-    # handful of rows is pure task overhead: the diff round-trip example
-    # (2 collects) took 4.1 s at 8 and 2.2 s at 2 on a 4-core host, and
-    # test_diff + test_alter_schema + test_cdc_properties +
-    # test_versioned_bucket_mirror ran 449 s -> 295 s. It also sizes
-    # file-scan splits and the staged bucket writes (write_tasks), so
-    # those run 2 tasks too. Override via SPARK_GRAFT_TEST_PAR.
-    #
-    # Shuffles run 4 partitions (SPARK_GRAFT_TEST_SHUFFLE), not 8: the
-    # suite is timed on 4-core hosts, and at fixture scale a shuffle's extra
-    # partitions are near-empty tasks queued behind the first wave.
-    #
-    # Python workers start from tests/pyspark_test_worker.py, which stops
-    # each task from re-reading the directories of pyspark.zip, py4j and
-    # the Spark jar (~250 ms of worker CPU per Python task on Python
-    # 3.11; see that module). The tests dir goes on the PYTHONPATH the
-    # JVM hands its Python daemon, so the daemon can import it. A
-    # 41-test sample ran 172-228 s without it and 153 s with it.
     os.environ.setdefault(
         "SPARK_MASTER",
         f"local[{os.environ.get('SPARK_GRAFT_TEST_CPUS', '8')}]",
     )
-    tests_dir = str(Path(__file__).resolve().parent)
-    os.environ["PYTHONPATH"] = os.pathsep.join(
-        p for p in (tests_dir, os.environ.get("PYTHONPATH")) if p
-    )
     spark = get_spark(
         "tests",
-        shuffle_partitions=int(
-            os.environ.get("SPARK_GRAFT_TEST_SHUFFLE", "4")
-        ),
+        shuffle_partitions=8,
         extra_conf={
             "spark.sql.adaptive.enabled": os.environ.get(
                 "SPARK_GRAFT_TEST_AQE", "false"
-            ),
-            "spark.default.parallelism": os.environ.get(
-                "SPARK_GRAFT_TEST_PAR", "2"
-            ),
-            "spark.python.worker.module": "pyspark_test_worker",
+            )
         },
     )
     yield spark

@@ -897,24 +897,17 @@ def test_timestamp_stats_keep_midnight_rows_on_date_grain_bounds(
 def _result_stage_tasks(spark, fn) -> list[int]:
     """Run ``fn`` under a fresh job group and return the task count of
     the result stage of every job it ran that read a shuffle — the
-    staged bucket write (exchange + ``partitionBy`` write) is one.
-    Shuffle partitions are pinned to the slot count for the call, so
-    the other shuffle jobs (the merge's key collect) cannot exceed it
-    whatever the session's ``spark.sql.shuffle.partitions``; the
-    staged write's exchange sets its own count."""
+    staged bucket write (exchange + ``partitionBy`` write) is one."""
     import uuid
 
     sc = spark.sparkContext
     group = f"write-shape-{uuid.uuid4().hex[:8]}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", sc.defaultParallelism)
     sc.setJobGroup(group, group)
     try:
         fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     tracker = sc.statusTracker()
     out = []
     for jid in tracker.getJobIdsForGroup(group):
@@ -970,3 +963,74 @@ def test_staged_write_runs_at_most_slot_count_tasks(spark, tmp_path, op):
         dirs = list(rec["buckets"].values())
         assert len(dirs) == 64
     assert all(_one_parquet_file(d) for d in dirs)
+
+
+def test_write_tasks_goes_one_per_dir_only_for_byte_heavy_inputs(tmp_path):
+    """``write_tasks`` is slot-sized unless the frame being written scans
+    ``ONE_TASK_PER_DIR_BYTES`` or more per output dir; rows from no file
+    count 0. Spark-free: the session and frame are stand-ins."""
+    from types import SimpleNamespace
+
+    from tabular_cdc_bootstrapper_spark.streaming import _sizing
+
+    spark = SimpleNamespace(
+        sparkContext=SimpleNamespace(defaultParallelism=4)
+    )
+    per_dir = _sizing.ONE_TASK_PER_DIR_BYTES
+    files = []
+    for i in range(2):
+        p = tmp_path / f"part {i}.parquet"  # the URI quotes the space
+        with open(p, "wb") as fh:
+            fh.truncate(16 * per_dir)
+        files.append(p.as_uri())
+
+    def frame(uris):
+        return SimpleNamespace(inputFiles=lambda: list(uris))
+
+    assert _sizing.write_tasks(spark, None) == 4
+    assert _sizing.write_tasks(spark, 3) == 3
+    assert _sizing.write_tasks(spark, 64) == 4
+    assert _sizing.write_tasks(spark, 64, frame([])) == 4
+    # 32 x the threshold: one task per dir up to 32 dirs, slots above
+    assert _sizing.write_tasks(spark, 32, frame(files)) == 32
+    assert _sizing.write_tasks(spark, 33, frame(files)) == 4
+    # a vanished file and a remote file count 0
+    gone = (tmp_path / "gone.parquet").as_uri()
+    assert _sizing.write_tasks(spark, 32, frame([files[0], gone])) == 4
+    assert _sizing.write_tasks(
+        spark, 16, frame(["s3a://bucket/x.parquet", files[0]])
+    ) == 16
+    assert _sizing.write_tasks(
+        spark, 64, frame(["s3a://bucket/x.parquet"] + files)
+    ) == 4
+
+
+def test_byte_heavy_rewrite_runs_one_task_per_dir(spark, tmp_path, monkeypatch):
+    """A copy-on-write merge whose touched buckets hold
+    ``ONE_TASK_PER_DIR_BYTES`` or more per dir writes one task per
+    bucket dir, so the scheduler balances uneven dirs; the layout is the
+    same (one file per dir). An initial load from a driver-side list
+    reads no file and stays slot-sized. The threshold is lowered to 1
+    byte so the fixture stays small."""
+    from tabular_cdc_bootstrapper_spark.streaming import _sizing
+
+    monkeypatch.setattr(_sizing, "ONE_TASK_PER_DIR_BYTES", 1)
+    m = VersionedBucketMirror(
+        str(tmp_path / "m"), n_buckets=64, key_col="id", keep_versions=10
+    )
+    rows = [(i, f"v0-{i}", 0, "I") for i in range(1024)]
+    slots = spark.sparkContext.defaultParallelism
+    tasks = _result_stage_tasks(
+        spark, lambda: m.initialize(_batch(spark, rows))
+    )
+    assert tasks and max(tasks) <= slots, tasks
+    batch = _batch(spark, [(i, f"v1-{i}", 1, "U") for i in range(1024)])
+    got = {}
+    tasks = _result_stage_tasks(
+        spark, lambda: got.update(m.merge_batch(batch, TARGET))
+    )
+    assert len(got["touched_buckets"]) == 64
+    assert 64 in tasks, tasks
+    dirs = list(got["buckets"].values())
+    assert len(dirs) == 64 and all(_one_parquet_file(d) for d in dirs)
+    assert _state(spark, m) == {i: f"v1-{i}" for i in range(1024)}
