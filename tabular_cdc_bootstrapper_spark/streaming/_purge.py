@@ -18,11 +18,10 @@ n_dirs independent scans behind one driver loop (guide §2.6).
 2. one broadcast anti-join over the hit dirs written ``partitionBy``
    the per-dir id into a staging dir (a ``repartition`` by the id, sized
    by ``write_tasks`` from the hit dirs' count and bytes, keeps one
-   file per dir), then a driver-side
-   rename installs each partition under its target immutable name. A
-   dir whose partition is absent was emptied by the purge — the caller
-   drops it from its records, or, with ``keep_empty``, it is written as
-   an empty typed dir.
+   file per dir), then a driver-side rename installs each partition
+   under its target immutable name. A dir whose partition is absent
+   was emptied by the purge — the caller drops it from its records, or,
+   with ``keep_empty``, it is written as an empty typed dir.
 
 Dirs are grouped by exact schema before the union (merge-on-read
 keys-only delta slices and post-ALTER snapshots must keep their own
