@@ -113,9 +113,10 @@ def main() -> int:
         targets = discovered_and_configured(
             cfg, discover_targets(spark, monitor_root, template)
         )
-        results = bootstrap_targets(spark, cfg, targets)
+        schemas: dict = {}  # each folder's own schema, inferred once by the bootstrap
+        results = bootstrap_targets(spark, cfg, targets, schemas=schemas)
         cfg = replace(cfg, targets=targets)
-        schema = None  # per-target schemas are inferred per folder below
+        schema = None
     else:
         # schema discovery mirrors the reference's file-loader behavior
         # (new tables infer their schema from the first files, SURVEY.md
@@ -172,18 +173,10 @@ def main() -> int:
         # auto-discovered targets read from their own folder with their
         # own inferred schema; configured ones share the monitored dir
         src = target.source_uri if auto_discover else source_dir_env
-        tgt_schema = schema
-        if tgt_schema is None:
-            try:
-                tgt_schema = (
-                    spark.read.option("recursiveFileLookup", "true")
-                    .option("mergeSchema", "true")  # drift-safe (r14)
-                    .parquet(src)
-                    .schema
-                )
-            except Exception:  # still-empty folder: bootstrapped, no data yet
-                log.info("no data yet under %s; skipping pipeline", src)
-                continue
+        tgt_schema = schemas[src] if auto_discover else schema
+        if tgt_schema is None:  # still-empty folder: bootstrapped, no data yet
+            log.info("no data yet under %s; skipping pipeline", src)
+            continue
         out = run_cdc_pipeline_available_now(
             spark,
             src,
@@ -193,9 +186,12 @@ def main() -> int:
             mirror_layout=mirror_layout,
             partition_spec=partition_spec,
         )
-        state = out["mirror"].read(spark)
-        n = state.count() if state is not None else 0
-        log.info("pipeline complete for %s: mirror rows=%d", target.table_name, n)
+        head = out["mirror"].current() or {}
+        log.info(
+            "pipeline complete for %s: mirror version=%s",
+            target.table_name,
+            head.get("version"),
+        )
         # wire the control plane to the data plane: the bootstrap registered
         # the tables, the pipeline wrote the data — point each table at the
         # actual storage so `SELECT * FROM <mirror>` sees the run's output

@@ -382,6 +382,7 @@ def bootstrap_targets(
     spark: SparkSession,
     cfg: EngineConfig,
     targets: tuple[CdcTarget, ...],
+    schemas: dict[str, T.StructType | None] | None = None,
 ) -> dict[str, tuple[str, str] | Exception]:
     """Bootstrap an explicit target list with per-folder schema inference
     and per-target error isolation — the loop ``bootstrap_discovered``
@@ -389,7 +390,11 @@ def bootstrap_targets(
     listed the prefix (``__main__``'s auto-discover path) bootstrap the
     SAME list they will run pipelines for: one LIST per poll, and no
     folder can appear between two listings and reach the pipeline loop
-    un-bootstrapped."""
+    un-bootstrapped.
+
+    ``schemas``, when given, receives each target's inferred source schema
+    (``None``: no data yet), so a caller that runs the pipeline next reuses
+    it instead of running a second footer job per target."""
     results: dict[str, tuple[str, str] | Exception] = {}
     for target in targets:
         try:
@@ -407,6 +412,8 @@ def bootstrap_targets(
                 )
             except Exception:  # empty/unreadable folder → defer, don't fail
                 pass
+            if schemas is not None:
+                schemas[target.source_uri] = schema
             results[target.source_uri] = bootstrap_target(
                 spark, cfg, target, schema=schema
             )

@@ -5,6 +5,8 @@ path, and replaying must be idempotent."""
 
 from __future__ import annotations
 
+import os
+
 import pyspark.sql.functions as F
 import pytest
 from pyspark.sql import types as T
@@ -963,3 +965,64 @@ def test_main_entry_auto_discover(tmp_path, monkeypatch):
     assert _mirror_dict(spark.table("cdc_bootstrap.crm_api")) == exp["crm_api"]
     for name in ("home_api", "work_api"):  # untouched pairs stay correct
         assert _mirror_dict(spark.table(f"cdc_bootstrap.{name}")) == exp[name]
+
+
+def test_main_poll_infers_each_schema_once_and_reads_no_mirror(
+    tmp_path, monkeypatch, caplog
+):
+    """One auto-discover poll runs one schema-inference footer job per
+    folder (the bootstrap's, reused by the pipeline loop) and no Spark job
+    just to log the mirror: the log line carries the head version. A
+    folder that holds no data yet is bootstrapped and its pipeline
+    skipped."""
+    import logging
+    import re
+
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from tabular_cdc_bootstrapper_spark.__main__ import main
+    from tabular_cdc_bootstrapper_spark.streaming.state_table import (
+        ParquetStateTable,
+    )
+
+    root = tmp_path / "staged"
+    expected = generate(str(root / "orders_api"), seed=5)
+    (root / "empty_api").mkdir()
+    monkeypatch.setenv("SPARK_CDC_AUTO_DISCOVER", "1")
+    monkeypatch.setenv("TABULAR_CDC_ID_FIELD", "id")
+    monkeypatch.setenv("TABULAR_CDC_TIMESTAMP_FIELD", "ts")
+    monkeypatch.setenv("SPARK_CDC_SOURCE_DIR", str(root))
+    monkeypatch.setenv("SPARK_CDC_WORK_DIR", str(tmp_path / "work"))
+    monkeypatch.delenv("TABULAR_BUCKET_NAME", raising=False)
+    monkeypatch.delenv("TABULAR_BUCKET_MONITOR_PATH", raising=False)
+    monkeypatch.delenv("SPARK_CDC_MIRROR_LAYOUT", raising=False)
+    assert main() == 0  # bootstrap + initial load
+
+    inferred: list[str] = []
+    mirror_reads: list[str] = []
+    parquet, read = DataFrameReader.parquet, ParquetStateTable.read
+
+    def counting_parquet(self, *paths, **kw):
+        inferred.extend(
+            os.path.basename(p) for p in map(str, paths) if os.path.dirname(p).endswith(str(root))
+        )
+        return parquet(self, *paths, **kw)
+
+    def counting_read(self, *a, **kw):
+        mirror_reads.append(self.root)
+        return read(self, *a, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", counting_parquet)
+    monkeypatch.setattr(ParquetStateTable, "read", counting_read)
+    caplog.set_level(logging.INFO)
+    assert main() == 0  # a poll with nothing new
+    assert sorted(inferred) == ["empty_api", "orders_api"]
+    assert mirror_reads == []
+    assert re.search(r"pipeline complete for orders_api: mirror version=\d+", caplog.text)
+    assert "no data yet under" in caplog.text
+    assert not (tmp_path / "work" / "empty_api").exists()
+    monkeypatch.undo()
+    spark = __import__(
+        "tabular_cdc_bootstrapper_spark.session", fromlist=["get_spark"]
+    ).get_spark()
+    assert _mirror_dict(spark.table("cdc_bootstrap.orders_api")) == expected
