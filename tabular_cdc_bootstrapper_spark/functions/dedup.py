@@ -150,14 +150,6 @@ def minhash_signature(shingles: Column, num_hashes: int = 16) -> Column:
     )
 
 
-def _blake64(s: str) -> int:
-    """Deterministic signed-64 hash (blake2b-8). Python's builtin hash()
-    is process-seeded and must never feed a distributed plan."""
-    from hashlib import blake2b
-
-    return int.from_bytes(blake2b(s.encode(), digest_size=8).digest(), "big", signed=True)
-
-
 def _mix64(x, seed: int):
     """splitmix64-style avalanche over a numpy uint64 array — the MinHash
     hash family h_i(x) = mix(x ^ seed_i), all vectorized."""

@@ -44,7 +44,7 @@ from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -215,10 +215,3 @@ def profile_oracle_sql(
     FROM {table}"""
         )
     return "\n    UNION ALL\n    ".join(parts)
-
-
-def read_and_profile(
-    spark: SparkSession, path: str, cols: Sequence[str] | None = None
-) -> DataFrame:
-    """Convenience: profile a parquet table straight off storage."""
-    return profile_table(spark.read.parquet(path), cols)

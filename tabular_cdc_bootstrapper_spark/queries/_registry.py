@@ -76,6 +76,25 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         return df
     return spark.read.schema(schema).parquet(path)
 
+
+def _overlap(*thunks: Callable[[], object]) -> list:
+    """Run ``thunks`` concurrently, one pool thread each, and return their
+    results in order (r16, guide §2.6: independent chains back-fill each
+    other's scheduling gaps). Each runs through
+    ``inheritable_thread_target``, so its Spark jobs keep the caller's job
+    group, description, tags and other local properties."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    session = SparkSession.getActiveSession()
+    inherit = (
+        inheritable_thread_target(session) if session else inheritable_thread_target
+    )
+    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
+        futures = [pool.submit(inherit(t)) for t in thunks]
+        return [f.result() for f in futures]
+
 def _load_events(spark: SparkSession, path: str) -> DataFrame:
     """Load an events table whose ``ts`` column may be stored either as a
     parquet timestamp (µs/ms, the current fixture contract) or as raw

@@ -6,11 +6,67 @@ registers via the shared ``@query`` decorator in ``_registry``.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from functools import partial, reduce
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from tabular_cdc_bootstrapper_spark.operators.cdc import apply_changelog
 from tabular_cdc_bootstrapper_spark.localdf import local_df
-from tabular_cdc_bootstrapper_spark.queries._registry import (_t, query)
+from tabular_cdc_bootstrapper_spark.queries._registry import (
+    _overlap,
+    _t,
+    query,
+)
+
+
+def _unpivot(row: DataFrame) -> DataFrame:
+    """The columns of a one-row frame as ``(item, value)`` rows, in column
+    order. ``Expand`` reports an unknown output partitioning, so without
+    ``coalesce(1)`` a ``count()`` over it plans one more exchange (one
+    more job under AQE) than the single-partition aggregate needs."""
+    return row.unpivot([], row.columns, "item", "value").coalesce(1)
+
+
+def _items(df: DataFrame, items: dict[str, Column]) -> DataFrame:
+    """``df`` aggregated to one ``(item, value)`` row per ``items`` entry
+    (item name → aggregate column), in entry order."""
+    return _unpivot(df.agg(*(c.alias(k) for k, c in items.items())))
+
+
+def _nsx(
+    df: DataFrame, prefix: str, x_col: str | None = "o_orderstatus"
+) -> DataFrame:
+    """Items ``{prefix}_rows``, ``{prefix}_keysum`` and, unless ``x_col``
+    is None, ``{prefix}_x``: the row count, the ``o_orderkey`` sum and the
+    rows whose ``x_col`` is 'X', as longs."""
+    items = {
+        f"{prefix}_rows": F.count("*"),
+        f"{prefix}_keysum": F.sum("o_orderkey"),
+    }
+    if x_col:
+        items[f"{prefix}_x"] = F.count(F.when(F.col(x_col) == "X", 1))
+    return _items(df, {k: c.cast("long") for k, c in items.items()})
+
+
+def _ref_row(df: DataFrame, **tags: str | int) -> DataFrame:
+    """One ``(*tags, n_rows, n_updated, key_sum)`` row: the row count,
+    'X'-status rows and ``o_orderkey`` sum of ``df``, after one literal
+    column per ``tags`` entry (ints as longs)."""
+    return df.agg(
+        F.count("*").cast("long").alias("n_rows"),
+        F.count(F.when(F.col("o_orderstatus") == "X", 1))
+        .cast("long")
+        .alias("n_updated"),
+        F.sum("o_orderkey").cast("long").alias("key_sum"),
+    ).select(
+        *(
+            (F.lit(v) if isinstance(v, str) else F.lit(v).cast("long")).alias(k)
+            for k, v in tags.items()
+        ),
+        "n_rows",
+        "n_updated",
+        "key_sum",
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -236,33 +292,19 @@ def cdc_mirror_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         metas=[{"upto": upto} for upto in (0, 1, 2)],
     )
 
-    def snap_agg(df: DataFrame, snap: int) -> DataFrame:
-        return df.agg(
-            F.count("*").alias("n_rows"),
-            F.count(F.when(F.col("o_orderstatus") == "X", 1)).alias(
-                "n_updated"
-            ),
-            F.sum("o_orderkey").alias("key_sum"),
-        ).select(
-            F.lit(snap).cast("long").alias("snapshot"),
-            "n_rows",
-            "n_updated",
-            "key_sum",
-        )
-
-    parts = [snap_agg(mirror.read_version(spark, v), v) for v in (0, 1, 2)]
+    parts = [
+        _ref_row(mirror.read_version(spark, v), snapshot=v) for v in (0, 1, 2)
+    ]
     # strictly between the v1 and v2 commit stamps: resolves to v1
     parts.append(
-        snap_agg(
-            mirror.read_as_of(spark, (recs[1]["ts"] + recs[2]["ts"]) / 2), 3
+        _ref_row(
+            mirror.read_as_of(spark, (recs[1]["ts"] + recs[2]["ts"]) / 2),
+            snapshot=3,
         )
     )
     mirror.rollback(1)
-    parts.append(snap_agg(mirror.read(spark), 4))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    parts.append(_ref_row(mirror.read(spark), snapshot=4))
+    return reduce(DataFrame.unionByName, parts)
 
 
 @query(
@@ -798,36 +840,13 @@ def wap_anomaly_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         items.append((f"{tag}:published", int(bool(rep["published"]))))
     items.append(("n_versions", len(mirror.history())))
     items.append(("head_audited", int(bool(mirror.current().get("audited")))))
-    out = local_df(spark, items, "item string, value long")
-
-    def agg_rows(df: DataFrame, n_item: str, s_item: str) -> DataFrame:
-        return (
-            df.agg(
-                F.count("*").cast("long").alias("__n"),
-                F.sum("o_orderkey").cast("long").alias("__s"),
-            )
-            .select(
-                F.explode(
-                    F.array(
-                        F.struct(
-                            F.lit(n_item).alias("item"),
-                            F.col("__n").alias("value"),
-                        ),
-                        F.struct(
-                            F.lit(s_item).alias("item"),
-                            F.col("__s").alias("value"),
-                        ),
-                    )
-                ).alias("p")
-            )
-            .select("p.item", "p.value")
-        )
-
-    out = out.unionByName(
-        agg_rows(mirror.read_version(spark, 0), "v0_rows", "v0_keysum")
-    )
-    return out.unionByName(
-        agg_rows(mirror.read_version(spark, 1), "v1_rows", "v1_keysum")
+    return reduce(
+        DataFrame.unionByName,
+        [
+            local_df(spark, items, "item string, value long"),
+            _nsx(mirror.read_version(spark, 0), "v0", None),
+            _nsx(mirror.read_version(spark, 1), "v1", None),
+        ],
     )
 
 
@@ -934,8 +953,6 @@ def snapshot_refs_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (init from v0 → shallow clone → purge) touch disjoint tables and
     # dirs: overlap them from a 2-thread pool (r16, guide §2.6) so the
     # second chain's jobs back-fill the first's scheduling gaps
-    from concurrent.futures import ThreadPoolExecutor
-
     from tabular_cdc_bootstrapper_spark.streaming.bucket_mirror import (
         VersionedBucketMirror,
     )
@@ -962,13 +979,10 @@ def snapshot_refs_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         bc.purge_keys(spark, purge_probe, "o_orderkey")
         return bc
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_purge = pool.submit(
-            clone.purge_keys, spark, purge_probe, "o_orderkey"
-        )
-        f_bucket = pool.submit(_bucket_branch)
-        f_purge.result()
-        bclone = f_bucket.result()
+    _, bclone = _overlap(
+        lambda: clone.purge_keys(spark, purge_probe, "o_orderkey"),
+        _bucket_branch,
+    )
 
     def ref_row(df: DataFrame | None, ref: str, version: int) -> DataFrame:
         if df is None:  # unreadable (expired) ref: sentinel row
@@ -977,19 +991,7 @@ def snapshot_refs_report(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "ref string, version long, n_rows long, n_updated long, "
                 "key_sum long",
             )
-        return df.agg(
-            F.count("*").cast("long").alias("n_rows"),
-            F.count(F.when(F.col("o_orderstatus") == "X", 1))
-            .cast("long")
-            .alias("n_updated"),
-            F.sum("o_orderkey").cast("long").alias("key_sum"),
-        ).select(
-            F.lit(ref).alias("ref"),
-            F.lit(version).cast("long").alias("version"),
-            "n_rows",
-            "n_updated",
-            "key_sum",
-        )
+        return _ref_row(df, ref=ref, version=version)
 
     parts = []
     for e in mirror.history():
@@ -1030,10 +1032,7 @@ def snapshot_refs_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             0,
         )
     )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return reduce(DataFrame.unionByName, parts)
 
 
 @query(
@@ -1098,15 +1097,6 @@ def snapshot_branch_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_orderstatus", "op", "ts"
     )
 
-    def agg_row(df: DataFrame, ref: str) -> DataFrame:
-        return df.agg(
-            F.count("*").cast("long").alias("n_rows"),
-            F.count(F.when(F.col("o_orderstatus") == "X", 1))
-            .cast("long")
-            .alias("n_updated"),
-            F.sum("o_orderkey").cast("long").alias("key_sum"),
-        ).select(F.lit(ref).alias("ref"), "n_rows", "n_updated", "key_sum")
-
     # the snapshot-table WAP chain and the bucketed-mirror branch chain
     # share nothing (separate roots; both only READ ch): overlap them
     # from a 2-thread pool (r16, guide §2.6). Each chain returns its
@@ -1142,12 +1132,11 @@ def snapshot_branch_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
             [not_null("o_orderkey"), row_count_within(20, 100)],
             branch="etl",
         )
-        before = agg_row(table.read(spark), "main_before_ff")
-        branch_head = agg_row(
-            table.read_branch(spark, "etl"), "branch_head"
-        )
+        before = _ref_row(table.read(spark), ref="main_before_ff")
+        head = _ref_row(table.read_branch(spark, "etl"), ref="branch_head")
         table.fast_forward("etl")
-        return [before, branch_head, agg_row(table.read(spark), "main_after_ff")]
+        after = _ref_row(table.read(spark), ref="main_after_ff")
+        return [before, head, after]
 
     # same laws on the bucketed 100 TB layout (shared TableOps, r10):
     # the update+delete batch stages as a branch CDC MERGE — touched
@@ -1175,23 +1164,16 @@ def snapshot_branch_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             branch="etl",
         )
-        b_before = agg_row(mirror.read(spark), "bucket:main_before_ff")
-        b_head = agg_row(
-            mirror.read_branch(spark, "etl"), "bucket:branch_head"
+        before = _ref_row(mirror.read(spark), ref="bucket:main_before_ff")
+        head = _ref_row(
+            mirror.read_branch(spark, "etl"), ref="bucket:branch_head"
         )
         mirror.fast_forward("etl")
-        return [b_before, b_head, agg_row(mirror.read(spark), "bucket:main_after_ff")]
+        after = _ref_row(mirror.read(spark), ref="bucket:main_after_ff")
+        return [before, head, after]
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_snap = pool.submit(_snapshot_chain)
-        f_bucket = pool.submit(_bucket_chain)
-        parts = f_snap.result() + f_bucket.result()
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    snap, bucket = _overlap(_snapshot_chain, _bucket_chain)
+    return reduce(DataFrame.unionByName, snap + bucket)
 
 
 @query(
@@ -1250,35 +1232,13 @@ def bucket_compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         ("n_versions", len(mirror.history())),
     ]
-    flags = local_df(spark, items, "item string, value long")
-
-    def agg_rows(df: DataFrame, n_item: str, s_item: str) -> DataFrame:
-        return (
-            df.agg(
-                F.count("*").cast("long").alias("__n"),
-                F.sum("o_orderkey").cast("long").alias("__s"),
-            )
-            .select(
-                F.explode(
-                    F.array(
-                        F.struct(
-                            F.lit(n_item).alias("item"),
-                            F.col("__n").alias("value"),
-                        ),
-                        F.struct(
-                            F.lit(s_item).alias("item"),
-                            F.col("__s").alias("value"),
-                        ),
-                    )
-                ).alias("p")
-            )
-            .select("p.item", "p.value")
-        )
-
-    return flags.unionByName(
-        agg_rows(mirror.read_version(spark, 0), "v0_rows", "v0_keysum")
-    ).unionByName(
-        agg_rows(mirror.read_version(spark, 1), "v1_rows", "v1_keysum")
+    return reduce(
+        DataFrame.unionByName,
+        [
+            local_df(spark, items, "item string, value long"),
+            _nsx(mirror.read_version(spark, 0), "v0", None),
+            _nsx(mirror.read_version(spark, 1), "v1", None),
+        ],
     )
 
 
@@ -1379,31 +1339,15 @@ def concurrent_merge_serialization(spark: SparkSession, sf_dir: str) -> DataFram
         ],
         "item string, value long",
     )
-    final = mirror.read(spark)
-    aggs = final.agg(
-        F.count("*").cast("long").alias("__n"),
-        F.sum("o_orderkey").cast("long").alias("__s"),
-        F.count(F.when(F.col("o_orderstatus") == "CONC", 1))
-        .cast("long")
-        .alias("__u"),
-    ).select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.lit("final_rows").alias("item"),
-                    F.col("__n").alias("value"),
-                ),
-                F.struct(
-                    F.lit("final_keysum").alias("item"),
-                    F.col("__s").alias("value"),
-                ),
-                F.struct(
-                    F.lit("n_updated").alias("item"),
-                    F.col("__u").alias("value"),
-                ),
-            )
-        ).alias("p")
-    ).select("p.item", "p.value")
+    aggs = _items(
+        mirror.read(spark),
+        {
+            "final_rows": F.count("*").cast("long"),
+            "final_keysum": F.sum("o_orderkey").cast("long"),
+            "n_updated": F.count(F.when(F.col("o_orderstatus") == "CONC", 1))
+            .cast("long"),
+        },
+    )
     return flags.unionByName(aggs)
 
 
@@ -1482,41 +1426,11 @@ def mor_merge_fold_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre_version = mirror.current()["version"]
     chain_before = int(bool(mirror.current().get("deltas")))
 
-    def agg_items(df: DataFrame, prefix: str) -> DataFrame:
-        return (
-            df.agg(
-                F.count("*").cast("long").alias("__n"),
-                F.sum("o_orderkey").cast("long").alias("__s"),
-                F.count(F.when(F.col("o_orderstatus") == "X", 1))
-                .cast("long")
-                .alias("__x"),
-            )
-            .select(
-                F.explode(
-                    F.array(
-                        F.struct(
-                            F.lit(f"{prefix}_rows").alias("item"),
-                            F.col("__n").alias("value"),
-                        ),
-                        F.struct(
-                            F.lit(f"{prefix}_keysum").alias("item"),
-                            F.col("__s").alias("value"),
-                        ),
-                        F.struct(
-                            F.lit(f"{prefix}_x").alias("item"),
-                            F.col("__x").alias("value"),
-                        ),
-                    )
-                ).alias("p")
-            )
-            .select("p.item", "p.value")
-        )
-
-    pre = agg_items(mirror.read(spark), "prefold")
+    pre = _nsx(mirror.read(spark), "prefold")
     mirror.rewrite_data_files(spark)
     chain_after = int(bool(mirror.current().get("deltas")))
-    post = agg_items(mirror.read(spark), "postfold")
-    hist = agg_items(mirror.read_version(spark, pre_version), "histfold")
+    post = _nsx(mirror.read(spark), "postfold")
+    hist = _nsx(mirror.read_version(spark, pre_version), "histfold")
     flags = local_df(spark, 
         [
             ("delta_chain_before", chain_before),
@@ -1602,42 +1516,12 @@ def change_feed_stream_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     feed.process_available(spark, apply)
 
-    def agg_items(df: DataFrame, prefix: str) -> DataFrame:
-        return (
-            df.agg(
-                F.count("*").cast("long").alias("__n"),
-                F.sum("o_orderkey").cast("long").alias("__s"),
-                F.count(F.when(F.col("o_orderstatus") == "X", 1))
-                .cast("long")
-                .alias("__x"),
-            )
-            .select(
-                F.explode(
-                    F.array(
-                        F.struct(
-                            F.lit(f"{prefix}_rows").alias("item"),
-                            F.col("__n").alias("value"),
-                        ),
-                        F.struct(
-                            F.lit(f"{prefix}_keysum").alias("item"),
-                            F.col("__s").alias("value"),
-                        ),
-                        F.struct(
-                            F.lit(f"{prefix}_x").alias("item"),
-                            F.col("__x").alias("value"),
-                        ),
-                    )
-                ).alias("p")
-            )
-            .select("p.item", "p.value")
-        )
-
     flags = local_df(spark, 
         [("n_windows", len(windows))], "item string, value long"
     )
     return (
-        flags.unionByName(agg_items(state, "folded"))
-        .unionByName(agg_items(t.read(spark), "head"))
+        flags.unionByName(_nsx(state, "folded"))
+        .unionByName(_nsx(t.read(spark), "head"))
     )
 
 
@@ -1778,31 +1662,7 @@ def mirror_rebucket_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "item string, value long",
     )
     flags = flags.unionByName(lookup_f)
-    final = mirror.read(spark)
-    aggs = final.agg(
-        F.count("*").cast("long").alias("__n"),
-        F.sum("o_orderkey").cast("long").alias("__s"),
-        F.count(F.when(F.col("o_orderstatus") == "X", 1))
-        .cast("long")
-        .alias("__x"),
-    ).select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.lit("final_rows").alias("item"),
-                    F.col("__n").alias("value"),
-                ),
-                F.struct(
-                    F.lit("final_keysum").alias("item"),
-                    F.col("__s").alias("value"),
-                ),
-                F.struct(
-                    F.lit("final_x").alias("item"),
-                    F.col("__x").alias("value"),
-                ),
-            )
-        ).alias("p")
-    ).select("p.item", "p.value")
+    aggs = _nsx(mirror.read(spark), "final")
     return flags.unionByName(aggs)
 
 
@@ -1950,31 +1810,7 @@ def mirror_regrain_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
         "item string, value long",
     )
-    final = mirror.read(spark)
-    aggs = final.agg(
-        F.count("*").cast("long").alias("__n"),
-        F.sum("o_orderkey").cast("long").alias("__s"),
-        F.count(F.when(F.col("o_orderstatus") == "X", 1))
-        .cast("long")
-        .alias("__x"),
-    ).select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.lit("final_rows").alias("item"),
-                    F.col("__n").alias("value"),
-                ),
-                F.struct(
-                    F.lit("final_keysum").alias("item"),
-                    F.col("__s").alias("value"),
-                ),
-                F.struct(
-                    F.lit("final_x").alias("item"),
-                    F.col("__x").alias("value"),
-                ),
-            )
-        ).alias("p")
-    ).select("p.item", "p.value")
+    aggs = _nsx(mirror.read(spark), "final")
     return aggs.unionByName(flags)
 
 
@@ -2080,37 +1916,7 @@ def mirror_alter_schema_ddl(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderstatus" in mirror.read(spark, version=pre_version).columns
     )
 
-    def agg_items(df: DataFrame, prefix: str) -> DataFrame:
-        return (
-            df.agg(
-                F.count("*").cast("long").alias("__n"),
-                F.sum("o_orderkey").cast("long").alias("__s"),
-                F.count(F.when(F.col("status") == "X", 1))
-                .cast("long")
-                .alias("__x"),
-            )
-            .select(
-                F.explode(
-                    F.array(
-                        F.struct(
-                            F.lit(f"{prefix}_rows").alias("item"),
-                            F.col("__n").alias("value"),
-                        ),
-                        F.struct(
-                            F.lit(f"{prefix}_keysum").alias("item"),
-                            F.col("__s").alias("value"),
-                        ),
-                        F.struct(
-                            F.lit(f"{prefix}_x").alias("item"),
-                            F.col("__x").alias("value"),
-                        ),
-                    )
-                ).alias("p")
-            )
-            .select("p.item", "p.value")
-        )
-
-    head = agg_items(mirror.read(spark), "head")
+    head = _nsx(mirror.read(spark), "head", "status")
     mirror.rewrite_data_files(spark, materialize=True)
     post_cols = raw_cols()
     materialized = int(
@@ -2119,7 +1925,7 @@ def mirror_alter_schema_ddl(spark: SparkSession, sf_dir: str) -> DataFrame:
         and "o_custkey" not in post_cols
         and "renames" not in mirror.current()
     )
-    post = agg_items(mirror.read(spark), "post")
+    post = _nsx(mirror.read(spark), "post", "status")
     flags = local_df(spark, 
         [
             ("old_snapshot_has_old_name", old_snapshot_has_old_name),
@@ -2224,52 +2030,22 @@ def column_generation_masking(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.lit("mask_metadata_only").alias("item"), "value")
     )
 
-    def counts(df: DataFrame, prefix: str, val: str, items) -> DataFrame:
-        n_item, hit_item, null_item = items
-        aggs = [F.count("*").cast("long").alias("__n")] if n_item else []
-        aggs += [
-            F.count(F.when(F.col("flag") == val, 1))
-            .cast("long")
-            .alias("__h"),
-            F.count(F.when(F.col("flag").isNull(), 1))
-            .cast("long")
-            .alias("__z"),
-        ]
-        row = df.agg(*aggs)
-        structs = []
-        if n_item:
-            structs.append(
-                F.struct(
-                    F.lit(n_item).alias("item"), F.col("__n").alias("value")
-                )
-            )
-        structs.append(
-            F.struct(
-                F.lit(hit_item).alias("item"), F.col("__h").alias("value")
-            )
-        )
-        if null_item:
-            structs.append(
-                F.struct(
-                    F.lit(null_item).alias("item"),
-                    F.col("__z").alias("value"),
-                )
-            )
-        return row.select(F.explode(F.array(*structs)).alias("p")).select(
-            "p.item", "p.value"
-        )
+    n = F.count("*").cast("long")
+    nulls = F.count(F.when(F.col("flag").isNull(), 1)).cast("long")
 
-    gen1 = counts(
-        mirror.read(spark, version=0), "gen1", "F", ("gen1_rows", "gen1_f", None)
+    def hits(val: str) -> Column:
+        return F.count(F.when(F.col("flag") == val, 1)).cast("long")
+
+    gen1 = _items(
+        mirror.read(spark, version=0), {"gen1_rows": n, "gen1_f": hits("F")}
     )
-    gen2 = counts(
+    gen2 = _items(
         mirror.read(spark, version=gen2_version),
-        "gen2",
-        "G2",
-        (None, "gen2_g2", "gen2_null"),
+        {"gen2_g2": hits("G2"), "gen2_null": nulls},
     )
-    head = counts(
-        mirror.read(spark), "head", "G3", ("head_rows", "head_g3", "head_null")
+    head = _items(
+        mirror.read(spark),
+        {"head_rows": n, "head_g3": hits("G3"), "head_null": nulls},
     )
     return mask_probe.unionByName(gen1).unionByName(gen2).unionByName(head)
 
@@ -2335,19 +2111,13 @@ def snapshot_table_ddl(spark: SparkSession, sf_dir: str) -> DataFrame:
         rec["dir"] == t._log.committed()[0]["dir"]
     )
     v1 = t.read(spark)
-    v1_agg = v1.agg(
-        F.count("*").cast("long").alias("__n"),
-        F.count(F.when(F.col("status") == "F", 1))
-        .cast("long")
-        .alias("__f"),
-    ).select(
-        F.explode(
-            F.array(
-                F.struct(F.lit("v1_rows").alias("item"), F.col("__n").alias("value")),
-                F.struct(F.lit("v1_f").alias("item"), F.col("__f").alias("value")),
-            )
-        ).alias("p")
-    ).select("p.item", "p.value")
+    v1_agg = _items(
+        v1,
+        {
+            "v1_rows": F.count("*").cast("long"),
+            "v1_f": F.count(F.when(F.col("status") == "F", 1)).cast("long"),
+        },
+    )
     t.commit(
         v1.withColumn(
             "status",
@@ -2361,21 +2131,16 @@ def snapshot_table_ddl(spark: SparkSession, sf_dir: str) -> DataFrame:
     # this alter re-binds from the fresh dir's parquet schema)
     t.alter_schema(add={"tier": "string"}, spark=spark)
     head = t.read(spark)
-    head_agg = head.agg(
-        F.count("*").cast("long").alias("__n"),
-        F.sum("o_orderkey").cast("long").alias("__s"),
-        F.count(F.when(F.col("status") == "X", 1)).cast("long").alias("__x"),
-        F.count(F.when(F.col("tier").isNull(), 1)).cast("long").alias("__t"),
-    ).select(
-        F.explode(
-            F.array(
-                F.struct(F.lit("head_rows").alias("item"), F.col("__n").alias("value")),
-                F.struct(F.lit("head_keysum").alias("item"), F.col("__s").alias("value")),
-                F.struct(F.lit("head_x").alias("item"), F.col("__x").alias("value")),
-                F.struct(F.lit("tier_nulls").alias("item"), F.col("__t").alias("value")),
-            )
-        ).alias("p")
-    ).select("p.item", "p.value")
+    head_agg = _items(
+        head,
+        {
+            "head_rows": F.count("*").cast("long"),
+            "head_keysum": F.sum("o_orderkey").cast("long"),
+            "head_x": F.count(F.when(F.col("status") == "X", 1)).cast("long"),
+            "tier_nulls": F.count(F.when(F.col("tier").isNull(), 1))
+            .cast("long"),
+        },
+    )
     old_snapshot_has_old_name = int(
         "o_orderstatus" in t.read_version(spark, 0).columns
     )
@@ -2462,27 +2227,18 @@ def join_feed_availablenow(spark: SparkSession, sf_dir: str) -> DataFrame:
     # two independent tables, one staged write job each (r16, guide
     # §2.4), and the two jobs overlap from a 2-thread pool (guide §2.6 —
     # fact and dim histories share nothing)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_fact = pool.submit(
-            fact.commit_many,
-            [o, v1, v1.filter(F.col("o_orderkey") % 13 != 0)],
-        )  # v0..v2
-        f_dim = pool.submit(
-            dim.commit_many,
-            [
-                c,
-                c.withColumn(
-                    "c_mktsegment",
-                    F.when(
-                        F.col("c_custkey") % 10 == 0, F.lit("MOVED")
-                    ).otherwise(F.col("c_mktsegment")),
-                ),
-            ],
-        )  # v0..v1
-        f_fact.result()
-        f_dim.result()
+    c1 = c.withColumn(
+        "c_mktsegment",
+        F.when(F.col("c_custkey") % 10 == 0, F.lit("MOVED")).otherwise(
+            F.col("c_mktsegment")
+        ),
+    )
+    _overlap(
+        lambda: fact.commit_many(
+            [o, v1, v1.filter(F.col("o_orderkey") % 13 != 0)]
+        ),  # v0..v2
+        lambda: dim.commit_many([c, c1]),  # v0..v1
+    )
     view = MaintainedJoinView(
         f"{work}/view",
         fact_keys="o_orderkey",
@@ -2502,25 +2258,18 @@ def join_feed_availablenow(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     done = driver.run_available(spark, max_commits_per_trigger=1)
-    agg = view.read(spark).agg(
-        F.count("*").cast("long").alias("__n"),
-        F.sum("o_orderkey").cast("long").alias("__s"),
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
-        .cast("long")
-        .alias("__c"),
-        F.count(F.when(F.col("c_mktsegment") == "MOVED", 1))
-        .cast("long")
-        .alias("__m"),
-    ).select(
-        F.explode(
-            F.array(
-                F.struct(F.lit("view_rows").alias("item"), F.col("__n").alias("value")),
-                F.struct(F.lit("view_keysum").alias("item"), F.col("__s").alias("value")),
-                F.struct(F.lit("view_cents").alias("item"), F.col("__c").alias("value")),
-                F.struct(F.lit("view_moved").alias("item"), F.col("__m").alias("value")),
-            )
-        ).alias("p")
-    ).select("p.item", "p.value")
+    agg = _items(
+        view.read(spark),
+        {
+            "view_rows": F.count("*").cast("long"),
+            "view_keysum": F.sum("o_orderkey").cast("long"),
+            "view_cents": F.sum(
+                F.round(F.col("o_totalprice") * 100).cast("long")
+            ).cast("long"),
+            "view_moved": F.count(F.when(F.col("c_mktsegment") == "MOVED", 1))
+            .cast("long"),
+        },
+    )
     flags = local_df(spark, 
         [("n_triggers", len(done))], "item string, value long"
     )
@@ -3005,35 +2754,16 @@ def table_constraints_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the head aggregate rides the FINAL action instead of a mid-chain
     # collect (r16, guide §2.4): the frame binds to the head manifest's
     # dirs here, and nothing commits after it
-    agg_f = (
+    agg_f = _unpivot(
         t.sql(
             """
-            SELECT CAST(COUNT(*) AS DOUBLE) AS n,
-                   ROUND(SUM(o_totalprice), 2) AS total,
-                   CAST(COUNT(CASE WHEN o_totalprice < 0 THEN 1 END)
-                        AS DOUBLE) AS neg
+            SELECT CAST(COUNT(CASE WHEN o_totalprice < 0 THEN 1 END)
+                        AS DOUBLE) AS neg_rows,
+                   CAST(COUNT(*) AS DOUBLE) AS head_rows,
+                   ROUND(SUM(o_totalprice), 2) AS head_total
             FROM orders_t
             """
         )
-        .select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.lit("neg_rows").alias("item"),
-                        F.col("neg").alias("value"),
-                    ),
-                    F.struct(
-                        F.lit("head_rows").alias("item"),
-                        F.col("n").alias("value"),
-                    ),
-                    F.struct(
-                        F.lit("head_total").alias("item"),
-                        F.col("total").alias("value"),
-                    ),
-                )
-            ).alias("p")
-        )
-        .select("p.item", "p.value")
     )
     return local_df(spark,
         [
@@ -3181,11 +2911,7 @@ def auto_discovered_mirrors(spark: SparkSession, sf_dir: str) -> DataFrame:
     write_folder("auto_region")
     bootstrap_discovered(spark, cfg, src_root)
     phase1 = discover_targets(spark, src_root)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        for f in [pool.submit(run_pipe, t) for t in phase1]:
-            f.result()
+    _overlap(*(partial(run_pipe, t) for t in phase1))
 
     # phase 2: a NEW folder path is detected by the next poll; only the
     # newcomer is loaded (the first two pairs are untouched)
@@ -3209,7 +2935,7 @@ def auto_discovered_mirrors(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("tbl", "n_rows", "sum_id", "n_updated")
         for name in specs
     ]
-    return parts[0].unionByName(parts[1]).unionByName(parts[2])
+    return reduce(DataFrame.unionByName, parts)
 
 
 @query(
@@ -3368,19 +3094,15 @@ def declarative_agg_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the source mirror and the view baseline are independent tables:
     # overlap their bulk loads from a 2-thread pool (r16, guide §2.6)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_a = pool.submit(a.initialize, o)
-        f_v = pool.submit(
-            view.initialize,
+    _overlap(
+        lambda: a.initialize(o),
+        lambda: view.initialize(
             o.groupBy("o_orderstatus").agg(
                 F.count("*").cast("long").alias("n_orders"),
                 F.sum("o_totalprice").cast("double").alias("total_price"),
-            ),
-        )
-        f_a.result()
-        f_v.result()
+            )
+        ),
+    )
     v0 = a.history()[0]["version"]
     a.delete_where(spark, "o_orderkey % 13 = 0")
     a.update_where(

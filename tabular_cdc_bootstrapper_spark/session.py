@@ -141,26 +141,3 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-TESTDATA_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict:
-    """Read every fixture parquet under ``sf_dir`` (TESTDATA.md contract).
-
-    Plain ``spark.read.parquet`` — columnar scan, predicate pushdown and
-    column pruning come from Catalyst; nothing to hand-tune here.
-    """
-    return {t: spark.read.parquet(f"{sf_dir}/{t}.parquet") for t in TESTDATA_TABLES}

@@ -26,7 +26,6 @@ import math
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 def write_partitioned(
@@ -140,10 +139,3 @@ def round_trip_format(
     if fmt == "csv":
         reader = reader.option("header", "true")
     return reader.load(path)
-
-
-def ingest_file_stats(df_with_src: DataFrame) -> DataFrame:
-    """Per-source-file ingest stats (rows per file) — the observability
-    counterpart of the loader's progress reporting (SURVEY.md §2.4 A2);
-    expects a ``_src_file`` column from read_with_exclusion."""
-    return df_with_src.groupBy("_src_file").agg(F.count("*").alias("rows"))

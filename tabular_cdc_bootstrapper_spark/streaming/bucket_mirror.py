@@ -765,23 +765,77 @@ class VersionedBucketMirror(VersionedBucketMirrorOps, TableOps):
             keys["partition_spec"] = list(self.partition_spec)
         return staged, keys
 
-    def _install_staged(self, wdir: str, version: int) -> dict:
-        mapping: dict[str, str] = {}
+    def _install_bucket_dirs(
+        self,
+        staging: str,
+        buckets: Sequence[int] | None,
+        version: int,
+        kind: str = "",
+    ) -> dict[str, str]:
+        """Move each staged ``staging/bucket=N`` of ``buckets`` (None: every
+        staged bucket) under the immutable new name
+        ``data/bucket=N/v-<version>[-<kind>]-<uuid8>``, then remove the
+        staging dir. Returns ``{bucket: dst}`` for the buckets installed; a
+        listed bucket with no staged dir is left out."""
+        tag = f"{version:08d}-{kind}" if kind else f"{version:08d}"
+        installed: dict[str, str] = {}
         try:
-            for d in os.listdir(wdir):
-                if not d.startswith("bucket="):
-                    continue
-                b = int(d.split("=", 1)[1])
-                bdir = os.path.join(self.data_dir, f"bucket={b}")
-                os.makedirs(bdir, exist_ok=True)
-                dst = os.path.join(
-                    bdir, f"v-{version:08d}-{uuid.uuid4().hex[:8]}"
-                )
-                os.replace(os.path.join(wdir, d), dst)
-                mapping[str(b)] = dst
+            if buckets is None:
+                buckets = [
+                    int(d.split("=", 1)[1])
+                    for d in os.listdir(staging)
+                    if d.startswith("bucket=")
+                ]
+            for b in buckets:
+                src = os.path.join(staging, f"bucket={int(b)}")
+                if os.path.isdir(src):
+                    bdir = os.path.join(self.data_dir, f"bucket={int(b)}")
+                    os.makedirs(bdir, exist_ok=True)
+                    dst = os.path.join(bdir, f"v-{tag}-{uuid.uuid4().hex[:8]}")
+                    os.replace(src, dst)  # install under a NEW name only
+                    installed[str(int(b))] = dst
         finally:
-            shutil.rmtree(wdir, ignore_errors=True)
-        return {"buckets": mapping}
+            shutil.rmtree(staging, ignore_errors=True)
+        return installed
+
+    def _staged_bucket_stats(
+        self, spark: SparkSession, staging: str, cols: Sequence[str]
+    ) -> dict[str, dict]:
+        """Per-bucket ``[min, max]`` of ``cols`` over a staged write (r10,
+        Iceberg data skipping). Folded from the parquet footers the write
+        just produced when their types allow (r15, streaming/_stats.py —
+        no second Spark job, byte-equal to the aggregate); else ONE
+        bounded aggregate (<= n_buckets rows) over the staged BYTES, one
+        scan of the delta rather than a re-execution of its plan."""
+        if not cols:
+            return {}
+        footer = footer_bucket_stats(staging, cols)
+        if footer is not None:
+            bounds = {b: {c: v[c] for c in cols} for b, v in footer.items()}
+        else:
+            sdf = spark.read.parquet(staging)
+            cols = [c for c in cols if c in sdf.columns]
+            if not cols:
+                return {}
+            aggs = []
+            for c in cols:
+                aggs += [F.min(c).alias(f"__mn_{c}"), F.max(c).alias(f"__mx_{c}")]
+            bounds = {
+                str(int(r["bucket"])): {
+                    c: (r[f"__mn_{c}"], r[f"__mx_{c}"]) for c in cols
+                }
+                for r in sdf.groupBy("bucket").agg(*aggs).collect()
+            }
+        return {
+            b: {
+                c: [self._json_stat(lo), self._json_stat(hi)]
+                for c, (lo, hi) in v.items()
+            }
+            for b, v in bounds.items()
+        }
+
+    def _install_staged(self, wdir: str, version: int) -> dict:
+        return {"buckets": self._install_bucket_dirs(wdir, None, version)}
 
     def initialize(
         self,
@@ -871,45 +925,11 @@ class VersionedBucketMirror(VersionedBucketMirrorOps, TableOps):
                 "maxRecordsPerFile", int(max_records_per_file)
             )
         writer.partitionBy("bucket").parquet(staging)
-        # per-bucket column stats (r10, Iceberg data skipping): ONE
-        # bounded aggregate (<= n_buckets rows) over the staged BYTES —
-        # reading the staging dir back costs one scan of the delta, not
-        # a re-execution of the upstream merge plan
-        staged_stats: dict[str, dict] = {}
-        if self.stats_cols:
-            present = [c for c in self.stats_cols if c in df.columns]
-            footer = (
-                footer_bucket_stats(staging, present) if present else None
-            )
-            if footer is not None:
-                # r15 fast path (streaming/_stats.py): fold the bounds
-                # from the parquet footers the write just produced —
-                # no second Spark job over the staged bytes; byte-equal
-                # to the aggregate for the exact-stats types it accepts
-                for bucket, bounds in footer.items():
-                    staged_stats[bucket] = {
-                        c: [
-                            self._json_stat(bounds[c][0]),
-                            self._json_stat(bounds[c][1]),
-                        ]
-                        for c in present
-                    }
-            elif present:
-                sdf = df.sparkSession.read.parquet(staging)
-                present = [c for c in self.stats_cols if c in sdf.columns]
-                aggs = []
-                for c in present:
-                    aggs.append(F.min(c).alias(f"__mn_{c}"))
-                    aggs.append(F.max(c).alias(f"__mx_{c}"))
-                if present:
-                    for r in sdf.groupBy("bucket").agg(*aggs).collect():
-                        staged_stats[str(int(r["bucket"]))] = {
-                            c: [
-                                self._json_stat(r[f"__mn_{c}"]),
-                                self._json_stat(r[f"__mx_{c}"]),
-                            ]
-                            for c in present
-                        }
+        staged_stats = self._staged_bucket_stats(
+            df.sparkSession,
+            staging,
+            [c for c in self.stats_cols if c in df.columns],
+        )
         # untouched buckets carry forward from wherever this commit lands:
         # the caller-resolved basis manifest when given (the manifest its
         # df was DERIVED from — the CAS basis), else the branch head for
@@ -937,32 +957,14 @@ class VersionedBucketMirror(VersionedBucketMirrorOps, TableOps):
                 shutil.rmtree(staging, ignore_errors=True)
                 raise
         # install staged dirs, recording per-bucket ACTIONS (install dst /
-        # delete) rather than a mapping, so a conflict retry can re-apply
-        # them against a newer head
-        actions: dict[str, str | None] = {}
-        try:
-            staged = [
-                d for d in os.listdir(staging) if d.startswith("bucket=")
-            ]
-            install = (
-                [int(d.split("=", 1)[1]) for d in staged]
-                if touched is None
-                else list(touched)
-            )
-            for b in install:
-                src = os.path.join(staging, f"bucket={int(b)}")
-                if os.path.isdir(src):
-                    bdir = os.path.join(self.data_dir, f"bucket={int(b)}")
-                    os.makedirs(bdir, exist_ok=True)
-                    dst = os.path.join(
-                        bdir, f"v-{version:08d}-{uuid.uuid4().hex[:8]}"
-                    )
-                    os.replace(src, dst)  # install under a NEW name only
-                    actions[str(int(b))] = dst
-                else:
-                    actions[str(int(b))] = None  # bucket fully deleted
-        finally:
-            shutil.rmtree(staging, ignore_errors=True)
+        # delete: a touched bucket with no staged dir) rather than a
+        # mapping, so a conflict retry can re-apply them against a newer head
+        installed = self._install_bucket_dirs(staging, touched, version)
+        actions: dict[str, str | None] = (
+            installed
+            if touched is None
+            else {str(int(b)): installed.get(str(int(b))) for b in touched}
+        )
         new_schema = T.StructType(
             [f for f in staged_df.schema.fields if f.name != "bucket"]
         )
@@ -1295,61 +1297,16 @@ class VersionedBucketMirror(VersionedBucketMirrorOps, TableOps):
             # (stale-but-safe) so the carried base stats keep any bucket
             # with matching live rows readable — its tombstones ride in
             # with the bucket read
-            if self.stats_cols and kind == "delta":
-                present = [
-                    c for c in self.stats_cols if c in slice_df.columns
-                ]
-                footer = (
-                    footer_bucket_stats(staging, present)
-                    if present
-                    else None
+            if kind == "delta":
+                staged_stats = self._staged_bucket_stats(
+                    slice_df.sparkSession,
+                    staging,
+                    [c for c in self.stats_cols if c in slice_df.columns],
                 )
-                if footer is not None:
-                    # r15 fast path (streaming/_stats.py): bounds from
-                    # the just-written parquet footers — no second
-                    # Spark job over the staged delta
-                    for bucket, bounds in footer.items():
-                        staged_stats[bucket] = {
-                            c: [
-                                self._json_stat(bounds[c][0]),
-                                self._json_stat(bounds[c][1]),
-                            ]
-                            for c in present
-                        }
-                elif present:
-                    sdf = slice_df.sparkSession.read.parquet(staging)
-                    present = [
-                        c for c in self.stats_cols if c in sdf.columns
-                    ]
-                    aggs = []
-                    for c in present:
-                        aggs.append(F.min(c).alias(f"__mn_{c}"))
-                        aggs.append(F.max(c).alias(f"__mx_{c}"))
-                    for r in sdf.groupBy("bucket").agg(*aggs).collect():
-                        staged_stats[str(int(r["bucket"]))] = {
-                            c: [
-                                self._json_stat(r[f"__mn_{c}"]),
-                                self._json_stat(r[f"__mx_{c}"]),
-                            ]
-                            for c in present
-                        }
-            try:
-                for b in touched:
-                    src = os.path.join(staging, f"bucket={int(b)}")
-                    if os.path.isdir(src):
-                        bdir = os.path.join(
-                            self.data_dir, f"bucket={int(b)}"
-                        )
-                        os.makedirs(bdir, exist_ok=True)
-                        dst = os.path.join(
-                            bdir,
-                            f"v-{version:08d}-{kind}-"
-                            f"{uuid.uuid4().hex[:8]}",
-                        )
-                        os.replace(src, dst)
-                        actions[str(int(b))].append(dst)
-            finally:
-                shutil.rmtree(staging, ignore_errors=True)
+            for b, dst in self._install_bucket_dirs(
+                staging, touched, version, kind
+            ).items():
+                actions[b].append(dst)
         if up_schema is None:  # pure-delete batch: envelope-only schema
             up_schema = (
                 slices[-1][0]

@@ -37,6 +37,14 @@ def spark():
         "SPARK_MASTER",
         f"local[{os.environ.get('SPARK_GRAFT_TEST_CPUS', '8')}]",
     )
+    # The TEST driver heap is 8g, not get_spark's 16g: under 16g the
+    # suite's JVM reached 9.5 GB resident on a 15 GB host, too little
+    # room left for a second Spark JVM (a subprocess test, a benchmark).
+    # The heap it kept across young collections (survivor + old) peaked
+    # at 3.7 GB; 8g is about twice that. (G1 grows eden into whatever the
+    # cap allows, so the eden-inclusive peak measures the cap, not the
+    # need.)
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", "8g")
     spark = get_spark(
         "tests",
         shuffle_partitions=8,

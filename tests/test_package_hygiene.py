@@ -20,7 +20,10 @@ built there alone. It also pins how JSON metadata reaches disk: every
 (temp file + atomic rename) or an exclusive create (mode ``"x"``).
 And it pins the size of every staged bucket write: each ``repartition``
 in the mirror and purge modules takes its count from
-``_sizing.write_tasks``, the one sizing rule.
+``_sizing.write_tasks``, the one sizing rule. Two pins hold the query
+harnesses to their shared helpers: every thread pool under ``queries/``
+is the one in ``_registry._overlap``, and ``cdc_state.py`` folds no
+probe through ``explode(array(...))``.
 """
 
 from __future__ import annotations
@@ -270,3 +273,53 @@ def test_staged_writes_are_sized_by_the_one_rule():
             ):
                 unsized.append(f"{name}:{node.lineno}")
     assert calls >= 4 and unsized == []
+
+
+def _call_name(node: ast.Call) -> str | None:
+    f = node.func
+    return f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+
+
+def test_harness_pools_are_built_only_by_overlap():
+    """Every ``ThreadPoolExecutor`` under ``queries/`` is built inside
+    ``_registry._overlap``, which submits through
+    ``inheritable_thread_target``: a bare pool runs its Spark jobs
+    without the caller's job group and description."""
+    pools, overlap = [], None
+    for path in _py_files(f"{PKG}/queries"):
+        tree = ast.parse(path.read_text())
+        inside: set[int] = set()
+        for fn in ast.walk(tree):
+            if isinstance(fn, ast.FunctionDef) and fn.name == "_overlap":
+                if path.name == "_registry.py":
+                    overlap = fn
+                    inside |= {id(n) for n in ast.walk(fn)}
+        pools += [
+            f"{path.relative_to(REPO)}:{n.lineno}"
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Call)
+            and _call_name(n) == "ThreadPoolExecutor"
+            and id(n) not in inside
+        ]
+    assert pools == []
+    assert overlap is not None
+    assert "inheritable_thread_target" in {
+        n.id for n in ast.walk(overlap) if isinstance(n, ast.Name)
+    }
+
+
+def test_cdc_probes_are_not_folded_by_explode():
+    """``queries/cdc_state.py`` builds no ``explode(array(...))`` item
+    fold: its probes go through ``_items`` (one aggregate and
+    ``unpivot``)."""
+    tree = ast.parse((REPO / PKG / "queries" / "cdc_state.py").read_text())
+    folds = [
+        n.lineno
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Call)
+        and _call_name(n) == "explode"
+        and n.args
+        and isinstance(n.args[0], ast.Call)
+        and _call_name(n.args[0]) == "array"
+    ]
+    assert folds == []
