@@ -29,8 +29,10 @@ def _unpivot(row: DataFrame) -> DataFrame:
 
 def _items(df: DataFrame, items: dict[str, Column]) -> DataFrame:
     """``df`` aggregated to one ``(item, value)`` row per ``items`` entry
-    (item name → aggregate column), in entry order."""
-    return _unpivot(df.agg(*(c.alias(k) for k, c in items.items())))
+    (item name → aggregate column, cast to long), in entry order."""
+    return _unpivot(
+        df.agg(*(c.cast("long").alias(k) for k, c in items.items()))
+    )
 
 
 def _nsx(
@@ -45,7 +47,7 @@ def _nsx(
     }
     if x_col:
         items[f"{prefix}_x"] = F.count(F.when(F.col(x_col) == "X", 1))
-    return _items(df, {k: c.cast("long") for k, c in items.items()})
+    return _items(df, items)
 
 
 def _ref_row(df: DataFrame, **tags: str | int) -> DataFrame:
@@ -1342,10 +1344,9 @@ def concurrent_merge_serialization(spark: SparkSession, sf_dir: str) -> DataFram
     aggs = _items(
         mirror.read(spark),
         {
-            "final_rows": F.count("*").cast("long"),
-            "final_keysum": F.sum("o_orderkey").cast("long"),
-            "n_updated": F.count(F.when(F.col("o_orderstatus") == "CONC", 1))
-            .cast("long"),
+            "final_rows": F.count("*"),
+            "final_keysum": F.sum("o_orderkey"),
+            "n_updated": F.count(F.when(F.col("o_orderstatus") == "CONC", 1)),
         },
     )
     return flags.unionByName(aggs)
@@ -2030,11 +2031,11 @@ def column_generation_masking(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.lit("mask_metadata_only").alias("item"), "value")
     )
 
-    n = F.count("*").cast("long")
-    nulls = F.count(F.when(F.col("flag").isNull(), 1)).cast("long")
+    n = F.count("*")
+    nulls = F.count(F.when(F.col("flag").isNull(), 1))
 
     def hits(val: str) -> Column:
-        return F.count(F.when(F.col("flag") == val, 1)).cast("long")
+        return F.count(F.when(F.col("flag") == val, 1))
 
     gen1 = _items(
         mirror.read(spark, version=0), {"gen1_rows": n, "gen1_f": hits("F")}
@@ -2114,8 +2115,8 @@ def snapshot_table_ddl(spark: SparkSession, sf_dir: str) -> DataFrame:
     v1_agg = _items(
         v1,
         {
-            "v1_rows": F.count("*").cast("long"),
-            "v1_f": F.count(F.when(F.col("status") == "F", 1)).cast("long"),
+            "v1_rows": F.count("*"),
+            "v1_f": F.count(F.when(F.col("status") == "F", 1)),
         },
     )
     t.commit(
@@ -2134,11 +2135,10 @@ def snapshot_table_ddl(spark: SparkSession, sf_dir: str) -> DataFrame:
     head_agg = _items(
         head,
         {
-            "head_rows": F.count("*").cast("long"),
-            "head_keysum": F.sum("o_orderkey").cast("long"),
-            "head_x": F.count(F.when(F.col("status") == "X", 1)).cast("long"),
-            "tier_nulls": F.count(F.when(F.col("tier").isNull(), 1))
-            .cast("long"),
+            "head_rows": F.count("*"),
+            "head_keysum": F.sum("o_orderkey"),
+            "head_x": F.count(F.when(F.col("status") == "X", 1)),
+            "tier_nulls": F.count(F.when(F.col("tier").isNull(), 1)),
         },
     )
     old_snapshot_has_old_name = int(
@@ -2261,13 +2261,12 @@ def join_feed_availablenow(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = _items(
         view.read(spark),
         {
-            "view_rows": F.count("*").cast("long"),
-            "view_keysum": F.sum("o_orderkey").cast("long"),
+            "view_rows": F.count("*"),
+            "view_keysum": F.sum("o_orderkey"),
             "view_cents": F.sum(
                 F.round(F.col("o_totalprice") * 100).cast("long")
-            ).cast("long"),
-            "view_moved": F.count(F.when(F.col("c_mktsegment") == "MOVED", 1))
-            .cast("long"),
+            ),
+            "view_moved": F.count(F.when(F.col("c_mktsegment") == "MOVED", 1)),
         },
     )
     flags = local_df(spark, 
