@@ -9,9 +9,13 @@ for a 160-query surface where the Spark UI is disabled.
 Usage:
     python scripts/profile_query.py <query> [<query> ...] [--runs N]
 
-Prints, per query: total wall (median of runs), then per-job lines of the
-LAST run sorted by duration: job_id, seconds, #tasks, shuffle read/write
-MB, first line of the job description / callsite.
+Prints, per query: total wall (median of runs); then one line per job in
+submission order: job_id, seconds, driver gap, #tasks, shuffle read/write
+MB, the job description / callsite; then jobs, tasks and summed job
+seconds per query run. Each run sets the job description
+``<query>#r<n>``, which pooled harness jobs inherit, so the per-run
+totals come from one session; jobs outside every run (the warm-up) are
+counted under ``(untagged)``.
 """
 
 from __future__ import annotations
@@ -62,6 +66,7 @@ def _parse_eventlog(path: Path) -> list[dict]:
             jobs[jid] = {
                 "id": jid,
                 "t0": ev["Submission Time"],
+                "group": props.get("spark.job.description") or "",
                 "desc": props.get("spark.job.description")
                 or props.get("callSite.short", ""),
                 "stages": [s["Stage ID"] for s in ev.get("Stage Infos", [])],
@@ -96,6 +101,7 @@ def _parse_eventlog(path: Path) -> list[dict]:
         out.append(
             {"id": jid, "sec": dur, "tasks": tasks, "sr_mb": sr / 1e6,
              "sw_mb": sw / 1e6, "desc": (j["desc"] or "")[:40],
+             "group": j["group"],
              "t0": j["t0"], "name": (name or "")[:60]}
         )
     return out
@@ -174,6 +180,15 @@ def main() -> None:
         print(f"  job {j['id']:>4} {j['sec']:7.3f}s gap={gap:6.3f}s "
               f"tasks={j['tasks']:<4} sr={j['sr_mb']:7.1f}MB "
               f"sw={j['sw_mb']:7.1f}MB {j['desc']:<42} {j['name']}")
+    tags = [f"{name}#r{i}" for name in names for i in range(runs)]
+    per_tag: dict[str, list[dict]] = {t: [] for t in tags + ["(untagged)"]}
+    for j in jobs:
+        per_tag[j["group"] if j["group"] in per_tag else "(untagged)"].append(j)
+    print("\n--- per query run ---")
+    for tag, tjobs in per_tag.items():
+        print(f"  {tag:<48} jobs={len(tjobs):<4} "
+              f"tasks={sum(j['tasks'] for j in tjobs):<6} "
+              f"job_s={sum(j['sec'] for j in tjobs):7.2f}")
 
 
 if __name__ == "__main__":

@@ -780,6 +780,7 @@ class TableOps:
       (None when it holds no data);
     - ``_publish_commit(record, expected_head=None)``: publish a main
       commit (CAS on ``expected_head`` when given) and run ``_expire``;
+      commits reach it through ``_publish_cas``, the one retry loop;
     - ``_new_like(dst_root)``: an empty table of the same layout and
       settings at ``dst_root`` (clone target);
     - ``_map_dirs(e, fn)``: a copy of record ``e`` with every data dir
@@ -817,7 +818,12 @@ class TableOps:
     ``_alter_rules(cur)`` and ``_remap_stats(record, drop, rename)``
     add a layout's UPDATE and ALTER rules.
 
-    Commit entry points thread ``branch=`` to ``_publish_to_branch``."""
+    Every commit publishes through ``_publish_cas(build, basis,
+    rebase, branch)``, the one retry loop, and supplies only its rebase
+    rule: ``rebase(basis, head)`` returns the basis the record is
+    rebuilt from, or raises. A rebase that accepts a head whose CHECK
+    constraints differ from the basis's first validates the commit's
+    data against them (``_revalidate``)."""
 
     _PURGE_KEEP_EMPTY = False
     _KEEP_NEWEST_DIRS = False
@@ -874,6 +880,98 @@ class TableOps:
                     )
                 return e
         raise ValueError(f"no snapshot {version} in {self.root}")
+
+    # -- the publish loop --------------------------------------------
+
+    def _head(self, branch: str | None = None) -> dict | None:
+        """The record a commit lands on: ``branch``'s head, else main's."""
+        if branch is not None:
+            return self._branch_head_entry(branch)
+        return self.current()
+
+    def _basis_of(self, expected_version: "int | tuple") -> dict | None:
+        """The record a based commit's ``expected_version`` names: a bare
+        version, or a ``_token`` whose purge stamp must still match (a
+        purge since the caller read it raises :class:`CommitConflict`).
+        -1 is the empty table (None)."""
+        v, purged = (
+            expected_version
+            if isinstance(expected_version, tuple)
+            else (expected_version, None)
+        )
+        if v < 0:
+            return None
+        basis = self.current()
+        if basis is None or basis["version"] != v:
+            basis = next(
+                (e for e in self._log.entries() if e["version"] == v), None
+            )
+        if basis is None:
+            raise ValueError(f"no snapshot {v} in {self.root}")
+        if purged is not None and _token(basis) != (v, purged):
+            raise CommitConflict(
+                f"{self.root}: snapshot {v} was purged after this "
+                "commit read it — re-run against the new head"
+            )
+        return basis
+
+    def _revalidate(self, read, basis: dict | None, head: dict | None) -> None:
+        """Validate ``read()`` (a commit's data) against the CHECK
+        constraints ``head`` has and ``basis`` did not vouch for: the
+        constraint half of moving a commit from ``basis`` to ``head``,
+        since ``_publish_cas`` then carries ``head``'s set onto it.
+        ``read`` runs only when a constraint needs checking."""
+        vouched = (basis or {}).get("constraints") or {}
+        extra = {
+            k: v
+            for k, v in ((head or {}).get("constraints") or {}).items()
+            if vouched.get(k) != v
+        }
+        if extra:
+            df = read()
+            if df is not None:
+                _check_table_constraints(df, extra, self.root)
+
+    def _publish_cas(
+        self, build, basis: dict | None, rebase, branch: str | None = None
+    ) -> dict | None:
+        """The optimistic publish loop every commit goes through — the
+        Iceberg retry model: a commit that loses the race re-applies its
+        changes to the new metadata and tries again
+        (https://iceberg.apache.org/spec/#optimistic-concurrency).
+
+        Each attempt builds the record from the basis (``build(basis)``;
+        None means nothing is left to publish and is returned as is),
+        carries the basis's table properties onto it — the CHECK
+        ``constraints``, the one rule that keeps them on every commit —
+        and publishes it: to ``branch`` when given, else to main under a
+        CAS on ``_token(basis)``. On a :class:`CommitConflict`,
+        ``rebase(basis, head)`` returns the basis of the next attempt
+        given the head the table has now, or raises; ``rebase=None``
+        lets the conflict propagate. Attempts back off on
+        ``_RETRY_BACKOFF``, which outlasts ``conflict_grace_s``, so a
+        commit blocked by a crash orphan self-heals once it ages out;
+        the conflict after the last back-off propagates."""
+        for delay in (*_RETRY_BACKOFF, None):
+            record = build(basis)
+            if record is None:
+                return None
+            cons = (basis or {}).get("constraints")
+            if cons:
+                record["constraints"] = cons
+            else:
+                record.pop("constraints", None)
+            try:
+                if branch is not None:
+                    return self._publish_to_branch(record, branch)
+                return self._publish_commit(
+                    record, expected_head=_token(basis)
+                )
+            except CommitConflict:
+                if delay is None or rebase is None:
+                    raise
+                basis = rebase(basis, self._head(branch))
+                time.sleep(delay)
 
     # -- time travel -------------------------------------------------
 
@@ -970,23 +1068,20 @@ class TableOps:
         return self._publish_properties(cur, constraints=cons)
 
     def _publish_properties(self, cur: dict, **props) -> dict:
-        """Metadata-only commit updating table properties: the record
-        SHARES every data dir of ``cur`` (zero movement), carries all
-        other metadata forward, and publishes under the purge-aware
-        token CAS."""
+        """Metadata-only commit setting table properties (an empty value
+        removes one): the record SHARES every data dir of ``cur`` (zero
+        movement), carries its data keys forward, and publishes under
+        the purge-aware token CAS. The one commit that writes the
+        properties ``_publish_cas`` carries; it does not retry."""
         record = {
             "version": self._log.next_version(),
             "ts": time.time(),
             "operation": "set_properties",
         }
-        for k in (*self._STATE_KEYS, "constraints"):
+        for k in self._STATE_KEYS:
             if k in cur:
                 record[k] = cur[k]
-        for k, v in props.items():
-            if v:
-                record[k] = v
-            else:
-                record.pop(k, None)
+        record.update({k: v for k, v in props.items() if v})
         return self._publish_commit(record, expected_head=_token(cur))
 
     # -- maintenance -------------------------------------------------
@@ -1002,38 +1097,39 @@ class TableOps:
         bucket spec…) ride along; CHECK constraints are table properties
         and carry from the current head instead. On a CONSTRAINED table
         ``spark=`` is required: the constraint may postdate the target
-        snapshot, so the restored data is validated against it first."""
+        snapshot, so the restored data is validated against it first.
+        The publish CASes on the head whose constraints were checked; a
+        concurrent commit moves the rollback to the new head after the
+        restored data passes any constraint that head added."""
         target = self._resolve(to_version)
-        head_cons = (self.current() or {}).get("constraints") or {}
-        if head_cons:
+
+        def restored() -> DataFrame | None:
             if spark is None:
                 raise ValueError(
-                    f"{self.root} carries CHECK constraints "
-                    f"({sorted(head_cons)}): pass spark= so the restored "
-                    "snapshot can be validated, or DROP them first"
+                    f"{self.root} carries CHECK constraints: pass spark= "
+                    "so the restored snapshot can be validated, or DROP "
+                    "them first"
                 )
-            df = self._read_entry(spark, target)
-            if df is not None:
-                _check_table_constraints(df, head_cons, self.root)
-        record = {
-            "version": self._log.next_version(),
-            "ts": time.time(),
-            "rollback_of": to_version,
-        }
-        for k in self._STATE_KEYS:
-            if k in target:
-                record[k] = target[k]
-        if head_cons:
-            record["constraints"] = head_cons
-        for delay in (*_RETRY_BACKOFF, None):
-            try:
-                return self._publish_commit(record)
-            except CommitConflict:
-                if delay is None:
-                    raise
-                time.sleep(delay)
-                record["version"] = self._log.next_version()
-                record["ts"] = time.time()
+            return self._read_entry(spark, target)
+
+        def build(basis: dict | None) -> dict:
+            record = {
+                "version": self._log.next_version(),
+                "ts": time.time(),
+                "rollback_of": to_version,
+            }
+            for k in self._STATE_KEYS:
+                if k in target:
+                    record[k] = target[k]
+            return record
+
+        def rebase(basis: dict | None, head: dict | None) -> dict | None:
+            self._revalidate(restored, basis, head)
+            return head
+
+        head = self.current()
+        self._revalidate(restored, None, head)
+        return self._publish_cas(build, head, rebase)
 
     def clone_to(
         self,
@@ -1215,6 +1311,13 @@ class TableOps:
         _check_meta(meta)
         wdir = os.path.join(self.root, f"wap-{uuid.uuid4().hex[:8]}")
         staged, schema_keys = self._stage(spark, df, wdir)
+        installed: dict | None = None  # record keys of the moved dirs
+
+        def discard() -> None:
+            doomed = [wdir] if installed is None else self._entry_dirs(installed)
+            for d in doomed:
+                shutil.rmtree(d, ignore_errors=True)
+
         static_report = []
         if row_rules:
             static_report.extend(
@@ -1225,28 +1328,18 @@ class TableOps:
                 }
                 for r in check_constraints(staged, row_rules).collect()
             )
-        # conflict loop (r11): a concurrent commit landing between this
-        # WAP's baseline read and its publish surfaces as a
-        # CommitConflict — the ANOMALY audit then re-runs with the new
-        # head as its baseline (the two-writer WAP contract: audits are
-        # always relative to the state they actually publish onto);
-        # row-rule verdicts are head-independent and computed once.
-        installed: dict | None = None  # record keys of the moved dirs
-        attempt = 0
-        while True:
-            basis = None if branch is not None else self.current()
-            report = list(static_report)
+        report: list[dict] = []
+
+        def build(basis: dict | None) -> dict | None:
+            # anomaly rules audit against the basis, the state this
+            # attempt publishes onto — the branch head for a branch-
+            # staged WAP (multi-batch WAP audits each batch against the
+            # batch before it), else main's head; a rebase re-audits
+            # against the new head. Row-rule verdicts are head-
+            # independent and computed once.
+            nonlocal staged, installed
+            report[:] = static_report
             if anomaly_rules:
-                # baseline = the previous state of wherever this
-                # publishes: the branch head for a branch-staged WAP
-                # (multi-batch WAP audits each batch against the batch
-                # before it), else the main CURRENT snapshot
-                baseline = self._read_entry(
-                    spark,
-                    self._branch_head_entry(branch)
-                    if branch is not None
-                    else basis,
-                )
                 report.extend(
                     {
                         "rule": r["rule"],
@@ -1255,17 +1348,11 @@ class TableOps:
                         "passed": r["passed"],
                     }
                     for r in check_anomalies(
-                        baseline, staged, anomaly_rules
+                        self._read_entry(spark, basis), staged, anomaly_rules
                     ).collect()
                 )
             if not all(r["passed"] for r in report):
-                doomed = (
-                    [wdir] if installed is None
-                    else self._entry_dirs(installed)
-                )
-                for d in doomed:
-                    shutil.rmtree(d, ignore_errors=True)
-                return {"published": False, "version": None, "report": report}
+                return None
             version = self._log.next_version()
             if installed is None:
                 installed = self._install_staged(wdir, version)
@@ -1285,25 +1372,30 @@ class TableOps:
             }
             if meta:
                 record.update(meta)
-            if branch is not None:
-                rec = self._publish_to_branch(record, branch)
-                return {"published": True, **rec, "report": report}
-            try:
-                self._publish_commit(
-                    record,
-                    expected_head=_token(basis) if anomaly_rules else None,
+            return record
+
+        def rebase(basis: dict | None, head: dict | None) -> dict | None:
+            if not self._entry_readable(installed):
+                raise CommitConflict(
+                    f"WAP staging of {self.root} was reclaimed by a "
+                    "concurrent retention pass; re-run the WAP"
                 )
-                return {"published": True, **record, "report": report}
-            except CommitConflict:
-                attempt += 1
-                if attempt > len(_RETRY_BACKOFF):
-                    raise
-                if not self._entry_readable(installed):
-                    raise CommitConflict(
-                        f"WAP staging of {self.root} was reclaimed by a "
-                        "concurrent retention pass; re-run the WAP"
-                    ) from None
-                time.sleep(_RETRY_BACKOFF[attempt - 1])
+            self._revalidate(lambda: staged, basis, head)
+            return head
+
+        # the staged bytes answer to the CHECK constraints of the head
+        # they publish onto, like every other commit's
+        basis = self._head(branch)
+        try:
+            self._revalidate(lambda: staged, None, basis)
+            rec = self._publish_cas(build, basis, rebase, branch)
+        except ConstraintViolation:
+            discard()
+            raise
+        if rec is None:
+            discard()
+            return {"published": False, "version": None, "report": report}
+        return {"published": True, **rec, "report": report}
 
     # -- row-level DML and ALTER ---------------------------------------
 
@@ -1551,7 +1643,7 @@ class TableOps:
             "operation": "alter_schema",
             "altered": meta["altered"],
         }
-        for k in (*self._STATE_KEYS, "constraints"):
+        for k in self._STATE_KEYS:
             if k in cur:
                 record[k] = cur[k]
         record["schema"] = meta["schema"]
@@ -1562,7 +1654,7 @@ class TableOps:
             else:
                 record.pop(k, None)
         self._remap_stats(record, drop, rename)
-        return self._publish_commit(record, expected_head=_token(cur))
+        return self._publish_cas(lambda basis: record, cur, None)
 
     # -- GDPR purge and per-commit retention --------------------------
 
@@ -1810,31 +1902,26 @@ class TableOps:
     def _publish_to_branch(self, record: dict, name: str) -> dict:
         """Advance ``name`` to ``record``: append the (ref-marked) log
         entry — an EXCLUSIVE create, so a version collision with a
-        concurrent main or foreign-branch commit re-allocates instead of
-        overwriting (r11) — then move the branch pointer; two atomic
-        steps, main's CURRENT untouched. A crash between them leaves an
-        above-pointer entry outside the branch window ((base, head]
-        doesn't cover it), so the next publish GCs it like any crash
-        orphan — the branch is consistent at its old head either way."""
+        concurrent main or foreign-branch commit raises
+        :class:`CommitConflict` (``_publish_cas`` rebuilds the record
+        at the next version) instead of overwriting (r11) — then move
+        the branch pointer; two atomic steps, main's CURRENT untouched.
+        A crash between them leaves an above-pointer entry outside the
+        branch window ((base, head] doesn't cover it), so the next
+        publish GCs it like any crash orphan — the branch is consistent
+        at its old head either way."""
         self._branchset.get(name)  # raises on unknown branch
         record = dict(record)
         record["ref"] = name
         os.makedirs(self._log.log_dir, exist_ok=True)
-        for delay in (*_RETRY_BACKOFF, None):
-            lpath = self._log._entry_path(record["version"])
-            try:
-                with open(lpath, "x") as fh:
-                    json.dump(record, fh)
-                break
-            except FileExistsError:
-                if delay is None:
-                    raise CommitConflict(
-                        f"branch {name!r} of {self.root}: version "
-                        f"{record['version']} kept colliding with "
-                        "concurrent commits"
-                    ) from None
-                time.sleep(delay)
-                record["version"] = self._log.next_version()
+        try:
+            with open(self._log._entry_path(record["version"]), "x") as fh:
+                json.dump(record, fh)
+        except FileExistsError:
+            raise CommitConflict(
+                f"branch {name!r} of {self.root}: version "
+                f"{record['version']} already has a log entry"
+            ) from None
         self._branchset.set_head(name, record["version"])
         return record
 

@@ -25,7 +25,6 @@ from tabular_cdc_bootstrapper_spark.streaming._protocol import (
     ConstraintViolation,
     SnapshotLog,
     TableOps,
-    _RETRY_BACKOFF,
     _UNSET,
     _check_meta,
     _check_table_constraints,
@@ -934,15 +933,7 @@ class VersionedBucketMirror(VersionedBucketMirrorOps, TableOps):
         # the caller-resolved basis manifest when given (the manifest its
         # df was DERIVED from — the CAS basis), else the branch head for
         # a branch-staged commit, else main's CURRENT
-        cur = (
-            (
-                self._branch_head_entry(branch)
-                if branch is not None
-                else self.current()
-            )
-            if basis is _UNSET
-            else basis
-        )
+        cur = self._head(branch) if basis is _UNSET else basis
         # CHECK constraints (r12): validate the STAGED bytes before any
         # dir installs — one scan ∝ this commit, the manifest never
         # publishes violating rows and nothing needs cleanup on refusal
@@ -969,12 +960,13 @@ class VersionedBucketMirror(VersionedBucketMirrorOps, TableOps):
             [f for f in staged_df.schema.fields if f.name != "bucket"]
         )
 
-        def _build(base_entry: dict | None) -> dict:
-            mapping: dict[str, str] = (
-                dict(base_entry["buckets"])
-                if (base_entry and touched is not None)
-                else {}
-            )
+        conflicted: list[str] = []
+
+        def _build(base: dict | None) -> dict | None:
+            if conflicted and not actions:
+                return None  # every staged bucket lost to a concurrent commit
+            carry = base if touched is not None else None
+            mapping: dict[str, str] = dict(carry["buckets"]) if carry else {}
             for b, dst in actions.items():
                 if dst is None:
                     mapping.pop(b, None)
@@ -985,179 +977,152 @@ class VersionedBucketMirror(VersionedBucketMirrorOps, TableOps):
             # rest carry forward; touched=None clears everything
             deltas = {
                 b: list(v)
-                for b, v in ((base_entry or {}).get("deltas") or {}).items()
-                if touched is not None and b not in actions
+                for b, v in ((carry or {}).get("deltas") or {}).items()
+                if b not in actions
             }
-            record = {
-                "version": self._log.next_version(),
-                "ts": time.time(),
-                "buckets": mapping,
-                "n_buckets": self.n_buckets,
-                **(
-                    {"partition_spec": list(self.partition_spec)}
-                    if self.partition_spec[0] != "bucket"
-                    else {}
-                ),
-            }
-            if deltas:
-                record["deltas"] = deltas
-            # rename mappings stay needed for as long as any carried dir
-            # or delta chain may hold the old physical column names; a
-            # commit that replaced EVERY dir materialized the logical
-            # names and the mapping retires
-            installed_dirs = {d for d in actions.values() if d is not None}
-            carried_old_dirs = deltas or any(
-                d not in installed_dirs for d in mapping.values()
-            )
-            if base_entry and base_entry.get("renames") and carried_old_dirs:
-                record["renames"] = base_entry["renames"]
-            if base_entry and base_entry.get("dropped") and carried_old_dirs:
-                # dropped-column tombstones survive while any old file
-                # may still hold the bytes (see alter_schema)
-                record["dropped"] = base_entry["dropped"]
-            if base_entry and base_entry.get("shadowed") and carried_old_dirs:
-                # generation masks survive with the old dirs they mask;
-                # a commit that replaced EVERY dir materialized the
-                # logical schema (the staged read already masked) and
-                # the mask retires with the rename mapping
-                record["shadowed"] = base_entry["shadowed"]
-            if base_entry and "next_fid" in base_entry:
-                record["next_fid"] = base_entry["next_fid"]
-            if base_entry and base_entry.get("constraints"):
-                # CHECK constraints are table properties: they survive
-                # every commit, including full rewrites
-                record["constraints"] = base_entry["constraints"]
-            # carried-forward buckets keep their previous stats; staged
-            # ones take the fresh bounds. Stats are pruning BOUNDS only —
-            # a purge/delete may leave them wider than the data
-            # (stale-but-safe), never narrower.
+            stats = None
             if self.stats_cols:
-                record["stats_cols"] = list(self.stats_cols)  # r12:
-                # future handles adopt via _sync_spec — no commit path
-                # can silently drop (or go stale on) the table's stats
-                stats: dict[str, dict] = dict(
-                    (base_entry.get("stats") or {})
-                    if (base_entry and touched is not None)
-                    else {}
-                )
-                stats.update(staged_stats)
-                # a fully-deleted bucket drops its stats with its mapping
-                record["stats"] = {
-                    b: v for b, v in stats.items() if b in mapping
-                }
-            # manifest-recorded table schema (r10): reads bind to it
-            # instead of footer-merging; union-widened so untouched
-            # buckets' narrower columns read through the parquet widening
-            # promotions. Legacy manifests without a schema stay
-            # schema-free (mergeSchema path) — recording one would
-            # misdescribe their unknown carried dirs — UNLESS this commit
-            # replaced every carried dir (e.g. the full-rewrite widening
-            # path): then no unknown dirs remain and recording the staged
-            # schema upgrades the table to the schema'd read path.
-            if touched is None or base_entry is None:
-                record["schema"] = _widen_struct(None, new_schema).jsonValue()
-            elif "schema" in base_entry:
-                prev_schema = T.StructType.fromJson(base_entry["schema"])
-                record["schema"] = _widen_struct(
-                    prev_schema, new_schema
-                ).jsonValue()
-            elif not deltas and all(
-                d in installed_dirs for d in mapping.values()
-            ):
-                record["schema"] = _widen_struct(None, new_schema).jsonValue()
-            if meta:
-                record.update(meta)
-            return record
+                # carried-forward buckets keep their previous stats;
+                # staged ones take the fresh bounds, and a fully-deleted
+                # bucket drops its stats with its mapping
+                stats = {**((carry or {}).get("stats") or {}), **staged_stats}
+                stats = {b: v for b, v in stats.items() if b in mapping}
+            installed_dirs = set(actions.values())
+            return self._manifest(
+                base,
+                self._log.next_version(),
+                mapping,
+                deltas,
+                stats,
+                new_schema,
+                carried=bool(deltas)
+                or any(d not in installed_dirs for d in mapping.values()),
+                full=touched is None,
+                meta=meta,
+            )
 
-        if branch is not None:
-            # branch staging: only the branch pointer advances; staged
-            # dirs are protected by the branch window, no retention pass
-            return self._publish_to_branch(_build(cur), branch)
-        # optimistic-concurrency publish (r11, VERDICT task 1): CAS on the
-        # basis head's token; on conflict re-read, verify the concurrent
-        # commits did not touch OUR buckets (then re-applying the actions
-        # against the new head is sound — disjoint writers both land),
-        # else raise.
-        basis = cur
-        attempt = 0
-        while True:
-            record = _build(basis)
-            try:
-                self._log.publish(
-                    record,
-                    protected=self._branch_covers,
-                    expected_head=_token(basis),
+        def _rebase(old: dict | None, head: dict | None) -> dict | None:
+            """Disjoint-bucket rebase (r11): re-apply the bucket actions
+            onto ``head`` when the concurrent commits left this commit's
+            buckets alone, else raise."""
+            if _token(head) == _token(old):
+                return head  # lost a version race only
+            if (head or {}).get("constraints") != (old or {}).get(
+                "constraints"
+            ):
+                # the staged bytes were validated against the BASIS
+                # head's constraints; a concurrently added/changed
+                # constraint was never enforced on them — rebasing
+                # would publish unvalidated rows (review r12)
+                raise CommitConflict(
+                    f"{self.root}'s CHECK constraints changed while "
+                    "this commit was staged — re-run so the new "
+                    "constraints validate its data"
                 )
-                break
-            except CommitConflict:
-                attempt += 1
-                if attempt > len(_RETRY_BACKOFF):
-                    raise
-                new_cur = self.current()
-                head_moved = _token(new_cur) != _token(basis)
-                if head_moved and (new_cur or {}).get("constraints") != (
-                    basis or {}
-                ).get("constraints"):
-                    # the staged bytes were validated against the BASIS
-                    # head's constraints; a concurrently added/changed
-                    # constraint was never enforced on them — rebasing
-                    # would publish unvalidated rows (review r12)
-                    raise CommitConflict(
-                        f"{self.root}'s CHECK constraints changed while "
-                        "this commit was staged — re-run so the new "
-                        "constraints validate its data"
-                    ) from None
-                if touched is None and head_moved:
-                    # a FULL-state replace (initialize / rebucket) whose
-                    # basis moved is stale by definition — every bucket
-                    # is "ours", so there is no disjoint rebase (ADVICE
-                    # r12). Propagate; the caller re-reads and re-runs.
-                    raise CommitConflict(
-                        f"{self.root} advanced past this full-state "
-                        "rewrite's basis — re-run it against the new head"
-                    ) from None
-                if touched is not None and head_moved:
-                    changed = [
-                        b
-                        for b in actions
-                        if self._bucket_state(basis, b)
-                        != self._bucket_state(new_cur, b)
-                    ]
-                    if changed and not drop_conflicted:
-                        raise CommitConflict(
-                            f"bucket {changed[0]} of {self.root} was "
-                            "modified by a concurrent commit — this "
-                            "merge's inputs are stale; re-run it against "
-                            "the new head"
-                        ) from None
-                    for b in changed:
-                        # partial progress (r12, the Iceberg
-                        # partial-progress compaction rule): this
-                        # bucket's staged rewrite was derived from a
-                        # state a concurrent commit replaced — the
-                        # winner's bytes are newer, ours are a stale
-                        # REWRITE of superseded content, so dropping it
-                        # loses nothing. The installed dir is
-                        # unreferenced by any manifest; remove it now
-                        # (next publish's _expire would GC it anyway).
-                        dst = actions.pop(b)
-                        staged_stats.pop(b, None)
-                        if dst is not None:
-                            shutil.rmtree(dst, ignore_errors=True)
-                    if not actions:
-                        # every staged bucket conflicted: clean no-op —
-                        # the table head already supersedes this rewrite
-                        noop = dict(new_cur)
-                        noop["_installed"] = []
-                        return noop
-                basis = new_cur
-                time.sleep(_RETRY_BACKOFF[attempt - 1])
-        self._expire(record)
+            if touched is None:
+                # a FULL-state replace (initialize / rebucket) whose
+                # basis moved is stale by definition — every bucket is
+                # "ours", so there is no disjoint rebase (ADVICE r12).
+                # Propagate; the caller re-reads and re-runs.
+                raise CommitConflict(
+                    f"{self.root} advanced past this full-state "
+                    "rewrite's basis — re-run it against the new head"
+                )
+            changed = [
+                b
+                for b in actions
+                if self._bucket_state(old, b) != self._bucket_state(head, b)
+            ]
+            if changed and not drop_conflicted:
+                raise CommitConflict(
+                    f"bucket {changed[0]} of {self.root} was modified by "
+                    "a concurrent commit — this merge's inputs are "
+                    "stale; re-run it against the new head"
+                )
+            for b in changed:
+                # partial progress (r12, the Iceberg partial-progress
+                # compaction rule): this bucket's staged rewrite was
+                # derived from a state a concurrent commit replaced —
+                # the winner's bytes are newer, ours are a stale REWRITE
+                # of superseded content, so dropping it loses nothing.
+                # The installed dir is unreferenced by any manifest;
+                # remove it now (the next _expire would GC it anyway).
+                dst = actions.pop(b)
+                staged_stats.pop(b, None)
+                conflicted.append(b)
+                if dst is not None:
+                    shutil.rmtree(dst, ignore_errors=True)
+            return head
+
+        # optimistic-concurrency publish (r11, VERDICT task 1): CAS on the
+        # basis head's token, disjoint-bucket rebase on conflict
+        record = self._publish_cas(_build, cur, _rebase, branch)
         # ephemeral receipt detail (in-memory only — the manifest JSON
         # was already written): which buckets this commit installed,
-        # net of any partial-progress drops
-        record = dict(record)
+        # net of any partial-progress drops; a commit whose every bucket
+        # conflicted is a clean no-op — the head supersedes it
+        record = dict(record if record is not None else self.current())
         record["_installed"] = sorted(actions)
+        return record
+
+    def _manifest(
+        self,
+        base: dict | None,
+        version: int,
+        mapping: dict,
+        deltas: dict,
+        stats: dict | None,
+        new_schema: "T.StructType",
+        carried: bool,
+        full: bool,
+        meta: dict | None,
+    ) -> dict:
+        """Manifest ``version`` mapping ``mapping`` and ``deltas``, with
+        its basis ``base``'s metadata carried forward — the one build of
+        ``_commit_staged`` and ``_publish_delta_actions``:
+
+        - rename folds, dropped-column tombstones and generation masks
+          stay while any old dir or delta chain is ``carried`` (old
+          files may hold the old names and bytes); a commit that
+          replaced EVERY dir materialized the logical schema;
+        - ``stats`` (None: none) ride with ``stats_cols``, which future
+          handles adopt via ``_sync_spec``, so no commit path drops the
+          table's stats. They are pruning BOUNDS: wider than the data
+          after a purge/delete (stale-but-safe), never narrower;
+        - the schema (r10: reads bind to it) is union-widened over the
+          basis's, so untouched buckets' narrower columns read through
+          the parquet widening promotions. A ``full`` replace or a first
+          commit records ``new_schema`` alone; a legacy schema-free
+          basis stays schema-free (its carried dirs are unknown) unless
+          no old dir is carried."""
+        record = {
+            "version": version,
+            "ts": time.time(),
+            "buckets": mapping,
+            "n_buckets": self.n_buckets,
+        }
+        if self.partition_spec[0] != "bucket":
+            record["partition_spec"] = list(self.partition_spec)
+        if deltas:
+            record["deltas"] = deltas
+        prev = base or {}
+        for k in ("renames", "dropped", "shadowed"):
+            if carried and prev.get(k):
+                record[k] = prev[k]
+        if "next_fid" in prev:
+            record["next_fid"] = prev["next_fid"]
+        if stats is not None:
+            if self.stats_cols:
+                record["stats_cols"] = list(self.stats_cols)
+            record["stats"] = stats
+        if full or base is None or ("schema" not in base and not carried):
+            record["schema"] = _widen_struct(None, new_schema).jsonValue()
+        elif "schema" in base:
+            record["schema"] = _widen_struct(
+                T.StructType.fromJson(base["schema"]), new_schema
+            ).jsonValue()
+        if meta:
+            record.update(meta)
         return record
 
     @staticmethod
@@ -1180,7 +1145,7 @@ class VersionedBucketMirror(VersionedBucketMirrorOps, TableOps):
         delta_df: DataFrame,
         touched: Sequence[int],
         fold: dict,
-        basis=_UNSET,
+        basis: dict | None,
         branch: str | None = None,
         meta: dict | None = None,
         split_deletes: bool = False,
@@ -1269,11 +1234,7 @@ class VersionedBucketMirror(VersionedBucketMirrorOps, TableOps):
             # staged bytes (one scan ∝ batch). Tombstones are excluded
             # — a delete event legitimately carries NULL payload and is
             # not a row the table will serve
-            cons = (
-                self._constraints_for(basis, branch)
-                if kind == "delta"
-                else None
-            )
+            cons = (basis or {}).get("constraints") if kind == "delta" else None
             if cons:
                 live = slice_df.sparkSession.read.parquet(staging)
                 not_del = ~F.coalesce(
@@ -1426,6 +1387,7 @@ class VersionedBucketMirror(VersionedBucketMirrorOps, TableOps):
             fold,
             schema,
             dict(staged_stats or {}),
+            basis=cur,
             meta=meta,
         )
 
@@ -1435,22 +1397,13 @@ class VersionedBucketMirror(VersionedBucketMirrorOps, TableOps):
         fold: dict,
         new_schema: "T.StructType",
         staged_stats: dict,
-        basis=_UNSET,
+        basis: dict | None,
         branch: str | None = None,
         meta: dict | None = None,
     ) -> dict:
         """Publish installed delta dirs (``actions``: bucket → dirs) as
-        one manifest commit — the shared metadata tail of
-        ``_commit_delta`` and ``commit_prestaged_delta``."""
-        cur = (
-            (
-                self._branch_head_entry(branch)
-                if branch is not None
-                else self.current()
-            )
-            if basis is _UNSET
-            else basis
-        )
+        one manifest commit onto ``basis`` — the shared metadata tail
+        of ``_commit_delta`` and ``commit_prestaged_delta``."""
 
         def _merge_bounds(old, new):
             if old is None:
@@ -1465,115 +1418,73 @@ class VersionedBucketMirror(VersionedBucketMirrorOps, TableOps):
                 mx = max(old[1], new[1])
             return [mn, mx]
 
-        def _build(base_entry: dict | None) -> dict:
-            mapping = dict(base_entry["buckets"]) if base_entry else {}
+        def _build(base: dict | None) -> dict:
+            version = self._log.next_version()
             deltas = {
-                b: list(v)
-                for b, v in ((base_entry or {}).get("deltas") or {}).items()
-            }
-            record = {
-                "version": self._log.next_version(),
-                "ts": time.time(),
-                "buckets": mapping,
-                "n_buckets": self.n_buckets,
-                **(
-                    {"partition_spec": list(self.partition_spec)}
-                    if self.partition_spec[0] != "bucket"
-                    else {}
-                ),
+                b: list(v) for b, v in ((base or {}).get("deltas") or {}).items()
             }
             for b, dsts in actions.items():
                 for dst in dsts:
                     deltas.setdefault(b, []).append(
-                        {"version": record["version"], "dir": dst, **fold}
+                        {"version": version, "dir": dst, **fold}
                     )
-            record["deltas"] = deltas
-            if base_entry and base_entry.get("renames"):
-                record["renames"] = base_entry["renames"]
-            if base_entry and base_entry.get("dropped"):
-                record["dropped"] = base_entry["dropped"]
-            if base_entry and base_entry.get("shadowed"):
-                # delta commits never replace base dirs — masks carry
-                record["shadowed"] = base_entry["shadowed"]
-            if base_entry and "next_fid" in base_entry:
-                record["next_fid"] = base_entry["next_fid"]
-            if base_entry and base_entry.get("constraints"):
-                record["constraints"] = base_entry["constraints"]
+            stats = None
             if self.stats_cols or staged_stats:
-                if self.stats_cols:
-                    record["stats_cols"] = list(self.stats_cols)
-                stats = dict(
-                    (base_entry.get("stats") or {}) if base_entry else {}
-                )
+                # delta bounds merge widen-only into the bucket's
+                stats = dict((base or {}).get("stats") or {})
                 for b, st in staged_stats.items():
                     merged = dict(stats.get(b) or {})
                     for c, bounds in st.items():
                         merged[c] = _merge_bounds(merged.get(c), bounds)
                     stats[b] = merged
-                record["stats"] = stats
-            # schema rules mirror _commit_staged: a delta may add/widen
-            # columns (evolution through the fold); legacy schema-free
-            # manifests stay on the mergeSchema path
-            if base_entry is None:
-                record["schema"] = _widen_struct(None, new_schema).jsonValue()
-            elif "schema" in base_entry:
-                record["schema"] = _widen_struct(
-                    T.StructType.fromJson(base_entry["schema"]), new_schema
-                ).jsonValue()
-            if meta:
-                record.update(meta)
-            return record
+            # a delta may add/widen columns (evolution through the fold);
+            # it never replaces a base dir, so every old dir is carried
+            return self._manifest(
+                base,
+                version,
+                dict((base or {}).get("buckets") or {}),
+                deltas,
+                stats,
+                new_schema,
+                carried=True,
+                full=False,
+                meta=meta,
+            )
 
-        if branch is not None:
-            return self._publish_to_branch(_build(cur), branch)
-        basis_entry = cur
-        attempt = 0
-        while True:
-            record = _build(basis_entry)
-            try:
-                self._log.publish(
-                    record,
-                    protected=self._branch_covers,
-                    expected_head=_token(basis_entry),
+        def _rebase(old: dict | None, head: dict | None) -> dict | None:
+            if (head or {}).get("constraints") != (old or {}).get(
+                "constraints"
+            ):
+                # same rule as _commit_staged (review r12): this delta
+                # validated against the basis constraints only
+                raise CommitConflict(
+                    f"{self.root}'s CHECK constraints changed while "
+                    "this delta was staged — re-run so the new "
+                    "constraints validate its data"
                 )
-                break
-            except CommitConflict:
-                attempt += 1
-                if attempt > len(_RETRY_BACKOFF):
-                    raise
-                new_cur = self.current()
-                if (new_cur or {}).get("constraints") != (
-                    basis_entry or {}
-                ).get("constraints"):
-                    # same rule as _commit_staged (review r12): this
-                    # delta validated against the basis constraints only
-                    raise CommitConflict(
-                        f"{self.root}'s CHECK constraints changed while "
-                        "this delta was staged — re-run so the new "
-                        "constraints validate its data"
-                    ) from None
-                if _token(new_cur) != _token(basis_entry):
-                    # delta appends COMMUTE with concurrent delta appends
-                    # (the fold is ts-ordered, not arrival-ordered), so
-                    # the rebase rule is weaker than _commit_staged's:
-                    # each touched bucket's BASE must be unchanged and
-                    # its delta chain only EXTENDED — a base rewrite
-                    # (compaction/full merge/purge) invalidates our
-                    # basis, a purge of other buckets rebases
-                    for b in actions:
-                        old = self._bucket_state(basis_entry, b)
-                        new = self._bucket_state(new_cur, b)
-                        old_base, old_chain = old or (None, ())
-                        new_base, new_chain = new or (None, ())
-                        if old_base != new_base or (
-                            new_chain[: len(old_chain)] != old_chain
-                        ):
-                            raise CommitConflict(
-                                f"bucket {b} of {self.root} was rewritten "
-                                "by a concurrent commit — this delta's "
-                                "basis is stale; re-run the merge"
-                            ) from None
-                    basis_entry = new_cur
-                time.sleep(_RETRY_BACKOFF[attempt - 1])
-        self._expire(record)
-        return record
+            if _token(head) != _token(old):
+                # delta appends COMMUTE with concurrent delta appends
+                # (the fold is ts-ordered, not arrival-ordered), so the
+                # rebase rule is weaker than _commit_staged's: each
+                # touched bucket's BASE must be unchanged and its delta
+                # chain only EXTENDED — a base rewrite (compaction/full
+                # merge/purge) invalidates our basis, a purge of other
+                # buckets rebases
+                for b in actions:
+                    old_base, old_chain = self._bucket_state(old, b) or (
+                        None, (),
+                    )
+                    new_base, new_chain = self._bucket_state(head, b) or (
+                        None, (),
+                    )
+                    if old_base != new_base or (
+                        new_chain[: len(old_chain)] != old_chain
+                    ):
+                        raise CommitConflict(
+                            f"bucket {b} of {self.root} was rewritten by "
+                            "a concurrent commit — this delta's basis is "
+                            "stale; re-run the merge"
+                        )
+            return head
+
+        return self._publish_cas(_build, basis, _rebase, branch)

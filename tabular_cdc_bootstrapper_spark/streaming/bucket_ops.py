@@ -23,11 +23,9 @@ from tabular_cdc_bootstrapper_spark.operators.cdc import (
     latest_by_key,
 )
 from tabular_cdc_bootstrapper_spark.streaming._protocol import (
-    CommitConflict,
     _UNSET,
     _purge_lock,
     _purge_race_as_conflict,
-    _token,
     _validate_partition_spec,
 )
 
@@ -337,18 +335,6 @@ class VersionedBucketMirrorOps:
                 rename.get(c, c) for c in recorded_cols if c not in drop
             ]
 
-    def _constraints_for(self, basis=_UNSET, branch: str | None = None) -> dict:
-        e = (
-            (
-                self._branch_head_entry(branch)
-                if branch is not None
-                else self.current()
-            )
-            if basis is _UNSET
-            else basis
-        )
-        return dict((e or {}).get("constraints") or {})
-
     def _dml_scope(
         self,
         spark: SparkSession,
@@ -637,26 +623,11 @@ class VersionedBucketMirrorOps:
         concurrent commits left this merge's buckets untouched, the
         commit rebases and lands; if they touched the same buckets, or
         a token's snapshot was purged since, CommitConflict."""
-        basis = _UNSET
-        if expected_version is not None:
-            v, purged = (
-                expected_version
-                if isinstance(expected_version, tuple)
-                else (expected_version, None)
-            )
-            basis = None
-            if v >= 0:
-                basis = next(
-                    (e for e in self._log.entries() if e["version"] == v),
-                    None,
-                )
-                if basis is None:
-                    raise ValueError(f"no snapshot {v} in {self.root}")
-                if purged is not None and _token(basis) != (v, purged):
-                    raise CommitConflict(
-                        f"{self.root}: snapshot {v} was purged after this "
-                        "merge read it — re-run against the new head"
-                    )
+        basis = (
+            _UNSET
+            if expected_version is None
+            else self._basis_of(expected_version)
+        )
         rec = self._commit_staged(
             df, touched=list(touched), key_col=key_col, meta=meta,
             branch=branch, basis=basis,

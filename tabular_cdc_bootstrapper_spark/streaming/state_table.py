@@ -23,9 +23,7 @@ from tabular_cdc_bootstrapper_spark.streaming._protocol import (
     ConstraintViolation,
     SnapshotLog,
     TableOps,
-    _RETRY_BACKOFF,
     _check_meta,
-    _check_table_constraints,
     _nullable_json,
     _purge_lock,
     _read_logical,
@@ -69,15 +67,8 @@ class ParquetStateTable(TableOps):
         os.makedirs(root, exist_ok=True)
 
     @property
-    def _pointer(self) -> str:
-        return self._log.pointer_path
-
-    @property
     def _log_dir(self) -> str:
         return self._log.log_dir
-
-    def _log_entries(self) -> list[dict]:
-        return self._log.entries()
 
     def _next_version(self) -> int:
         return self._log.next_version()
@@ -134,74 +125,60 @@ class ParquetStateTable(TableOps):
         self._expire({"dir": keep})
         return record
 
-    def _publish_retry(self, record: dict, on_retry=None) -> dict:
-        """Publish a BLIND (full-state) commit with conflict retry: on a
-        lost race, re-allocate the next version — renaming the data dir
-        to match, so pre-log name-ordered retention stays version-ordered
-        — and try again against the new head (a full-state replace does
-        not depend on what it replaces, so rebasing is just renumbering).
-        The backoff outlasts ``conflict_grace_s``, so a commit blocked by
-        a crash orphan self-heals once the orphan ages out.
-
-        ``on_retry(record, head)`` (r12): head-dependent reconciliation
-        hook — called before EVERY attempt with the head that attempt
-        will publish against, and the publish then CASes on that exact
-        head, so a property changing concurrently (e.g. a constraint
-        added mid-commit) can never be silently dropped: the CAS fails,
-        the next attempt reconciles against the newer head."""
-
-        def _attempt():
-            head = self.current()
-            expected = None
-            if on_retry is not None:
-                on_retry(record, head)
-                if head is not None:
-                    expected = _token(head)
-            return self._publish(
-                record, keep=record["dir"], expected_head=expected
-            )
-
-        for delay in _RETRY_BACKOFF:
-            try:
-                return _attempt()
-            except CommitConflict:
-                time.sleep(delay)
-                new_version = self._next_version()
-                if new_version != record["version"]:
-                    new_dir = os.path.join(
-                        self.root,
-                        f"v-{new_version:08d}-{uuid.uuid4().hex[:8]}",
-                    )
-                    os.replace(record["dir"], new_dir)
-                    record["dir"] = new_dir
-                    record["version"] = new_version
-                record["ts"] = time.time()
-        return _attempt()  # last try raises
-
-    def _reconcile_constraints(
-        self, spark: SparkSession, rec: dict, head: dict | None
+    def _check_written(
+        self,
+        spark: SparkSession,
+        record: dict,
+        basis: dict | None,
+        head: dict | None,
     ) -> None:
-        """The ``on_retry`` hook of a blind commit: a CHECK constraint
-        added or changed CONCURRENTLY (review r12) is validated against
-        the record's already-written bytes, then carried — the
-        per-attempt CAS of ``_publish_retry`` makes a drop impossible.
-        The record's own ``constraints`` are the set its bytes were
-        validated against."""
-        cons = rec.get("constraints") or {}
-        new_cons = (head or {}).get("constraints") or {}
-        extra = {k: v for k, v in new_cons.items() if cons.get(k) != v}
-        if extra:
-            _check_table_constraints(
-                spark.read.schema(
-                    T.StructType.fromJson(rec["data_schema"])
-                ).parquet(rec["dir"]),
-                extra,
-                self.root,
+        """Validate a commit's WRITTEN bytes against the CHECK
+        constraints ``head`` adds to ``basis``'s (``_revalidate``) —
+        one scan of this commit's state; a violating commit's dir is
+        removed before the error propagates."""
+        try:
+            self._revalidate(
+                lambda: self._read_raw(spark, record), basis, head
             )
-        if new_cons:
-            rec["constraints"] = new_cons
-        else:
-            rec.pop("constraints", None)
+        except ConstraintViolation:
+            shutil.rmtree(record["dir"], ignore_errors=True)
+            raise
+
+    def _renumber(
+        self,
+        spark: SparkSession,
+        record: dict,
+        basis: dict | None,
+        head: dict | None,
+    ) -> dict | None:
+        """The rebase of a BLIND (full-state) commit: its state does not
+        depend on the head it replaces, so it moves to any new head once
+        its bytes pass the constraints that head adds, and takes the
+        next version — renaming its data dir to match, so pre-log
+        name-ordered retention stays version-ordered."""
+        self._check_written(spark, record, basis, head)
+        new_version = self._next_version()
+        if new_version != record["version"]:
+            new_dir = os.path.join(
+                self.root, f"v-{new_version:08d}-{uuid.uuid4().hex[:8]}"
+            )
+            os.replace(record["dir"], new_dir)
+            record["dir"] = new_dir
+            record["version"] = new_version
+        record["ts"] = time.time()
+        return head
+
+    def _refuse_stale(
+        self, record: dict, basis: dict | None, head: dict | None
+    ) -> dict | None:
+        """The rebase of a BASED commit (``expected_version``): its state
+        was derived from the basis, so a conflict is final — the data
+        dir is removed, and the caller must re-read and re-derive."""
+        shutil.rmtree(record["dir"], ignore_errors=True)
+        raise CommitConflict(
+            f"{self.root} advanced past this commit's basis "
+            f"v{_token(basis)[0]} — re-read and re-derive it"
+        )
 
     def _read_entry(self, spark: SparkSession, e: dict) -> DataFrame:
         """Read one snapshot record's dir under ITS schema metadata:
@@ -290,62 +267,38 @@ class ParquetStateTable(TableOps):
         :class:`CommitConflict` if the table advanced past it, instead of
         silently clobbering the concurrent commit (r11 optimistic
         concurrency). Pass the basis record's ``_token`` so a purge of
-        the basis also conflicts; a bare version compares the version
-        alone. Without it the commit is blind full-state replace and
-        retries internally on conflicts."""
+        the basis also conflicts; a bare version names that version's
+        record (``_basis_of``). Without it the commit is blind full-state
+        replace and retries internally on conflicts (``_renumber``)."""
         _check_meta(meta)
-        cur_head = self.current()
-        cons = (cur_head or {}).get("constraints") or {}
+        basis = (
+            self._head(branch)
+            if expected_version is None
+            else self._basis_of(expected_version)
+        )
         version = self._next_version()
         vdir = os.path.join(self.root, f"v-{version:08d}-{uuid.uuid4().hex[:8]}")
         df.write.mode("errorifexists").parquet(vdir)
         # the written physical schema rides the record (r16): every later
         # raw read of this immutable dir binds to it instead of paying a
         # footer-inference job (_read_raw)
-        written = _nullable_json(df.schema)
-        if cons:
-            # CHECK constraints (r12): validate the WRITTEN bytes before
-            # the pointer ever moves — one scan of this commit's state
-            try:
-                _check_table_constraints(
-                    df.sparkSession.read.schema(
-                        T.StructType.fromJson(written)
-                    ).parquet(vdir),
-                    cons,
-                    self.root,
-                )
-            except ConstraintViolation:
-                shutil.rmtree(vdir, ignore_errors=True)
-                raise
         record = {
             "version": version,
             "dir": vdir,
             "ts": time.time(),
-            "data_schema": written,
+            "data_schema": _nullable_json(df.schema),
         }
-        if cons:
-            record["constraints"] = cons  # table property, carries
         if meta:
             record.update(meta)
-        if branch is not None:
-            return self._publish_to_branch(record, branch)
-        if expected_version is not None:
-            try:
-                return self._publish(
-                    record, keep=vdir, expected_head=expected_version
-                )
-            except CommitConflict:
-                shutil.rmtree(vdir, ignore_errors=True)  # stale basis:
-                raise  # the caller must re-read and re-derive df
-
-        try:
-            return self._publish_retry(
-                record,
-                on_retry=partial(self._reconcile_constraints, df.sparkSession),
-            )
-        except ConstraintViolation:
-            shutil.rmtree(vdir, ignore_errors=True)
-            raise
+        spark = df.sparkSession
+        # CHECK constraints (r12): the written bytes pass before the
+        # pointer ever moves
+        self._check_written(spark, record, None, basis)
+        if expected_version is None:
+            rebase = partial(self._renumber, spark, record)
+        else:
+            rebase = partial(self._refuse_stale, record)
+        return self._publish_cas(lambda _basis: record, basis, rebase, branch)
 
     def commit_many(
         self, dfs: "Sequence[DataFrame]", metas: "Sequence[dict | None] | None" = None
@@ -371,7 +324,8 @@ class ParquetStateTable(TableOps):
             raise ValueError("commit_many: metas length != dfs length")
         for m in metas:
             _check_meta(m)
-        cons = (self.current() or {}).get("constraints") or {}
+        head = self.current()
+        cons = (head or {}).get("constraints")
         schema_keys = {d.schema.json() for d in dfs}
         if len(dfs) <= 1 or cons or len(schema_keys) != 1:
             return [
@@ -419,11 +373,17 @@ class ParquetStateTable(TableOps):
         finally:
             shutil.rmtree(stg, ignore_errors=True)
 
-        reconcile = partial(self._reconcile_constraints, dfs[0].sparkSession)
+        # each record publishes onto the one before it
+        spark = dfs[0].sparkSession
         out: list[dict] = []
         try:
             for rec in records:
-                out.append(self._publish_retry(rec, on_retry=reconcile))
+                head = self._publish_cas(
+                    lambda _basis, rec=rec: rec,
+                    head,
+                    partial(self._renumber, spark, rec),
+                )
+                out.append(head)
         except ConstraintViolation:
             for rec in records[len(out):]:
                 shutil.rmtree(rec["dir"], ignore_errors=True)

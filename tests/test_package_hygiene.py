@@ -18,7 +18,10 @@ neither table layout's module; and the CAS token of a based commit is
 built there alone. It also pins how JSON metadata reaches disk: every
 ``json.dump`` in the package is either the body of ``_replace_json``
 (temp file + atomic rename) or an exclusive create (mode ``"x"``).
-And it pins the size of every staged bucket write: each ``repartition``
+It pins the commit retry rule to one place: ``_RETRY_BACKOFF`` is read
+only by ``TableOps._publish_cas``, no layout module catches
+``CommitConflict``, and only ``_protocol.py`` writes a record's
+``"constraints"``. And it pins the size of every staged bucket write: each ``repartition``
 in the mirror and purge modules takes its count from
 ``_sizing.write_tasks``, the one sizing rule. Two pins hold the query
 harnesses to their shared helpers: every thread pool under ``queries/``
@@ -323,3 +326,70 @@ def test_cdc_probes_are_not_folded_by_explode():
         and _call_name(n.args[0]) == "array"
     ]
     assert folds == []
+
+
+def _enclosing_functions(tree: ast.AST) -> dict[int, str]:
+    """``id(node)`` → ``Class.method`` (or ``function``) of the
+    outermost function defining it, for every node under a function."""
+    out: dict[int, str] = {}
+
+    def visit(node: ast.AST, cls: str | None) -> None:
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, ast.ClassDef):
+                visit(child, child.name)
+            elif isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                name = f"{cls}.{child.name}" if cls else child.name
+                out.update((id(n), name) for n in ast.walk(child))
+            else:
+                visit(child, cls)
+
+    visit(tree, None)
+    return out
+
+
+def test_commit_retries_and_property_carry_live_in_the_publish_loop():
+    """Every commit retry goes through ``TableOps._publish_cas``, the one
+    optimistic publish loop, which also carries the table properties:
+    ``_RETRY_BACKOFF`` is read in that function alone, no layout module
+    catches ``CommitConflict`` (a layout supplies a rebase rule, not a
+    loop), and no module but ``streaming/_protocol.py`` assigns a
+    record's ``"constraints"`` key — a commit that builds its own
+    carry can drop the constraints or skip their check."""
+    streaming = REPO / PKG / "streaming"
+    layouts = {
+        streaming / n
+        for n in ("state_table.py", "bucket_mirror.py", "bucket_ops.py")
+    }
+    readers, catches, stores = set(), [], []
+    for path in _py_files(PKG):
+        tree = ast.parse(path.read_text())
+        where = _enclosing_functions(tree)
+        rel = str(path.relative_to(REPO))
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Name)
+                and node.id == "_RETRY_BACKOFF"
+                and isinstance(node.ctx, ast.Load)
+            ):
+                readers.add(f"{rel}:{where.get(id(node))}")
+            if (
+                isinstance(node, ast.Subscript)
+                and isinstance(node.ctx, ast.Store)
+                and isinstance(node.slice, ast.Constant)
+                and node.slice.value == "constraints"
+                and path != streaming / "_protocol.py"
+            ):
+                stores.append(f"{rel}:{node.lineno}")
+            if (
+                isinstance(node, ast.ExceptHandler)
+                and path in layouts
+                and node.type is not None
+                and "CommitConflict"
+                in {n.id for n in ast.walk(node.type) if isinstance(n, ast.Name)}
+            ):
+                catches.append(f"{rel}:{node.lineno}")
+    assert readers == {
+        f"{PKG}/streaming/_protocol.py:TableOps._publish_cas"
+    }
+    assert catches == []
+    assert stores == []

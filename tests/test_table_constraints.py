@@ -10,6 +10,8 @@ exempt (a delete event legitimately carries NULL payload).
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -261,3 +263,80 @@ def test_concurrent_add_constraint_vs_blind_commit(spark, tmp_path):
     finally:
         ParquetStateTable._publish = orig
     assert p.read(spark).filter("val < 0").count() == 0
+
+
+def _handle(layout, root):
+    if layout == "snapshot":
+        return ParquetStateTable(root, keep_versions=10)
+    return VersionedBucketMirror(
+        root, n_buckets=8, key_col="id", keep_versions=10
+    )
+
+
+def _table(layout, root, df):
+    t = _handle(layout, root)
+    if layout == "snapshot":
+        t.commit(df)
+    else:
+        t.initialize(df)
+    return t
+
+
+@pytest.mark.parametrize("layout", ["snapshot", "bucketed"])
+def test_wap_enforces_and_carries_constraints(spark, tmp_path, layout):
+    # write-audit-publish answers to the head's CHECK constraints like
+    # every other commit path: violating staged bytes are refused with
+    # the head and the constraint untouched, and a clean publish keeps
+    # the constraint on the table
+    t = _table(layout, str(tmp_path / "t"), _frame(spark))
+    t.add_constraint(spark, "val_nonneg", "val >= 0")
+    head = t.current()["version"]
+    bad = _frame(spark).withColumn("val", F.col("val") * 0 - 5)
+    with pytest.raises(ConstraintViolation, match="val_nonneg"):
+        t.write_audit_publish(spark, bad, rules=())
+    assert t.current()["version"] == head
+    assert t.constraints() == {"val_nonneg": "val >= 0"}
+    assert t.read(spark).filter("val < 0").count() == 0
+    assert not [d for d in os.listdir(t.root) if d.startswith("wap-")]
+    out = t.write_audit_publish(spark, _frame(spark, n=50), rules=())
+    assert out["published"] is True
+    assert t.constraints() == {"val_nonneg": "val >= 0"}
+    assert t.read(spark).count() == 50
+
+
+@pytest.mark.parametrize("layout", ["snapshot", "bucketed"])
+def test_concurrent_add_constraint_vs_rollback(
+    spark, tmp_path, monkeypatch, layout
+):
+    # a constraint added between a rollback's constraint check and its
+    # publish must neither be dropped from the head nor let the restored
+    # rows skip it: the rollback CASes on the head it checked, and its
+    # rebase validates the restored snapshot against the new constraint
+    root = str(tmp_path / "t")
+    t = _table(layout, root, _frame(spark).withColumn("val", F.col("val") - 10))
+    dirty = t.current()["version"]  # holds val < 0 rows
+    t.delete_where(spark, "val < 0")
+    clean = t.current()["version"]
+    other = _handle(layout, root)
+    orig = type(t)._publish_commit
+    fired = []
+
+    def race(self, record, expected_head=None):
+        if not fired and record.get("operation") != "set_properties":
+            fired.append(True)
+            other.add_constraint(spark, "val_nonneg", "val >= 0")
+        return orig(self, record, expected_head=expected_head)
+
+    monkeypatch.setattr(type(t), "_publish_commit", race)
+    with pytest.raises(ConstraintViolation, match="val_nonneg"):
+        t.rollback(dirty, spark=spark)
+    assert fired
+    assert t.constraints() == {"val_nonneg": "val >= 0"}
+    assert t.read(spark).filter("val < 0").count() == 0
+    # a rollback whose restored rows pass carries the racing constraint
+    other.drop_constraint("val_nonneg")
+    fired.clear()
+    rec = t.rollback(clean, spark=spark)
+    assert fired
+    assert rec["constraints"] == {"val_nonneg": "val >= 0"}
+    assert t.constraints() == {"val_nonneg": "val >= 0"}
