@@ -33,7 +33,11 @@ Engine extensions:
                         per-batch merges rewrite only touched key
                         buckets; the 100 TB shape; registered as a
                         partitioned table, one partition per bucket of
-                        the head manifest), "bucketed" (alias of
+                        the head manifest; a new mirror sizes its
+                        bucket count by bytes, 1 bucket per 4 MiB of
+                        initial load up to 64, and doubles it after a
+                        poll whose merge outgrows that, so a later poll
+                        registers the new partitions), "bucketed" (alias of
                         "bucketed_versioned"), or "bucketed_versioned_mor"
                         (rejected here with exit 2: reading a
                         merge-on-read mirror folds delta files, which a

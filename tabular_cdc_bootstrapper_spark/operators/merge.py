@@ -356,7 +356,7 @@ def merge_into_table(
     cur = table.current()
     basis = _token(cur)
     if bucketed:
-        table._sync_spec()  # bind to the current bucket spec (r11)
+        table._sync_spec(cur)  # bind to the basis's bucket spec (r11)
         key = table.key_col
         if key not in on:
             raise ValueError(

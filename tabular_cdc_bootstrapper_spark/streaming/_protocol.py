@@ -90,7 +90,8 @@ _RESERVED_META_KEYS = frozenset(
     {
         "version", "dir", "buckets", "ts", "ref", "schema", "stats",
         "stats_cols", "constraints", "shadowed", "next_fid",
-        "deltas", "n_buckets", "renames", "dropped", "altered",
+        "deltas", "n_buckets", "bucket_sizing", "renames", "dropped",
+        "altered",
         "audited", "rollback_of",
         "purged_ts", "cloned_from", "readable", "is_current",
         "data_schema",

@@ -1,9 +1,12 @@
-"""Task count of every staged ``partitionBy`` write of the table layouts.
+"""Task count of every staged ``partitionBy`` write of the table layouts,
+and the bucket count of a hash-bucketed mirror that sizes itself.
 
 A leaf module: ``_purge.py`` (imported by ``_protocol.py``) and
 ``bucket_mirror.py`` both size their staged writes here, so the rule is
 written once and ``tests/test_package_hygiene.py`` can pin that every
-``repartition`` of those writes takes its count from ``write_tasks``.
+``repartition`` of those writes takes its count from ``write_tasks``,
+and that the bucket-count rule (``bucket_count``/``split_count``) lives
+here and nowhere else.
 """
 
 from __future__ import annotations
@@ -22,10 +25,26 @@ from pyspark.sql import DataFrame, SparkSession
 ONE_TASK_PER_DIR_BYTES = 4 << 20
 
 
-def _reads_at_least(df: DataFrame, limit: int) -> bool:
-    """Whether the local files ``df`` scans (its plan's
-    ``inputFiles``) hold ``limit`` bytes or more. Rows that come from
-    no file (a driver-side list, a cached frame) or from a remote
+#: target bytes per bucket of a mirror that sizes its own bucket count
+#: (``VersionedBucketMirror(n_buckets=None)``): a table starts at the
+#: smallest power of two that keeps each bucket at or below it, and
+#: doubles once its buckets average twice it. Below it a bucket's fixed
+#: per-file costs (footer, writer set-up, listing, task) outweigh what
+#: a finer hash saves a merge or a key lookup; it starts at the staged
+#: write's measured per-dir break-even (SCALING.md, "Bucket count
+#: follows bytes", ``scripts/bucket_sweep.py``).
+BUCKET_BYTES = ONE_TASK_PER_DIR_BYTES
+
+#: bucket count of a sized mirror at and above ``MAX_BUCKETS *
+#: BUCKET_BYTES``; a sized table never grows past it, and an explicit
+#: count is never changed
+MAX_BUCKETS = 64
+
+
+def input_bytes(df: DataFrame, limit: int | None = None) -> int:
+    """Bytes of the local files ``df`` scans (its plan's
+    ``inputFiles``), counted up to ``limit`` when given. Rows that come
+    from no file (a driver-side list, a cached frame) or from a remote
     store count 0."""
     total = 0
     for uri in df.inputFiles():
@@ -36,9 +55,30 @@ def _reads_at_least(df: DataFrame, limit: int) -> bool:
             total += os.path.getsize(unquote(u.path))
         except OSError:
             continue  # expired by a concurrent retention pass
-        if total >= limit:
-            return True
-    return False
+        if limit is not None and total >= limit:
+            break
+    return total
+
+
+def bucket_count(nbytes: int) -> int:
+    """Bucket count of a sized mirror created over ``nbytes``: the
+    smallest power of two ``n`` with ``nbytes / n <= BUCKET_BYTES``,
+    capped at ``MAX_BUCKETS``."""
+    n = 1
+    while n < MAX_BUCKETS and nbytes > BUCKET_BYTES * n:
+        n *= 2
+    return n
+
+
+def split_count(nbytes: int, n: int) -> int | None:
+    """The doubled count a sized mirror of ``n`` buckets holding
+    ``nbytes`` moves to, or None while its buckets average at most
+    twice ``BUCKET_BYTES`` (or it is at the cap). The factor two keeps a
+    table that just split (to ~``BUCKET_BYTES`` per bucket) from
+    splitting again before it has doubled."""
+    if n >= MAX_BUCKETS or nbytes <= 2 * BUCKET_BYTES * n:
+        return None
+    return 2 * n
 
 
 def write_tasks(
@@ -82,10 +122,11 @@ def write_tasks(
     if dirs is None:
         return slots
     dirs = max(1, int(dirs))
+    limit = ONE_TASK_PER_DIR_BYTES * dirs
     if (
         dirs > slots
         and source is not None
-        and _reads_at_least(source, ONE_TASK_PER_DIR_BYTES * dirs)
+        and input_bytes(source, limit) >= limit
     ):
         return dirs
     return min(dirs, slots)

@@ -17,7 +17,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from tabular_cdc_bootstrapper_spark.streaming._sizing import write_tasks
+from tabular_cdc_bootstrapper_spark.streaming._sizing import (
+    bucket_count,
+    input_bytes,
+    write_tasks,
+)
 from tabular_cdc_bootstrapper_spark.streaming._stats import footer_bucket_stats
 from tabular_cdc_bootstrapper_spark.operators.cdc import apply_changelog
 from tabular_cdc_bootstrapper_spark.streaming._protocol import (
@@ -99,14 +103,14 @@ class VersionedBucketMirror(VersionedBucketMirrorOps, TableOps):
     #: manifest keys describing a snapshot's data (``TableOps``)
     _STATE_KEYS = (
         "buckets", "schema", "next_fid", "deltas", "n_buckets",
-        "partition_spec", "stats", "stats_cols", "renames", "dropped",
-        "shadowed",
+        "bucket_sizing", "partition_spec", "stats", "stats_cols",
+        "renames", "dropped", "shadowed",
     )
 
     def __init__(
         self,
         root: str,
-        n_buckets: int = 64,
+        n_buckets: int | None = 64,
         key_col: str = "id",
         keep_versions: int = 2,
         stats_cols: Sequence[str] = (),
@@ -116,7 +120,15 @@ class VersionedBucketMirror(VersionedBucketMirrorOps, TableOps):
     ) -> None:
         self.root = root
         self.data_dir = os.path.join(root, "data")
-        self.n_buckets = n_buckets
+        #: ``n_buckets=None`` creates a table that sizes its own hash
+        #: bucket count by bytes: ``_sizing.bucket_count`` of the initial
+        #: load's input bytes, then a doubling ``rebucket`` after any
+        #: merge that leaves its buckets past ``_sizing.split_count``'s
+        #: threshold. Its manifests record ``bucket_sizing: "bytes"``,
+        #: so every later handle follows the table's own policy; an int
+        #: count stays fixed.
+        self.sized = n_buckets is None
+        self.n_buckets = bucket_count(0) if n_buckets is None else n_buckets
         self.key_col = key_col
         self.keep_versions = keep_versions
         #: hidden-partition transform (r13, the Iceberg partition-spec
@@ -383,16 +395,22 @@ class VersionedBucketMirror(VersionedBucketMirrorOps, TableOps):
         nb = int((e or {}).get("n_buckets") or self.n_buckets)
         return int(spark_buckets(pd.Series([value]), nb, ktype)[0])
 
-    def _sync_spec(self) -> None:
-        """Bind this handle to the CURRENT manifest's bucket spec (r11,
-        partition-spec evolution): every commit records ``n_buckets``,
-        so a handle created before (or concurrent with) a ``rebucket``
-        never hashes keys under a stale spec. Manifests written before
-        r11 carry no spec — the constructor value stands, which is the
-        pre-rebucket world exactly."""
-        cur = self.current()
+    def _sync_spec(self, cur=_UNSET) -> None:
+        """Bind this handle to the bucket spec of ``cur`` (default: the
+        CURRENT manifest; r11, partition-spec evolution): every commit
+        records ``n_buckets``, so a handle created before (or concurrent
+        with) a ``rebucket`` never hashes keys under a stale spec. A
+        based commit passes the manifest it will read and CAS against,
+        so its bucket ids and its basis share one spec. Manifests
+        written before r11 carry no spec — the constructor value
+        stands, which is the pre-rebucket world exactly."""
+        if cur is _UNSET:
+            cur = self.current()
         if cur and cur.get("n_buckets") and cur["n_buckets"] != self.n_buckets:
             self.n_buckets = int(cur["n_buckets"])
+        if cur is not None:
+            # the table's sizing policy was fixed at its first commit
+            self.sized = cur.get("bucket_sizing") == "bytes"
         # transform specs ride the manifest the same way (r13): a handle
         # constructed without one on a transform-partitioned table must
         # not hash-bucket its writes
@@ -446,6 +464,23 @@ class VersionedBucketMirror(VersionedBucketMirrorOps, TableOps):
         for specs in (e.get("deltas") or {}).values():
             out.extend(s["dir"] for s in specs)
         return out
+
+    def _entry_bytes(self, e: dict) -> int:
+        """Bytes of the parquet files in every dir record ``e``
+        references; a dir removed meanwhile (a concurrent purge or
+        retention pass) counts 0."""
+        total = 0
+        for d in self._entry_dirs(e):
+            try:
+                with os.scandir(d) as it:
+                    total += sum(
+                        f.stat().st_size
+                        for f in it
+                        if f.name.endswith(".parquet")
+                    )
+            except FileNotFoundError:
+                continue
+        return total
 
     def _read_entry(
         self, spark: SparkSession, e: dict, buckets: Sequence[int] | None = None
@@ -844,7 +879,11 @@ class VersionedBucketMirror(VersionedBucketMirrorOps, TableOps):
         """Bulk load. ``max_records_per_file`` bounds file size
         deterministically; the resulting multi-file bucket dirs are what
         ``rewrite_data_files`` later compacts once the table turns
-        read-heavy."""
+        read-heavy. A sized hash-bucketed table takes its count from
+        the bytes ``df`` scans (``_sizing.bucket_count``)."""
+        self._sync_spec()
+        if self.sized and self.partition_spec[0] == "bucket":
+            self.n_buckets = bucket_count(input_bytes(df))
         return self._commit_staged(
             df, touched=None, max_records_per_file=max_records_per_file
         )
@@ -874,13 +913,17 @@ class VersionedBucketMirror(VersionedBucketMirrorOps, TableOps):
         the staged content is a pure rewrite of the basis content (the
         compaction case: the winner's bytes supersede a stale rewrite of
         what they replaced), NEVER for a merge (whose staged buckets
-        carry new data that must not be silently discarded).
+        carry new data that must not be silently discarded). A full
+        replace (``touched=None``, an automatic split) is dropped whole:
+        nothing publishes and the current head is returned.
 
         ``max_records_per_file`` is the deterministic file-size bound
         (Spark's own ``maxRecordsPerFile``), the knob that guarantees a
         fragmented layout for ``rewrite_data_files`` to recover; without
         it every staged bucket dir is one file (``write_tasks``)."""
         _check_meta(meta)
+        if touched is not None and basis is not _UNSET:
+            self._check_spec(basis)
         key = key_col or self.key_col
         version = self._log.next_version()
         staging = os.path.join(self.root, f"staging-{uuid.uuid4().hex[:8]}")
@@ -1007,6 +1050,14 @@ class VersionedBucketMirror(VersionedBucketMirrorOps, TableOps):
             buckets alone, else raise."""
             if _token(head) == _token(old):
                 return head  # lost a version race only
+            if touched is None and drop_conflicted:
+                # an optional full rewrite whose basis moved: drop it
+                # whole (even one that staged no bucket)
+                conflicted.append("*")
+                for dst in actions.values():
+                    shutil.rmtree(dst, ignore_errors=True)
+                actions.clear()
+                return head
             if (head or {}).get("constraints") != (old or {}).get(
                 "constraints"
             ):
@@ -1028,6 +1079,7 @@ class VersionedBucketMirror(VersionedBucketMirrorOps, TableOps):
                     f"{self.root} advanced past this full-state "
                     "rewrite's basis — re-run it against the new head"
                 )
+            self._check_rebase_spec(old, head)
             changed = [
                 b
                 for b in actions
@@ -1103,6 +1155,8 @@ class VersionedBucketMirror(VersionedBucketMirrorOps, TableOps):
         }
         if self.partition_spec[0] != "bucket":
             record["partition_spec"] = list(self.partition_spec)
+        if (self.sized if base is None else base.get("bucket_sizing")):
+            record["bucket_sizing"] = "bytes"
         if deltas:
             record["deltas"] = deltas
         prev = base or {}
@@ -1124,6 +1178,46 @@ class VersionedBucketMirror(VersionedBucketMirrorOps, TableOps):
         if meta:
             record.update(meta)
         return record
+
+    @staticmethod
+    def _spec_of(entry: dict) -> tuple:
+        """The partition spec and bucket count ``entry``'s dirs were
+        written under (``n_buckets`` None on a pre-r11 manifest)."""
+        return (
+            tuple(entry.get("partition_spec") or ("bucket",)),
+            entry.get("n_buckets"),
+        )
+
+    def _check_spec(self, basis: dict | None) -> None:
+        """Refuse a bucket-scoped commit whose partition ids were
+        computed under another spec than its basis manifest's: a
+        ``rebucket``/``regrain`` landed between the handle binding its
+        spec and resolving the basis. Publishing would map ids of one
+        spec onto dirs of the other."""
+        if not basis:
+            return
+        spec, n = self._spec_of(basis)
+        if spec != self.partition_spec or (
+            spec[0] == "bucket" and n not in (None, self.n_buckets)
+        ):
+            raise CommitConflict(
+                f"{self.root}'s partition spec changed to {list(spec)} "
+                f"({n} buckets) while this commit planned under "
+                f"{list(self.partition_spec)} ({self.n_buckets}); re-run "
+                "it against the new head"
+            )
+
+    def _check_rebase_spec(self, old: dict | None, head: dict | None) -> None:
+        """A disjoint-bucket rebase is sound only while the head keeps
+        the basis's spec: after a ``rebucket`` the same bucket id names
+        other keys, so an id both manifests happen to lack would pass
+        the per-bucket test and publish a manifest mixing two specs."""
+        if old and head and self._spec_of(old) != self._spec_of(head):
+            raise CommitConflict(
+                f"{self.root} was re-partitioned by a concurrent commit "
+                "— this commit's bucket ids are stale; re-run it against "
+                "the new head"
+            )
 
     @staticmethod
     def _bucket_state(entry: dict | None, b: str):
@@ -1176,6 +1270,7 @@ class VersionedBucketMirror(VersionedBucketMirrorOps, TableOps):
         columns surface NULL per file — exactly what a tombstone
         carries), and the fold is bit-identical to the unsplit form."""
         _check_meta(meta)
+        self._check_spec(basis)
         key = fold["key"]
         version = self._log.next_version()
         is_del = F.coalesce(
@@ -1463,6 +1558,7 @@ class VersionedBucketMirror(VersionedBucketMirrorOps, TableOps):
                     "constraints validate its data"
                 )
             if _token(head) != _token(old):
+                self._check_rebase_spec(old, head)
                 # delta appends COMMUTE with concurrent delta appends
                 # (the fold is ts-ordered, not arrival-ordered), so the
                 # rebase rule is weaker than _commit_staged's: each

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tabular_cdc_bootstrapper_spark.config import CdcTarget
+from tabular_cdc_bootstrapper_spark.streaming._sizing import split_count
 from tabular_cdc_bootstrapper_spark.operators.cdc import (
     apply_changelog,
     latest_by_key,
@@ -76,6 +77,7 @@ class VersionedBucketMirrorOps:
         dropped — a partial pass carries the metadata forward exactly
         like any commit that leaves old dirs live."""
         cur = self.current()
+        self._sync_spec(cur)
 
         def _nfiles(d: str) -> int:
             try:
@@ -162,20 +164,37 @@ class VersionedBucketMirrorOps:
         (the spec rides the manifest; ``_sync_spec`` rebinds handles).
         Cost ∝ live data (one bucket-partitioned rewrite), independent
         of history length — the probe scripts measure exactly that.
-        Merges prepared under the old spec conflict cleanly (their
-        basis buckets were all rewritten)."""
+        A commit that resolved its basis before the rebucket landed
+        raises :class:`CommitConflict` (its CAS fails, and its rebase
+        refuses a head of another spec, ``_check_rebase_spec``); one
+        whose handle bound a spec other than its basis's is refused
+        before it writes (``_check_spec``)."""
         new_n = int(new_n)
         if new_n < 1:
             raise ValueError(f"n_buckets must be >= 1, got {new_n}")
-        self._sync_spec()
+        cur = self.current()
+        self._sync_spec(cur)
         if self.partition_spec[0] != "bucket":
             raise ValueError(
                 f"rebucket applies to hash-bucket specs; this table is "
                 f"partitioned by {self.partition_spec!r}"
             )
-        cur = self.current()
         if cur is None:
             raise ValueError(f"mirror {self.root} has no snapshot yet")
+        return self._rebucket(spark, new_n, cur)
+
+    def _rebucket(
+        self,
+        spark: SparkSession,
+        new_n: int,
+        cur: dict,
+        optional: bool = False,
+    ) -> dict:
+        """``rebucket`` of the state of ``cur``, which is also its CAS
+        basis (the handle is bound to ``cur``'s spec). ``optional``: a
+        commit landing first drops the rebucket (nothing is published,
+        the current head is returned) instead of raising
+        :class:`CommitConflict`."""
         if new_n == self.n_buckets:
             return dict(cur)  # already on this spec: no-op
         with _purge_race_as_conflict(self.root, "rebucket"):
@@ -190,11 +209,12 @@ class VersionedBucketMirrorOps:
             # state — a lost update). Callers re-run rebucket.
             rec = self._commit_staged(
                 full, touched=None, meta={"operation": "rebucket"},
-                basis=cur,
+                basis=cur, drop_conflicted=optional,
             )
         except BaseException:
             self.n_buckets = old_n
             raise
+        self._sync_spec(rec)  # the head, when the rebucket was dropped
         return rec
 
     def regrain(
@@ -223,8 +243,8 @@ class VersionedBucketMirrorOps:
         count); ``("days"|"months"|"years", col)``; ``("truncate", col,
         w)``; ``("identity", col)``. A transform's source column must
         exist in the table schema (checked against the manifest before
-        any data moves). Merges prepared under the old spec conflict
-        cleanly — their basis buckets were all rewritten.
+        any data moves). Commits planned under the old spec raise
+        :class:`CommitConflict`, as after a ``rebucket``.
 
         ``n_buckets``: hash-target bucket count (``("bucket",)`` specs
         only) — ``transform → BUCKET(n)`` is one commit, not a regrain
@@ -238,8 +258,8 @@ class VersionedBucketMirrorOps:
                 )
             if int(n_buckets) < 1:
                 raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
-        self._sync_spec()
         cur = self.current()
+        self._sync_spec(cur)
         if cur is None:
             raise ValueError(f"mirror {self.root} has no snapshot yet")
         if new_spec == self.partition_spec and (
@@ -505,10 +525,25 @@ class VersionedBucketMirrorOps:
         buckets, carry every other bucket's dir forward unchanged.
         ``branch``: merge against (and advance) a writable branch's head
         instead of main — the stage-risky-batch-then-fast-forward flow,
-        with the same touched-bucket cost."""
+        with the same touched-bucket cost.
+
+        On a sized table (``n_buckets=None`` at creation) a merge to
+        main that leaves the buckets past ``_sizing.split_count``'s
+        threshold is followed by a doubling ``rebucket`` (``_split``)."""
         spark = batch_df.sparkSession
         key = target.key_column
-        self._sync_spec()  # bind to the current manifest's bucket spec
+        # resolve the basis manifest FIRST and bind the spec from it: the
+        # touched-bucket aggregate, the merge's input reads and the
+        # commit's CAS check all bind to it (r11 — a commit landing in
+        # between surfaces as CommitConflict / a validated disjoint-
+        # bucket rebase, never a silent lost update; a rebucket fails
+        # the CAS and the rebase's spec check, never mixing two specs)
+        base = (
+            self._branch_head_entry(branch)
+            if branch is not None
+            else self.current()
+        )
+        self._sync_spec(base)
         # one bounded aggregate (≤ n_buckets rows) finds the touched
         # buckets AND the batch's delete/upsert composition — the same
         # shuffle the old distinct() paid, now also steering the
@@ -530,15 +565,6 @@ class VersionedBucketMirrorOps:
             return {"touched_buckets": []}
         has_deletes = any(r["has_d"] for r in brows)
         has_upserts = any(not r["all_d"] for r in brows)
-        # resolve the basis manifest ONCE: both the merge's input reads
-        # and the commit's CAS check bind to it (r11 — a commit landing
-        # between read and publish surfaces as CommitConflict / a
-        # validated disjoint-bucket rebase, never a silent lost update)
-        base = (
-            self._branch_head_entry(branch)
-            if branch is not None
-            else self.current()
-        )
         ts_cols = (
             [target.ts_column]
             if isinstance(target.ts_column, str)
@@ -566,6 +592,7 @@ class VersionedBucketMirrorOps:
                 },
                 basis=base,
                 branch=branch,
+                meta={"operation": "cdc_merge"},
                 # the keys-only delete tier (r12) strips payload columns;
                 # under a TRANSFORM spec the slice additionally carries
                 # the spec's source column so tombstones route to their
@@ -575,30 +602,46 @@ class VersionedBucketMirrorOps:
                 split_deletes=has_deletes,
                 has_upserts=has_upserts,
             )
-            rec["touched_buckets"] = touched
-            return rec
-        with _purge_race_as_conflict(self.root, "merge"):
-            current = (
-                self._read_entry(spark, base, buckets=touched)
-                if base is not None
-                else None
-            )
-            new_state = apply_changelog(
-                batch_df,
-                key_cols=key,
-                ts_cols=target.ts_column,
-                op_col=target.op_column,
-                delete_op=target.delete_op,
-                mirror=current,
-                tiebreak_cols=tiebreak_cols,
-                drop_envelope=(),
-            )
-            rec = self._commit_staged(
-                new_state, touched=touched, key_col=key, branch=branch,
-                basis=base,
-            )
+        else:
+            with _purge_race_as_conflict(self.root, "merge"):
+                current = (
+                    self._read_entry(spark, base, buckets=touched)
+                    if base is not None
+                    else None
+                )
+                new_state = apply_changelog(
+                    batch_df,
+                    key_cols=key,
+                    ts_cols=target.ts_column,
+                    op_col=target.op_column,
+                    delete_op=target.delete_op,
+                    mirror=current,
+                    tiebreak_cols=tiebreak_cols,
+                    drop_envelope=(),
+                )
+                rec = self._commit_staged(
+                    new_state, touched=touched, key_col=key, branch=branch,
+                    basis=base, meta={"operation": "cdc_merge"},
+                )
         rec["touched_buckets"] = touched
+        if branch is None:
+            self._split(spark, rec)
         return rec
+
+    def _split(self, spark: SparkSession, head: dict) -> None:
+        """Double a sized hash-bucketed table's count once ``head``, the
+        commit just published, averages more than twice
+        ``_sizing.BUCKET_BYTES`` per bucket (``split_count``). Under
+        ``pmod(xxhash64, 2n)`` every new bucket is one half of an old
+        one, so a table splits at most log2(``MAX_BUCKETS``) = 6 times
+        in its life. ``head`` is the split's CAS basis: a commit landing
+        first drops the split — the merge stays committed and the next
+        merge retries."""
+        if not self.sized or self.partition_spec[0] != "bucket":
+            return
+        new_n = split_count(self._entry_bytes(head), self.n_buckets)
+        if new_n is not None:
+            self._rebucket(spark, new_n, head, optional=True)
 
     def commit_merged(
         self,
@@ -658,26 +701,31 @@ class VersionedBucketMirrorOps:
             )
         if out is None:
             return {"manifests_rewritten": 0, "bucket_dirs_rewritten": 0}
+        if out["scope"] is not None:
+            scope = out["scope"][1]
+        else:
+            cur = self.current()
+            scope = set(cur["buckets"]) | set(cur.get("deltas") or {})
         return {
             "manifests_rewritten": out["rewritten"],
             "bucket_dirs_rewritten": out["dirs"],
             "catchup_rounds": out["rounds"],
-            "touched_buckets": sorted(int(b) for b in out["scope"]),
+            "touched_buckets": sorted(int(b) for b in scope),
         }
 
     def _purge_scope(
         self, keys_df: DataFrame, keys: list[str], cur: dict
-    ) -> set[str]:
-        """The bucket ids a purge may touch: the hash buckets of the
-        keys when the hash key is among them. Otherwise every partition
-        is a candidate — under a transform spec the partition id is a
-        function of the SOURCE column, which a keys-only purge frame
-        does not carry (the semi-join probe still skips clean dirs
-        cheaply)."""
-        self._sync_spec()
+    ) -> tuple | None:
+        """The bucket ids a purge may touch, as ``(spec, ids)``: the
+        hash buckets of the keys under ``cur``'s spec when the hash key
+        is among them. ``None`` makes every partition a candidate —
+        under a transform spec the partition id is a function of the
+        SOURCE column, which a keys-only purge frame does not carry (the
+        semi-join probe still skips clean dirs cheaply)."""
+        self._sync_spec(cur)
         hkey = keys[0] if len(keys) == 1 else self.key_col
         if self.partition_spec[0] == "bucket" and hkey in keys:
-            return {
+            return self._spec_of(cur), {
                 str(r["b"])
                 for r in keys_df.select(
                     self._partition_for(hkey, keys_df).alias("b")
@@ -685,11 +733,20 @@ class VersionedBucketMirrorOps:
                 .distinct()
                 .collect()
             }
-        return set(cur.get("buckets") or {}) | set(cur.get("deltas") or {})
+        return None
 
     def _purge_candidates(
-        self, e: dict, scope: set[str]
+        self, e: dict, scope: tuple | None
     ) -> list[tuple[str, str]]:
+        """Dirs of record ``e`` the purge scans. A record of another
+        spec than the scope's (retained from before a ``rebucket``)
+        holds the keys under other bucket ids: all of its dirs are
+        candidates."""
+        if scope is not None and self._spec_of(e) == scope[0]:
+            ids = scope[1]
+        else:
+            ids = set(e["buckets"]) | set(e.get("deltas") or {})
+
         def _dst(b: str, kind: str) -> str:
             return os.path.join(
                 self.data_dir,
@@ -697,10 +754,10 @@ class VersionedBucketMirrorOps:
                 f"v-{e['version']:08d}-{kind}purge-{uuid.uuid4().hex[:8]}",
             )
 
-        out = [(d, _dst(b, "")) for b, d in e["buckets"].items() if b in scope]
+        out = [(d, _dst(b, "")) for b, d in e["buckets"].items() if b in ids]
         # merge-on-read delta dirs hold the same PII (upserts AND
         # key-bearing tombstones)
         for b, specs in (e.get("deltas") or {}).items():
-            if b in scope:
+            if b in ids:
                 out.extend((s["dir"], _dst(b, "delta-")) for s in specs)
         return out

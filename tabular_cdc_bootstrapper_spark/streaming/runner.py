@@ -79,7 +79,7 @@ def run_cdc_pipeline_available_now(
     work_dir: str,
     target: CdcTarget,
     mirror_layout: str = "snapshot",
-    n_buckets: int = 64,
+    n_buckets: int | None = None,
     partition_spec: "Sequence | None" = None,
 ) -> dict:
     """End-to-end one-shot CDC run over whatever files currently exist.
@@ -100,6 +100,14 @@ def run_cdc_pipeline_available_now(
     ``"bucketed_versioned_mor"`` (the same mirror in merge-on-read mode:
     merges append delta files, reads fold them, ``rewrite_data_files``
     folds them back — the write-amplification-minimal CDC shape).
+
+    ``n_buckets`` (versioned layouts, hash spec): the mirror's bucket
+    count when it is created. ``None`` (the default) creates a table
+    that sizes its own count by bytes — the smallest power of two that
+    keeps the initial load at or below ``_sizing.BUCKET_BYTES`` per
+    bucket, up to ``MAX_BUCKETS`` (64), doubled by an automatic
+    ``rebucket`` after a merge once its buckets average twice that. An
+    int stays fixed. An existing mirror keeps its own policy and count.
 
     ``partition_spec`` (r13, versioned layouts only): an Iceberg
     transform — ``("months", col)`` etc. — instead of the key hash; the

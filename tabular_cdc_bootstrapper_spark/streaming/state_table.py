@@ -476,4 +476,8 @@ def cdc_merge_batch(
     # based commit (r11): the new state was derived FROM ``basis`` — a
     # concurrent commit in between must surface as CommitConflict, and
     # the streaming caller's checkpoint replay re-derives idempotently
-    return mirror.commit(new_state, expected_version=_token(basis))
+    return mirror.commit(
+        new_state,
+        meta={"operation": "cdc_merge"},
+        expected_version=_token(basis),
+    )

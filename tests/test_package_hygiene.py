@@ -23,7 +23,9 @@ only by ``TableOps._publish_cas``, no layout module catches
 ``CommitConflict``, and only ``_protocol.py`` writes a record's
 ``"constraints"``. And it pins the size of every staged bucket write: each ``repartition``
 in the mirror and purge modules takes its count from
-``_sizing.write_tasks``, the one sizing rule. Two pins hold the query
+``_sizing.write_tasks``, the one sizing rule; the bucket-count rule of a
+sized mirror (``bucket_count``, ``split_count`` and their thresholds) is
+likewise written once, in ``_sizing.py``. Two pins hold the query
 harnesses to their shared helpers: every thread pool under ``queries/``
 is the one in ``_registry._overlap``, and ``cdc_state.py`` folds no
 probe through ``explode(array(...))``.
@@ -276,6 +278,41 @@ def test_staged_writes_are_sized_by_the_one_rule():
             ):
                 unsized.append(f"{name}:{node.lineno}")
     assert calls >= 4 and unsized == []
+
+
+def test_bucket_count_rule_is_written_once():
+    """The bucket-count rule lives in ``streaming/_sizing.py`` beside
+    ``write_tasks``: no other package module defines a count rule or
+    reads its thresholds, and the mirror takes every sized count from
+    ``bucket_count`` (initial load) or ``split_count`` (after a merge)."""
+    rule = {"bucket_count", "split_count", "BUCKET_BYTES", "MAX_BUCKETS"}
+    sizing = REPO / PKG / "streaming" / "_sizing.py"
+    tree = ast.parse(sizing.read_text())
+    assert rule | {"write_tasks", "input_bytes"} <= _bound_names(tree.body)
+    strays, calls = [], set()
+    for path in _py_files(PKG):
+        if path == sizing:
+            continue
+        tree = ast.parse(path.read_text())
+        rel = str(path.relative_to(REPO))
+        strays += [f"{rel}:{n}" for n in sorted(_bound_names(tree.body) & rule)]
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Name) and node.id in rule - {
+                "bucket_count", "split_count"
+            }:
+                strays.append(f"{rel}:{node.lineno}")
+            if isinstance(node, ast.Call) and _call_name(node) in rule:
+                calls.add((path.name, _call_name(node)))
+            if (
+                isinstance(node, ast.Attribute)
+                and node.attr in ("BUCKET_BYTES", "MAX_BUCKETS")
+            ):
+                strays.append(f"{rel}:{node.lineno}")
+    assert strays == []
+    assert calls == {
+        ("bucket_mirror.py", "bucket_count"),
+        ("bucket_ops.py", "split_count"),
+    }
 
 
 def _call_name(node: ast.Call) -> str | None:
