@@ -306,6 +306,22 @@ def test_stalled_writer_cannot_regress_pointer(spark, tmp_path):
     assert t.current()["version"] == 2
 
 
+def _reads_after_scope(m, up_front, after):
+    """Make ``m.current()`` return ``up_front()`` for every read a purge
+    makes before its bucket scope is computed, and ``after()`` from
+    then on."""
+    scoped = []
+    real_scope = m._purge_scope
+
+    def scope(*args):
+        out = real_scope(*args)
+        scoped.append(True)
+        return out
+
+    m._purge_scope = scope
+    m.current = lambda: after() if scoped else up_front()
+
+
 def test_purge_converges_past_mid_purge_commit(spark, tmp_path):
     """A commit landing between purge start and pointer rewrite used to
     abort the purge (r11: CommitConflict on any head movement) — under
@@ -334,17 +350,11 @@ def test_purge_converges_past_mid_purge_commit(spark, tmp_path):
             .collect()
         ],
     )
-    calls = {"n": 0}
-
-    def stale_then_real():
-        # purge reads current() twice up front (_sync_spec + its basis
-        # capture) — keep both on the stale view, so the simulated
-        # concurrent commit lands "between" basis capture and the
-        # first round's pointer check
-        calls["n"] += 1
-        return stale if calls["n"] <= 2 else real_current()
-
-    m.current = stale_then_real
+    # every read the purge makes up front (its basis capture, up to its
+    # bucket scope) sees the stale view, so the simulated concurrent
+    # commit lands "between" basis capture and the first round's
+    # pointer check
+    _reads_after_scope(m, lambda: stale, real_current)
     keys = spark.createDataFrame([(1,)], "k long")
     rec = m.purge_keys(spark, keys, key_col="k")
     m.current = real_current
@@ -364,17 +374,14 @@ def test_purge_converges_past_mid_purge_commit(spark, tmp_path):
     # caller-visible conflict, not an infinite chase
     m3 = _mirror(spark, tmp_path / "m3", n=16)
     real3 = m3.current
-    calls3 = {"n": 0}
+    moves = iter(range(1, 1000))
 
     def always_moving():
-        calls3["n"] += 1
-        if calls3["n"] <= 2:
-            return real3()
         e = dict(real3())
-        e["version"] = e["version"] + calls3["n"]  # head keeps advancing
+        e["version"] = e["version"] + next(moves)  # head keeps advancing
         return e
 
-    m3.current = always_moving
+    _reads_after_scope(m3, real3, always_moving)
     with pytest.raises(CommitConflict, match="kept advancing"):
         m3.purge_keys(
             spark, spark.createDataFrame([(1,)], "k long"), key_col="k"
