@@ -35,7 +35,8 @@ Engine extensions:
                         partitioned table, one partition per bucket of
                         the head manifest; a new mirror sizes its
                         bucket count by bytes, 1 bucket per 4 MiB of
-                        initial load up to 64, and doubles it after a
+                        initial load up to 64 (64 for a source that
+                        is not local), and doubles it after a
                         poll whose merge outgrows that, so a later poll
                         registers the new partitions), "bucketed" (alias of
                         "bucketed_versioned"), or "bucketed_versioned_mor"

@@ -207,14 +207,16 @@ def _token(record: dict | None) -> tuple:
 
 
 @contextmanager
-def _purge_race_as_conflict(root: str, what: str):
+def _purge_race_as_conflict(root: str, what: str, drop: bool = False):
     """Turn a Spark read that failed because an input dir was deleted out
     from under it into :class:`CommitConflict` — the reader-vs-purge race
     (r12, found by probe_concurrent_stress.py): a purge rewrites the
     records, then deletes the old PII dirs, so a reader holding a
     PRE-purge record dangles. The record on disk already names the
     rewritten dirs; the conflict sends callers through their normal
-    re-resolve-and-retry path."""
+    re-resolve-and-retry path. ``drop``: swallow the race instead, for
+    an optional rewrite (an automatic split) that a later commit
+    retries — the block ends early and publishes nothing."""
     try:
         yield
     except CommitConflict:
@@ -226,6 +228,8 @@ def _purge_race_as_conflict(root: str, what: str):
             or "FileNotFoundException" in s
             or "No such file or directory" in s
         ):
+            if drop:
+                return
             raise CommitConflict(
                 f"{root}: this {what}'s basis dirs were purged "
                 "concurrently — re-run against the new head"

@@ -5,13 +5,14 @@ A leaf module: ``_purge.py`` (imported by ``_protocol.py``) and
 ``bucket_mirror.py`` both size their staged writes here, so the rule is
 written once and ``tests/test_package_hygiene.py`` can pin that every
 ``repartition`` of those writes takes its count from ``write_tasks``,
-and that the bucket-count rule (``bucket_count``/``split_count``) lives
-here and nowhere else.
+and that the bucket-count rule (``bucket_count``, ``load_bucket_count``,
+``split_count``) lives here and nowhere else.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
@@ -41,15 +42,21 @@ BUCKET_BYTES = ONE_TASK_PER_DIR_BYTES
 MAX_BUCKETS = 64
 
 
-def input_bytes(df: DataFrame, limit: int | None = None) -> int:
+def input_bytes(
+    df: DataFrame, limit: int | None = None, strict: bool = False
+) -> int | None:
     """Bytes of the local files ``df`` scans (its plan's
-    ``inputFiles``), counted up to ``limit`` when given. Rows that come
-    from no file (a driver-side list, a cached frame) or from a remote
-    store count 0."""
+    ``inputFiles``), counted up to ``limit`` when given. A file that is
+    not local (``s3a://``, ``hdfs://``) is not sized here: it counts 0,
+    or, when ``strict``, makes the frame's size unknown (None). Rows
+    that come from no file (a driver-side list, a frame derived from a
+    cached one) count 0."""
     total = 0
     for uri in df.inputFiles():
         u = urlparse(uri)
         if u.scheme not in ("", "file"):
+            if strict:
+                return None
             continue
         try:
             total += os.path.getsize(unquote(u.path))
@@ -60,25 +67,44 @@ def input_bytes(df: DataFrame, limit: int | None = None) -> int:
     return total
 
 
-def bucket_count(nbytes: int) -> int:
-    """Bucket count of a sized mirror created over ``nbytes``: the
-    smallest power of two ``n`` with ``nbytes / n <= BUCKET_BYTES``,
-    capped at ``MAX_BUCKETS``."""
+def bucket_count(nbytes: int | None) -> int:
+    """Bucket count of a sized mirror holding ``nbytes``: the smallest
+    power of two ``n`` with ``nbytes / n <= BUCKET_BYTES``, capped at
+    ``MAX_BUCKETS``. An unknown size (None) takes the cap, the count a
+    table had before it could size itself: guessing low would put a
+    large table in one bucket and leave it to six full-rewrite splits.
+    Also the count of a sized handle before it reads its table's
+    manifest, so a table that records no count keeps the cap."""
+    if nbytes is None:
+        return MAX_BUCKETS
     n = 1
     while n < MAX_BUCKETS and nbytes > BUCKET_BYTES * n:
         n *= 2
     return n
 
 
-def split_count(nbytes: int, n: int) -> int | None:
-    """The doubled count a sized mirror of ``n`` buckets holding
-    ``nbytes`` moves to, or None while its buckets average at most
-    twice ``BUCKET_BYTES`` (or it is at the cap). The factor two keeps a
-    table that just split (to ~``BUCKET_BYTES`` per bucket) from
-    splitting again before it has doubled."""
-    if n >= MAX_BUCKETS or nbytes <= 2 * BUCKET_BYTES * n:
+def load_bucket_count(df: DataFrame) -> int:
+    """``bucket_count`` of an initial load ``df``, from the bytes of the
+    files it scans. Counting stops at ``MAX_BUCKETS * BUCKET_BYTES``,
+    where the count is capped anyway, so a very large load lists its
+    files but reads no more of their sizes than that."""
+    return bucket_count(
+        input_bytes(df, MAX_BUCKETS * BUCKET_BYTES, strict=True)
+    )
+
+
+def split_count(n: int, measure: Callable[[int], int]) -> int | None:
+    """The doubled count a sized mirror of ``n`` buckets moves to, or
+    None while its buckets average at most twice ``BUCKET_BYTES`` (or
+    it is at the cap). ``measure(limit)`` gives the table's bytes,
+    counted up to at least ``limit``; it is not called at the cap, and
+    it may stop counting once it reaches ``limit``. The factor two
+    keeps a table that just split (to ~``BUCKET_BYTES`` per bucket)
+    from splitting again before it has doubled."""
+    if n >= MAX_BUCKETS:
         return None
-    return 2 * n
+    limit = 2 * BUCKET_BYTES * n
+    return 2 * n if measure(limit + 1) > limit else None
 
 
 def write_tasks(

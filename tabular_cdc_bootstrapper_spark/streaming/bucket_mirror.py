@@ -19,7 +19,7 @@ from pyspark.sql import types as T
 
 from tabular_cdc_bootstrapper_spark.streaming._sizing import (
     bucket_count,
-    input_bytes,
+    load_bucket_count,
     write_tasks,
 )
 from tabular_cdc_bootstrapper_spark.streaming._stats import footer_bucket_stats
@@ -121,14 +121,19 @@ class VersionedBucketMirror(VersionedBucketMirrorOps, TableOps):
         self.root = root
         self.data_dir = os.path.join(root, "data")
         #: ``n_buckets=None`` creates a table that sizes its own hash
-        #: bucket count by bytes: ``_sizing.bucket_count`` of the initial
-        #: load's input bytes, then a doubling ``rebucket`` after any
-        #: merge that leaves its buckets past ``_sizing.split_count``'s
-        #: threshold. Its manifests record ``bucket_sizing: "bytes"``,
-        #: so every later handle follows the table's own policy; an int
-        #: count stays fixed.
+        #: bucket count by bytes: ``initialize`` takes it from the load's
+        #: input bytes (``_sizing.load_bucket_count``), then a doubling
+        #: ``rebucket`` follows any merge that leaves its buckets past
+        #: ``_sizing.split_count``'s threshold. Its manifests record
+        #: ``bucket_sizing: "bytes"``, so every later handle follows the
+        #: table's own policy; an int count stays fixed. Until a
+        #: manifest says otherwise such a handle holds the cap
+        #: (``bucket_count(None)``, 64): a table whose manifests record
+        #: no count was written under that default.
         self.sized = n_buckets is None
-        self.n_buckets = bucket_count(0) if n_buckets is None else n_buckets
+        self.n_buckets = (
+            bucket_count(None) if n_buckets is None else n_buckets
+        )
         self.key_col = key_col
         self.keep_versions = keep_versions
         #: hidden-partition transform (r13, the Iceberg partition-spec
@@ -465,21 +470,25 @@ class VersionedBucketMirror(VersionedBucketMirrorOps, TableOps):
             out.extend(s["dir"] for s in specs)
         return out
 
-    def _entry_bytes(self, e: dict) -> int:
-        """Bytes of the parquet files in every dir record ``e``
-        references; a dir removed meanwhile (a concurrent purge or
-        retention pass) counts 0."""
+    @staticmethod
+    def _base_bytes(e: dict, limit: int | None = None) -> int:
+        """Bytes of the parquet files in record ``e``'s bucket base dirs,
+        counted up to ``limit`` when given; a dir removed meanwhile (a
+        concurrent purge or retention pass) counts 0. Merge-on-read
+        delta dirs are left out: they hold superseded upserts and
+        tombstones, not live rows, until ``rewrite_data_files`` folds
+        them into the bases."""
         total = 0
-        for d in self._entry_dirs(e):
+        for d in e["buckets"].values():
             try:
                 with os.scandir(d) as it:
-                    total += sum(
-                        f.stat().st_size
-                        for f in it
-                        if f.name.endswith(".parquet")
-                    )
+                    for f in it:
+                        if f.name.endswith(".parquet"):
+                            total += f.stat().st_size
             except FileNotFoundError:
                 continue
+            if limit is not None and total >= limit:
+                break
         return total
 
     def _read_entry(
@@ -880,10 +889,11 @@ class VersionedBucketMirror(VersionedBucketMirrorOps, TableOps):
         deterministically; the resulting multi-file bucket dirs are what
         ``rewrite_data_files`` later compacts once the table turns
         read-heavy. A sized hash-bucketed table takes its count from
-        the bytes ``df`` scans (``_sizing.bucket_count``)."""
+        the bytes of the files ``df`` scans (``_sizing.load_bucket_count``;
+        the cap when they are not local)."""
         self._sync_spec()
         if self.sized and self.partition_spec[0] == "bucket":
-            self.n_buckets = bucket_count(input_bytes(df))
+            self.n_buckets = load_bucket_count(df)
         return self._commit_staged(
             df, touched=None, max_records_per_file=max_records_per_file
         )
@@ -966,7 +976,13 @@ class VersionedBucketMirror(VersionedBucketMirrorOps, TableOps):
             writer = writer.option(
                 "maxRecordsPerFile", int(max_records_per_file)
             )
-        writer.partitionBy("bucket").parquet(staging)
+        try:
+            writer.partitionBy("bucket").parquet(staging)
+        except BaseException:
+            # a failed write (a purge deleting its input) leaves at most
+            # an empty dir, which no manifest names
+            shutil.rmtree(staging, ignore_errors=True)
+            raise
         staged_stats = self._staged_bucket_stats(
             df.sparkSession,
             staging,

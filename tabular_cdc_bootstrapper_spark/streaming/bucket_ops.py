@@ -192,13 +192,12 @@ class VersionedBucketMirrorOps:
     ) -> dict:
         """``rebucket`` of the state of ``cur``, which is also its CAS
         basis (the handle is bound to ``cur``'s spec). ``optional``: a
-        commit landing first drops the rebucket (nothing is published,
-        the current head is returned) instead of raising
+        commit landing first, or a purge deleting ``cur``'s dirs while
+        they are read, drops the rebucket (nothing is published, the
+        current head is returned) instead of raising
         :class:`CommitConflict`."""
         if new_n == self.n_buckets:
             return dict(cur)  # already on this spec: no-op
-        with _purge_race_as_conflict(self.root, "rebucket"):
-            full = self._read_entry(spark, cur)
         old_n = self.n_buckets
         self.n_buckets = new_n
         try:
@@ -206,14 +205,22 @@ class VersionedBucketMirrorOps:
             # a commit landing between the read and the publish must
             # CommitConflict (ADVICE r12: touched=None used to rebase
             # silently, overwriting the concurrent commit with pre-read
-            # state — a lost update). Callers re-run rebucket.
-            rec = self._commit_staged(
-                full, touched=None, meta={"operation": "rebucket"},
-                basis=cur, drop_conflicted=optional,
-            )
+            # state — a lost update). Callers re-run rebucket. The read
+            # is lazy: a purge deleting cur's dirs surfaces in the write,
+            # and drops an optional rebucket like a lost CAS does.
+            rec = None
+            with _purge_race_as_conflict(self.root, "rebucket", optional):
+                rec = self._commit_staged(
+                    self._read_entry(spark, cur),
+                    touched=None, meta={"operation": "rebucket"},
+                    basis=cur, drop_conflicted=optional,
+                )
         except BaseException:
             self.n_buckets = old_n
             raise
+        if rec is None:
+            self.n_buckets = old_n
+            rec = self.current()
         self._sync_spec(rec)  # the head, when the rebucket was dropped
         return rec
 
@@ -636,10 +643,15 @@ class VersionedBucketMirrorOps:
         one, so a table splits at most log2(``MAX_BUCKETS``) = 6 times
         in its life. ``head`` is the split's CAS basis: a commit landing
         first drops the split — the merge stays committed and the next
-        merge retries."""
+        merge retries. Only base dirs count (``_base_bytes``): on
+        merge-on-read a table follows its live data as of the last
+        ``rewrite_data_files``, so updates piling up in deltas never
+        split it."""
         if not self.sized or self.partition_spec[0] != "bucket":
             return
-        new_n = split_count(self._entry_bytes(head), self.n_buckets)
+        new_n = split_count(
+            self.n_buckets, lambda limit: self._base_bytes(head, limit)
+        )
         if new_n is not None:
             self._rebucket(spark, new_n, head, optional=True)
 

@@ -105,9 +105,11 @@ def run_cdc_pipeline_available_now(
     count when it is created. ``None`` (the default) creates a table
     that sizes its own count by bytes — the smallest power of two that
     keeps the initial load at or below ``_sizing.BUCKET_BYTES`` per
-    bucket, up to ``MAX_BUCKETS`` (64), doubled by an automatic
-    ``rebucket`` after a merge once its buckets average twice that. An
-    int stays fixed. An existing mirror keeps its own policy and count.
+    bucket, up to ``MAX_BUCKETS`` (64; also the count when
+    ``source_dir``'s files are not local and so are not sized), doubled
+    by an automatic ``rebucket`` after a merge once its base buckets
+    average twice that. An int stays fixed. An existing mirror keeps
+    its own policy and count.
 
     ``partition_spec`` (r13, versioned layouts only): an Iceberg
     transform — ``("months", col)`` etc. — instead of the key hash; the

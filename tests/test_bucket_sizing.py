@@ -1,8 +1,10 @@
 """A bucketed mirror created without a count sizes it by bytes
 (``streaming/_sizing.py`` ``bucket_count``/``split_count``): the initial
 load picks the smallest power of two that keeps each bucket at or below
-``BUCKET_BYTES``, and a merge that leaves the buckets past twice that
-doubles the count through ``rebucket``. An explicit count never moves.
+``BUCKET_BYTES`` (the cap, 64, when its size is unknown), and a merge
+that leaves the base buckets past twice that doubles the count through
+``rebucket``. An explicit count never moves, and neither does a table
+whose manifests record none.
 Also pinned here: a merge's bucket ids and its basis manifest share one
 spec even when a ``rebucket`` lands mid-merge, a purge reaches the
 versions retained from before a ``rebucket``, and every CDC merge commit
@@ -49,10 +51,62 @@ def test_bucket_count_rule():
     assert _sizing.bucket_count(bb + 1) == 2
     assert _sizing.bucket_count(5 * bb) == 8
     assert _sizing.bucket_count(10**15) == _sizing.MAX_BUCKETS == 64
-    assert _sizing.split_count(2 * bb, 1) is None
-    assert _sizing.split_count(2 * bb + 1, 1) == 2
-    assert _sizing.split_count(17 * bb, 8) == 16
-    assert _sizing.split_count(10**15, 64) is None
+    assert _sizing.bucket_count(None) == 64  # size unknown: the cap
+    assert _sizing.split_count(1, lambda limit: 2 * bb) is None
+    assert _sizing.split_count(1, lambda limit: 2 * bb + 1) == 2
+    assert _sizing.split_count(8, lambda limit: 17 * bb) == 16
+
+    def unmeasured(limit):
+        raise AssertionError("a table at the cap is not measured")
+
+    assert _sizing.split_count(64, unmeasured) is None
+
+
+class _Files:
+    """A frame stand-in: ``input_bytes`` reads only ``inputFiles()``."""
+
+    def __init__(self, *uris):
+        self.uris = list(uris)
+
+    def inputFiles(self):
+        return self.uris
+
+
+def test_load_bucket_count_sizes_local_files_only(tmp_path):
+    """Local files are sized, and counting stops at the cap's bytes; a
+    load with a file that is not local has no known size, so it takes
+    the cap instead of 1."""
+    bb = _sizing.BUCKET_BYTES
+    f = tmp_path / "part.parquet"
+    f.write_bytes(b"x" * (3 * bb))
+    local = _Files(f"file://{f}")
+    assert _sizing.input_bytes(local) == 3 * bb
+    assert _sizing.load_bucket_count(local) == 4
+    assert _sizing.input_bytes(_Files(*[f"file://{f}"] * 100), 5 * bb) == 6 * bb
+    remote = _Files("s3a://bucket/load/LOAD0001.parquet", f"file://{f}")
+    for src in (remote, _Files("hdfs://nn/load/LOAD0001.parquet")):
+        assert _sizing.input_bytes(src, strict=True) is None
+        assert _sizing.load_bucket_count(src) == 64
+    assert _sizing.input_bytes(remote) == 3 * bb  # a staged write's count
+
+
+def test_sized_mirror_over_remote_load_takes_the_cap(
+    spark, tmp_path, monkeypatch
+):
+    """A sized mirror whose initial load reads a file that is not local
+    starts at 64 buckets, not at the 1 bucket an unknown size would
+    give, and its manifest still records the sizing policy."""
+    load = _batch(spark, [(k, f"v0-{k}", 0, "I") for k in range(20)])
+    monkeypatch.setattr(
+        type(load), "inputFiles",
+        lambda self: ["s3a://bucket/load/LOAD0001.parquet"],
+    )
+    m = VersionedBucketMirror(str(tmp_path / "m"), n_buckets=None, key_col="id")
+    m.initialize(load)
+    head = m.current()
+    assert head["n_buckets"] == m.n_buckets == 64
+    assert head["bucket_sizing"] == "bytes"
+    assert _state(spark, m) == {k: f"v0-{k}" for k in range(20)}
 
 
 @pytest.mark.parametrize(
@@ -99,6 +153,10 @@ def _grow(spark, m, start: int, n: int, ts: int, width: int = 400):
 def test_sized_mirror_splits_once_per_doubling(
     spark, tmp_path, monkeypatch, mor
 ):
+    """Each merge that leaves the base past twice the constant per
+    bucket doubles the count once. On merge-on-read the inserts sit in
+    deltas until ``rewrite_data_files`` folds them, so each round
+    compacts first and the merge splits on the folded base."""
     monkeypatch.setattr(_sizing, "BUCKET_BYTES", 16 << 10)
     m = VersionedBucketMirror(
         str(tmp_path / "m"), n_buckets=None, key_col="id", keep_versions=50,
@@ -109,13 +167,15 @@ def test_sized_mirror_splits_once_per_doubling(
     oracle = {k: f"v0-{k}" for k in range(20)}
     snapshots: dict[int, dict] = {}
     counts = [1]
-    for i in range(6):
+    for i in range(7):
+        if mor:
+            m.rewrite_data_files(spark)
         n_before = m.n_buckets
         rec, rows = _grow(spark, m, 1000 * (i + 1), 60, ts=i + 1)
         oracle.update(rows)
         assert rec["operation"] == "cdc_merge"
         snapshots[rec["version"]] = dict(oracle)
-        want = _sizing.split_count(m._entry_bytes(rec), n_before)
+        want = _sizing.split_count(n_before, lambda _: m._base_bytes(rec))
         assert m.n_buckets == (want or n_before)
         head = m.current()
         assert head["n_buckets"] == m.n_buckets
@@ -142,6 +202,44 @@ def test_sized_mirror_splits_once_per_doubling(
         assert _state(spark, m, version=v) == want_state
 
 
+def test_mor_updates_to_the_same_keys_never_split(spark, tmp_path, monkeypatch):
+    """Merge-on-read deltas of updates to the same keys are superseded
+    rows, not live data: however many pile up, the table keeps its
+    count, and after compaction its live bytes stay below a split."""
+    monkeypatch.setattr(_sizing, "BUCKET_BYTES", 16 << 10)
+    m = VersionedBucketMirror(
+        str(tmp_path / "m"), n_buckets=None, key_col="id", keep_versions=5,
+        merge_on_read=True,
+    )
+    m.initialize(_batch(spark, [(k, f"v0-{k}", 0, "I") for k in range(20)]))
+    rng = random.Random(7)
+    oracle = {}
+    for i in range(8):
+        rows = [
+            (k, "%0400x" % rng.getrandbits(1600), i + 1, "U")
+            for k in range(40)
+        ]
+        m.merge_batch(_batch(spark, rows), TARGET)
+        oracle = {r[0]: r[1] for r in rows}
+    head = m.current()
+    assert m.n_buckets == head["n_buckets"] == 1
+    assert "rebucket" not in _ops(m)
+    # eight rounds of 40 incompressible 400-byte names: the deltas hold
+    # far more than twice the constant, the live rows far less
+    assert m._base_bytes(head) < 2 * _sizing.BUCKET_BYTES
+    assert sum(
+        os.path.getsize(os.path.join(s["dir"], f))
+        for specs in head["deltas"].values()
+        for s in specs
+        for f in os.listdir(s["dir"])
+        if f.endswith(".parquet")
+    ) > 2 * _sizing.BUCKET_BYTES
+    assert _state(spark, m) == oracle
+    m.rewrite_data_files(spark)
+    m.merge_batch(_batch(spark, [(0, oracle[0], 99, "U")]), TARGET)
+    assert m.n_buckets == 1 and "rebucket" not in _ops(m)
+
+
 def test_explicit_count_never_changes(spark, tmp_path, monkeypatch):
     """An int count is fixed, and a table created with one keeps it
     under a handle opened without a count: no split, no shrink."""
@@ -164,6 +262,33 @@ def test_explicit_count_never_changes(spark, tmp_path, monkeypatch):
     h = VersionedBucketMirror(big, n_buckets=None, key_col="id")
     _grow(spark, h, 100, 40, ts=1)
     assert h.current()["n_buckets"] == 64 and "rebucket" not in _ops(h)
+
+
+def test_handle_without_count_keeps_a_table_that_records_none(spark, tmp_path):
+    """Manifests written before the bucket count was recorded carry no
+    ``n_buckets``; those tables were all written under the old default
+    of 64. A handle opened without a count must hash under 64 too, or a
+    merge reads one bucket and leaves the key's old row live in
+    another."""
+    import json
+
+    root = tmp_path / "legacy"
+    VersionedBucketMirror(str(root), n_buckets=64, key_col="id").initialize(
+        _batch(spark, [(k, f"v0-{k}", 0, "I") for k in range(100)])
+    )
+    for f in [root / "_CURRENT", *(root / "_log").glob("v-*.json")]:
+        rec = json.loads(f.read_text())
+        rec.pop("n_buckets")
+        f.write_text(json.dumps(rec))
+    m = VersionedBucketMirror(str(root), n_buckets=None, key_col="id")
+    assert m.n_buckets == 64
+    m.merge_batch(_batch(spark, [(k, "new", 1, "U") for k in (5, 63)]), TARGET)
+    want = {k: f"v0-{k}" for k in range(100)}
+    want.update({5: "new", 63: "new"})
+    rows = m.read(spark).select("id", "name").collect()
+    assert len(rows) == 100
+    assert {r["id"]: r["name"] for r in rows} == want
+    assert "rebucket" not in _ops(m)
 
 
 def test_split_conflict_keeps_merge_and_retries(spark, tmp_path, monkeypatch):
@@ -195,6 +320,43 @@ def test_split_conflict_keeps_merge_and_retries(spark, tmp_path, monkeypatch):
     oracle[777] = "raced"
     assert _state(spark, m) == oracle
     # the next merge retries the split
+    _, more = _grow(spark, m, 2000, 5, ts=2)
+    oracle.update(more)
+    assert m.n_buckets == 2 and _ops(m)[-1] == "rebucket"
+    assert _state(spark, m) == oracle
+
+
+def test_split_dropped_when_a_purge_races_its_read(
+    spark, tmp_path, monkeypatch
+):
+    """A purge that deletes the dirs the split is reading drops the
+    split like a lost CAS: the merge stays committed, ``merge_batch``
+    returns, the purge holds, and the next merge splits."""
+    monkeypatch.setattr(_sizing, "BUCKET_BYTES", 4 << 10)
+    root = str(tmp_path / "m")
+    m = VersionedBucketMirror(root, n_buckets=None, key_col="id", keep_versions=20)
+    m.initialize(_batch(spark, [(k, f"v0-{k}", 0, "I") for k in range(20)]))
+    other = VersionedBucketMirror(root, n_buckets=None, key_col="id")
+    orig = VersionedBucketMirror._commit_staged
+    purged = []
+
+    def racing(self, df, touched, *args, **kwargs):
+        if (kwargs.get("meta") or {}).get("operation") == "rebucket" and not purged:
+            purged.append(1)  # the split's read is planned, not yet run
+            other.purge_keys(spark, spark.createDataFrame([(3,)], "id long"))
+        return orig(self, df, touched, *args, **kwargs)
+
+    monkeypatch.setattr(VersionedBucketMirror, "_commit_staged", racing)
+    rec, rows = _grow(spark, m, 1000, 60, ts=1)
+    assert purged
+    assert m.n_buckets == 1 and "rebucket" not in _ops(m)
+    # the purge rewrote the merge's record in place
+    head = m.current()
+    assert head["version"] == rec["version"] and head.get("purged_ts")
+    assert not [d for d in os.listdir(root) if d.startswith("staging-")]
+    oracle = {k: f"v0-{k}" for k in range(20) if k != 3}
+    oracle.update(rows)
+    assert _state(spark, m) == oracle
     _, more = _grow(spark, m, 2000, 5, ts=2)
     oracle.update(more)
     assert m.n_buckets == 2 and _ops(m)[-1] == "rebucket"

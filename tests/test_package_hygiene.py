@@ -284,8 +284,12 @@ def test_bucket_count_rule_is_written_once():
     """The bucket-count rule lives in ``streaming/_sizing.py`` beside
     ``write_tasks``: no other package module defines a count rule or
     reads its thresholds, and the mirror takes every sized count from
-    ``bucket_count`` (initial load) or ``split_count`` (after a merge)."""
-    rule = {"bucket_count", "split_count", "BUCKET_BYTES", "MAX_BUCKETS"}
+    ``load_bucket_count`` (initial load), ``bucket_count`` (a handle
+    before it reads a manifest) or ``split_count`` (after a merge)."""
+    rule = {
+        "bucket_count", "load_bucket_count", "split_count",
+        "BUCKET_BYTES", "MAX_BUCKETS",
+    }
     sizing = REPO / PKG / "streaming" / "_sizing.py"
     tree = ast.parse(sizing.read_text())
     assert rule | {"write_tasks", "input_bytes"} <= _bound_names(tree.body)
@@ -298,7 +302,7 @@ def test_bucket_count_rule_is_written_once():
         strays += [f"{rel}:{n}" for n in sorted(_bound_names(tree.body) & rule)]
         for node in ast.walk(tree):
             if isinstance(node, ast.Name) and node.id in rule - {
-                "bucket_count", "split_count"
+                "bucket_count", "load_bucket_count", "split_count"
             }:
                 strays.append(f"{rel}:{node.lineno}")
             if isinstance(node, ast.Call) and _call_name(node) in rule:
@@ -311,6 +315,7 @@ def test_bucket_count_rule_is_written_once():
     assert strays == []
     assert calls == {
         ("bucket_mirror.py", "bucket_count"),
+        ("bucket_mirror.py", "load_bucket_count"),
         ("bucket_ops.py", "split_count"),
     }
 
